@@ -12,10 +12,11 @@ both become pure dataflow outputs:
   per-block max-score metadata (Block-Max WAND, SURVEY.md §4 O5)
 
 Skew story (north_rule): hot terms are NOT gathered onto a single reducer.
-``tf`` rows are **range-partitioned on (bucket, term_id, doc_id)**, so a hot
+``tf`` rows are **hash-partitioned on (bucket, doc-range slice)**, so a hot
 term's postings split across many tasks at doc_id boundaries; each task
-emits complete blocks for its slice (block_id = first doc_id in block, which
-is globally unique and ordered per term because ranges are disjoint). No
+encodes complete blocks for its slices and writes them to its own files
+(block_id = first doc_id in block, which is globally unique and ordered
+per term because ranges are disjoint). No
 row ever holds a full posting list — a collect_list-per-term design would
 OOM at 10^12 docs; this one is bounded by BLOCK_SIZE everywhere.
 
@@ -366,8 +367,10 @@ def tf_docstats_direct(
     deterministically and the rename makes it idempotent. The caller owns
     the stage ``_SUCCESS`` marker (written only after the driving action
     returns). On a cluster ``out_dir`` is shared storage — the same
-    contract as any committer-less distributed sink.
+    contract as any committer-less distributed sink; speculative attempts
+    are refused (:func:`refuse_speculation`).
     """
+    refuse_speculation(docs.sparkSession)
 
     def fn(batches):
         import os as _os2
@@ -490,15 +493,28 @@ def tf_docstats_direct(
     return docs.select("doc_id", content_col, *meta_cols).mapInArrow(fn, schema=schema)
 
 
+def write_empty_parquet(out_dir: str, schema) -> None:
+    """Land one empty ``part-00000`` file carrying ``schema`` (pyarrow) in
+    ``out_dir``: a stage whose tasks wrote no file (zero docs, zero terms)
+    stays a readable, typed table."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(out_dir, exist_ok=True)
+    pq.write_table(
+        schema.empty_table(), os.path.join(out_dir, "part-00000-graft.snappy.parquet")
+    )
+
+
 def ensure_tf_files(out_dir: str, positional: bool = False) -> None:
     """Zero-doc guard for the kernel-direct tf write: an empty corpus
     produces no task files, which would make the checkpoint unreadable —
-    land one empty file carrying the schema (the flat-empty-write analog)."""
+    land one empty file carrying the schema."""
     import glob as _glob
     import os
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     # finalized task files only — a crashed attempt's _tmp-* leftover (hidden
     # from Spark's listing) must not suppress the schema-carrying empty file
@@ -513,9 +529,20 @@ def ensure_tf_files(out_dir: str, positional: bool = False) -> None:
     if positional:
         fields.append(pa.field("positions", pa.list_(pa.int32())))
     fields.append(pa.field("sha256", pa.string()))
-    pq.write_table(
-        pa.table({f.name: pa.array([], f.type) for f in fields}),
-        os.path.join(out_dir, "part-00000-graft.snappy.parquet"),
+    write_empty_parquet(out_dir, pa.schema(fields))
+
+
+def ensure_postings_files(out_dir: str, positional: bool = False) -> None:
+    """Zero-posting guard for the kernel-direct postings write: with no
+    ``bucket=*`` file (zero docs, or only zero-token docs) land one flat
+    empty file with the block schema, bucket column included."""
+    import glob as _glob
+    import os
+
+    if _glob.glob(os.path.join(out_dir, "bucket=*", "part-*.parquet")):
+        return
+    write_empty_parquet(
+        out_dir, _arrow_schema(POSTINGS_POS_SCHEMA if positional else POSTINGS_SCHEMA)
     )
 
 
@@ -644,73 +671,83 @@ def corpus_stats(tok_docs: DataFrame) -> tuple[int, float]:
     return int(row["n"]), float(row["avgdl"] or 0.0)
 
 
-def _encode_partition(avgdl: float, n_buckets: int | None = None) -> callable:
-    """mapInPandas kernel: rows sorted by (bucket, term_id, doc_id) ->
-    compressed blocks. Arrow-batched; numpy inside; no per-row Python."""
+def _run_starts(terms, docs, slice_docs: int):
+    """Row indices where a posting run starts, in rows ordered by term_id
+    and then doc_id: row 0 and every change of term_id OR of doc slice
+    (``doc_id // slice_docs``). Blocks are cut from runs, so no block
+    crosses a slice: when two non-adjacent slices of one term reach the
+    same task, their blocks stay apart and every term's block doc-ranges
+    stay disjoint (J7). Both encoders, the frame chunker and the batch-tail
+    cut all take their boundaries from here."""
+    import numpy as np
+
+    slices = np.asarray(docs) // slice_docs
+    change = (np.diff(terms) != 0) | (np.diff(slices) != 0)
+    return np.concatenate([[0], change.nonzero()[0] + 1])
+
+
+def _block_bounds(run_starts, n_rows: int):
+    """(starts, ends) of the blocks: each run splits into BLOCK_SIZE-row
+    blocks counted from its own start, the last one short."""
+    import numpy as np
+
+    run_ends = np.concatenate([run_starts[1:], [n_rows]])
+    blocks_per_run = (run_ends - run_starts + BLOCK_SIZE - 1) // BLOCK_SIZE
+    k_within = np.arange(int(blocks_per_run.sum())) - np.repeat(
+        np.cumsum(blocks_per_run) - blocks_per_run, blocks_per_run
+    )
+    bstarts = np.repeat(run_starts, blocks_per_run) + k_within * BLOCK_SIZE
+    bends = np.minimum(bstarts + BLOCK_SIZE, np.repeat(run_ends, blocks_per_run))
+    return bstarts, bends
+
+
+def _encode_partition(avgdl: float, n_buckets: int, slice_docs: int) -> callable:
+    """mapInPandas reference encoder: one task's rows, sorted by
+    (bucket, term_id, doc_id) -> compressed blocks. Kept as the plain
+    reference the direct writer (:func:`_write_partition_arrow`) is tested
+    byte-identical against; the build does not run it."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        # A term's run may span Arrow batches within the partition; carry a tail.
+        # A run may span Arrow batches within the partition; carry a tail.
         tail: pd.DataFrame | None = None
         for pdf in batches:
             if tail is not None:
                 pdf = pd.concat([tail, pdf], ignore_index=True)
             if len(pdf) == 0:
                 continue
-            last_term = pdf["term_id"].iloc[-1]
-            cut = (pdf["term_id"] != last_term).to_numpy().nonzero()[0]
-            if cut.size:
-                split = cut[-1] + 1
-                tail = pdf.iloc[split:].copy()
-                pdf = pdf.iloc[:split]
-            else:
-                tail = pdf.copy()
-                continue
-            yield from _encode_frame(pdf, avgdl, np, n_buckets)
+            split = int(_run_starts(
+                pdf["term_id"].to_numpy(), pdf["doc_id"].to_numpy(), slice_docs
+            )[-1])
+            tail = pdf.iloc[split:].copy()
+            if split:
+                yield from _encode_frame(pdf.iloc[:split], avgdl, np, n_buckets, slice_docs)
         if tail is not None and len(tail):
-            import numpy as np
-
-            yield from _encode_frame(tail, avgdl, np, n_buckets)
+            yield from _encode_frame(tail, avgdl, np, n_buckets, slice_docs)
 
     return fn
 
 
 def _encode_frame(
-    pdf: pd.DataFrame, avgdl: float, np, n_buckets: int | None = None
+    pdf: pd.DataFrame, avgdl: float, np, n_buckets: int, slice_docs: int
 ) -> Iterator[pd.DataFrame]:
-    """Encode one frame of (bucket, term_id, doc_id, doclen, tf) rows, sorted
-    by (term_id, doc_id), into compressed blocks.
+    """Encode one frame of (term_id, doc_id, doclen, tf[, positions]) rows
+    into compressed blocks, one Python ``bytes`` per block and column.
 
-    Fully vectorized: block boundaries via diff/reduceat, ONE varint pass per
-    column for the whole frame, per-block bytes sliced out of that buffer by
-    offset. The only per-block Python is the final buffer slicing (bench:
-    the naive per-block loop anti-scaled — 16s@8c -> 35s@32c on 100k docs)."""
+    Vectorized: ONE varint pass per column for the whole frame, per-block
+    bytes sliced out of that buffer by offset."""
     from ..functions.bm25 import tfnorm_np
     from ..functions.codec import varint_encode_with_lengths
 
     n_rows = len(pdf)
     if n_rows == 0:
         return
-    terms = pdf["term_id"].to_numpy()
-    buckets = pdf["bucket"].to_numpy() if "bucket" in pdf.columns else None
+    terms = pdf["term_id"].to_numpy(dtype=np.int64)
     docs = pdf["doc_id"].to_numpy(dtype=np.int64)
     tfs = pdf["tf"].to_numpy(dtype=np.int64)
     dls = pdf["doclen"].to_numpy(dtype=np.int64)
-
-    # per-term run starts -> per-block starts (every BLOCK_SIZE within a run)
-    run_starts = np.concatenate([[0], (np.diff(terms) != 0).nonzero()[0] + 1])
-    run_ends = np.concatenate([run_starts[1:], [n_rows]])
-    run_lens = run_ends - run_starts
-    blocks_per_run = (run_lens + BLOCK_SIZE - 1) // BLOCK_SIZE
-    # block start indices: run_start + k*BLOCK_SIZE, k in [0, blocks_per_run)
-    rep_starts = np.repeat(run_starts, blocks_per_run)
-    k_within = np.arange(int(blocks_per_run.sum())) - np.repeat(
-        np.cumsum(blocks_per_run) - blocks_per_run, blocks_per_run
-    )
-    bstarts = rep_starts + k_within * BLOCK_SIZE
-    bends = np.minimum(bstarts + BLOCK_SIZE, np.repeat(run_ends, blocks_per_run))
-    bn = bends - bstarts
+    bstarts, bends = _block_bounds(_run_starts(terms, docs, slice_docs), n_rows)
 
     # delta-gaps over the whole frame, reset to absolute doc_id at block heads
     gaps = np.empty(n_rows, dtype=np.uint64)
@@ -728,17 +765,10 @@ def _encode_frame(
         return [buf[a:b].tobytes() for a, b in zip(lo, hi)]
 
     cols = {
-        # bucket is recomputed per BLOCK from term_id when it did not ride
-        # the shuffle (r6: one fewer column through the build's biggest
-        # exchange+sort) — xxhash64_long_np is the Spark-parity hash
-        "bucket": (
-            buckets[bstarts].astype(np.int32)
-            if buckets is not None
-            else _buckets_np(terms[bstarts], n_buckets, np)
-        ),
+        "bucket": _buckets_np(terms[bstarts], n_buckets, np),
         "term_id": terms[bstarts],
         "block_id": docs[bstarts],
-        "n": bn.astype(np.int32),
+        "n": (bends - bstarts).astype(np.int32),
         "first_doc": docs[bstarts],
         "last_doc": docs[bends - 1],
         "max_tf": np.maximum.reduceat(tfs, bstarts).astype(np.int32),
@@ -765,9 +795,7 @@ def _encode_frame(
         pgaps[1:] = (flat_pos[1:] - flat_pos[:-1]).astype(np.uint64)
         heads = pcum[:-1]  # first position index of each posting
         pgaps[heads] = flat_pos[heads].astype(np.uint64)
-        from ..functions.codec import varint_encode_with_lengths as _venc
-
-        pbuf, plens = _venc(pgaps)
+        pbuf, plens = varint_encode_with_lengths(pgaps)
         pends = np.cumsum(plens)
         pstarts = pends - plens
         lo = pstarts[pcum[bstarts]]
@@ -786,53 +814,200 @@ def _buckets_np(term_ids, n_buckets: int, np):
             % np.int64(n_buckets)).astype(np.int32)
 
 
-def _encode_partition_arrow(avgdl: float, n_buckets: int | None = None) -> callable:
-    """mapInArrow twin of :func:`_encode_partition` — same math, zero
-    per-block Python objects on output: the binary posting columns are
-    built as Arrow BinaryArrays directly over the varint buffer
-    (``from_buffers`` with block offsets), instead of a Python ``bytes``
-    object per block per column. Blocks tile the encode buffer exactly
-    (every row's bytes belong to exactly one block, in order), so the
-    offsets vector is just the block starts + total length.
+# one row per posting file the encode kernel wrote: a manifest entry
+POSTING_FILES_SCHEMA = (
+    "bucket int, file string, n_blocks long, tid_min long, tid_max long"
+)
 
-    Byte-identical to the pandas encoder (asserted in
-    tests/test_codec.py::test_encode_kernels_byte_identical); select with
-    ``GRAFT_ENCODE_KERNEL=pandas`` to revert."""
+
+def _arrow_schema(ddl: str):
+    """The pyarrow schema of a Spark DDL string (driver side: parsing uses
+    the active SparkContext)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    return to_arrow_schema(StructType.fromDDL(ddl))
+
+
+class _PostingFiles:
+    """One task's posting files: a parquet file per bucket,
+    ``<out_dir>/bucket=<b>/part-<pid>-graft.snappy.parquet``, fed encoded
+    blocks in non-decreasing bucket order.
+
+    Each file is written as ``_tmp-<pid>-<attempt>.parquet`` and renamed
+    when its bucket ends, so a retried task replaces its own files and a
+    failed attempt leaves only an underscore-hidden ``_tmp-`` file, which
+    neither Spark nor the manifest lists. Blocks are buffered into row
+    groups of up to ``ROW_GROUP_BLOCKS``, so a small file is one row group
+    (as Spark's 128 MB row groups made it), not one per Arrow batch."""
+
+    ROW_GROUP_BLOCKS = 1 << 18
+    # Spark's parquet writer drops dictionary encoding for a column chunk
+    # where it does not pay, which for the doc-gap, doclen and position
+    # blobs (near-unique per block) it never does; pyarrow does not adapt,
+    # so those columns are written plain. No reader uses min/max of a
+    # binary blob, so only the scalar columns carry statistics.
+    PLAIN_COLUMNS = ("doc_ids", "dls", "poss")
+
+    def __init__(self, out_dir: str, pid: int, attempt: int):
+        self.out_dir, self.pid, self.attempt = out_dir, pid, attempt
+        self.bucket: int | None = None
+        self.writer = None
+        self.pending: list = []
+        self.n_pending = self.n_blocks = 0
+        self.tid_min = self.tid_max = 0
+        self.files: list[dict] = []
+
+    def _path(self, name: str) -> str:
+        import os
+
+        return os.path.join(self.out_dir, f"bucket={self.bucket}", name)
+
+    def _tmp(self) -> str:
+        return self._path(f"_tmp-{self.pid:05d}-{self.attempt}.parquet")
+
+    def write(self, blocks) -> None:
+        """Append an encoded block batch (bucket first, as the encoder
+        emits it); the bucket column itself lives in the directory name."""
+        import numpy as np
+        import pyarrow as pa
+
+        bk = blocks.column(0).to_numpy()
+        body = pa.RecordBatch.from_arrays(blocks.columns[1:], blocks.schema.names[1:])
+        tids = body.column(0).to_numpy()
+        cuts = np.concatenate([[0], np.flatnonzero(np.diff(bk)) + 1, [bk.size]])
+        for a, b in zip(cuts[:-1].tolist(), cuts[1:].tolist()):
+            bucket = int(bk[a])
+            if bucket != self.bucket:
+                if self.bucket is not None and bucket < self.bucket:
+                    raise RuntimeError(
+                        f"posting blocks reached bucket {bucket} after bucket "
+                        f"{self.bucket}: the task's rows are not bucket-major"
+                    )
+                self._finish()
+                self.bucket = bucket
+                self.tid_min, self.tid_max = int(tids[a]), int(tids[a])
+            self.pending.append(body.slice(a, b - a))
+            self.n_pending += b - a
+            self.n_blocks += b - a
+            self.tid_min = min(self.tid_min, int(tids[a:b].min()))
+            self.tid_max = max(self.tid_max, int(tids[a:b].max()))
+            if self.n_pending >= self.ROW_GROUP_BLOCKS:
+                self._flush()
+
+    def _flush(self) -> None:
+        import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if not self.pending:
+            return
+        table = pa.Table.from_batches(self.pending)
+        if self.writer is None:
+            os.makedirs(self._path(""), exist_ok=True)
+            self.writer = pq.ParquetWriter(
+                self._tmp(), table.schema, store_schema=False,
+                use_dictionary=[c for c in table.column_names
+                                if c not in self.PLAIN_COLUMNS],
+                write_statistics=[f.name for f in table.schema
+                                  if not pa.types.is_binary(f.type)],
+            )
+        self.writer.write_table(table)
+        self.pending, self.n_pending = [], 0
+
+    def _finish(self) -> None:
+        import os
+
+        if self.bucket is None:
+            return
+        self._flush()
+        self.writer.close()
+        self.writer = None
+        name = f"part-{self.pid:05d}-graft.snappy.parquet"
+        os.replace(self._tmp(), self._path(name))
+        self.files.append({
+            "bucket": self.bucket, "file": f"bucket={self.bucket}/{name}",
+            "n_blocks": self.n_blocks, "tid_min": self.tid_min, "tid_max": self.tid_max,
+        })
+        self.n_blocks = 0
+
+    def close(self) -> list[dict]:
+        """Finish the last file; the rows of every file written."""
+        self._finish()
+        self.bucket = None
+        return self.files
+
+    def discard(self) -> None:
+        """Close an unfinished file without publishing it."""
+        if self.writer is not None:
+            self.writer.close()
+            self.writer = None
+
+
+def _write_partition_arrow(
+    avgdl: float, n_buckets: int, slice_docs: int, out_dir: str
+) -> callable:
+    """mapInArrow kernel: one task's rows, sorted by (bucket, term_id,
+    doc_id) -> compressed blocks written straight into the task's posting
+    files (:class:`_PostingFiles`); returns one row per file
+    (:data:`POSTING_FILES_SCHEMA`), not the blocks.
+
+    The blocks never cross back into the JVM: no Arrow return, no UnsafeRow
+    conversion, no block re-sort, no Spark parquet encode. The binary
+    posting columns are Arrow BinaryArrays built directly over the varint
+    buffers (:func:`_encode_np`), so no per-block Python object exists
+    either. Byte-identical to the pandas reference :func:`_encode_partition`
+    over the same rows (tests/test_codec.py)."""
 
     def fn(batches):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
+        from pyspark import TaskContext
 
-        tail: dict | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {c: rb.column(i).to_numpy(zero_copy_only=False)
-                    for i, c in enumerate(rb.schema.names) if c != "positions"}
-            if "positions" in rb.schema.names:
-                parr = rb.column(rb.schema.names.index("positions"))
-                cols["pos_flat"] = pc.list_flatten(parr).to_numpy(zero_copy_only=False)
-                cols["pos_len"] = pc.list_value_length(parr).to_numpy().astype(np.int64)
+        ctx = TaskContext.get()
+        files = _PostingFiles(
+            out_dir,
+            ctx.partitionId() if ctx is not None else 0,
+            ctx.attemptNumber() if ctx is not None else 0,
+        )
+
+        def encode(frame):
+            for chunk in _frame_chunks(frame, np, slice_docs):
+                files.write(_encode_np(chunk, avgdl, np, pa, n_buckets, slice_docs))
+
+        try:
+            tail: dict | None = None
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                names = rb.schema.names
+                cols = {c: rb.column(i).to_numpy(zero_copy_only=False)
+                        for i, c in enumerate(names) if c != "positions"}
+                if "positions" in names:
+                    parr = rb.column(names.index("positions"))
+                    cols["pos_flat"] = pc.list_flatten(parr).to_numpy(zero_copy_only=False)
+                    cols["pos_len"] = pc.list_value_length(parr).to_numpy().astype(np.int64)
+                if tail is not None:
+                    cols = {k: np.concatenate([tail[k], cols[k]]) for k in cols}
+                # the last run may continue in the next batch: carry it
+                split = int(_run_starts(cols["term_id"], cols["doc_id"], slice_docs)[-1])
+                if split:
+                    encode(_slice_cols(cols, 0, split, np))
+                    tail = _slice_cols(cols, split, cols["term_id"].size, np)
+                else:
+                    tail = cols
             if tail is not None:
-                cols = {k: np.concatenate([tail[k], cols[k]]) for k in cols}
-            n = cols["term_id"].size
-            last_term = cols["term_id"][-1]
-            cut = (cols["term_id"] != last_term).nonzero()[0]
-            if not cut.size:
-                tail = cols
-                continue
-            split = int(cut[-1] + 1)
-            tail = _slice_cols(cols, split, n, np)
-            for chunk in _frame_chunks(_slice_cols(cols, 0, split, np), np):
-                yield _encode_np(chunk, avgdl, np, pa, n_buckets)
-        if tail is not None and tail["term_id"].size:
-            import numpy as np
-            import pyarrow as pa
+                encode(tail)
+            rows = files.close()
+        except BaseException:
+            files.discard()
+            raise
+        if rows:
+            yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
 
-            for chunk in _frame_chunks(tail, np):
-                yield _encode_np(chunk, avgdl, np, pa, n_buckets)
-
+    out_schema = _arrow_schema(POSTING_FILES_SCHEMA)
     return fn
 
 
@@ -846,16 +1021,16 @@ _ENCODE_CHUNK_ROWS = 4_000_000
 _ENCODE_CHUNK_POS = 100_000_000
 
 
-def _frame_chunks(cols: dict, np, cap_rows: int = _ENCODE_CHUNK_ROWS,
+def _frame_chunks(cols: dict, np, slice_docs: int, cap_rows: int = _ENCODE_CHUNK_ROWS,
                   cap_pos: int = _ENCODE_CHUNK_POS):
     """Split an encode frame into chunks of ≤cap_rows rows AND (for
     positional frames) ≤~cap_pos flattened positions — the positions stream
     scales with total tf, not rows, so a row cap alone cannot bound its
-    varint buffer. Boundaries sit at run_start + k*BLOCK_SIZE of the run
-    containing them — exactly the block boundaries the unchunked encode
-    would produce, so chunked output is byte-identical (each chunk's first
-    row is a true block head: same absolute-doc_id gap resets, same
-    per-block byte ranges)."""
+    varint buffer. Every cut is a block start of the unchunked encode
+    (:func:`_run_starts`, :func:`_block_bounds`), so chunked output is
+    byte-identical: each chunk's first row is a true block head, with the
+    same absolute-doc_id gap reset and the same per-block byte ranges. A
+    cap smaller than one block still advances one block per chunk."""
     n = cols["term_id"].size
     pcum = None
     if "pos_len" in cols:
@@ -863,33 +1038,21 @@ def _frame_chunks(cols: dict, np, cap_rows: int = _ENCODE_CHUNK_ROWS,
     if n <= cap_rows and (pcum is None or pcum[-1] <= cap_pos):
         yield cols
         return
-    terms = cols["term_id"]
-    run_starts = np.concatenate([[0], (np.diff(terms) != 0).nonzero()[0] + 1])
+    bstarts, _ = _block_bounds(
+        _run_starts(cols["term_id"], cols["doc_id"], slice_docs), n
+    )
+    cuts = np.append(bstarts, n)
     start = 0
     while start < n:
         target = min(start + cap_rows, n)
         if pcum is not None:
             # furthest row keeping the chunk's positions within cap_pos
-            ptarget = int(np.searchsorted(pcum, pcum[start] + cap_pos, "right") - 1)
-            target = min(target, max(ptarget, start + 1))
-        if target < n:
-            ri = int(np.searchsorted(run_starts, target, side="right") - 1)
-            rs = int(run_starts[ri])
-            target = rs + ((target - rs) // BLOCK_SIZE) * BLOCK_SIZE
-            if target <= start:
-                # progress guard (caps smaller than a block, or one row's
-                # positions exceeding cap_pos): advance to the next block
-                # boundary after start — clamped to the current run's end,
-                # which is itself a boundary (every run start heads a block)
-                ri2 = int(np.searchsorted(run_starts, start, "right") - 1)
-                rs2 = int(run_starts[ri2])
-                run_end = int(run_starts[ri2 + 1]) if ri2 + 1 < run_starts.size else n
-                target = min(
-                    n, run_end,
-                    rs2 + ((start - rs2) // BLOCK_SIZE + 1) * BLOCK_SIZE,
-                )
-        yield _slice_cols(cols, int(start), int(target), np)
-        start = int(target)
+            target = min(target, int(np.searchsorted(pcum, pcum[start] + cap_pos, "right") - 1))
+        cut = int(cuts[np.searchsorted(cuts, target, "right") - 1])
+        if cut <= start:
+            cut = int(cuts[np.searchsorted(cuts, start, "right")])
+        yield _slice_cols(cols, start, cut, np)
+        start = cut
 
 
 def _slice_cols(cols: dict, a: int, b: int, np) -> dict:
@@ -903,29 +1066,21 @@ def _slice_cols(cols: dict, a: int, b: int, np) -> dict:
     return out
 
 
-def _encode_np(cols: dict, avgdl: float, np, pa, n_buckets: int | None = None):
+def _encode_np(cols: dict, avgdl: float, np, pa, n_buckets: int, slice_docs: int):
     """One frame of partition-sorted rows -> an Arrow RecordBatch of blocks
-    (same math as :func:`_encode_frame`, Arrow-native output)."""
+    (same math as :func:`_encode_frame`, Arrow-native output). Blocks tile
+    each varint buffer exactly (every row's bytes belong to exactly one
+    block, in order), so a binary column's offsets are just the block
+    starts plus the total length."""
     from ..functions.bm25 import tfnorm_np
     from ..functions.codec import varint_encode_with_lengths
 
-    terms = cols["term_id"]
+    terms = cols["term_id"].astype(np.int64)
     n_rows = terms.size
     docs = cols["doc_id"].astype(np.int64)
     tfs = cols["tf"].astype(np.int64)
     dls = cols["doclen"].astype(np.int64)
-
-    run_starts = np.concatenate([[0], (np.diff(terms) != 0).nonzero()[0] + 1])
-    run_ends = np.concatenate([run_starts[1:], [n_rows]])
-    run_lens = run_ends - run_starts
-    blocks_per_run = (run_lens + BLOCK_SIZE - 1) // BLOCK_SIZE
-    rep_starts = np.repeat(run_starts, blocks_per_run)
-    k_within = np.arange(int(blocks_per_run.sum())) - np.repeat(
-        np.cumsum(blocks_per_run) - blocks_per_run, blocks_per_run
-    )
-    bstarts = rep_starts + k_within * BLOCK_SIZE
-    bends = np.minimum(bstarts + BLOCK_SIZE, np.repeat(run_ends, blocks_per_run))
-    bn = bends - bstarts
+    bstarts, bends = _block_bounds(_run_starts(terms, docs, slice_docs), n_rows)
     n_blocks = bstarts.size
 
     gaps = np.empty(n_rows, dtype=np.uint64)
@@ -933,27 +1088,20 @@ def _encode_np(cols: dict, avgdl: float, np, pa, n_buckets: int | None = None):
     gaps[bstarts] = docs[bstarts].astype(np.uint64)
     tfn = tfnorm_np(tfs.astype(np.float64), dls.astype(np.float64), avgdl)
 
-    def bin_col(vals):
-        buf, lens = varint_encode_with_lengths(vals)
+    def bin_col(buf, lens, row_starts):
         ends = np.cumsum(lens)
-        starts = ends - lens
         offs = np.empty(n_blocks + 1, dtype=np.int32)
-        offs[:-1] = starts[bstarts]
+        offs[:-1] = (ends - lens)[row_starts]
         offs[-1] = ends[-1] if ends.size else 0
         return pa.BinaryArray.from_buffers(
             pa.binary(), n_blocks, [None, pa.py_buffer(offs), pa.py_buffer(buf)]
         )
 
     arrays = [
-        pa.array(
-            cols["bucket"][bstarts].astype(np.int32)
-            if "bucket" in cols
-            else _buckets_np(terms[bstarts], n_buckets, np),
-            pa.int32(),
-        ),
-        pa.array(terms[bstarts].astype(np.int64), pa.int64()),
+        pa.array(_buckets_np(terms[bstarts], n_buckets, np), pa.int32()),
+        pa.array(terms[bstarts], pa.int64()),
         pa.array(docs[bstarts], pa.int64()),
-        pa.array(bn.astype(np.int32), pa.int32()),
+        pa.array((bends - bstarts).astype(np.int32), pa.int32()),
         pa.array(docs[bstarts], pa.int64()),
         pa.array(docs[bends - 1], pa.int64()),
         pa.array(np.maximum.reduceat(tfs, bstarts).astype(np.int32), pa.int32()),
@@ -964,15 +1112,13 @@ def _encode_np(cols: dict, avgdl: float, np, pa, n_buckets: int | None = None):
             ),
             pa.float32(),
         ),
-        bin_col(gaps),
-        bin_col(tfs.astype(np.uint64)),
-        bin_col(dls.astype(np.uint64)),
+        bin_col(*varint_encode_with_lengths(gaps), bstarts),
+        bin_col(*varint_encode_with_lengths(tfs.astype(np.uint64)), bstarts),
+        bin_col(*varint_encode_with_lengths(dls.astype(np.uint64)), bstarts),
     ]
     names = ["bucket", "term_id", "block_id", "n", "first_doc", "last_doc",
              "max_tf", "block_max_tfn", "doc_ids", "tfs", "dls"]
     if "pos_len" in cols:
-        from ..functions.codec import varint_encode_with_lengths as _venc
-
         lens = cols["pos_len"]
         flat_pos = cols["pos_flat"].astype(np.int64)
         flat_row = np.repeat(np.arange(n_rows, dtype=np.int64), lens)
@@ -983,38 +1129,55 @@ def _encode_np(cols: dict, avgdl: float, np, pa, n_buckets: int | None = None):
         pgaps[1:] = (flat_pos[1:] - flat_pos[:-1]).astype(np.uint64)
         heads = pcum[:-1]
         pgaps[heads] = flat_pos[heads].astype(np.uint64)
-        pbuf, plens = _venc(pgaps)
-        pends = np.cumsum(plens)
-        pstarts = pends - plens
-        offs = np.empty(n_blocks + 1, dtype=np.int32)
-        offs[:-1] = pstarts[pcum[bstarts]]
-        offs[-1] = pends[-1] if pends.size else 0
-        arrays.append(pa.BinaryArray.from_buffers(
-            pa.binary(), n_blocks, [None, pa.py_buffer(offs), pa.py_buffer(pbuf)]
-        ))
+        arrays.append(bin_col(*varint_encode_with_lengths(pgaps), pcum[bstarts]))
         names.append("poss")
     return pa.RecordBatch.from_arrays(arrays, names)
 
 
-def build_postings(
+def refuse_speculation(spark) -> None:
+    """The direct writers (:func:`tf_docstats_direct`,
+    :func:`build_postings`) publish their files by rename, outside Spark's
+    output committer, so nothing arbitrates between two live attempts of
+    one task. Refuse to run them under ``spark.speculation``."""
+    on = spark.sparkContext.getConf().get("spark.speculation", "false")
+    if str(on).strip().lower() == "true":
+        raise RuntimeError(
+            "spark.speculation=true: the index build writes its tf and "
+            "postings files directly, outside Spark's output committer, and "
+            "cannot arbitrate between speculative task attempts; run the "
+            "build with spark.speculation=false"
+        )
+
+
+def slice_docs_for(n_docs: int | None, partitions: int) -> int:
+    """Docs per doc-range slice of the posting shuffle: ~4 slices per
+    partition's worth of docs, never below one block, so a term's postings
+    split into doc-contiguous slices (1 << 20 when the doc count is
+    unknown)."""
+    if n_docs:
+        return max(BLOCK_SIZE, n_docs // (partitions * 4) + 1)
+    return 1 << 20
+
+
+def postings_input(
     tf: DataFrame,
     terms: DataFrame,
-    avgdl: float,
     n_buckets: int = N_BUCKETS,
     partitions: int | None = None,
     n_docs: int | None = None,
     bucket_mod: tuple[int, int] | None = None,
     doc_id_range: tuple[int, int] | None = None,
     n_terms: int | None = None,
-) -> DataFrame:
-    """tf (term, doc_id, doclen, tf) -> compressed posting blocks.
+) -> tuple[DataFrame, int]:
+    """The encoder's input rows and their slice width: (term_id, doc_id,
+    doclen, tf[, positions]) hash-partitioned on (bucket, doc-range slice)
+    and sorted (bucket, term_id, doc_id) within each partition.
 
-    ``bucket_mod=(g, G)`` restricts the build to buckets with
+    ``bucket_mod=(g, G)`` restricts the rows to buckets with
     ``bucket % G == g`` (the per-bucket-group resume path in
     ``plans/build.py``). Because partition assignment is
-    ``hash(bucket, slice)`` and encode order is a total sort, the blocks a
-    group emits are byte-identical to the same buckets' blocks from a full
-    build — group-sliced builds compose losslessly.
+    ``hash(bucket, slice)`` and the sort is total, a group's blocks are
+    byte-identical to the same buckets' blocks from a full build.
 
     Partitioning: HASH on (bucket, doc-range slice), then sort within
     partitions. Versus repartitionByRange this (a) skips the range-sampler's
@@ -1026,13 +1189,7 @@ def build_postings(
     """
     spark = tf.sparkSession
     partitions = partitions or spark.sparkContext.defaultParallelism
-    if n_docs:
-        # target ~4 slices per partition's worth of docs; floor keeps slices
-        # doc-contiguous so per-term block ranges never overlap
-        slice_docs = max(BLOCK_SIZE, n_docs // (partitions * 4) + 1)
-    else:
-        slice_docs = 1 << 20
-    positional = "positions" in tf.columns
+    slice_docs = slice_docs_for(n_docs, partitions)
     keyed = tf.join(F.broadcast(terms.select("term", "term_id")), "term")
     # bucket stays an EXPRESSION end to end (r6): it is derivable from
     # term_id (pmod(xxhash64, B)), so materializing it as a column only
@@ -1050,7 +1207,7 @@ def build_postings(
     if bucket_mod is not None:
         g, n_groups = bucket_mod
         keyed = keyed.filter(F.pmod(bucket_expr(), F.lit(n_groups)) == g)
-    pos_cols = ["positions"] if positional else []
+    pos_cols = ["positions"] if "positions" in tf.columns else []
     # int32 tf/doclen BEFORE the exchange, and the slice key as an
     # EXPRESSION rather than a materialized column: the posting shuffle is
     # the build's biggest data movement (~40 B/row at 10^8+ rows), and it is
@@ -1061,18 +1218,15 @@ def build_postings(
     # bandwidth-bound stage. (The same int32 cast also measured -16% on the
     # JVM->Python Arrow IPC. Safe: doclen < 2^31 tokens by the 2 GB string
     # limit; tf <= doclen; the kernel upcasts to int64 before arithmetic.)
-    # Hash-partition assignment is over the same (bucket, slice) VALUES, so
-    # block boundaries — and resume byte-identity — are unchanged.
     # r5 (VERDICT r04 #1a): when the caller can PROVE the id spaces fit
     # int32 — doc_id via the docstats min/max (one extra agg column in a
     # job that already runs), term_id via the dictionary size (term_id is
     # the rank of term, so max = n_terms-1) — both ids narrow before the
     # exchange too, cutting another ~8 B/row off the in-memory row and
     # (via the zero-byte-heavy padding) the lz4-compressed shuffle stream.
-    # The encoder upcasts to int64, so block BYTES are unchanged (the
-    # byte-identity and resume tests still certify equality), and hash
-    # partitioning is over the same VALUES, so partition assignment —
-    # and resume byte-identity — is unchanged. None = no proof = stay wide.
+    # The encoder upcasts to int64, so block BYTES are unchanged, and hash
+    # partitioning is over the same VALUES, so partition assignment — and
+    # resume byte-identity — is unchanged. None = no proof = stay wide.
     doc_expr = F.col("doc_id")
     if doc_id_range is not None and (
         -(1 << 31) <= doc_id_range[0] and doc_id_range[1] < (1 << 31)
@@ -1082,16 +1236,14 @@ def build_postings(
     if n_terms is not None and n_terms <= (1 << 31):
         term_expr = F.col("term_id").cast("int")
     slice_col = (F.col("doc_id") / F.lit(slice_docs)).cast("long")
-    # sort on (slice, term_id, doc_id): slice MUST stay in the key — a
-    # term's non-adjacent slices can hash to the same partition, and
-    # without the slice major they would merge into one run whose blocks
-    # span doc ranges held by OTHER partitions, breaking the per-term
-    # disjoint-block-range invariant (J7) that block-max pruning's
-    # bookkeeping documents. bucket is dropped: the encoder splits
-    # frames on term_id change-points, so a bucket-major order adds a
-    # 4th comparison key for nothing.
-    sort_keys = [slice_col, F.col("term_id"), F.col("doc_id")]
-    # r6: when the caller PROVES the id spaces are non-negative and narrow
+    # bucket-major sort: each task's rows arrive grouped by bucket, so the
+    # writer streams one file per (task, bucket), and term_id-sorted within
+    # it, so every file's row groups carry tight term_id min/max stats. The
+    # slice is NOT a key: a term's non-adjacent slices that hash to the same
+    # task interleave in doc order, and the encoder splits runs on a slice
+    # change (_run_starts), which keeps blocks within one slice (J7).
+    sort_keys = [bucket_expr(), F.col("term_id"), F.col("doc_id")]
+    # when the caller PROVES the id spaces are non-negative and narrow
     # (same proofs as the int32 narrowing), the 3-key sort collapses into
     # ONE packed non-negative long key with the same lexicographic order —
     # a single LongType ordering is exactly what lets Spark's Tungsten sort
@@ -1106,14 +1258,14 @@ def build_postings(
     ):
         b_d = max(int(doc_id_range[1]).bit_length(), 1)
         b_t = max(int(n_terms - 1).bit_length(), 1)
-        b_s = max(int(doc_id_range[1] // slice_docs).bit_length(), 1)
-        if b_s + b_t + b_d <= 62:
+        b_b = max(int(n_buckets - 1).bit_length(), 1)
+        if b_b + b_t + b_d <= 62:
             sort_keys = [
-                slice_col * F.lit(1 << (b_t + b_d))
+                bucket_expr().cast("long") * F.lit(1 << (b_t + b_d))
                 + F.col("term_id").cast("long") * F.lit(1 << b_d)
                 + F.col("doc_id").cast("long")
             ]
-    narrow = (
+    rows = (
         keyed.select(
             term_expr.alias("term_id"),
             doc_expr.alias("doc_id"),
@@ -1124,22 +1276,37 @@ def build_postings(
         .repartition(partitions, bucket_expr(), slice_col)
         .sortWithinPartitions(*sort_keys)
     )
-    schema = POSTINGS_POS_SCHEMA if positional else POSTINGS_SCHEMA
-    import os as _os
+    return rows, slice_docs
 
-    if _os.environ.get("GRAFT_ENCODE_KERNEL", "arrow") == "pandas":
-        blocks = narrow.mapInPandas(_encode_partition(avgdl, n_buckets), schema=schema)
-    else:
-        # arrow (default): Arrow-native block output, zero per-block Python
-        # objects — byte-identical to the pandas encoder (tested)
-        blocks = narrow.mapInArrow(
-            _encode_partition_arrow(avgdl, n_buckets), schema=schema
-        )
-    # local (shuffle-free) re-sort of the encoded blocks: term_id-contiguous
-    # row groups give tight Parquet min/max stats, so `term_id IN (...)`
-    # skips row groups inside each file (the encode order was (slice,
-    # term_id), whose per-row-group ranges overlap across slices)
-    return blocks.sortWithinPartitions("bucket", "term_id", "first_doc")
+
+def build_postings(
+    tf: DataFrame,
+    terms: DataFrame,
+    avgdl: float,
+    out_dir: str,
+    n_buckets: int = N_BUCKETS,
+    partitions: int | None = None,
+    n_docs: int | None = None,
+    bucket_mod: tuple[int, int] | None = None,
+    doc_id_range: tuple[int, int] | None = None,
+    n_terms: int | None = None,
+) -> list[dict]:
+    """tf (term, doc_id, doclen, tf) -> compressed posting blocks, written
+    by the encode kernel itself as ``<out_dir>/bucket=<b>/part-<pid>-...``
+    (one parquet file per task and bucket). Runs one Spark job; returns one
+    dict per file written, with the keys of a manifest entry (bucket, file,
+    n_blocks, tid_min, tid_max). See :func:`postings_input` for the
+    partitioning and ``bucket_mod``."""
+    refuse_speculation(tf.sparkSession)
+    rows, slice_docs = postings_input(
+        tf, terms, n_buckets, partitions, n_docs=n_docs, bucket_mod=bucket_mod,
+        doc_id_range=doc_id_range, n_terms=n_terms,
+    )
+    files = rows.mapInArrow(
+        _write_partition_arrow(avgdl, n_buckets, slice_docs, out_dir),
+        schema=POSTING_FILES_SCHEMA,
+    )
+    return [r.asDict() for r in files.collect()]
 
 
 def decode_postings_positional(blocks: DataFrame) -> DataFrame:

@@ -18,7 +18,8 @@ Layout under ``out_dir``::
                 non-NULL on one row per doc, term-NULL sentinel rows carry
                 zero-token docs — docstats derives from here, one tokenize)
     terms/      term, term_id, df, cf
-    postings/   bucket=*/...  (compressed blocks, POSTINGS_SCHEMA)
+    postings/   bucket=*/part-*  (compressed blocks, POSTINGS_SCHEMA; one
+                file per encode task and bucket, written by the kernel)
     meta/       n_docs, avgdl, n_buckets, partitions
     lineage/    bucket, n_blocks, n_postings, n_terms
     metrics/    stage, rows_out, wall_ms, status
@@ -40,6 +41,7 @@ from ..operators.postings import (
     build_terms,
     docstats_arrow,
     docstats_pandas,
+    ensure_postings_files,
     term_frequencies_arrow,
     term_frequencies_pandas,
 )
@@ -579,8 +581,7 @@ class InvertedIndex:
                            width=width)
 
 
-def _build_postings_grouped(
-    spark: SparkSession,
+def _build_postings_stage(
     tf: DataFrame,
     terms: DataFrame,
     avgdl: float,
@@ -589,52 +590,108 @@ def _build_postings_grouped(
     n_docs: int,
     out: str,
     groups: int,
+    positional: bool,
     doc_id_range: tuple[int, int] | None = None,
     n_terms: int | None = None,
-) -> None:
-    """Postings stage in ``groups`` bucket-group jobs with per-group resume.
+) -> tuple[list[dict], list[int]]:
+    """Postings stage: the encode kernel writes ``out/bucket=*/part-*``
+    itself (``operators.postings.build_postings``). Returns the files the
+    kernel reported and the bucket groups it built.
 
+    ``groups`` > 1 runs one job per bucket group with per-group resume.
     Every bucket dir belongs to exactly one group (bucket % groups), so a
-    group's output is a disjoint set of ``bucket=*`` dirs: incomplete groups
-    are wiped and rebuilt, complete ones (marker present) are untouched —
-    their files stay byte-identical across resumes. Spark's own _SUCCESS is
-    suppressed during the appends (a mid-stage crash must not leave a marker
-    that _done() would trust); the stage marker is written last, by us.
+    group's output is a disjoint set of ``bucket=*`` dirs: incomplete
+    groups are wiped and rebuilt, complete ones (``_group_g_SUCCESS``
+    present) are untouched — their files stay byte-identical across
+    resumes. The stage's ``_SUCCESS`` marker is written last, by the caller.
     """
     import shutil
 
     def marker(g: int) -> str:
         return os.path.join(out, f"_group_{g}_SUCCESS")
 
-    pending = [g for g in range(groups) if not os.path.exists(marker(g))]
-    if os.path.isdir(out):  # wipe partial output of unfinished groups
-        for d in os.listdir(out):
-            if d.startswith("bucket=") and int(d.split("=")[1]) % groups in pending:
-                shutil.rmtree(os.path.join(out, d), ignore_errors=True)
-        for leftover in ("_SUCCESS",):
-            try:
-                os.remove(os.path.join(out, leftover))
-            except FileNotFoundError:
-                pass
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-    old = hconf.get(key)
-    hconf.set(key, "false")
-    try:
-        for g in pending:
-            blocks = build_postings(
-                tf, terms, avgdl, n_buckets, partitions, n_docs=n_docs,
-                bucket_mod=(g, groups),
-                doc_id_range=doc_id_range, n_terms=n_terms,
-            )
-            blocks.write.mode("append").partitionBy("bucket").parquet(out)
+    if groups <= 1:
+        shutil.rmtree(out, ignore_errors=True)
+        pending = [0]
+    else:
+        pending = [g for g in range(groups) if not os.path.exists(marker(g))]
+        if os.path.isdir(out):  # wipe partial output of unfinished groups
+            for d in os.listdir(out):
+                if d.startswith("bucket=") and int(d.split("=")[1]) % groups in pending:
+                    shutil.rmtree(os.path.join(out, d), ignore_errors=True)
+            if os.path.exists(os.path.join(out, "_SUCCESS")):
+                os.remove(os.path.join(out, "_SUCCESS"))
+    os.makedirs(out, exist_ok=True)
+    files: list[dict] = []
+    for g in pending:
+        files += build_postings(
+            tf, terms, avgdl, out, n_buckets, partitions, n_docs=n_docs,
+            bucket_mod=(g, groups) if groups > 1 else None,
+            doc_id_range=doc_id_range, n_terms=n_terms,
+        )
+        if groups > 1:
             open(marker(g), "w").close()
-    finally:
-        if old is None:
-            hconf.unset(key)
-        else:
-            hconf.set(key, old)
-    open(os.path.join(out, "_SUCCESS"), "w").close()
+    ensure_postings_files(out, positional)
+    return files, pending
+
+
+def _check_posting_files(
+    entries: list[dict], files: list[dict], groups: int, built: list[int]
+) -> None:
+    """The manifest (read from the files on disk) must list, for the bucket
+    groups built in this run, exactly the files the encode kernel reported —
+    a stray file or a lost one raises instead of serving a wrong index."""
+    def key(e: dict) -> tuple:
+        return (e["file"], int(e["bucket"]), int(e["n_blocks"]),
+                int(e["tid_min"]), int(e["tid_max"]))
+
+    on_disk = {key(e) for e in entries if int(e["bucket"]) % groups in built}
+    reported = {key(f) for f in files}
+    if on_disk != reported:
+        raise RuntimeError(
+            "posting files on disk differ from the files the encode kernel "
+            f"wrote: unexpected {sorted(on_disk - reported)[:5]}, "
+            f"missing {sorted(reported - on_disk)[:5]}"
+        )
+
+
+def _lineage_rows(
+    terms: DataFrame, entries: list[dict], n_buckets: int
+) -> list[tuple[int, int, int, int]]:
+    """Per-bucket (bucket, n_blocks, n_postings, n_terms), derived from the
+    terms dictionary + the manifest instead of a full postings scan (r6,
+    guide §2.4 — don't recompute what a smaller relation already knows):
+    every dictionary term has df >= 1 posting, and ALL of a term's blocks
+    land in its hash bucket (the build's partition key is derived from
+    term_id), so per bucket
+      n_terms    = count of dictionary terms hashing there,
+      n_postings = sum of those terms' df (block n's partition a term's
+                   df exactly — blocks are disjoint doc-slices),
+      n_blocks   = sum of the manifest's per-file block counts.
+    A full outer join on bucket: a bucket with terms but no blocks, or with
+    blocks but no terms, raises (it would otherwise drop out silently)."""
+    n_blocks: dict[int, int] = {}
+    for e in entries:
+        n_blocks[int(e["bucket"])] = n_blocks.get(int(e["bucket"]), 0) + int(e["n_blocks"])
+    per_bucket = {
+        int(r["bucket"]): (int(r["n_postings"]), int(r["n_terms"]))
+        for r in terms.select(
+            F.pmod(F.xxhash64(F.col("term_id").cast("long")), F.lit(n_buckets))
+            .cast("int")
+            .alias("bucket"),
+            "df",
+        )
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("n_terms"), F.sum("df").alias("n_postings"))
+        .collect()
+    }
+    if set(n_blocks) != set(per_bucket):
+        raise RuntimeError(
+            "lineage: buckets with terms but no posting blocks "
+            f"{sorted(set(per_bucket) - set(n_blocks))}, buckets with blocks "
+            f"but no terms {sorted(set(n_blocks) - set(per_bucket))}"
+        )
+    return [(b, n_blocks[b], *per_bucket[b]) for b in sorted(n_blocks)]
 
 
 def build_index(
@@ -960,41 +1017,37 @@ def build_index(
     if not _done(p["postings"]):
         # rebuilding postings invalidates any previous file manifest
         shutil.rmtree(os.path.join(out_dir, "manifest"), ignore_errors=True)
-        if postings_groups <= 1 or n_docs == 0:
-            def s5():
-                blocks = build_postings(
-                    tf, terms, avgdl, n_buckets, partitions, n_docs=n_docs,
-                    doc_id_range=doc_id_range, n_terms=n_terms,
-                )
-                w = blocks.write.mode("overwrite")
-                if n_docs > 0:
-                    w = w.partitionBy("bucket")
-                # zero-row partitioned writes emit no files at all -> the dir
-                # would be unreadable; a flat empty write keeps the schema
-                w.parquet(p["postings"])
-                return -1
 
-            timed("postings", s5)
-        else:
-            def s5():
-                _build_postings_grouped(
-                    spark, tf, terms, avgdl, n_buckets, partitions, n_docs,
-                    p["postings"], postings_groups,
-                    doc_id_range=doc_id_range, n_terms=n_terms,
-                )
-                return -1
+        def s5():
+            files, built = _build_postings_stage(
+                tf, terms, avgdl, n_buckets, partitions, n_docs, p["postings"],
+                postings_groups, positional,
+                doc_id_range=doc_id_range, n_terms=n_terms,
+            )
+            _stage_out["posting_files"] = (files, built)
+            open(os.path.join(p["postings"], "_SUCCESS"), "w").close()
+            return sum(int(f["n_blocks"]) for f in files)
 
-            timed("postings", s5)
+        timed("postings", s5)
     else:
         metrics.append(("postings", -1, 0, "resumed"))
 
     # file-level stats manifest (Iceberg-style): per posting file (bucket,
     # term_id min/max) so term-scoped queries enumerate files without
     # listing directories. Skipped when already present (postings resumed).
-    from .manifest import _manifest_path, write_postings_manifest
+    from .manifest import _manifest_path, load_postings_manifest, write_postings_manifest
 
     if n_docs > 0 and not os.path.exists(_manifest_path(out_dir)):
         write_postings_manifest(spark, out_dir)
+    entries = load_postings_manifest(out_dir) or []
+    if n_terms and not entries:
+        raise RuntimeError(
+            f"postings manifest missing or empty for {n_terms} dictionary "
+            f"terms under {out_dir}: the posting files are gone or unreadable"
+        )
+    if "posting_files" in _stage_out:
+        files, built = _stage_out["posting_files"]
+        _check_posting_files(entries, files, max(postings_groups, 1), built)
 
     # meta + metrics are driver-side JSON: one-row tables don't warrant a
     # Spark job each (every sequential job adds fixed latency to the build)
@@ -1012,51 +1065,11 @@ def build_index(
             f,
         )
 
-    # lineage: per-bucket block/posting/term counts --------------------------
-    # Derived from the terms dictionary + the manifest footers instead of a
-    # full postings scan (r6, guide §2.4 — don't recompute what a smaller
-    # relation already knows): every dictionary term has df >= 1 posting,
-    # and ALL of a term's blocks land in its hash bucket (the build's
-    # partition key is derived from term_id), so per bucket
-    #   n_terms    = count of dictionary terms hashing there,
-    #   n_postings = sum of those terms' df (block n's partition a term's
-    #                df exactly — blocks are disjoint doc-slices),
-    #   n_blocks   = sum of the manifest's per-file row counts (the same
-    #                parquet footers the manifest write already read).
-    # The postings table — orders of magnitude larger than the vocabulary —
-    # is never rescanned; equivalence to the old direct aggregation is
-    # asserted in tests/test_index.py::test_lineage_counts and the focused
-    # derivation test added this round.
-    from .manifest import load_postings_manifest
-
-    _nb: dict[int, int] = {}
-    for e in load_postings_manifest(out_dir) or []:
-        _nb[int(e["bucket"])] = _nb.get(int(e["bucket"]), 0) + int(e["n_blocks"])
-    if _nb:
-        per_bucket_terms = (
-            terms.select(
-                F.pmod(F.xxhash64(F.col("term_id").cast("long")), F.lit(n_buckets))
-                .cast("int")
-                .alias("bucket"),
-                "df",
-            )
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n_terms"),
-                F.sum("df").alias("n_postings"),
-            )
-        )
-        blocks_df = spark.createDataFrame(
-            sorted(_nb.items()), "bucket int, n_blocks bigint"
-        )
-        lineage_df = blocks_df.join(F.broadcast(per_bucket_terms), "bucket").select(
-            "bucket", "n_blocks", "n_postings", "n_terms"
-        )
-    else:  # zero-doc index: keep the empty-but-typed lineage table
-        lineage_df = spark.createDataFrame(
-            [], "bucket int, n_blocks bigint, n_postings bigint, n_terms bigint"
-        )
-    lineage_df.write.mode("overwrite").parquet(p["lineage"])
+    # lineage: per-bucket block/posting/term counts (see _lineage_rows)
+    spark.createDataFrame(
+        _lineage_rows(terms, entries, n_buckets) if n_terms else [],
+        "bucket int, n_blocks bigint, n_postings bigint, n_terms bigint",
+    ).write.mode("overwrite").parquet(p["lineage"])
     os.makedirs(p["metrics"], exist_ok=True)
     with open(os.path.join(p["metrics"], "metrics.jsonl"), "a") as f:
         for stage, rows, wall_ms, status in metrics:

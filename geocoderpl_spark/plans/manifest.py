@@ -8,9 +8,9 @@ LIST the surviving bucket directories (10^5+ files per bucket at 10^12
 docs); with the manifest the driver goes straight from term_ids to a file
 list. Under the hot-term-salted layout (hash on (bucket, doc-slice)) each
 file's [tid_min, tid_max] spans most of its bucket — the manifest's win is
-listing-free enumeration plus the bucket cut; WITHIN each file the blocks
-are re-sorted term_id-contiguous (postings.py), so Parquet row-group
-min/max stats do the fine-grained skipping.
+listing-free enumeration plus the bucket cut; WITHIN each file the encode
+kernel writes blocks in (term_id, first_doc) order (postings.py), so
+Parquet row-group min/max stats do the fine-grained skipping.
 
 Reference analog: the reference opens one SQLite file per query
 (``geo_gui.py:42-43``); the manifest is the distributed version of "know
@@ -59,7 +59,9 @@ def write_postings_manifest(spark: SparkSession | None, index_root: str) -> int:
     entries = []
     for bdir in sorted(_glob.glob(os.path.join(pdir, "bucket=*"))):
         bucket = int(os.path.basename(bdir).split("=", 1)[1])
-        for fp in sorted(_glob.glob(os.path.join(bdir, "*.parquet"))):
+        # published files only: a failed task attempt's ``_tmp-*`` leftover
+        # is hidden from Spark and must not reach the manifest either
+        for fp in sorted(_glob.glob(os.path.join(bdir, "part-*.parquet"))):
             md = pq.ParquetFile(fp).metadata
             ci = {md.schema.column(i).name: i for i in range(md.num_columns)}["term_id"]
             tid_min = tid_max = None
@@ -80,7 +82,7 @@ def write_postings_manifest(spark: SparkSession | None, index_root: str) -> int:
                 "n_blocks": int(md.num_rows),
             })
     if not entries:
-        return 0  # flat empty write (zero-doc index): nothing to manifest
+        return 0  # flat empty file (zero-posting index): nothing to manifest
     os.makedirs(os.path.join(index_root, "manifest"), exist_ok=True)
     tmp = _manifest_path(index_root) + ".tmp"
     with open(tmp, "w") as f:

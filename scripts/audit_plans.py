@@ -95,7 +95,7 @@ def main() -> None:
     ))
 
     # 3. tf + postings build plan (logical shape)
-    from geocoderpl_spark.operators.postings import build_postings, build_terms, term_frequencies_arrow
+    from geocoderpl_spark.operators.postings import build_terms, postings_input, term_frequencies_arrow
 
     docs = entrymod._docs(spark, SF).withColumnRenamed("text", "content")
     tf = term_frequencies_arrow(docs)
@@ -112,9 +112,10 @@ def main() -> None:
         "Build stage — posting construction",
         "tf is shuffle-free (per-doc Arrow kernel). Postings: broadcast "
         "term-dictionary join, hash repartition on (bucket, doc-slice) "
-        "(deterministic; hot terms split across slices), sort within "
-        "partitions, Arrow encode kernel. No sampled range boundaries.",
-        plan_of(build_postings(tf, terms, 100.0, 16, 8, n_docs=500)),
+        "(deterministic; hot terms split across slices), bucket-major sort "
+        "within partitions; the Arrow encode kernel then writes one parquet "
+        "file per task and bucket itself. No sampled range boundaries.",
+        plan_of(postings_input(tf, terms, 16, 8, n_docs=500)[0]),
     ))
 
     # 4. a relational demo: broadcast dim join

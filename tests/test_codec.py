@@ -56,45 +56,53 @@ def test_tf_roundtrip():
     assert (decode_tfs(encode_tfs(tf)) == tf).all()
 
 
-def test_encode_kernels_byte_identical(spark):
-    """The mapInArrow block encoder must emit BYTE-identical blocks to the
-    pandas encoder — binary payloads included — for both plain and
-    positional postings (resume determinism depends on it)."""
-    import os
-
+def test_encode_kernels_byte_identical(spark, tmp_path):
+    """The blocks the direct writer leaves on disk must be BYTE-identical —
+    binary payloads included — to the pandas reference encoder run over the
+    same sorted rows, for both plain and positional postings (resume
+    determinism depends on it)."""
     from geocoderpl_spark.operators.docids import assign_doc_ids
     from geocoderpl_spark.operators.postings import (
+        POSTINGS_POS_SCHEMA,
+        POSTINGS_SCHEMA,
+        _encode_partition,
         build_postings,
         build_terms,
+        postings_input,
         term_frequencies_arrow,
         term_positions_arrow,
     )
     from geocoderpl_spark.sources.corpus import synth_corpus
 
     docs = assign_doc_ids(synth_corpus(spark, 500), ["repo", "path", "commit"], 4)
-    for tf_kernel in (term_frequencies_arrow, term_positions_arrow):
+    for tf_kernel, schema in ((term_frequencies_arrow, POSTINGS_SCHEMA),
+                              (term_positions_arrow, POSTINGS_POS_SCHEMA)):
         tf = tf_kernel(docs)
         terms = build_terms(tf)
-        os.environ["GRAFT_ENCODE_KERNEL"] = "pandas"
-        try:
-            a = sorted(map(tuple, build_postings(tf, terms, 100.0, 4, 4, n_docs=500).collect()))
-        finally:
-            os.environ.pop("GRAFT_ENCODE_KERNEL", None)
-        b = sorted(map(tuple, build_postings(tf, terms, 100.0, 4, 4, n_docs=500).collect()))
-        assert a == b and len(a) > 50
+        out = str(tmp_path / tf_kernel.__name__)
+        files = build_postings(tf, terms, 100.0, out, 4, 4, n_docs=500)
+        cols = [c.split()[0] for c in schema.split(", ")]
+        written = sorted(map(tuple, spark.read.parquet(out).select(*cols).collect()))
+        rows, slice_docs = postings_input(tf, terms, 4, 4, n_docs=500)
+        ref = rows.mapInPandas(_encode_partition(100.0, 4, slice_docs), schema=schema)
+        expected = sorted(map(tuple, ref.collect()))
+        assert written == expected and len(written) > 50
+        assert sum(f["n_blocks"] for f in files) == len(written)
 
 
 def test_frame_chunking_byte_identical():
     """_frame_chunks must split at true block boundaries: encoding the
     chunks (tiny cap) and concatenating must equal the one-shot encode,
-    byte-for-byte — the int32-offset guard cannot change block content."""
+    byte-for-byte — the int32-offset guard cannot change block content.
+    Runs break on doc-slice changes too, so the hot term's run splits into
+    several slices here."""
     import numpy as np
     import pyarrow as pa
 
     from geocoderpl_spark.operators.postings import _encode_np, _frame_chunks
 
     rng = np.random.RandomState(7)
-    # a few runs incl. one hot term spanning many blocks
+    # a few runs incl. one hot term spanning many blocks and slices
     terms = np.sort(np.concatenate([
         np.full(900, 5), np.repeat(np.arange(6, 40), 17), np.full(3, 2)
     ]))
@@ -102,19 +110,25 @@ def test_frame_chunking_byte_identical():
     docs = np.concatenate([np.sort(rng.choice(10**6, size=(terms == t).sum(), replace=False))
                            for t in np.unique(terms)]).astype(np.int64)
     cols = {
-        "bucket": np.zeros(n, np.int32),
         "term_id": terms.astype(np.int64),
         "doc_id": docs,
         "doclen": rng.randint(1, 500, n).astype(np.int64),
         "tf": rng.randint(1, 9, n).astype(np.int64),
     }
-    one = _encode_np(dict(cols), 100.0, np, pa)
-    parts = [_encode_np(c, 100.0, np, pa) for c in _frame_chunks(dict(cols), np, cap_rows=150)]
+    slice_docs = 10**5
+    one = _encode_np(dict(cols), 100.0, np, pa, 4, slice_docs)
+    parts = [_encode_np(c, 100.0, np, pa, 4, slice_docs)
+             for c in _frame_chunks(dict(cols), np, slice_docs, cap_rows=150)]
     assert len(parts) > 3  # genuinely chunked
     merged = pa.Table.from_batches(parts)
     ref = pa.Table.from_batches([one])
     assert merged.num_rows == ref.num_rows
     assert merged.to_pydict() == ref.to_pydict()
+    # every block lies inside one slice
+    first, last = ref["first_doc"].to_numpy(), ref["last_doc"].to_numpy()
+    assert (first // slice_docs == last // slice_docs).all()
+    hot = ref["term_id"].to_numpy() == 5
+    assert len(set(first[hot] // slice_docs)) == 10
 
 
 def test_frame_chunking_positional_and_progress():
@@ -134,7 +148,6 @@ def test_frame_chunking_positional_and_progress():
     tfs = rng.randint(1, 7, n).astype(np.int64)
     pos = [np.sort(rng.choice(np.arange(1, 1000), t, replace=False)) for t in tfs]
     cols = {
-        "bucket": np.zeros(n, np.int32),
         "term_id": terms.astype(np.int64),
         "doc_id": docs,
         "doclen": rng.randint(1, 1000, n).astype(np.int64),
@@ -142,12 +155,41 @@ def test_frame_chunking_positional_and_progress():
         "pos_flat": np.concatenate(pos).astype(np.int64),
         "pos_len": tfs.copy(),
     }
-    ref = pa.Table.from_batches([_encode_np(dict(cols), 100.0, np, pa)])
+    slice_docs = 3 * 10**4
+    ref = pa.Table.from_batches([_encode_np(dict(cols), 100.0, np, pa, 4, slice_docs)])
     for kw in ({"cap_pos": 120}, {"cap_rows": 50}, {"cap_rows": 7, "cap_pos": 11}):
-        parts = list(_frame_chunks(dict(cols), np, **{"cap_rows": 10**9, **kw}))
+        parts = list(_frame_chunks(dict(cols), np, slice_docs, **{"cap_rows": 10**9, **kw}))
         assert len(parts) > 1
-        merged = pa.Table.from_batches([_encode_np(c, 100.0, np, pa) for c in parts])
+        merged = pa.Table.from_batches(
+            [_encode_np(c, 100.0, np, pa, 4, slice_docs) for c in parts]
+        )
         assert merged.to_pydict() == ref.to_pydict(), kw
+
+
+def test_direct_writers_refuse_speculation():
+    """Both direct writers publish files by rename, outside Spark's output
+    committer: under spark.speculation=true they must refuse to run."""
+    from types import SimpleNamespace
+
+    from geocoderpl_spark.operators.postings import (
+        build_postings,
+        refuse_speculation,
+        tf_docstats_direct,
+    )
+
+    def session(conf: dict):
+        return SimpleNamespace(sparkContext=SimpleNamespace(getConf=lambda: conf))
+
+    refuse_speculation(session({}))
+    refuse_speculation(session({"spark.speculation": "false"}))
+    spec = session({"spark.speculation": "true"})
+    with pytest.raises(RuntimeError, match="spark.speculation"):
+        refuse_speculation(spec)
+    frame = SimpleNamespace(sparkSession=spec)
+    with pytest.raises(RuntimeError, match="spark.speculation"):
+        tf_docstats_direct(frame, [], "/nonexistent")
+    with pytest.raises(RuntimeError, match="spark.speculation"):
+        build_postings(frame, None, 1.0, "/nonexistent")
 
 
 def test_best_partial_per_range_maxima():

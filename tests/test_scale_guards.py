@@ -14,7 +14,9 @@ ENGINE_ROOT = Path(__file__).resolve().parent.parent / "geocoderpl_spark"
 def test_hot_term_postings_split_across_partitions(spark, tmp_path):
     """north_rule: 'salted repartition by term hash to defuse hot-term skew'.
     Our salt is the doc-range slice: a hot term's postings must land in
-    multiple shuffle partitions, not gather on one reducer."""
+    multiple shuffle partitions, not gather on one reducer — each encode
+    task writes its own part file, so the hot term's blocks must sit in
+    several distinct part files."""
     from geocoderpl_spark.operators.postings import (
         build_postings,
         build_terms,
@@ -26,11 +28,17 @@ def test_hot_term_postings_split_across_partitions(spark, tmp_path):
     docs = assign_doc_ids(synth_corpus(spark, 2000), ["repo", "path", "commit"], 8)
     tf = term_frequencies_pandas(docs)
     terms = build_terms(tf)
-    blocks = build_postings(tf, terms, 220.0, n_buckets=8, partitions=16, n_docs=2000)
-    with_pid = blocks.withColumn("pid", F.spark_partition_id())
+    out = str(tmp_path / "postings")
+    build_postings(tf, terms, 220.0, out, n_buckets=8, partitions=16, n_docs=2000)
     hot_id = terms.filter(F.col("term") == HOT_TERM).collect()[0]["term_id"]
-    hot = with_pid.filter(F.col("term_id") == hot_id).select("pid").distinct().count()
-    assert hot >= 3, f"hot term postings produced in only {hot} partition(s)"
+    hot = (
+        spark.read.parquet(out)
+        .filter(F.col("term_id") == hot_id)
+        .select(F.input_file_name().alias("f"))
+        .distinct()
+        .count()
+    )
+    assert hot >= 3, f"hot term postings produced in only {hot} part file(s)"
 
 
 def test_no_row_at_a_time_python_udfs():
