@@ -11,6 +11,8 @@ rank-identity vs the oracle and for resumable builds, SURVEY.md §7.4 #2).
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 
 from pyspark.sql import DataFrame, Window
@@ -50,6 +52,13 @@ def assign_dense_ids(
     on which columns ride along.
     """
     other_cols = [c for c in df.columns if c not in key_cols]
+    if "_graft_kh" in df.columns:
+        # reserved: the hash join-back below names its key column so, and
+        # would overwrite and then drop a payload column of that name
+        raise ValueError(
+            "assign_dense_ids: column name '_graft_kh' is reserved; "
+            "rename it before assigning ids"
+        )
     if other_cols:
         # Key-uniqueness is load-bearing on this path (ADVICE r04): with a
         # duplicate natural key the rank table holds one row per INPUT row,
@@ -150,12 +159,25 @@ def _rank_keys(
     # offsets: cumulative count of rows in all preceding partitions. This is
     # P rows of metadata — the prefix sum runs driver-side (the standard
     # zipWithIndex technique), never on row data.
+    # _nulls rides the same collect: a NULL key field has no rank to join
+    # back on (the key joins drop such rows, the hash join keeps them), so
+    # it is rejected like a duplicate
+    null_key = functools.reduce(operator.or_, [F.col(c).isNull() for c in key_cols])
     counts = sorted(
         local.groupBy("_pid").agg(
-            F.count(F.lit(1)).alias("_cnt"), F.sum("_dup").alias("_dups")
+            F.count(F.lit(1)).alias("_cnt"), F.sum("_dup").alias("_dups"),
+            F.sum(null_key.cast("int")).alias("_nulls"),
         ).collect(),
         key=lambda r: r["_pid"],
     )
+    if any(r["_nulls"] for r in counts):
+        local.unpersist()
+        raise ValueError(
+            f"assign_dense_ids: key {key_cols} has NULL values in "
+            f"{sum(r['_nulls'] or 0 for r in counts)} row(s); a NULL key "
+            "has no rank to join back on — drop or fill those rows, or "
+            "pass an explicit id_col"
+        )
     if any(r["_dups"] for r in counts):
         # failure path only: one extra job to name an offending key
         ex = (

@@ -45,6 +45,7 @@ from ..operators.postings import (
     term_frequencies_arrow,
     term_frequencies_pandas,
 )
+from .manifest import load_term_lookup, read_index_dir
 
 
 def _kernels():
@@ -89,15 +90,15 @@ class InvertedIndex:
 
     @property
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "postings"))
+        return read_index_dir(self.spark, os.path.join(self.root, "postings"))
 
     @property
     def terms(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "terms"))
+        return read_index_dir(self.spark, os.path.join(self.root, "terms"))
 
     @property
     def docstats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "docstats"))
+        return read_index_dir(self.spark, os.path.join(self.root, "docstats"))
 
     @classmethod
     def load(cls, spark: SparkSession, root: str) -> "InvertedIndex":
@@ -144,7 +145,7 @@ class InvertedIndex:
         small enough — the term dictionary in the driver for low-latency
         serving (reference analog: the GUI keeps the vocabulary string and
         sector index resident, ``geo_gui.py:36-43``). Beyond
-        ``max_driver_terms`` the collect is skipped automatically and queries
+        ``max_driver_terms`` the pin is skipped automatically and queries
         gate through the distributed broadcast join. Idempotent.
 
         ``docs_source`` (a parquet path of the corpus) additionally enables
@@ -160,11 +161,8 @@ class InvertedIndex:
             self._postings_cached = self.postings.persist()
             self._postings_cached.count()
             self._terms_cached = self.terms.persist()
-            if self._terms_cached.count() <= max_driver_terms:
-                self._term_lookup = {
-                    r["term"]: (r["term_id"], r["df"])
-                    for r in self._terms_cached.collect()
-                }
+            self._term_lookup = load_term_lookup(self.root, max_driver_terms)
+            if self._term_lookup is not None:
                 # sorted vocabulary: serve-mode autocomplete expands prefixes
                 # with a driver-side bisect — zero Spark jobs before the
                 # posting scan (VERDICT r03 #7)
@@ -655,8 +653,49 @@ def _check_posting_files(
         )
 
 
+def _bucket_term_counts(
+    terms: DataFrame, terms_dir: str, n_buckets: int
+) -> dict[int, tuple[int, int]]:
+    """Per term bucket (n_postings, n_terms) of the dictionary. One within
+    ``InvertedIndex.MAX_DRIVER_TERMS`` rows (by its footers; the same cap
+    as the serve() pin) is driver-sized: its term_id/df columns are read
+    with pyarrow and bucketed with the vectorized xxhash64 twin of the
+    build's ``pmod(xxhash64(term_id), n_buckets)`` — no Spark job. A larger
+    one aggregates in Spark."""
+    import numpy as np
+
+    from ..functions.xxhash import xxhash64_long_np
+    from .manifest import read_capped
+
+    tables = read_capped(terms_dir, ["term_id", "df"], InvertedIndex.MAX_DRIVER_TERMS)
+    if tables is None:
+        return {
+            int(r["bucket"]): (int(r["n_postings"]), int(r["n_terms"]))
+            for r in terms.select(
+                F.pmod(F.xxhash64(F.col("term_id").cast("long")), F.lit(n_buckets))
+                .cast("int")
+                .alias("bucket"),
+                "df",
+            )
+            .groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("n_terms"), F.sum("df").alias("n_postings"))
+            .collect()
+        }
+    n_terms = np.zeros(n_buckets, dtype=np.int64)
+    n_postings = np.zeros(n_buckets, dtype=np.int64)
+    for t in tables:
+        tid, df = (c.to_numpy() for c in t.columns)
+        b = xxhash64_long_np(tid) % n_buckets  # numpy %: sign of the divisor, like pmod
+        n_terms += np.bincount(b, minlength=n_buckets)
+        # float64 weights sum integers exactly below 2^53 postings
+        n_postings += np.bincount(b, weights=df, minlength=n_buckets).astype(np.int64)
+    return {
+        int(b): (int(n_postings[b]), int(n_terms[b])) for b in np.flatnonzero(n_terms)
+    }
+
+
 def _lineage_rows(
-    terms: DataFrame, entries: list[dict], n_buckets: int
+    per_bucket: dict[int, tuple[int, int]], entries: list[dict]
 ) -> list[tuple[int, int, int, int]]:
     """Per-bucket (bucket, n_blocks, n_postings, n_terms), derived from the
     terms dictionary + the manifest instead of a full postings scan (r6,
@@ -673,18 +712,6 @@ def _lineage_rows(
     n_blocks: dict[int, int] = {}
     for e in entries:
         n_blocks[int(e["bucket"])] = n_blocks.get(int(e["bucket"]), 0) + int(e["n_blocks"])
-    per_bucket = {
-        int(r["bucket"]): (int(r["n_postings"]), int(r["n_terms"]))
-        for r in terms.select(
-            F.pmod(F.xxhash64(F.col("term_id").cast("long")), F.lit(n_buckets))
-            .cast("int")
-            .alias("bucket"),
-            "df",
-        )
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_terms"), F.sum("df").alias("n_postings"))
-        .collect()
-    }
     if set(n_blocks) != set(per_bucket):
         raise RuntimeError(
             "lineage: buckets with terms but no posting blocks "
@@ -854,7 +881,7 @@ def build_index(
     else:
         metrics.append(("tf", -1, 0, "resumed"))
 
-    tf_full = spark.read.parquet(p["tf"])
+    tf_full = read_index_dir(spark, p["tf"])
     fused = "sha256" in tf_full.columns  # pre-fusion checkpoints lack it
     # downstream consumers see plain tf rows: sentinels out, sidecar pruned
     tf = (
@@ -921,7 +948,7 @@ def build_index(
                 # freshly (direct-)built docstats is ~1 row/doc — far
                 # cheaper to agg than the tf checkpoint's sparse sidecar
                 src = (
-                    spark.read.parquet(p["docstats"]).select("doc_id", "doclen")
+                    read_index_dir(spark, p["docstats"]).select("doc_id", "doclen")
                     if _done(p["docstats"])
                     else tf_full.filter(
                         F.col("sha256").isNotNull() & F.col("doc_id").isNotNull()
@@ -958,7 +985,7 @@ def build_index(
                 # attempt's _tmp-* leftover must not flip the mode
                 tpart_dir = os.path.join(p["tf"], "_termstats")
                 tpart = (
-                    spark.read.parquet(tpart_dir)
+                    read_index_dir(spark, tpart_dir)
                     if _glob.glob(os.path.join(tpart_dir, "part-*.parquet"))
                     else None
                 )
@@ -973,7 +1000,7 @@ def build_index(
                 # no terms.count() job needed afterwards
                 _stage_out["n_terms"] = getattr(t, "_rank_total", None)
                 _unpersist(t)
-                return -1
+                return -1 if _stage_out["n_terms"] is None else _stage_out["n_terms"]
 
             timed("terms", s3)
         else:
@@ -986,8 +1013,8 @@ def build_index(
     if s2_err:
         raise s2_err[0]
 
-    docstats = spark.read.parquet(p["docstats"])
-    terms = spark.read.parquet(p["terms"])
+    docstats = read_index_dir(spark, p["docstats"])
+    terms = read_index_dir(spark, p["terms"])
 
     # stage 4: meta (needed by postings for block-max) ----------------------
     # min/max doc_id ride the same agg job: they PROVE (or refute) that the
@@ -1003,6 +1030,12 @@ def build_index(
             F.min("doc_id").alias("dmin"), F.max("doc_id").alias("dmax"),
         ).collect()[0]
     n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
+    # the docstats stage wrote one row per doc; the count fell out of the
+    # meta agg (zero extra jobs)
+    metrics[:] = [
+        (st, n_docs if st == "docstats" and status != "resumed" else rows, ms, status)
+        for st, rows, ms, status in metrics
+    ]
     doc_id_range = (
         (int(row["dmin"]), int(row["dmax"])) if row["dmin"] is not None else None
     )
@@ -1065,11 +1098,24 @@ def build_index(
             f,
         )
 
-    # lineage: per-bucket block/posting/term counts (see _lineage_rows)
-    spark.createDataFrame(
-        _lineage_rows(terms, entries, n_buckets) if n_terms else [],
-        "bucket int, n_blocks bigint, n_postings bigint, n_terms bigint",
-    ).write.mode("overwrite").parquet(p["lineage"])
+    # lineage: per-bucket block/posting/term counts (see _lineage_rows) —
+    # at most n_buckets rows, written driver-side (a Spark write of a local
+    # relation is a job and its commit protocol for a few hundred bytes)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    lineage = (
+        _lineage_rows(_bucket_term_counts(terms, p["terms"], n_buckets), entries)
+        if n_terms else []
+    )
+    schema = pa.schema([("bucket", pa.int32()), ("n_blocks", pa.int64()),
+                        ("n_postings", pa.int64()), ("n_terms", pa.int64())])
+    shutil.rmtree(p["lineage"], ignore_errors=True)
+    os.makedirs(p["lineage"])
+    pq.write_table(
+        pa.Table.from_pylist([dict(zip(schema.names, r)) for r in lineage], schema=schema),
+        os.path.join(p["lineage"], "part-00000-graft.snappy.parquet"),
+    )
     os.makedirs(p["metrics"], exist_ok=True)
     with open(os.path.join(p["metrics"], "metrics.jsonl"), "a") as f:
         for stage, rows, wall_ms, status in metrics:

@@ -32,6 +32,81 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_FILE = "postings_manifest.jsonl"
+# the Spark schema JSON Spark's parquet writer stores in every file footer
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _part_files(path: str) -> list[str]:
+    """Published data files of an index table dir, flat or ``col=value``
+    partitioned (``postings/bucket=<b>/``), in sorted order."""
+    import glob as _glob
+
+    return sorted(_glob.glob(os.path.join(path, "part-*.parquet"))) or sorted(
+        _glob.glob(os.path.join(path, "*=*", "part-*.parquet"))
+    )
+
+
+def read_index_dir(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for a table dir this program wrote, with
+    the schema taken from the first part file's footer instead of inferred.
+
+    Inference costs one Spark job per read (45-65 ms each on local[4], ~20
+    per segment build); every part file of a table the program wrote has the same
+    schema, so one driver-side footer read says the same thing. Spark-
+    written files carry their exact Spark schema in the footer; files the
+    Arrow kernels wrote are mapped with ``from_arrow_schema``. Partition
+    columns (``bucket=``) are still discovered by Spark. A dir without part
+    files takes the plain read, so its errors stay Spark's."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    files = _part_files(path)
+    if not files:
+        return spark.read.parquet(path)
+    arrow_schema = pq.read_schema(files[0])
+    spark_json = (arrow_schema.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    schema = (
+        StructType.fromJson(json.loads(spark_json))
+        if spark_json
+        else from_arrow_schema(arrow_schema.remove_metadata())
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
+def read_capped(path: str, columns: list[str], cap: int) -> list | None:
+    """``columns`` of a table dir's part files as pyarrow tables (one per
+    file), or None when the files hold more than ``cap`` rows — checked on
+    the footers' row counts before any row is read, so an over-cap table
+    never stages on the driver."""
+    import pyarrow.parquet as pq
+
+    files = _part_files(path)
+    if sum(pq.read_metadata(f).num_rows for f in files) > cap:
+        return None
+    out = []
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            out.append(pf.read(columns=columns))
+    return out
+
+
+def load_term_lookup(index_root: str, cap: int) -> dict | None:
+    """The term dictionary as ``{term: (term_id, df)}``, read with pyarrow —
+    the driver-resident vocabulary a served index gates queries against
+    (reference: the GUI loads its vocabulary once, ``geo_gui.py:36-43``).
+    None when the dictionary holds more than ``cap`` terms."""
+    tables = read_capped(
+        os.path.join(index_root, "terms"), ["term", "term_id", "df"], cap
+    )
+    if tables is None:
+        return None
+    lookup: dict = {}
+    for t in tables:
+        # numpy tolist() builds the Python objects ~10x faster than to_pylist()
+        term, tid, df = (c.to_numpy().tolist() for c in t.columns)
+        lookup.update(zip(term, zip(tid, df)))
+    return lookup
 
 
 def _manifest_path(index_root: str) -> str:
@@ -147,7 +222,7 @@ def manifest_scan(
     pdir = os.path.join(index_root, "postings")
     files = select_files(entries, term_ids, n_buckets)
     if not files:
-        return spark.read.parquet(pdir).filter(F.lit(False))
+        return read_index_dir(spark, pdir).filter(F.lit(False))
     reader = spark.read.option("basePath", pdir)
     df = reader.parquet(*[os.path.join(pdir, f) for f in files])
     cond = F.col("term_id").isin(term_ids)

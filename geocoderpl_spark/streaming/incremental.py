@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.build import InvertedIndex, build_index
+from ..plans.manifest import read_index_dir
 
 
 class SegmentedIndex:
@@ -64,7 +65,7 @@ class SegmentedIndex:
         leave the index un-pinned — every query keeps the distributed plan.
         """
         from ..plans.build import InvertedIndex as _II
-        from ..plans.manifest import load_postings_manifest
+        from ..plans.manifest import load_postings_manifest, load_term_lookup
         from ..plans.serving import LocalBlockReader, ServingSource
 
         if max_driver_terms is None:
@@ -78,15 +79,13 @@ class SegmentedIndex:
             entries = load_postings_manifest(s.root)
             if not entries and s.n_docs > 0:
                 return self  # pre-manifest segment: stay distributed
-            # cap check BEFORE the collect (same count-then-collect shape as
-            # InvertedIndex.serve): an over-cap vocabulary must never stage
-            # on the driver, not even transiently while deciding not to pin
-            total_terms += s.terms.count()
-            if total_terms > max_driver_terms:
+            # the cap covers the vocabularies summed across segments; each
+            # segment's dictionary is checked against what is left of it
+            # before any of its rows is read
+            lookup = load_term_lookup(s.root, max_driver_terms - total_terms)
+            if lookup is None:
                 return self  # vocabulary too large to pin
-            lookup = {
-                r["term"]: (r["term_id"], r["df"]) for r in s.terms.collect()
-            }
+            total_terms += len(lookup)
             scale = max(1.0, avgdl_g / s.avgdl) if s.avgdl else 1.0
             sources.append(ServingSource(
                 LocalBlockReader(s.root, s.n_buckets, entries or []),
@@ -869,11 +868,8 @@ def merge_segments(spark: SparkSession, index_root: str, out_dir: str, n_buckets
     stats = None
     # positional and plain segments must not silently mix: NULL-filled
     # position lists would crash deep inside the encode kernel; fail with a
-    # clear error at compaction time instead
-    pos_kinds = {
-        "positions" in spark.read.parquet(os.path.join(s.root, "tf")).columns
-        for s in segs
-    }
+    # clear error at compaction time instead (meta.json records the kind)
+    pos_kinds = {s.positional for s in segs}
     if len(pos_kinds) > 1:
         raise ValueError(
             "merge_segments: cannot compact a mix of positional and "
@@ -882,7 +878,7 @@ def merge_segments(spark: SparkSession, index_root: str, out_dir: str, n_buckets
         )
     positional = pos_kinds.pop()
     for s in segs:
-        t = spark.read.parquet(os.path.join(s.root, "tf"))
+        t = read_index_dir(spark, os.path.join(s.root, "tf"))
         d = s.docstats
         # allowMissingColumns: pre-fusion segments' tf checkpoints lack the
         # sha256 sidecar column the fused kernel adds — mixed-generation

@@ -492,3 +492,20 @@ def test_manifest_prunes_file_set_and_results_identical(spark, tmp_path):
     pruned = sorted(tuple(r) for r in idx.topk(q, "pruned").collect())
     exact = sorted(tuple(r) for r in idx.topk(q, "exact").collect())
     assert pruned == exact and len(pruned) == 10
+
+
+def test_lineage_bucket_counts_driver_and_spark_agree(spark, index, monkeypatch):
+    """A driver-sized dictionary is bucketed with pyarrow and the numpy
+    xxhash64 twin, without a Spark job; above the cap the Spark aggregate
+    runs. Both give the same per-bucket (n_postings, n_terms)."""
+    from geocoderpl_spark.plans import build as build_mod
+
+    tdir = os.path.join(index.root, "terms")
+    terms = index.terms
+    tracker = spark.sparkContext.statusTracker()
+    before = list(tracker.getJobIdsForGroup(None))
+    driver = build_mod._bucket_term_counts(terms, tdir, index.n_buckets)
+    assert list(tracker.getJobIdsForGroup(None)) == before
+    monkeypatch.setattr(build_mod.InvertedIndex, "MAX_DRIVER_TERMS", 0)
+    assert build_mod._bucket_term_counts(index.terms, tdir, index.n_buckets) == driver
+    assert len(driver) > 1

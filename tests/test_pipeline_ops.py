@@ -522,6 +522,14 @@ def test_assign_dense_ids_rejects_duplicate_keys(spark):
     with pytest.raises(ValueError, match="not unique"):
         assign_dense_ids(dup, ["k", "v"])
 
+    # a NULL key field has no rank: the key join-back would drop the row
+    null_key = spark.createDataFrame(
+        [("a", 1, "x"), (None, 2, "y"), ("b", 2, "z")],
+        "k string, v int, payload string",
+    )
+    with pytest.raises(ValueError, match="NULL"):
+        assign_dense_ids(null_key, ["k", "v"])
+
 
 def test_rank_keys_rejects_duplicates_keys_only_path(spark):
     """r5: the uniqueness guard lives in the ranking window pass itself
@@ -564,3 +572,25 @@ def test_hash_compressed_id_joinback_matches_key_join(spark, monkeypatch):
     assert sorted(hashed_df.columns) == sorted([*corpus.columns, "doc_id"])
     hashed = {(r.repo, r.path, r.commit): r.doc_id for r in hashed_rows}
     assert hashed == plain and len(hashed_rows) == 300
+
+    # a NULL key field: the hash join-back would keep the row while the key
+    # joins drop it — both branches raise instead
+    with_null = corpus.withColumn(
+        "commit", F.when(F.col("path") == corpus.first()["path"], None)
+        .otherwise(F.col("commit"))
+    )
+    with pytest.raises(ValueError, match="NULL"):
+        docids.assign_doc_ids(with_null, ["repo", "path", "commit"], 4)
+
+
+def test_assign_dense_ids_rejects_reserved_column(spark, monkeypatch):
+    """The hash join-back keys on a column named ``_graft_kh``: a payload
+    column of that name must raise, not be overwritten and dropped."""
+    from geocoderpl_spark.operators import docids
+
+    monkeypatch.setattr(docids, "HASH_IDS_MIN_ROWS", 1)
+    df = spark.createDataFrame(
+        [("a", 7), ("b", 8)], "k string, _graft_kh long"
+    )
+    with pytest.raises(ValueError, match="_graft_kh"):
+        docids.assign_dense_ids(df, ["k"])

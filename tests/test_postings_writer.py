@@ -101,3 +101,12 @@ def test_lineage_bucket_without_blocks_raises(spark, built, tmp_path):
     shutil.rmtree(sorted(glob.glob(os.path.join(root, "postings", "bucket=*")))[0])
     with pytest.raises(RuntimeError, match="buckets with terms but no posting blocks"):
         build_index(spark, synth_corpus(spark, 600), root, n_buckets=8, partitions=4)
+
+
+def test_metrics_record_terms_and_docs(spark, built):
+    """The terms and docstats rows of metrics.jsonl record the rows those
+    stages wrote (the dictionary size and the document count), not -1."""
+    with open(os.path.join(built.root, "metrics", "metrics.jsonl")) as f:
+        rows = {r["stage"]: r for r in map(json.loads, f)}
+    assert rows["terms"]["rows_out"] == built.terms.count() > 0
+    assert rows["docstats"]["rows_out"] == built.docstats.count() == 600

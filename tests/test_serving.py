@@ -724,3 +724,75 @@ def test_phrase_serve_nontrivial_repeat(spark, sidx):
     got = res.sort_values(["query_id", "rank"]).reset_index(drop=True)
     assert list(got.doc_id) == list(dist.doc_id)
     assert list(got.n_matches) == list(dist.n_matches)
+
+
+# ---------------------------------------------------------------------------
+# index metadata through pyarrow footers: no Spark job
+# ---------------------------------------------------------------------------
+
+
+def _rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def test_read_index_dir_matches_inferred_read_jobless(spark, sidx, tmp_path):
+    """The footer-schema read gives the inferred read's schema and rows for
+    every table dir a build writes (kernel-written tf, its _termstats
+    partials, Spark-written docstats and terms, the lineage table, the
+    bucket-partitioned postings) — and runs no Spark job."""
+    import shutil
+
+    from geocoderpl_spark.plans.manifest import read_index_dir
+
+    idx, _ = sidx
+    for sub in ("tf", "tf/_termstats", "docstats", "terms", "lineage", "postings"):
+        d = os.path.join(idx.root, sub)
+        got = _no_jobs(spark, lambda d=d: read_index_dir(spark, d))
+        want = spark.read.parquet(d)
+        assert got.schema == want.schema, sub
+        assert _rows(got) == _rows(want), sub
+    assert "bucket" in read_index_dir(spark, os.path.join(idx.root, "postings")).columns
+
+    # a pre-fusion tf checkpoint (no sha256 column) must read as one, so
+    # build_index still takes its fused == False branch
+    old = str(tmp_path / "oldtf")
+    read_index_dir(spark, os.path.join(idx.root, "tf")).filter(
+        F.col("term").isNotNull()
+    ).select("term", "doc_id", "doclen", "tf").write.parquet(old)
+    got = _no_jobs(spark, lambda: read_index_dir(spark, old))
+    assert "sha256" not in got.columns
+    assert got.schema == spark.read.parquet(old).schema
+    shutil.rmtree(old)
+
+
+def test_segmented_serve_pins_dictionaries_jobless(spark, segidx, tmp_path):
+    """SegmentedIndex.serve() over two segments pins their dictionaries
+    without a Spark job; the lookups equal the Spark collect, and the cap
+    on the summed vocabulary keeps its meaning: 0 and a cap between the
+    first segment's size and the total leave the index unpinned, a cap of
+    the total pins it."""
+    import shutil
+
+    from geocoderpl_spark.plans.manifest import load_term_lookup
+    from geocoderpl_spark.streaming.incremental import SegmentedIndex
+
+    root = str(tmp_path / "two")
+    for name in ("seg_00000", "seg_00001"):
+        shutil.copytree(os.path.join(segidx.root, name), os.path.join(root, name))
+    seg = SegmentedIndex(spark, root)
+    segs = seg.segments()
+    want = [
+        {r["term"]: (r["term_id"], r["df"]) for r in s.terms.collect()} for s in segs
+    ]
+    sizes = [len(w) for w in want]
+    assert len(sizes) == 2 and min(sizes) > 1
+
+    _no_jobs(spark, seg.serve)
+    assert [src.term_lookup for src in seg._sources] == want
+    assert _no_jobs(spark, lambda: load_term_lookup(segs[0].root, sizes[0])) == want[0]
+    assert load_term_lookup(segs[0].root, sizes[0] - 1) is None
+
+    for cap, pinned in ((0, False), (sizes[0] + 1, False), (sum(sizes), True)):
+        s = SegmentedIndex(spark, root)
+        _no_jobs(spark, lambda s=s, cap=cap: s.serve(max_driver_terms=cap))
+        assert (s._sources is not None) == pinned, cap
