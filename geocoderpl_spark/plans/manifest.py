@@ -74,35 +74,22 @@ def read_index_dir(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def read_capped(path: str, columns: list[str], cap: int) -> list | None:
-    """``columns`` of a table dir's part files as pyarrow tables (one per
-    file), or None when the files hold more than ``cap`` rows — checked on
-    the footers' row counts before any row is read, so an over-cap table
-    never stages on the driver."""
-    import pyarrow.parquet as pq
-
-    files = _part_files(path)
-    if sum(pq.read_metadata(f).num_rows for f in files) > cap:
-        return None
-    out = []
-    for f in files:
-        with pq.ParquetFile(f) as pf:
-            out.append(pf.read(columns=columns))
-    return out
-
-
 def load_term_lookup(index_root: str, cap: int) -> dict | None:
     """The term dictionary as ``{term: (term_id, df)}``, read with pyarrow —
     the driver-resident vocabulary a served index gates queries against
     (reference: the GUI loads its vocabulary once, ``geo_gui.py:36-43``).
-    None when the dictionary holds more than ``cap`` terms."""
-    tables = read_capped(
-        os.path.join(index_root, "terms"), ["term", "term_id", "df"], cap
-    )
-    if tables is None:
+    None when the dictionary holds more than ``cap`` terms — checked on the
+    footers' row counts before any row is read, so an over-cap dictionary
+    never stages on the driver."""
+    import pyarrow.parquet as pq
+
+    files = _part_files(os.path.join(index_root, "terms"))
+    if sum(pq.read_metadata(f).num_rows for f in files) > cap:
         return None
     lookup: dict = {}
-    for t in tables:
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            t = pf.read(columns=["term", "term_id", "df"])
         # numpy tolist() builds the Python objects ~10x faster than to_pylist()
         term, tid, df = (c.to_numpy().tolist() for c in t.columns)
         lookup.update(zip(term, zip(tid, df)))

@@ -868,7 +868,8 @@ def merge_segments(spark: SparkSession, index_root: str, out_dir: str, n_buckets
     stats = None
     # positional and plain segments must not silently mix: NULL-filled
     # position lists would crash deep inside the encode kernel; fail with a
-    # clear error at compaction time instead (meta.json records the kind)
+    # clear error at compaction time instead (meta.json records the kind:
+    # its ``positional`` key shipped together with the position streams)
     pos_kinds = {s.positional for s in segs}
     if len(pos_kinds) > 1:
         raise ValueError(

@@ -494,18 +494,28 @@ def test_manifest_prunes_file_set_and_results_identical(spark, tmp_path):
     assert pruned == exact and len(pruned) == 10
 
 
-def test_lineage_bucket_counts_driver_and_spark_agree(spark, index, monkeypatch):
-    """A driver-sized dictionary is bucketed with pyarrow and the numpy
-    xxhash64 twin, without a Spark job; above the cap the Spark aggregate
-    runs. Both give the same per-bucket (n_postings, n_terms)."""
+def test_lineage_bucket_counts_match_spark_aggregate(spark, index):
+    """The lineage's per-bucket dictionary counts are streamed from the terms
+    files with pyarrow and the numpy xxhash64 twin, without a Spark job, and
+    equal the Spark aggregate over the build's bucket expression."""
+    from pyspark.sql import functions as F
+
     from geocoderpl_spark.plans import build as build_mod
 
-    tdir = os.path.join(index.root, "terms")
-    terms = index.terms
     tracker = spark.sparkContext.statusTracker()
     before = list(tracker.getJobIdsForGroup(None))
-    driver = build_mod._bucket_term_counts(terms, tdir, index.n_buckets)
+    driver = build_mod._bucket_term_counts(
+        os.path.join(index.root, "terms"), index.n_buckets
+    )
     assert list(tracker.getJobIdsForGroup(None)) == before
-    monkeypatch.setattr(build_mod.InvertedIndex, "MAX_DRIVER_TERMS", 0)
-    assert build_mod._bucket_term_counts(index.terms, tdir, index.n_buckets) == driver
-    assert len(driver) > 1
+    expected = {
+        int(r["bucket"]): (int(r["n_postings"]), int(r["n_terms"]))
+        for r in index.terms.groupBy(
+            F.pmod(F.xxhash64(F.col("term_id").cast("long")), F.lit(index.n_buckets))
+            .cast("int")
+            .alias("bucket")
+        )
+        .agg(F.sum("df").alias("n_postings"), F.count(F.lit(1)).alias("n_terms"))
+        .collect()
+    }
+    assert driver == expected and len(driver) > 1

@@ -554,6 +554,8 @@ def test_merge_segments_rejects_positional_mix(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
+    from geocoderpl_spark.streaming.incremental import compact_segments
+
     from geocoderpl_spark.plans.build import build_index
     from geocoderpl_spark.sources.corpus import synth_corpus
 
@@ -566,5 +568,9 @@ def test_merge_segments_rejects_positional_mix(spark, tmp_path):
                 n_buckets=4, id_col="doc_id", content_col="content")
     build_index(spark, ids.filter("doc_id % 2 = 1"), os.path.join(root, "seg_00001"),
                 n_buckets=4, id_col="doc_id", content_col="content", positional=True)
-    with pytest.raises(ValueError, match="positional"):
+    with pytest.raises(ValueError, match="cannot compact a mix of positional"):
         merge_segments(spark, root, str(tmp_path / "out"))
+    # the compaction policy surfaces the same error and keeps both segments
+    with pytest.raises(ValueError, match="cannot compact a mix of positional"):
+        compact_segments(spark, root, max_segments=1, n_buckets=4)
+    assert [s.positional for s in SegmentedIndex(spark, root).segments()] == [False, True]
