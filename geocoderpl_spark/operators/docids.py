@@ -156,20 +156,15 @@ def _rank_keys(
             key_struct.eqNullSafe(F.lag(key_struct).over(w_part)).cast("int"),
         )
     ).persist()
-    # offsets: cumulative count of rows in all preceding partitions. This is
-    # P rows of metadata — the prefix sum runs driver-side (the standard
-    # zipWithIndex technique), never on row data.
-    # _nulls rides the same collect: a NULL key field has no rank to join
-    # back on (the key joins drop such rows, the hash join keeps them), so
-    # it is rejected like a duplicate
+    # offsets: cumulative count of rows in all preceding partitions
+    # (partition_offsets). _nulls rides the same collect: a NULL key field
+    # has no rank to join back on (the key joins drop such rows, the hash
+    # join keeps them), so it is rejected like a duplicate
     null_key = functools.reduce(operator.or_, [F.col(c).isNull() for c in key_cols])
-    counts = sorted(
-        local.groupBy("_pid").agg(
-            F.count(F.lit(1)).alias("_cnt"), F.sum("_dup").alias("_dups"),
-            F.sum(null_key.cast("int")).alias("_nulls"),
-        ).collect(),
-        key=lambda r: r["_pid"],
-    )
+    counts = local.groupBy("_pid").agg(
+        F.count(F.lit(1)).alias("_cnt"), F.sum("_dup").alias("_dups"),
+        F.sum(null_key.cast("int")).alias("_nulls"),
+    ).collect()
     if any(r["_nulls"] for r in counts):
         local.unpersist()
         raise ValueError(
@@ -191,10 +186,7 @@ def _rank_keys(
             "and multiply payload rows at the join-back — deduplicate the "
             "corpus or pass an explicit id_col"
         )
-    acc, rows = 0, []
-    for r in counts:
-        rows.append((r["_pid"], acc))
-        acc += r["_cnt"]
+    rows, acc = partition_offsets((r["_pid"], r["_cnt"]) for r in counts)
     offsets = df.sparkSession.createDataFrame(rows or [(0, 0)], "_pid int, _off long")
     out = (
         local.join(F.broadcast(offsets), "_pid")
@@ -204,6 +196,19 @@ def _rank_keys(
     out._dense_ids_cache = local  # handle for caller-side unpersist
     out._rank_total = acc  # exact row count, already paid for by the collect
     return out
+
+
+def partition_offsets(counts) -> tuple[list[tuple[int, int]], int]:
+    """``(pid, offset)`` per range partition from its ``(pid, rows)``
+    count, plus the total: a partition's offset is the row count of every
+    partition before it, so ``offset + local rank`` is the global rank.
+    P rows of metadata — the prefix sum runs driver-side (the standard
+    zipWithIndex technique), never on row data."""
+    acc, rows = 0, []
+    for pid, n in sorted(counts):
+        rows.append((pid, acc))
+        acc += n
+    return rows, acc
 
 
 def assign_doc_ids(df: DataFrame, key_cols: list[str], partitions: int | None = None) -> DataFrame:

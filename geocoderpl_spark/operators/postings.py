@@ -7,7 +7,8 @@ phrases into a 200x200 in-memory sector-string matrix (``xml_parsers.py:351``,
 (``xml_parsers.py:433-435``) — both are unbounded shared mutable state. Here
 both become pure dataflow outputs:
 
-- ``terms``    = groupBy(term).agg(df, cf) + dense term_id (the vocabulary)
+- ``terms``    = per-term (df, cf) + dense term_id (the vocabulary), from one
+  range exchange and one Arrow rank kernel
 - ``postings`` = blocked posting lists, delta+varint compressed, with
   per-block max-score metadata (Block-Max WAND, SURVEY.md §4 O5)
 
@@ -624,44 +625,109 @@ def docstats_pandas(
     return docs.select("doc_id", *meta_cols, content_col).mapInPandas(fn, schema=schema)
 
 
-def build_terms(tf: DataFrame, partials: DataFrame | None = None) -> DataFrame:
-    """Term dictionary: (term, term_id, df, cf).
+def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> DataFrame:
+    """Term dictionary: (term, df, cf, term_id).
 
     Replaces the reference's single-row vocabulary string (K3,
     ``db_classes.py:181-208``) — the #1 anti-pattern SURVEY.md flags.
-    term_id is the dense rank of the term string (deterministic).
-    """
-    from .docids import assign_dense_ids
+    term_id is the dense 0-based rank of the term string (deterministic,
+    independent of the partition count).
 
-    # term-NULL rows are fused-docstats sentinels (zero-token docs), not terms
-    # PERSISTED: the id-ranking machinery below touches this relation three
-    # times (range sampler, counts collect, final join-back) — without the
-    # persist each touch re-runs the full tf scan + aggregation (r6: two
-    # extra passes over the build's largest relation). Vocabulary-sized, so
-    # the cache is metadata-scale; released via `_stats_cache` by the caller
-    # (plans/build._unpersist) once the dictionary is written.
-    # r6: when the direct tf kernel left its ``_termstats`` partial sidecar
-    # (per-batch (term, df, cf) rows — a materialized map-side combine),
-    # the dictionary aggregates those vocabulary-sized partials instead of
-    # rescanning the full tf checkpoint. Values are identical: per-term
-    # df = sum of per-batch counts, cf = sum of per-batch tf sums (the
-    # coalesce keeps df non-nullable exactly like the count() it replaces;
-    # groups are never empty so the value is unchanged).
+    One range exchange on ``term`` feeds one Arrow kernel
+    (:func:`_rank_partition`) that aggregates, sorts and numbers its range
+    partition in a single pass; the per-partition row counts (one collect
+    of each partition's last row from the persisted kernel output) give
+    each partition's id offset. With the direct tf kernel's ``_termstats`` partials (per-batch
+    (term, df, cf) rows, a materialized map-side combine) the exchange
+    moves those partial rows; without them (merges) a ``groupBy(term)``
+    over the tf rows makes the source. Values are identical either way:
+    per-term df / cf are the sums of the per-batch counts / tf sums.
+
+    The result carries ``_rank_total`` (the dictionary size) and
+    ``_stats_cache`` (the persisted kernel output, released by the caller
+    once the dictionary is written). Its partitions are the range
+    partitions in term order, each sorted by term, so writing it as is
+    yields globally term-sorted files.
+    """
+    from .docids import partition_offsets
+
     if partials is not None:
-        stats = partials.groupBy("term").agg(
-            F.coalesce(F.sum("df"), F.lit(0)).cast("long").alias("df"),
-            F.sum("cf").alias("cf"),
-        ).persist()
+        src = partials.select("term", "df", "cf")
     else:
-        stats = tf.filter(F.col("term").isNotNull()).groupBy("term").agg(
+        # term-NULL rows are fused-docstats sentinels (zero-token docs)
+        src = tf.filter(F.col("term").isNotNull()).groupBy("term").agg(
             F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-        ).persist()
-    # term_id = dense rank of the term string, assigned with the same
-    # range-partition + prefix-sum technique as doc_ids (no global window —
-    # the vocabulary can reach 1e8+ terms on a code corpus).
-    out = assign_dense_ids(stats, ["term"], "term_id")
-    out._stats_cache = stats
+        )
+    n_parts = src.sparkSession.sparkContext.defaultParallelism
+    # PERSISTED: repartitionByRange samples its boundaries per job, so the
+    # counts collect and the caller's write must read one materialization
+    # (the zipWithIndex technique: one count job over a pinned partitioning)
+    ranked = (
+        src.repartitionByRange(n_parts, "term")
+        .mapInArrow(
+            _rank_partition,
+            "term string, df long, cf long, _rank long, _pid int, _last boolean",
+        )
+        .persist()
+    )
+    # counts: each partition's flagged last row, a filter with no exchange.
+    # Arrow sorts a NULL term last, so it shows here too and is raised
+    counts = ranked.filter("_last").select(
+        "_pid", "_rank", F.col("term").isNull().alias("null")
+    ).collect()
+    if any(r["null"] for r in counts):
+        ranked.unpersist()
+        raise ValueError(
+            "build_terms: a term partial row has a NULL term; a NULL term "
+            "has no rank in the dictionary"
+        )
+    rows, total = partition_offsets((r["_pid"], r["_rank"] + 1) for r in counts)
+    by_pid = dict(rows)
+    # P longs as a literal array indexed by the partition id: no join
+    offsets = F.array(*[F.lit(by_pid.get(p, 0)) for p in range(n_parts)]).cast(
+        "array<long>"
+    )
+    out = ranked.select(
+        "term", "df", "cf", (offsets[F.col("_pid")] + F.col("_rank")).alias("term_id")
+    )
+    out._stats_cache = ranked
+    out._rank_total = total
     return out
+
+
+def _rank_partition(batches):
+    """Rank kernel of :func:`build_terms` over one range partition of
+    (term, df, cf) rows: sum df / cf per term, sort by term (Arrow's byte
+    order, which is Spark's ``UTF8String`` order, so the range partitions
+    stay globally ordered; a NULL term sorts last) and emit each term once
+    with its local rank ``_rank = 0..n-1``, the partition id ``_pid`` and
+    ``_last`` set on the last row. Memory is one range partition's rows."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    batches = list(batches)
+    if not batches:
+        return
+    agg = (
+        pa.Table.from_batches(batches)
+        .group_by("term")
+        .aggregate([("df", "sum"), ("cf", "sum")])
+        .sort_by("term")
+    )
+    n = agg.num_rows
+    if n == 0:
+        return
+    last = np.zeros(n, dtype=bool)
+    last[-1] = True
+    yield from pa.table({
+        "term": agg["term"],
+        "df": agg["df_sum"],
+        "cf": agg["cf_sum"],
+        "_rank": pa.array(np.arange(n, dtype=np.int64)),
+        "_pid": pa.array(np.full(n, TaskContext.get().partitionId(), dtype=np.int32)),
+        "_last": pa.array(last),
+    }).to_batches()
 
 
 def corpus_stats(tok_docs: DataFrame) -> tuple[int, float]:

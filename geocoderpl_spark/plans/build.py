@@ -22,7 +22,8 @@ Layout under ``out_dir``::
                 file per encode task and bucket, written by the kernel)
     meta/       n_docs, avgdl, n_buckets, partitions
     lineage/    bucket, n_blocks, n_postings, n_terms
-    metrics/    stage, rows_out, wall_ms, status
+    metrics/    stage, rows_out, wall_ms, status  (tf rows_out counts the
+                term-NULL sentinel rows; -1 for a resumed stage)
 """
 
 from __future__ import annotations
@@ -45,7 +46,7 @@ from ..operators.postings import (
     term_frequencies_arrow,
     term_frequencies_pandas,
 )
-from .manifest import load_term_lookup, read_index_dir
+from .manifest import footer_rows, load_term_lookup, read_index_dir
 
 
 def _kernels():
@@ -857,7 +858,7 @@ def build_index(
                 ensure_tf_files(p["tf"], positional)
                 open(os.path.join(p["tf"], "_SUCCESS"), "w").close()
                 _unpersist(docs)
-                return -1
+                return footer_rows(p["tf"])
 
             timed("tf", s1)
             metrics.append(("docstats", -1, 0, "fused-direct"))
@@ -870,7 +871,7 @@ def build_index(
                     "overwrite"
                 ).parquet(p["tf"])
                 _unpersist(docs)
-                return -1
+                return footer_rows(p["tf"])
 
             timed("tf", s1)
     else:
@@ -985,17 +986,18 @@ def build_index(
                     else None
                 )
                 t = build_terms(tf, partials=tpart)
-                # term-sorted layout (the range partitioning is already by
-                # term, so this yields globally sorted files): every parquet
-                # file gets a tight term min/max, making prefix-range
-                # predicates (autocomplete) row-group-skippable instead of
-                # full-dict scans
-                t.sortWithinPartitions("term").write.mode("overwrite").parquet(p["terms"])
+                # term-sorted layout: build_terms' partitions are its range
+                # partitions in term order, each sorted by term, so the
+                # files are globally sorted as written — every parquet file
+                # gets a tight term min/max, making prefix-range predicates
+                # (autocomplete) row-group-skippable instead of full-dict
+                # scans
+                t.write.mode("overwrite").parquet(p["terms"])
                 # dictionary size fell out of the ranking's counts collect —
                 # no terms.count() job needed afterwards
-                _stage_out["n_terms"] = getattr(t, "_rank_total", None)
+                _stage_out["n_terms"] = t._rank_total
                 _unpersist(t)
-                return -1 if _stage_out["n_terms"] is None else _stage_out["n_terms"]
+                return t._rank_total
 
             timed("terms", s3)
         else:
@@ -1036,10 +1038,10 @@ def build_index(
     )
     # term_id = rank of term, so the dictionary size bounds it exactly; it
     # fell out of the terms stage's own counts collect (zero extra jobs) —
-    # a resumed terms stage falls back to the footer-metadata count job
+    # a resumed terms stage sums its files' footer row counts (no job)
     n_terms = _stage_out.get("n_terms")
     if n_terms is None:
-        n_terms = terms.count()
+        n_terms = footer_rows(p["terms"])
 
     # stage 5: postings ------------------------------------------------------
     if not _done(p["postings"]):

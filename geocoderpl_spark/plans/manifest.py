@@ -46,6 +46,15 @@ def _part_files(path: str) -> list[str]:
     )
 
 
+def footer_rows(path: str) -> int:
+    """Rows in an index table dir, summed from its part files' footers with
+    pyarrow: no Spark job, no data read. For ``tf/`` the sum includes the
+    term-NULL sentinel rows that carry zero-token docs."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _part_files(path))
+
+
 def read_index_dir(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` for a table dir this program wrote, with
     the schema taken from the first part file's footer instead of inferred.
@@ -83,11 +92,11 @@ def load_term_lookup(index_root: str, cap: int) -> dict | None:
     never stages on the driver."""
     import pyarrow.parquet as pq
 
-    files = _part_files(os.path.join(index_root, "terms"))
-    if sum(pq.read_metadata(f).num_rows for f in files) > cap:
+    terms_dir = os.path.join(index_root, "terms")
+    if footer_rows(terms_dir) > cap:
         return None
     lookup: dict = {}
-    for f in files:
+    for f in _part_files(terms_dir):
         with pq.ParquetFile(f) as pf:
             t = pf.read(columns=["term", "term_id", "df"])
         # numpy tolist() builds the Python objects ~10x faster than to_pylist()

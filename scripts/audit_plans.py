@@ -8,6 +8,7 @@ spans, shuffle structure). Run after operator changes:
 from __future__ import annotations
 
 import io
+import os
 import shutil
 import sys
 import tempfile
@@ -107,6 +108,28 @@ def main() -> None:
         "pure Arrow C++ (RE2 + hash group-by), no Python string objects "
         "(SCALE.md kernel study).",
         plan_of(tf),
+    ))
+    from geocoderpl_spark.plans.manifest import read_index_dir
+
+    dictionary = build_terms(
+        None, partials=read_index_dir(spark, os.path.join(idx.root, "tf", "_termstats"))
+    )
+    dict_plan = plan_of(dictionary)
+    dictionary._stats_cache.unpersist()
+    # the cached plan prints twice (AQE final + initial): one exchange each
+    assert "rangepartitioning(" in dict_plan and "MapInArrow" in dict_plan, dict_plan
+    for absent in ("hashpartitioning", "Window", "BroadcastHashJoin"):
+        assert absent not in dict_plan, dict_plan
+    sections.append((
+        "Build stage — term dictionary",
+        "The tf kernel's per-batch (term, df, cf) partials go through ONE "
+        "range exchange on term (RangePartitioning) into ONE MapInArrow "
+        "rank kernel that sums, sorts and numbers each range partition; "
+        "the output is cached (InMemoryRelation), one collect of each "
+        "partition's last row gives the id offsets, and term_id is a "
+        "literal-array lookup by partition id. No groupBy exchange, no "
+        "Window, no join.",
+        dict_plan,
     ))
     sections.append((
         "Build stage — posting construction",

@@ -63,12 +63,7 @@ def main() -> None:
     t = build_terms(tf, partials=tpart)
     with open(os.path.join(OUT, f"build_terms_stage_{TAG}.txt"), "w") as f:
         f.write(plan_of(t))
-    stats = getattr(t, "_stats_cache", None)
-    if stats is not None:
-        stats.unpersist()
-    cache = getattr(t, "_dense_ids_cache", None)
-    if cache is not None:
-        cache.unpersist()
+    t._stats_cache.unpersist()
     print(f"wrote build_terms_stage_{TAG}.txt")
 
 

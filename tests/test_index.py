@@ -126,10 +126,15 @@ def test_postings_blocks_sorted_and_complete(spark, index):
         assert (g["first_doc"].to_numpy()[1:] > g["last_doc"].to_numpy()[:-1]).all()
 
 
-def test_resume_rebuilds_identical_postings(spark, index, tmp_path):
+def test_resume_rebuilds_identical_postings(spark, index, tmp_path, monkeypatch):
     """Kill-and-resume (FIXTURES.md §5): wipe the postings stage, rebuild,
-    assert identical decoded index; earlier stages are resumed not rebuilt."""
+    assert identical decoded index; earlier stages are resumed not rebuilt.
+    The resumed terms stage's size comes from the footers: no count job."""
+    from pyspark.sql import DataFrame
+
     from geocoderpl_spark.operators.postings import decode_postings
+    from geocoderpl_spark.plans.manifest import footer_rows
+    from tests.test_serving import _no_jobs
 
     before = (
         decode_postings(index.postings)
@@ -139,7 +144,16 @@ def test_resume_rebuilds_identical_postings(spark, index, tmp_path):
     )
     shutil.rmtree(os.path.join(index.root, "postings"))
     corpus = synth_corpus(spark, N_DOCS)
+    counted = []
+    real_count = DataFrame.count
+    monkeypatch.setattr(
+        DataFrame, "count", lambda df: counted.append(df) or real_count(df)
+    )
     idx2 = build_index(spark, corpus, index.root, n_buckets=8, partitions=8)
+    monkeypatch.undo()
+    assert counted == []
+    terms_dir = os.path.join(index.root, "terms")
+    assert _no_jobs(spark, lambda: footer_rows(terms_dir)) == idx2.terms.count() > 0
     after = (
         decode_postings(idx2.postings)
         .toPandas()

@@ -1,0 +1,110 @@
+"""The term dictionary's rank kernel (``build_terms``): one range exchange on
+``term`` and one Arrow kernel that aggregates, sorts and numbers each range
+partition. Checked against a Spark reference computed in the test:
+``groupBy(term).agg(sum)`` plus ``dense_rank() over (order by term) - 1``."""
+
+from __future__ import annotations
+
+import glob
+import os
+
+import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from geocoderpl_spark.operators.postings import build_terms
+from geocoderpl_spark.plans.build import build_index
+from geocoderpl_spark.sources.corpus import synth_corpus
+
+PARTIALS_DDL = "term string, df long, cf long"
+NON_ASCII = ["é", "ß", "中", "\U0001f600", "zebra", "Zebra", "a", "é_b", "ab", "a中"]
+
+
+def _reference(partials):
+    return (
+        partials.groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .withColumn(
+            "term_id", (F.dense_rank().over(Window.orderBy("term")) - 1).cast("long")
+        )
+    )
+
+
+def _assert_same(got, want):
+    assert got.columns == want.columns
+    assert got.dtypes == want.dtypes
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_few_terms_more_partitions_than_terms(spark):
+    """Five distinct non-ASCII and ASCII terms over more range partitions
+    (defaultParallelism) than terms: some partitions stay empty, ids stay
+    dense."""
+    assert spark.sparkContext.defaultParallelism > 5
+    rows = [(t, 1, 2) for t in ["é", "ß", "中", "\U0001f600", "abc"]] * 3
+    partials = spark.createDataFrame(rows, PARTIALS_DDL)
+    t = build_terms(None, partials=partials)
+    assert t._rank_total == 5
+    _assert_same(t, _reference(partials))
+    assert sorted(r["term_id"] for r in t.collect()) == list(range(5))
+    t._stats_cache.unpersist()
+
+
+def test_many_terms_non_ascii_and_repeated_partials(spark):
+    """Hundreds of terms mixing non-ASCII and ASCII (byte order = Spark's
+    UTF8String order), and one term repeated over many partial rows whose
+    df / cf must sum exactly."""
+    terms = [f"{p}{i:03d}" for p in NON_ASCII for i in range(40)]
+    rows = [(t, i % 3 + 1, i % 7 + 1) for i, t in enumerate(terms)]
+    rows += [("中", 2, 5)] * 250 + [("the_hot_term", 1, 1)] * 300
+    partials = spark.createDataFrame(rows, PARTIALS_DDL).repartition(6)
+    t = build_terms(None, partials=partials)
+    want = _reference(partials)
+    assert t._rank_total == want.count() == len(terms) + 2
+    _assert_same(t, want)
+    hot = {r["term"]: r for r in t.filter(F.col("term").isin("中", "the_hot_term")).collect()}
+    assert (hot["中"]["df"], hot["中"]["cf"]) == (500, 1250)
+    assert (hot["the_hot_term"]["df"], hot["the_hot_term"]["cf"]) == (300, 300)
+    t._stats_cache.unpersist()
+
+
+def test_tf_source_matches_partials_source(spark):
+    """Without partials (the merge path) the source is a groupBy over tf
+    rows; term-NULL sentinel rows are not terms. Same dictionary."""
+    tf = spark.createDataFrame(
+        [("é", 0, 3, 2), ("é", 1, 4, 1), ("中", 1, 4, 3), (None, 2, 0, 0), ("ab", 0, 3, 1)],
+        "term string, doc_id long, doclen long, tf long",
+    )
+    partials = spark.createDataFrame(
+        [("é", 1, 2), ("é", 1, 1), ("中", 1, 3), ("ab", 1, 1)], PARTIALS_DDL
+    )
+    t = build_terms(tf)
+    _assert_same(t, _reference(partials))
+    t._stats_cache.unpersist()
+
+
+def test_null_term_partial_raises(spark):
+    partials = spark.createDataFrame(
+        [("a", 1, 1), (None, 1, 1), ("b", 2, 3)], PARTIALS_DDL
+    )
+    with pytest.raises(ValueError, match="NULL term"):
+        build_terms(None, partials=partials)
+
+
+def test_written_terms_files_are_term_sorted(spark, tmp_path):
+    """The build writes build_terms' range partitions as they are (no
+    re-sort): the terms part files, read in file order, are sorted by term
+    and numbered 0..n-1."""
+    import pyarrow.parquet as pq
+
+    idx = build_index(spark, synth_corpus(spark, 400), str(tmp_path / "idx"),
+                      n_buckets=4, partitions=4)
+    files = sorted(glob.glob(os.path.join(idx.root, "terms", "part-*.parquet")))
+    assert len(files) > 1
+    terms, ids = [], []
+    for f in files:
+        t = pq.read_table(f, columns=["term", "term_id"])
+        terms += t["term"].to_pylist()
+        ids += t["term_id"].to_pylist()
+    assert terms == sorted(terms)
+    assert ids == list(range(len(ids)))
