@@ -638,10 +638,11 @@ def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> Data
     partition in a single pass; the per-partition row counts (one collect
     of each partition's last row from the persisted kernel output) give
     each partition's id offset. With the direct tf kernel's ``_termstats`` partials (per-batch
-    (term, df, cf) rows, a materialized map-side combine) the exchange
-    moves those partial rows; without them (merges) a ``groupBy(term)``
-    over the tf rows makes the source. Values are identical either way:
-    per-term df / cf are the sums of the per-batch counts / tf sums.
+    (term, df, cf) rows, a materialized map-side combine; a merge links
+    its segments' dictionaries there) the exchange moves those partial
+    rows; without them (classic tf kernel) a ``groupBy(term)`` over the
+    tf rows makes the source. Values are identical either way: per-term
+    df / cf are the sums of the partial counts / tf sums.
 
     The result carries ``_rank_total`` (the dictionary size) and
     ``_stats_cache`` (the persisted kernel output, released by the caller

@@ -8,9 +8,11 @@ Design — the Lucene/LSM segment model re-expressed in Spark:
 - Queries run against the union of segments: BM25 global stats (N, avgdl,
   df) are aggregated *across* segments at query time — per-segment df sums
   exactly to corpus df, so scores equal a from-scratch build bit-for-bit.
-- ``merge_segments`` is the LSM compaction: union the segments' tf
-  checkpoints and rebuild one segment (SURVEY.md §7.2 step 6; analog of the
-  reference's build-once pickle rewrite, ``xml_parsers.py:379-381``).
+- ``merge_segments`` is the LSM compaction: hard-link the segments' tf and
+  docstats files and merge their term dictionaries into one segment, whose
+  postings the batch plan rebuilds (SURVEY.md §7.2 step 6; where the
+  reference's build-once pickle rewrite, ``xml_parsers.py:379-381``,
+  re-parses everything).
 
 doc_id uniqueness across segments comes from a per-segment ``doc_base``
 offset (monotonic count of docs in prior segments) — the distributed version
@@ -19,13 +21,15 @@ of the reference's serial global offset (``xml_parsers.py:513``).
 
 from __future__ import annotations
 
+import errno
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.build import InvertedIndex, build_index
-from ..plans.manifest import read_index_dir
+from ..plans.build import STAGES, InvertedIndex, build_index
+from ..plans.manifest import _part_files, read_index_dir
 
 
 class SegmentedIndex:
@@ -854,18 +858,137 @@ def gc_orphan_segments(index_root: str) -> list[str]:
     return orphans
 
 
-def merge_segments(spark: SparkSession, index_root: str, out_dir: str, n_buckets: int = 16) -> InvertedIndex:
-    """LSM compaction: union segment tf checkpoints -> one merged segment.
+# link() failures a byte copy gets round: another filesystem, a filesystem
+# without hard links, or an inode at its link-count limit
+_COPY_ERRNOS = frozenset(
+    getattr(errno, n)
+    for n in ("EXDEV", "EPERM", "EOPNOTSUPP", "ENOTSUP", "EMLINK")
+    if hasattr(errno, n)
+)
 
-    Pure dataflow over checkpointed state (no re-tokenization); produces the
-    same index a from-scratch build would.
+
+def _columns(table_dir: str) -> list[tuple] | None:
+    """``(name, arrow type)`` of a table dir's first part file, footer
+    metadata dropped; None when the dir has no part file."""
+    import pyarrow.parquet as pq
+
+    files = _part_files(table_dir)
+    if not files:
+        return None
+    return [(f.name, f.type) for f in pq.read_schema(files[0]).remove_metadata()]
+
+
+def _link_parts(src_dirs: list[str], dst: str) -> tuple[int, int]:
+    """Hard-link every part file of ``src_dirs`` into the new dir ``dst`` as
+    ``part-<n>-graft.snappy.parquet`` (n counts across all sources, so the
+    names stay unique however often a segment is merged again). A link the
+    filesystem refuses (:data:`_COPY_ERRNOS`) becomes a copy; any other
+    error, ``FileExistsError`` included, propagates. Returns (linked,
+    copied)."""
+    import shutil
+
+    os.makedirs(dst)
+    linked = copied = 0
+    for f in (f for d in src_dirs for f in _part_files(d)):
+        target = os.path.join(dst, f"part-{linked + copied:05d}-graft.snappy.parquet")
+        try:
+            os.link(f, target)
+            linked += 1
+        except OSError as e:
+            if e.errno not in _COPY_ERRNOS:
+                raise
+            shutil.copyfile(f, target)
+            copied += 1
+    return linked, copied
+
+
+def _doc_id_bounds(docstats_dir: str) -> tuple[int, int] | None:
+    """(min, max) doc_id of a docstats dir from its row-group statistics (no
+    Spark job); None for a dir without rows. A row group without min/max
+    statistics widens the bounds to the whole long range, so it overlaps
+    every other segment and sends the merge to the exact check."""
+    import pyarrow.parquet as pq
+
+    lo = hi = None
+    for f in _part_files(docstats_dir):
+        md = pq.read_metadata(f)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            st = next(
+                (rg.column(c).statistics for c in range(rg.num_columns)
+                 if rg.column(c).path_in_schema == "doc_id"),
+                None,
+            )
+            if st is None or not st.has_min_max:
+                return (-(2**63), 2**63 - 1)
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+    return None if lo is None else (lo, hi)
+
+
+def _check_disjoint_doc_ids(segs: list[InvertedIndex]) -> None:
+    """Raise if a doc_id is in more than one segment: the merged index would
+    count that doc twice. Streaming segments hold contiguous ``doc_base``
+    ranges, which the footer statistics prove disjoint without a Spark job;
+    overlapping ranges (interleaved ids can still be disjoint sets) take one
+    exact Spark check."""
+    bounds = sorted(
+        b for b in (_doc_id_bounds(os.path.join(s.root, "docstats")) for s in segs)
+        if b is not None
+    )
+    if all(a[1] < b[0] for a, b in zip(bounds, bounds[1:])):
+        return
+    ids = reduce(DataFrame.unionAll, [s.docstats.select("doc_id") for s in segs])
+    dup = ids.groupBy("doc_id").count().filter("count > 1").limit(1).collect()
+    if dup:
+        raise ValueError(
+            f"merge_segments: doc_id {dup[0]['doc_id']} is in more than one "
+            "segment; the merged index would count that doc twice"
+        )
+
+
+def merge_segments(spark: SparkSession, index_root: str, out_dir: str, n_buckets: int = 16) -> InvertedIndex:
+    """LSM compaction: the live segments under ``index_root`` -> one merged
+    segment at ``out_dir`` (which must not hold an index yet).
+
+    Merges what the segments already wrote instead of rewriting it:
+
+    - tf and docstats: when every segment's table has the same columns
+      (first part file's Arrow schema), its part files are hard-linked into
+      ``out_dir`` (copied where the filesystem refuses a link) — O(files),
+      no rows read. Differing columns (a pre-fusion tf) take a Spark
+      ``unionByName`` rewrite of that table.
+    - dictionary: every segment's ``terms`` files are linked into
+      ``out_dir/tf/_termstats``, the (term, df, cf) partials source of the
+      build's terms stage, which sums them per term — no group-by over tf
+      rows. df and cf are per-segment sums either way, so the dictionary
+      equals a group-by of the unioned tf. The partials are removed once
+      the build returns.
+
+    ``build_index`` then builds terms, postings, meta and lineage from the
+    linked checkpoints: the same index a from-scratch build of the segments'
+    docs and ids would give. A doc_id in more than one segment raises.
+    Appends a ``merge`` row to ``metrics.jsonl``: part files linked plus
+    copied, the wall of the link phase, and status ``linked``, ``copied``
+    (some file was copied) or ``rewritten`` (some table took the rewrite).
     """
-    seg = SegmentedIndex(spark, index_root)
-    segs = seg.segments()
+    import json
+    import shutil
+    import time
+
+    t0 = time.time()
+    held = [s for s in (*STAGES, "lineage", "metrics") if os.path.exists(os.path.join(out_dir, s))]
+    if held:
+        # build_index would resume those stages and serve the old merge
+        raise ValueError(
+            f"merge_segments: {out_dir} already holds an index ({', '.join(held)}); "
+            "merge into a fresh dir"
+        )
+    segs = SegmentedIndex(spark, index_root).segments()
     if not segs:
         raise ValueError(f"merge_segments: no segments under {index_root}")
-    tf = None
-    stats = None
     # positional and plain segments must not silently mix: NULL-filled
     # position lists would crash deep inside the encode kernel; fail with a
     # clear error at compaction time instead (meta.json records the kind:
@@ -878,25 +1001,47 @@ def merge_segments(spark: SparkSession, index_root: str, out_dir: str, n_buckets
             "positional=True (or vice versa) first"
         )
     positional = pos_kinds.pop()
-    for s in segs:
-        t = read_index_dir(spark, os.path.join(s.root, "tf"))
-        d = s.docstats
-        # allowMissingColumns: pre-fusion segments' tf checkpoints lack the
-        # sha256 sidecar column the fused kernel adds — mixed-generation
-        # compaction must not crash (missing side fills NULL, which the
-        # build's term-NOT-NULL filter and docstats derivation never read
-        # here: the merged docstats is written directly below)
-        tf = t if tf is None else tf.unionByName(t, allowMissingColumns=True)
-        stats = d if stats is None else stats.unionByName(d, allowMissingColumns=True)
+    _check_disjoint_doc_ids(segs)
+
     os.makedirs(out_dir, exist_ok=True)
-    stats.write.mode("overwrite").parquet(os.path.join(out_dir, "docstats"))
-    tf.write.mode("overwrite").parquet(os.path.join(out_dir, "tf"))
-    # delegate the rest to the batch plan (terms/postings/meta/lineage);
-    # positional carries through: build_postings sniffs the positions column
-    # in the unioned tf, and meta.json must record the property so the
-    # merged segment keeps serving phrase queries
+    linked = copied = 0
+    rewritten = False
+    for table in ("docstats", "tf"):
+        srcs = [os.path.join(s.root, table) for s in segs]
+        dst = os.path.join(out_dir, table)
+        cols = [_columns(d) for d in srcs]
+        if cols[0] and all(c == cols[0] for c in cols):
+            n_link, n_copy = _link_parts(srcs, dst)
+            linked, copied = linked + n_link, copied + n_copy
+            open(os.path.join(dst, "_SUCCESS"), "w").close()
+        else:
+            # allowMissingColumns: a pre-fusion tf lacks the sha256 sidecar
+            # column the fused kernel adds; the missing side fills NULL,
+            # which the build's term-NOT-NULL filter never reads
+            reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                [read_index_dir(spark, d) for d in srcs],
+            ).write.parquet(dst)
+            rewritten = True
+    n_link, n_copy = _link_parts(
+        [os.path.join(s.root, "terms") for s in segs],
+        os.path.join(out_dir, "tf", "_termstats"),
+    )
+    linked, copied = linked + n_link, copied + n_copy
+    wall_ms = int((time.time() - t0) * 1000)
+
+    # the build reads tf and docstats as finished stages and the terms
+    # stage takes the linked dictionaries as its partials; positional
+    # carries through: the position streams ride the tf files, and meta.json
+    # must record the property so the merged segment keeps serving phrases
     dummy = spark.createDataFrame([], "doc_id long, content string")
-    return build_index(
+    merged = build_index(
         spark, dummy, out_dir, n_buckets=n_buckets, id_col="doc_id",
         positional=positional,
     )
+    shutil.rmtree(os.path.join(out_dir, "tf", "_termstats"))
+    status = "rewritten" if rewritten else "copied" if copied else "linked"
+    with open(os.path.join(out_dir, "metrics", "metrics.jsonl"), "a") as f:
+        f.write(json.dumps({"stage": "merge", "rows_out": linked + copied,
+                            "wall_ms": wall_ms, "status": status}) + "\n")
+    return merged

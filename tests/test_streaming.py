@@ -91,6 +91,22 @@ def test_merge_segments_equals_sum(spark, streamed, tmp_path):
     got = merged.topk(q, "exact").toPandas().sort_values("rank").reset_index(drop=True)
     exp = seg.topk(q).toPandas().sort_values("rank").reset_index(drop=True)
     assert got.equals(exp)
+    # the merge row counts every part file it linked: tf, docstats and the
+    # segments' dictionaries; only the stages the build took over resume
+    import json
+
+    from geocoderpl_spark.plans.manifest import _part_files
+
+    with open(os.path.join(merged.root, "metrics", "metrics.jsonl")) as f:
+        rows = [json.loads(line) for line in f]
+    assert rows[-1].keys() == rows[0].keys()
+    assert rows[-1]["stage"] == "merge" and rows[-1]["status"] == "linked"
+    assert rows[-1]["wall_ms"] >= 0
+    assert rows[-1]["rows_out"] == sum(
+        len(_part_files(os.path.join(s.root, t)))
+        for s in seg.segments() for t in ("tf", "docstats", "terms")
+    )
+    assert {r["stage"] for r in rows if r["status"] == "resumed"} == {"tf", "docstats"}
 
 
 def test_auto_compaction_bounds_segments(spark, tmp_path):
@@ -202,6 +218,9 @@ def test_compaction_crash_window_is_safe(spark, tmp_path):
     q = spark.createDataFrame([(0, "term_0001", 5)], "query_id long, query_text string, k int")
     before = SegmentedIndex(spark, root).topk(q).collect()
     shutil.rmtree(os.path.join(root, "seg_00000"))
+    from geocoderpl_spark.streaming.incremental import _check_disjoint_doc_ids
+    from tests.test_serving import _no_jobs
+
     shutil.rmtree(os.path.join(root, "seg_00001"))
     after = SegmentedIndex(spark, root).topk(q).collect()
     assert [tuple(r) for r in before] == [tuple(r) for r in after]
@@ -332,7 +351,7 @@ def test_stateful_sessionize_state_carries_across_batches(spark, tmp_path):
     assert final[2] == (1, 2)
 
 
-def _two_segments(spark, root, n_docs=120):
+def _segments(spark, root, n_docs=120, n_segs=2):
     from pyspark.sql import functions as F
 
     from geocoderpl_spark.operators.docids import assign_doc_ids
@@ -341,9 +360,9 @@ def _two_segments(spark, root, n_docs=120):
     corpus = synth_corpus(spark, n_docs)
     base = 0
     names = []
-    for i in range(2):
+    for i in range(n_segs):
         part = assign_doc_ids(
-            corpus.filter(F.pmod(F.xxhash64("path"), F.lit(2)) == i),
+            corpus.filter(F.pmod(F.xxhash64("path"), F.lit(n_segs)) == i),
             ["repo", "path", "commit"],
         ).withColumn("doc_id", F.col("doc_id") + F.lit(base))
         name = f"seg_{i:05d}"
@@ -361,7 +380,7 @@ def test_expired_snapshot_raises_not_partial(spark, tmp_path):
 
     root = str(tmp_path / "idx")
     os.makedirs(root)
-    _two_segments(spark, root)
+    _segments(spark, root)
     assert compact_segments(spark, root, max_segments=1, n_buckets=4)
     # latest view fine
     assert SegmentedIndex(spark, root).global_stats()[0] == 120
@@ -384,7 +403,7 @@ def test_gc_orphan_segments_heals_crashed_compaction(spark, tmp_path):
 
     root = str(tmp_path / "idx")
     os.makedirs(root)
-    names = _two_segments(spark, root)
+    names = _segments(spark, root)
     merged = os.path.join(root, "seg_00000-00001m")
     merge_segments(spark, root, merged, n_buckets=4)
     with open(os.path.join(merged, "merged_from.json"), "w") as f:
@@ -574,3 +593,181 @@ def test_merge_segments_rejects_positional_mix(spark, tmp_path):
     with pytest.raises(ValueError, match="cannot compact a mix of positional"):
         compact_segments(spark, root, max_segments=1, n_buckets=4)
     assert [s.positional for s in SegmentedIndex(spark, root).segments()] == [False, True]
+
+
+@pytest.fixture(scope="module")
+def linked(spark, tmp_path_factory):
+    """Three segments of explicitly numbered docs, their linked merge (inputs
+    kept: no GC) and a from-scratch build of the same docs and ids."""
+    from pyspark.sql import functions as F
+
+    from geocoderpl_spark.operators.docids import assign_doc_ids
+
+    base = tmp_path_factory.mktemp("linked")
+    root = str(base / "idx")
+    docs = assign_doc_ids(synth_corpus(spark, 150), ["repo", "path", "commit"]).cache()
+    for i in range(3):
+        part = docs.filter((F.col("doc_id") >= 50 * i) & (F.col("doc_id") < 50 * (i + 1)))
+        build_index(spark, part, os.path.join(root, f"seg_{i:05d}"), n_buckets=4,
+                    id_col="doc_id")
+    merged = merge_segments(spark, root, str(base / "merged"), n_buckets=4)
+    full = build_index(spark, docs, str(base / "full"), n_buckets=4, id_col="doc_id")
+    return root, merged, full
+
+
+def _index_rows(idx):
+    """(terms, decoded postings, docstats) of an index as sorted pandas."""
+    from geocoderpl_spark.operators.postings import decode_postings
+
+    def pdf(df, keys):
+        return df.toPandas().sort_values(keys).reset_index(drop=True)
+
+    return (
+        pdf(idx.terms.select("term", "df", "cf", "term_id"), ["term"]),
+        pdf(decode_postings(idx.postings), ["term_id", "doc_id"]),
+        pdf(idx.docstats.select(*sorted(idx.docstats.columns)), ["doc_id"]),
+    )
+
+
+def test_linked_merge_equals_scratch_build(spark, linked):
+    """A merge of linked checkpoints and summed dictionaries equals a
+    from-scratch build of the same docs and ids: every dictionary value,
+    every decoded posting, every docstats row."""
+    root, merged, full = linked
+    got, exp = _index_rows(merged), _index_rows(full)
+    for g, e in zip(got, exp):
+        assert list(g.columns) == list(e.columns)
+        assert g.dtypes.tolist() == e.dtypes.tolist()
+        assert g.equals(e)
+    assert merged.n_docs == full.n_docs == 150 and merged.avgdl == full.avgdl
+    # df sums over the tf rows it counts
+    tf = spark.read.parquet(os.path.join(merged.root, "tf"))
+    assert int(got[0]["df"].sum()) == tf.filter("term IS NOT NULL").count() > 0
+
+
+def test_linked_merge_shares_inodes_with_inputs(spark, linked):
+    """Before GC the merged tf and docstats files are hard links of the
+    inputs' files, and the dictionary partials are gone."""
+    from geocoderpl_spark.plans.manifest import _part_files
+
+    root, merged, _ = linked
+    for t in ("tf", "docstats"):
+        inputs = {
+            os.stat(f).st_ino
+            for i in range(3) for f in _part_files(os.path.join(root, f"seg_{i:05d}", t))
+        }
+        out = _part_files(os.path.join(merged.root, t))
+        assert {os.stat(f).st_ino for f in out} == inputs and len(out) == len(inputs)
+        assert all(os.stat(f).st_nlink == 2 for f in out)
+    assert not os.path.exists(os.path.join(merged.root, "tf", "_termstats"))
+
+
+def test_copy_fallback_and_link_errors(spark, linked, tmp_path, monkeypatch):
+    """A link the filesystem refuses (EXDEV) becomes a copy with the same
+    result; any other link error (an existing target) propagates."""
+    import errno
+    import json
+
+    from geocoderpl_spark.plans.manifest import _part_files
+
+    root, merged, _ = linked
+
+    def exdev(src, dst):
+        raise OSError(errno.EXDEV, "cross-device link", dst)
+
+    monkeypatch.setattr(os, "link", exdev)
+    copied = merge_segments(spark, root, str(tmp_path / "copied"), n_buckets=4)
+    for g, e in zip(_index_rows(copied), _index_rows(merged)):
+        assert g.equals(e)
+    for t in ("tf", "docstats"):
+        assert all(os.stat(f).st_nlink == 1 for f in _part_files(os.path.join(copied.root, t)))
+    with open(os.path.join(copied.root, "metrics", "metrics.jsonl")) as f:
+        assert json.loads(f.readlines()[-1])["status"] == "copied"
+
+    def exists(src, dst):
+        raise FileExistsError(errno.EEXIST, "file exists", dst)
+
+    monkeypatch.setattr(os, "link", exists)
+    with pytest.raises(FileExistsError):
+        merge_segments(spark, root, str(tmp_path / "exists"), n_buckets=4)
+
+
+def test_remerge_of_merged_segment_keeps_every_file(spark, tmp_path):
+    """A merged segment merged again with a new one: the running link
+    counter keeps every input file under its own name."""
+    import re
+
+    from geocoderpl_spark.plans.manifest import _part_files
+    from geocoderpl_spark.plans.snapshots import commit_snapshot
+    from geocoderpl_spark.streaming.incremental import compact_segments
+
+    root = str(tmp_path / "idx")
+    os.makedirs(root)
+    names = _segments(spark, root, n_segs=3)
+    q = spark.createDataFrame(
+        [(0, "term_0001 term_0002", 10)], "query_id long, query_text string, k int"
+    )
+    union = sorted(tuple(r) for r in SegmentedIndex(spark, root).topk(q).collect())
+    commit_snapshot(root, names[:2], op="test")
+    assert compact_segments(spark, root, max_segments=1, n_buckets=4)
+    (first,) = SegmentedIndex(spark, root).segments()
+    commit_snapshot(root, [os.path.basename(first.root), names[2]], op="test")
+    inputs = {
+        t: [f for s in SegmentedIndex(spark, root).segments()
+            for f in _part_files(os.path.join(s.root, t))]
+        for t in ("tf", "docstats")
+    }
+    assert compact_segments(spark, root, max_segments=1, n_buckets=4)
+    (final,) = SegmentedIndex(spark, root).segments()
+    for t, srcs in inputs.items():
+        out = _part_files(os.path.join(final.root, t))
+        assert len(out) == len(srcs) > 3
+        assert all(re.fullmatch(r"part-\d{5}-graft\.snappy\.parquet", os.path.basename(f))
+                   for f in out)
+    assert final.n_docs == 120
+    assert sorted(tuple(r) for r in final.topk(q, "exact").collect()) == union
+
+
+def test_merge_into_reused_out_dir_raises(spark, tmp_path):
+    """Merging again into a dir that holds an earlier merge would resume its
+    terms and postings and serve the old dictionary: it must raise."""
+    from geocoderpl_spark.plans.snapshots import commit_snapshot
+
+    root, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    os.makedirs(root)
+    names = _segments(spark, root, n_segs=3)
+    commit_snapshot(root, names[:2], op="test")
+    first = merge_segments(spark, root, out, n_buckets=4)
+    commit_snapshot(root, names, op="test")
+    with pytest.raises(ValueError, match="already holds an index"):
+        merge_segments(spark, root, out, n_buckets=4)
+    assert InvertedIndex.load(spark, out).n_docs == first.n_docs < 120
+
+
+def test_merge_rejects_doc_id_in_two_segments(spark, tmp_path):
+    """A doc_id held by two segments would be counted twice: the merge
+    raises. Contiguous segments are proved disjoint from footer statistics
+    without a Spark job."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from geocoderpl_spark.operators.docids import assign_doc_ids
+
+    root = str(tmp_path / "idx")
+    docs = assign_doc_ids(synth_corpus(spark, 100), ["repo", "path", "commit"])
+    for i, (lo, hi) in enumerate([(0, 50), (49, 100)]):  # doc 49 in both
+        build_index(spark, docs.filter(F.col("doc_id").between(lo, hi - 1)),
+                    os.path.join(root, f"seg_{i:05d}"), n_buckets=4, id_col="doc_id")
+    with pytest.raises(ValueError, match="doc_id 49 is in more than one segment"):
+        merge_segments(spark, root, str(tmp_path / "out"), n_buckets=4)
+    assert not os.path.exists(str(tmp_path / "out"))
+
+    from geocoderpl_spark.streaming.incremental import _check_disjoint_doc_ids
+    from tests.test_serving import _no_jobs
+
+    shutil.rmtree(os.path.join(root, "seg_00001"))
+    build_index(spark, docs.filter(F.col("doc_id") >= 50), os.path.join(root, "seg_00001"),
+                n_buckets=4, id_col="doc_id")
+    segs = SegmentedIndex(spark, root).segments()
+    _no_jobs(spark, lambda: _check_disjoint_doc_ids(segs))
