@@ -37,6 +37,7 @@ from ..functions.bm25 import B as BM25_B
 from ..functions.bm25 import K1 as BM25_K1
 from ..functions.codec import BLOCK_SIZE
 from ..functions.tokenize import tokenize
+from . import docids
 
 # doclens are stored inline per posting (varint, like tfs): scoring then
 # never joins the 10^12-row docstats table — tfnorm = f(tf, dl, avgdl) is
@@ -650,8 +651,6 @@ def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> Data
     partitions in term order, each sorted by term, so writing it as is
     yields globally term-sorted files.
     """
-    from .docids import partition_offsets
-
     if partials is not None:
         src = partials.select("term", "df", "cf")
     else:
@@ -682,7 +681,7 @@ def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> Data
             "build_terms: a term partial row has a NULL term; a NULL term "
             "has no rank in the dictionary"
         )
-    rows, total = partition_offsets((r["_pid"], r["_rank"] + 1) for r in counts)
+    rows, total = docids.partition_offsets((r["_pid"], r["_rank"] + 1) for r in counts)
     by_pid = dict(rows)
     # P longs as a literal array indexed by the partition id: no join
     offsets = F.array(*[F.lit(by_pid.get(p, 0)) for p in range(n_parts)]).cast(
@@ -1257,7 +1256,13 @@ def postings_input(
     spark = tf.sparkSession
     partitions = partitions or spark.sparkContext.defaultParallelism
     slice_docs = slice_docs_for(n_docs, partitions)
-    keyed = tf.join(F.broadcast(terms.select("term", "term_id")), "term")
+    # the dictionary ships as a broadcast only while its size is known and
+    # within the doc-id join-back's cap; otherwise (a ~1e8-term vocabulary
+    # would be GBs) the planner chooses the join
+    term_ids = terms.select("term", "term_id")
+    if n_terms is not None and n_terms <= docids.BROADCAST_IDS_MAX_ROWS:
+        term_ids = F.broadcast(term_ids)
+    keyed = tf.join(term_ids, "term")
     # bucket stays an EXPRESSION end to end (r6): it is derivable from
     # term_id (pmod(xxhash64, B)), so materializing it as a column only
     # added 8 bytes/row to the build's biggest exchange, the partition

@@ -5,6 +5,14 @@ runs unchanged on a multi-executor cluster (AQE, adaptive skew join,
 Arrow batching). ``spark.sql.shuffle.partitions`` defaults to the local
 core count — on a real cluster this should be ~2-3x total cores, or left
 to AQE coalescing.
+
+Python workers start through ``geocoderpl_spark.pydaemon`` (set as
+``spark.python.daemon.module``), which takes spark-core's jar and the
+pyspark/py4j zips that duplicate the installed release off the workers'
+import path before ``pyspark.daemon`` runs; see that module. Executors
+reach the package through ``spark.executorEnv.PYTHONPATH``, which holds
+the package root in every master mode, so a driver started from any
+directory runs Python tasks.
 """
 
 from __future__ import annotations
@@ -31,8 +39,7 @@ def get_spark(
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     # GRAFT_MASTER overrides the master URL — e.g. local-cluster[8,1,6144]
     # for the multi-executor (separate JVM per executor) scaling rendition;
-    # {cpus} in the template is substituted. Executors then need PYTHONPATH
-    # to reach the package (same box, no --py-files ship).
+    # {cpus} in the template is substituted.
     # .replace, not .format: a master URL with literal braces (e.g. a
     # local-cluster memory spec) must pass through verbatim (ADVICE r04)
     master = os.environ.get("GRAFT_MASTER", "local[{cpus}]").replace(
@@ -55,19 +62,27 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    # Executors import the package, the worker daemon first, from the
+    # package root whatever the driver's cwd (same box, no --py-files
+    # ship); a caller's executor PYTHONPATH follows it.
+    extra_conf = dict(extra_conf or {})
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pythonpath = os.pathsep.join(
+        p for p in (repo_root, extra_conf.pop("spark.executorEnv.PYTHONPATH", None)) if p
+    )
+    builder = (
+        builder.config("spark.executorEnv.PYTHONPATH", pythonpath)
+        .config("spark.python.daemon.module", "geocoderpl_spark.pydaemon")
+    )
     if "local-cluster" in master:
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        builder = (
-            builder.config("spark.executorEnv.PYTHONPATH", repo_root)
-            # the master URL's third field is WORKER memory; executor memory
-            # stays at the 1g default unless set — leaving it there causes
-            # silent executor OOM-churn (task retries on fresh executors)
-            .config("spark.executor.memory",
-                    os.environ.get("GRAFT_EXECUTOR_MEM", "5g"))
+        # the master URL's third field is WORKER memory; executor memory
+        # stays at the 1g default unless set — leaving it there causes
+        # silent executor OOM-churn (task retries on fresh executors)
+        builder = builder.config(
+            "spark.executor.memory", os.environ.get("GRAFT_EXECUTOR_MEM", "5g")
         )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

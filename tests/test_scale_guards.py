@@ -141,3 +141,41 @@ def test_autocomplete_expansion_is_pushed_range_scan(spark, tmp_path):
     assert got2 == sorted([(r.rank, r.doc_id, r.score) for r in exact])
     # prefix queries return results (expansion actually matched terms)
     assert any(r.query_id == 0 for r in rows) and any(r.query_id == 1 for r in rows)
+
+
+def test_terms_broadcast_bounded_by_cap(spark, tmp_path, monkeypatch):
+    """The postings stage hints a broadcast of the dictionary only while its
+    size is known and within ``docids.BROADCAST_IDS_MAX_ROWS``. Above the
+    cap (forced to 0, with the planner's own broadcast off) the tf ⋈ terms
+    join is planned without a broadcast, and the index decodes to the same
+    postings as the default build."""
+    from geocoderpl_spark.operators import docids
+    from geocoderpl_spark.operators.postings import decode_postings, postings_input
+    from geocoderpl_spark.plans.build import build_index
+    from geocoderpl_spark.plans.manifest import read_index_dir
+    from geocoderpl_spark.sources.corpus import synth_corpus
+
+    def decoded(idx):
+        rows = decode_postings(idx.postings).toPandas()
+        return rows.sort_values(["term_id", "doc_id"]).reset_index(drop=True)
+
+    a = build_index(spark, synth_corpus(spark, 300), str(tmp_path / "a"), 4, 4)
+    tf = read_index_dir(spark, str(tmp_path / "a" / "tf"))
+    tf = tf.filter(F.col("term").isNotNull()).drop("sha256")
+    terms = read_index_dir(spark, str(tmp_path / "a" / "terms"))
+    n_terms = terms.count()
+
+    def plan() -> str:
+        rows, _ = postings_input(tf, terms, 4, 4, n_docs=300, n_terms=n_terms)
+        return rows._jdf.queryExecution().executedPlan().toString()
+
+    assert "BroadcastHashJoin" in plan()
+    monkeypatch.setattr(docids, "BROADCAST_IDS_MAX_ROWS", 0)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert "BroadcastHashJoin" not in plan()
+        b = build_index(spark, synth_corpus(spark, 300), str(tmp_path / "b"), 4, 4)
+        assert decoded(a).equals(decoded(b))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
