@@ -7,6 +7,8 @@ serializes the whole build. The Spark replacement assigns
 range-repartition + per-partition prefix-sum: no global window, no driver
 loop, deterministic across runs and parallelism levels (required for
 rank-identity vs the oracle and for resumable builds, SURVEY.md §7.4 #2).
+The P partition offsets reach the rows as one array literal indexed by the
+partition id, so the rank needs no join and no local-data DataFrame.
 """
 
 from __future__ import annotations
@@ -15,7 +17,7 @@ import functools
 import operator
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # Join-back broadcast cutover (rows). The rank table is keys-only (~100 B/
@@ -124,7 +126,8 @@ def _rank_keys(
     """The rank machinery itself (keys-only input):
     1. range-repartition on the key (global order across partitions)
     2. per-partition row_number (shuffle-free ordering within partition)
-    3. tiny per-partition count table -> prefix-sum offsets -> broadcast join
+    3. tiny per-partition count collect -> prefix-sum offsets -> one
+       array literal indexed by the partition id (no join)
     """
     partitions = partitions or df.sparkSession.sparkContext.defaultParallelism
     keyed = df.repartitionByRange(partitions, *key_cols)
@@ -186,29 +189,34 @@ def _rank_keys(
             "and multiply payload rows at the join-back — deduplicate the "
             "corpus or pass an explicit id_col"
         )
-    rows, acc = partition_offsets((r["_pid"], r["_cnt"]) for r in counts)
-    offsets = df.sparkSession.createDataFrame(rows or [(0, 0)], "_pid int, _off long")
-    out = (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, (F.col("_off") + F.col("_rn") - 1).cast("long"))
-        .drop("_pid", "_rn", "_off", "_dup")
+    offsets, acc = partition_offsets(
+        ((r["_pid"], r["_cnt"]) for r in counts), partitions
     )
+    out = local.withColumn(
+        out_col, offsets[F.col("_pid")] + F.col("_rn") - 1
+    ).drop("_pid", "_rn", "_dup")
     out._dense_ids_cache = local  # handle for caller-side unpersist
     out._rank_total = acc  # exact row count, already paid for by the collect
     return out
 
 
-def partition_offsets(counts) -> tuple[list[tuple[int, int]], int]:
-    """``(pid, offset)`` per range partition from its ``(pid, rows)``
-    count, plus the total: a partition's offset is the row count of every
-    partition before it, so ``offset + local rank`` is the global rank.
-    P rows of metadata — the prefix sum runs driver-side (the standard
-    zipWithIndex technique), never on row data."""
-    acc, rows = 0, []
+def partition_offsets(counts, n_parts: int) -> tuple[Column, int]:
+    """Offsets of ``n_parts`` range partitions from their ``(pid, rows)``
+    counts, plus the total: a partition's offset is the row count of every
+    partition before it, so ``offsets[_pid] + local rank`` is the global
+    rank. The prefix sum runs driver-side over P rows of metadata (the
+    standard zipWithIndex technique), never on row data, and the offsets
+    go back as ONE ``array<long>`` literal indexed by the partition id: no
+    join, and no local-data relation — one would start a second Python
+    worker pool for its parallelize and, as a LogicalRDD with no size
+    statistics, make the planner broadcast the other side of any join
+    against the ranked table."""
+    acc, by_pid = 0, {}
     for pid, n in sorted(counts):
-        rows.append((pid, acc))
+        by_pid[pid] = acc
         acc += n
-    return rows, acc
+    offsets = F.array(*[F.lit(by_pid.get(p, 0)) for p in range(n_parts)])
+    return offsets.cast("array<long>"), acc
 
 
 def assign_doc_ids(df: DataFrame, key_cols: list[str], partitions: int | None = None) -> DataFrame:

@@ -681,11 +681,8 @@ def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> Data
             "build_terms: a term partial row has a NULL term; a NULL term "
             "has no rank in the dictionary"
         )
-    rows, total = docids.partition_offsets((r["_pid"], r["_rank"] + 1) for r in counts)
-    by_pid = dict(rows)
-    # P longs as a literal array indexed by the partition id: no join
-    offsets = F.array(*[F.lit(by_pid.get(p, 0)) for p in range(n_parts)]).cast(
-        "array<long>"
+    offsets, total = docids.partition_offsets(
+        ((r["_pid"], r["_rank"] + 1) for r in counts), n_parts
     )
     out = ranked.select(
         "term", "df", "cf", (offsets[F.col("_pid")] + F.col("_rank")).alias("term_id")

@@ -1034,7 +1034,11 @@ def merge_segments(spark: SparkSession, index_root: str, out_dir: str, n_buckets
     # stage takes the linked dictionaries as its partials; positional
     # carries through: the position streams ride the tf files, and meta.json
     # must record the property so the merged segment keeps serving phrases
-    dummy = spark.createDataFrame([], "doc_id long, content string")
+    # spark.range, not createDataFrame([]): a local-data relation runs a
+    # parallelize job and starts a second Python worker pool
+    dummy = spark.range(0).select(
+        F.col("id").alias("doc_id"), F.lit(None).cast("string").alias("content")
+    )
     merged = build_index(
         spark, dummy, out_dir, n_buckets=n_buckets, id_col="doc_id",
         positional=positional,

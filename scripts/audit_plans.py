@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -139,6 +140,38 @@ def main() -> None:
         "within partitions; the Arrow encode kernel then writes one parquet "
         "file per task and bucket itself. No sampled range boundaries.",
         plan_of(postings_input(tf, terms, 16, 8, n_docs=500)[0]),
+    ))
+
+    # 3b. doc-id attach: the keyed build's corpus ⋈ rank-table join, planned
+    # once the rank table is materialized (as the tf stage sees it)
+    from geocoderpl_spark.operators.docids import assign_doc_ids
+    from geocoderpl_spark.sources.corpus import synth_corpus
+
+    corpus_root = tempfile.mkdtemp(prefix="plans_corpus_")
+    synth_corpus(spark, 2000).write.parquet(corpus_root + "/c")
+    corpus = spark.read.parquet(corpus_root + "/c")
+    keys = ["repo", "path", "commit"]
+    ids = assign_doc_ids(corpus.select(*keys), keys)
+    attach_plan = plan_of(corpus.select(*keys, "content").join(ids, keys))
+    ids._dense_ids_cache.unpersist()
+    shutil.rmtree(corpus_root, ignore_errors=True)
+    assert "ExistingRDD" not in attach_plan, attach_plan
+    broadcast_inputs = re.findall(
+        r"^\(\d+\) BroadcastExchange\s*\nInput \[\d+\]: (.*)$", attach_plan, re.M
+    )
+    assert broadcast_inputs, attach_plan
+    assert not any("content#" in i for i in broadcast_inputs), attach_plan
+    sections.append((
+        "Build stage — doc-id attach",
+        "A keyed build's tf stage reads corpus ⋈ assign_doc_ids(keys) on the "
+        "natural key. The rank table is cached keys-only, and each row's id "
+        "is its partition's offset (one array literal indexed by the "
+        "partition id) plus its row number: no local-data relation, so no "
+        "`Scan ExistingRDD` and no parallelize job. The cached table "
+        "therefore reports its real size, and the planner broadcasts it "
+        "(the only BroadcastExchange carries keys and doc_id, never "
+        "content); the corpus scan feeds the join in place.",
+        attach_plan,
     ))
 
     # 4. a relational demo: broadcast dim join

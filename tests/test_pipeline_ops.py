@@ -594,3 +594,29 @@ def test_assign_dense_ids_rejects_reserved_column(spark, monkeypatch):
     )
     with pytest.raises(ValueError, match="_graft_kh"):
         docids.assign_dense_ids(df, ["k"])
+
+
+@pytest.mark.parametrize("partitions", [1, 8, 64])
+def test_doc_ids_equal_dense_rank(spark, partitions):
+    """assign_doc_ids is ``dense_rank() over (order by key) - 1`` on both the
+    keys-only and the payload path, whatever the range partition count —
+    64 partitions over 40 rows leaves some of them empty."""
+    from pyspark.sql import Window
+
+    from geocoderpl_spark.operators.docids import assign_doc_ids
+    from geocoderpl_spark.sources.corpus import synth_corpus
+
+    keys = ["repo", "path", "commit"]
+    corpus = synth_corpus(spark, 40)
+    ref = {
+        tuple(r[:3]): r.doc_id
+        for r in corpus.select(
+            *keys, (F.dense_rank().over(Window.orderBy(*keys)) - 1).alias("doc_id")
+        ).collect()
+    }
+    assert sorted(ref.values()) == list(range(40))
+    for src in (corpus.select(*keys), corpus):
+        got = assign_doc_ids(src, keys, partitions)
+        assert sorted(got.columns) == sorted([*src.columns, "doc_id"])
+        rows = got.select(*keys, "doc_id").collect()
+        assert {tuple(r[:3]): r.doc_id for r in rows} == ref and len(rows) == 40

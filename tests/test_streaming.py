@@ -771,3 +771,39 @@ def test_merge_rejects_doc_id_in_two_segments(spark, tmp_path):
                 n_buckets=4, id_col="doc_id")
     segs = SegmentedIndex(spark, root).segments()
     _no_jobs(spark, lambda: _check_disjoint_doc_ids(segs))
+
+
+def test_build_ingest_merge_run_no_local_data_job(spark, tmp_path, monkeypatch):
+    """A keyed build, an ingest batch and a compaction never make a
+    DataFrame from driver-side data: such a relation runs a parallelize
+    job, which starts a second Python worker pool next to the Arrow
+    kernels' one."""
+    import glob
+    import shutil
+
+    from pyspark import SparkContext
+    from pyspark.sql import functions as F
+
+    from geocoderpl_spark.streaming.incremental import compact_segments
+
+    stream_dir, root = str(tmp_path / "in"), str(tmp_path / "idx")
+    os.makedirs(stream_dir)
+    corpus = synth_corpus(spark, 120)
+    for i in range(2):
+        part = corpus.filter(F.pmod(F.xxhash64("path"), F.lit(2)) == i)
+        part.coalesce(1).write.parquet(f"{stream_dir}/t.tmp")
+        shutil.move(glob.glob(f"{stream_dir}/t.tmp/*.parquet")[0],
+                    f"{stream_dir}/drop_{i}.parquet")
+        shutil.rmtree(f"{stream_dir}/t.tmp")
+
+    def no_parallelize(self, *a, **kw):
+        raise AssertionError("SparkContext.parallelize on a build path")
+
+    monkeypatch.setattr(SparkContext, "parallelize", no_parallelize)
+    assert build_index(spark, corpus, str(tmp_path / "bulk"), n_buckets=4).n_docs == 120
+    q = start_incremental_indexer(spark, stream_dir, root, SCHEMA,
+                                  n_buckets=4, max_files_per_trigger=1)
+    q.awaitTermination(300)  # raises if a batch failed
+    assert len(SegmentedIndex(spark, root).segments()) == 2
+    assert compact_segments(spark, root, max_segments=1, n_buckets=4)
+    assert SegmentedIndex(spark, root).global_stats()[0] == 120
