@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 # with oracle_sql() in __spark_entry__.py.
 CAMEL_BOUNDARY = "([a-z0-9])([A-Z])"
 NON_TOKEN = "[^a-z0-9_]+"
-TOKEN_RUN = "[a-z0-9_]+"  # complement of NON_TOKEN: one maximal token
 
 
 def tokenize(col: Column | str) -> Column:
@@ -66,6 +65,28 @@ def tokenize_py(text: str) -> list[str]:
     corpus at 32 cores). Same spec, asserted equal in tests."""
     spaced = _CAMEL_RE.sub(r"\1 \2", text)
     return [t for t in _NON_TOKEN_RE.split(spaced.lower()) if t]
+
+
+def tokenize_arrow(content):
+    """Arrow twin of :func:`tokenize`, the build's tf kernel tokenizer: a
+    pyarrow string array -> ``(terms, parent, doclen)``. ``terms`` holds
+    every row's tokens in order, ``parent`` (int64 numpy) the row of each
+    token and ``doclen`` (int64 numpy) the token count per row; a NULL row
+    has no tokens. Pure Arrow C++ compute (RE2 + utf8 kernels): no Python
+    string object is built. Same spec, asserted equal in tests."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    spaced = pc.replace_substring_regex(
+        pc.fill_null(content, ""), pattern=CAMEL_BOUNDARY, replacement=r"\1 \2"
+    )
+    toks = pc.split_pattern_regex(pc.utf8_lower(spaced), pattern=NON_TOKEN)
+    lengths = pc.list_value_length(toks).to_numpy().astype(np.int64)
+    parent = np.repeat(np.arange(len(content), dtype=np.int64), lengths)
+    flat = pc.list_flatten(toks)
+    keep = pc.not_equal(flat, "")
+    parent = parent[keep.to_numpy(zero_copy_only=False)]
+    return flat.filter(keep), parent, np.bincount(parent, minlength=len(content))
 
 
 def tokenize_sql(expr: str) -> str:

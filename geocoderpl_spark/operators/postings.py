@@ -69,71 +69,6 @@ def term_frequencies(tok_docs: DataFrame) -> DataFrame:
     return pairs.groupBy("term", "doc_id", "doclen").agg(F.count(F.lit(1)).alias("tf"))
 
 
-def term_frequencies_pandas(
-    docs: DataFrame, content_col: str = "content", with_sha: bool = False
-) -> DataFrame:
-    """Hot-path tf: (term, doc_id, doclen, tf) via an Arrow-batched pandas
-    kernel — tokenize + per-doc counting happen locally in the kernel, so tf
-    needs NO shuffle at all (it is a per-doc map), and the Python regex path
-    is ~10x faster than Spark's regexp expressions on match-heavy text
-    (measured: 28s JVM vs ~2s kernel for 100k docs / 23M tokens @32c).
-
-    This is the north_star's "SPIMI-style per-partition construction inside
-    vectorized pandas/Arrow UDFs (tokenize -> term-docID pairs)".
-
-    ``with_sha=True`` fuses the docstats pass into the same tokenize
-    (sha256 on the first row of each doc, NULL elsewhere; zero-token docs
-    emit one sentinel row with term NULL) — see :func:`term_frequencies_arrow`.
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        from ..functions.tokenize import tokenize_py
-
-        from collections import Counter
-
-        for pdf in batches:
-            ids, dls, terms, tfs, shas = [], [], [], [], []
-            for doc_id, content in zip(pdf["doc_id"].to_numpy(), pdf[content_col]):
-                toks = tokenize_py(content)
-                c = Counter(toks)
-                if with_sha:
-                    h = hashlib.sha256((content or "").encode("utf-8")).hexdigest()
-                    if not c:  # zero-token doc -> sentinel row carries stats
-                        ids.append(np.full(1, doc_id, dtype=np.int64))
-                        dls.append(np.zeros(1, dtype=np.int64))
-                        terms.append(None)
-                        tfs.append(np.zeros(1, dtype=np.int64))
-                        shas.append(h)
-                        continue
-                    shas.extend([h] + [None] * (len(c) - 1))
-                elif not c:
-                    continue
-                ids.append(np.full(len(c), doc_id, dtype=np.int64))
-                dls.append(np.full(len(c), len(toks), dtype=np.int64))
-                terms.extend(c.keys())
-                tfs.append(np.fromiter(c.values(), dtype=np.int64, count=len(c)))
-            if not ids:
-                continue
-            out = {
-                "term": terms,
-                "doc_id": np.concatenate(ids),
-                "doclen": np.concatenate(dls),
-                "tf": np.concatenate(tfs),
-            }
-            if with_sha:
-                out["sha256"] = shas
-            yield pd.DataFrame(out)
-
-    schema = "term string, doc_id long, doclen long, tf long" + (
-        ", sha256 string" if with_sha else ""
-    )
-    return docs.select("doc_id", content_col).mapInPandas(fn, schema=schema)
-
-
 def _sha256_hex(content, n: int) -> list[str]:
     """Zero-copy sha256 of each string in an Arrow array: hash utf8 bytes
     straight out of the value buffer (hashlib accepts memoryviews — the
@@ -154,190 +89,6 @@ def _sha256_hex(content, n: int) -> list[str]:
     ]
 
 
-def _attach_sha(out, content, doc_ids, doclen, np, pa, sha=None):
-    """Fuse per-doc stats onto a (term, doc_id, ...) tf table: sha256 lands
-    on the FIRST output row of each doc (NULL elsewhere), and zero-token
-    docs — absent from the tf aggregation — get one sentinel row with term
-    NULL so every doc's (doclen, sha256) survives into the checkpoint.
-    ``sha`` may be precomputed (one pa.string() value per doc)."""
-    import pyarrow.compute as pc
-
-    n = len(doc_ids)
-    if sha is None:
-        sha = pa.array(_sha256_hex(content, n), pa.string())
-    out_docs = out["doc_id"].to_numpy()
-    order = np.argsort(doc_ids, kind="stable")
-    _, first_idx = np.unique(out_docs, return_index=True)
-    # sha lands via a null-masked take — no per-row Python objects: index
-    # array is -1 (null) everywhere except each doc's first output row
-    idx = np.full(out_docs.size, -1, dtype=np.int64)
-    idx[first_idx] = order[np.searchsorted(doc_ids, out_docs[first_idx], sorter=order)]
-    sha_col = pc.take(sha, pa.array(idx, pa.int64(), mask=idx < 0))
-    out = out.append_column("sha256", sha_col)
-    zidx = np.nonzero(doclen == 0)[0]
-    if zidx.size:
-        zeros = pa.array(np.zeros(zidx.size, np.int64), pa.int64())
-        cols = {
-            "term": pa.nulls(zidx.size, out.schema.field("term").type),
-            "doc_id": pa.array(doc_ids[zidx].astype(np.int64), pa.int64()),
-            "doclen": zeros,
-            "tf": zeros,
-            "sha256": sha.take(pa.array(zidx, pa.int64())),
-        }
-        sent = pa.table(
-            {f.name: cols.get(f.name, pa.nulls(zidx.size, f.type)) for f in out.schema},
-            schema=out.schema,
-        )
-        out = pa.concat_tables([out, sent])
-    return out
-
-
-def term_frequencies_arrow(
-    docs: DataFrame, content_col: str = "content", with_sha: bool = False
-) -> DataFrame:
-    """tf kernel v2: ``mapInArrow`` + pure Arrow C++ compute — tokenize (RE2
-    regex + split), flatten, and hash-aggregate per (term, doc) WITHOUT ever
-    materializing a Python string object.
-
-    ``with_sha=True`` fuses the docstats pass into this same single scan
-    (VERDICT r02 #7): the corpus is tokenized ONCE instead of once for
-    docstats + once for tf. Per-doc stats ride as a sparse extra column —
-    sha256 is non-NULL on exactly one tf row per doc, and zero-token docs
-    emit one term-NULL sentinel row — so the build derives docstats from
-    the tf checkpoint with a column-pruned filter instead of a second
-    content pass (consumers of the tf rows filter ``term IS NOT NULL``).
-
-    Why: the v1 pandas kernel (:func:`term_frequencies_pandas`) builds one
-    Python ``str`` per token — ~55 bytes of object header + hash per ~7-byte
-    token, i.e. ~8x the corpus size in allocation traffic. That is exactly
-    the DRAM-bandwidth wall that capped 8->32-thread scaling at ~0.2
-    (BASELINE.md r01): 32 python workers each churning GB/s of small objects
-    saturate the memory bus. Here tokens live only in Arrow buffers
-    (contiguous values + offsets), the camel/lower/split passes are
-    vectorized RE2/utf8 kernels, and the tf count is Arrow's C++ hash
-    group-by — Python holds only batch-level references.
-
-    Token-for-token identical to v1/:func:`tokenize` (4-way parity test in
-    tests/test_tokenize.py)."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ..functions.tokenize import CAMEL_BOUNDARY, NON_TOKEN
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            content = pc.fill_null(rb.column(1), "")
-            spaced = pc.replace_substring_regex(
-                content, pattern=CAMEL_BOUNDARY, replacement=r"\1 \2"
-            )
-            toks = pc.split_pattern_regex(pc.utf8_lower(spaced), pattern=NON_TOKEN)
-            lengths = pc.list_value_length(toks).to_numpy().astype(np.int64)
-            parent = np.repeat(np.arange(n, dtype=np.int64), lengths)
-            flat = pc.list_flatten(toks)
-            keep = pc.notequal(flat, "") if hasattr(pc, "notequal") else pc.not_equal(flat, "")
-            keep_np = keep.to_numpy(zero_copy_only=False)
-            parent = parent[keep_np]
-            doclen = np.bincount(parent, minlength=n)  # non-empty tokens per doc
-            doc_ids = rb.column(0).to_numpy()
-            tbl = pa.table(
-                {
-                    "term": flat.filter(keep),
-                    "doc_id": pa.array(doc_ids[parent], pa.int64()),
-                    "doclen": pa.array(doclen[parent], pa.int64()),
-                }
-            )
-            agg = tbl.group_by(["term", "doc_id", "doclen"]).aggregate([([], "count_all")])
-            out = pa.table(
-                {
-                    "term": agg["term"].cast(pa.string()),
-                    "doc_id": agg["doc_id"],
-                    "doclen": agg["doclen"],
-                    "tf": agg["count_all"].cast(pa.int64()),
-                }
-            )
-            if with_sha:
-                out = _attach_sha(out, content, doc_ids, doclen, np, pa)
-            yield from out.to_batches()
-
-    schema = "term string, doc_id long, doclen long, tf long" + (
-        ", sha256 string" if with_sha else ""
-    )
-    return docs.select("doc_id", content_col).mapInArrow(fn, schema=schema)
-
-
-def term_positions_arrow(
-    docs: DataFrame, content_col: str = "content", with_sha: bool = False
-) -> DataFrame:
-    """Positional tf kernel: like :func:`term_frequencies_arrow` plus the
-    1-based token positions of each (term, doc) occurrence — the input for
-    positional (phrase-capable) indexes. Positions index the *filtered*
-    token array, identical to what ``tokenize()`` exposes, so the indexed
-    phrase counts equal the corpus-scan ``textstats.phrase_match`` exactly.
-    All in Arrow buffers; the only additions over the tf kernel are an
-    arange-per-doc (vectorized first-index trick) and a list aggregation.
-    ``with_sha`` fuses the docstats pass, as in the tf kernel."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ..functions.tokenize import CAMEL_BOUNDARY, NON_TOKEN
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            content = pc.fill_null(rb.column(1), "")
-            spaced = pc.replace_substring_regex(
-                content, pattern=CAMEL_BOUNDARY, replacement=r"\1 \2"
-            )
-            toks = pc.split_pattern_regex(pc.utf8_lower(spaced), pattern=NON_TOKEN)
-            lengths = pc.list_value_length(toks).to_numpy().astype(np.int64)
-            parent = np.repeat(np.arange(n, dtype=np.int64), lengths)
-            flat = pc.list_flatten(toks)
-            keep = pc.not_equal(flat, "").to_numpy(zero_copy_only=False)
-            parent = parent[keep]
-            doclen = np.bincount(parent, minlength=n)
-            # 1-based position within each doc's FILTERED token stream
-            idx = np.arange(parent.size, dtype=np.int64)
-            pos = (idx - np.searchsorted(parent, parent, side="left") + 1).astype(np.int32)
-            doc_ids = rb.column(0).to_numpy()
-            tbl = pa.table(
-                {
-                    "term": flat.filter(pa.array(keep)),
-                    "doc_id": pa.array(doc_ids[parent], pa.int64()),
-                    "doclen": pa.array(doclen[parent], pa.int64()),
-                    "pos": pa.array(pos, pa.int32()),
-                }
-            )
-            agg = tbl.group_by(["term", "doc_id", "doclen"]).aggregate(
-                [("pos", "list"), ([], "count_all")]
-            )
-            out = pa.table(
-                {
-                    "term": agg["term"].cast(pa.string()),
-                    "doc_id": agg["doc_id"],
-                    "doclen": agg["doclen"],
-                    "tf": agg["count_all"].cast(pa.int64()),
-                    "positions": agg["pos_list"],
-                }
-            )
-            if with_sha:
-                out = _attach_sha(out, content, doc_ids, doclen, np, pa)
-            yield from out.to_batches()
-
-    schema = "term string, doc_id long, doclen long, tf long, positions array<int>" + (
-        ", sha256 string" if with_sha else ""
-    )
-    return docs.select("doc_id", content_col).mapInArrow(fn, schema=schema)
-
-
 def tf_docstats_direct(
     docs: DataFrame,
     meta_cols: list[str],
@@ -345,24 +96,23 @@ def tf_docstats_direct(
     content_col: str = "content",
     positional: bool = False,
 ) -> DataFrame:
-    """Fused tf+docstats kernel with DIRECT parquet output for the tf
-    relation (r6, guide §4.2: do the heavy lifting in native code).
+    """The build's tf kernel: one scan of ``docs`` writes the tf relation
+    as parquet and returns the docstats relation.
 
-    The classic path returns ~150 tf rows per doc through the Python→JVM
-    Arrow boundary, converts each to an UnsafeRow, and re-encodes them in
-    the JVM parquet writer — measured at 2M docs/local[8]: the return+write
-    tail costs ~19 s on top of a ~27 s compute floor. Here each task
-    streams its tf batches straight into ONE parquet file under ``out_dir``
-    via pyarrow's C++ writer (0.2 s per 2.8M rows, measured) and returns
-    only the per-doc stats row (doc_id, *meta passthrough, doclen, sha256)
-    — i.e. the docstats relation, ~1/150th of the rows. One scan, one
-    action materializes BOTH checkpoints.
+    Each task tokenizes its batches (:func:`tokenize_arrow`), counts every
+    (term, doc) pair with one Arrow hash ``group_by`` (positional builds add
+    the 1-based token positions to the same aggregate) and streams the rows
+    :func:`tf_schema` names straight into ONE parquet file under
+    ``out_dir`` via pyarrow's C++ writer. Only the per-doc stats row
+    (doc_id, *meta passthrough, doclen, sha256) crosses back to the JVM —
+    ~1/150th of the tf rows, no UnsafeRow conversion, no JVM parquet
+    encode. Zero-token docs get a stats row (doclen 0) and no tf row.
 
-    The tf rows written are IDENTICAL in content to
-    :func:`term_frequencies_arrow(with_sha=True)` (sparse sha sidecar +
-    term-NULL sentinels for zero-token docs), so every downstream consumer
-    — terms, postings, the fused docstats derive on resume — reads the
-    checkpoint unchanged (asserted row-identical in tests/test_index.py).
+    Per batch, the (term, df, cf) partials of its tf rows go to the
+    underscore-hidden ``_termstats`` sidecar: a materialized map-side
+    combine, so the terms stage aggregates vocabulary-sized partials instead
+    of rescanning tf. Partial rows may repeat a term (per batch, per task);
+    the terms stage's sum makes them exact.
 
     Commit protocol: tasks write ``_tmp-<pid>-<attempt>`` then atomically
     rename to ``part-<pid>``; a retried task recomputes the same partition
@@ -383,7 +133,7 @@ def tf_docstats_direct(
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        from ..functions.tokenize import CAMEL_BOUNDARY, NON_TOKEN
+        from ..functions.tokenize import tokenize_arrow
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
@@ -391,13 +141,6 @@ def tf_docstats_direct(
         tmp = _os2.path.join(out_dir, f"_tmp-{pid:05d}-{att}.parquet")
         final = _os2.path.join(out_dir, f"part-{pid:05d}-graft.snappy.parquet")
         writer = None
-        # per-batch term partials (r6): a materialized map-side combine for
-        # the terms dictionary — (term, df, cf) per batch, written to the
-        # underscore-hidden ``_termstats`` sidecar during the pass the build
-        # already makes, so build_terms aggregates vocabulary-sized partials
-        # instead of rescanning the full tf checkpoint (guide §2.3
-        # "aggregate before you shuffle"). Partial rows may repeat a term
-        # (per batch, per task) — the Spark-side SUM makes them exact.
         pdir = _os2.path.join(out_dir, "_termstats")
         ptmp = _os2.path.join(pdir, f"_tmp-{pid:05d}-{att}.parquet")
         pfinal = _os2.path.join(pdir, f"part-{pid:05d}-graft.snappy.parquet")
@@ -408,52 +151,30 @@ def tf_docstats_direct(
                 continue
             names = rb.schema.names
             content = pc.fill_null(rb.column(names.index(content_col)), "")
-            spaced = pc.replace_substring_regex(
-                content, pattern=CAMEL_BOUNDARY, replacement=r"\1 \2"
-            )
-            toks = pc.split_pattern_regex(pc.utf8_lower(spaced), pattern=NON_TOKEN)
-            lengths = pc.list_value_length(toks).to_numpy().astype(np.int64)
-            parent = np.repeat(np.arange(n, dtype=np.int64), lengths)
-            flat = pc.list_flatten(toks)
-            keep = pc.not_equal(flat, "").to_numpy(zero_copy_only=False)
-            parent = parent[keep]
-            doclen = np.bincount(parent, minlength=n)
+            terms, parent, doclen = tokenize_arrow(content)
             doc_ids = rb.column(names.index("doc_id")).to_numpy()
             tcols = {
-                "term": flat.filter(pa.array(keep)),
+                "term": terms,
                 "doc_id": pa.array(doc_ids[parent], pa.int64()),
                 "doclen": pa.array(doclen[parent], pa.int64()),
             }
+            aggs = [([], "count_all")]
             if positional:
+                # 1-based position within each doc's token stream
                 idx = np.arange(parent.size, dtype=np.int64)
-                pos = (
-                    idx - np.searchsorted(parent, parent, side="left") + 1
-                ).astype(np.int32)
-                tcols["pos"] = pa.array(pos, pa.int32())
-                agg = pa.table(tcols).group_by(["term", "doc_id", "doclen"]).aggregate(
-                    [("pos", "list"), ([], "count_all")]
-                )
-                out = pa.table(
-                    {
-                        "term": agg["term"].cast(pa.string()),
-                        "doc_id": agg["doc_id"],
-                        "doclen": agg["doclen"],
-                        "tf": agg["count_all"].cast(pa.int64()),
-                        "positions": agg["pos_list"],
-                    }
-                )
-            else:
-                agg = pa.table(tcols).group_by(["term", "doc_id", "doclen"]).aggregate(
-                    [([], "count_all")]
-                )
-                out = pa.table(
-                    {
-                        "term": agg["term"].cast(pa.string()),
-                        "doc_id": agg["doc_id"],
-                        "doclen": agg["doclen"],
-                        "tf": agg["count_all"].cast(pa.int64()),
-                    }
-                )
+                pos = idx - np.searchsorted(parent, parent, side="left") + 1
+                tcols["pos"] = pa.array(pos.astype(np.int32), pa.int32())
+                aggs.append(("pos", "list"))
+            agg = pa.table(tcols).group_by(["term", "doc_id", "doclen"]).aggregate(aggs)
+            out = {
+                "term": agg["term"].cast(pa.string()),
+                "doc_id": agg["doc_id"],
+                "doclen": agg["doclen"],
+                "tf": agg["count_all"].cast(pa.int64()),
+            }
+            if positional:
+                out["positions"] = agg["pos_list"]
+            out = pa.table(out)
             pt = out.group_by("term").aggregate([("tf", "sum"), ([], "count_all")])
             partial = pa.table(
                 {
@@ -466,16 +187,14 @@ def tf_docstats_direct(
                 _os2.makedirs(pdir, exist_ok=True)
                 pwriter = pq.ParquetWriter(ptmp, partial.schema)
             pwriter.write_table(partial)
-            sha = pa.array(_sha256_hex(content, n), pa.string())
-            out = _attach_sha(out, content, doc_ids, doclen, np, pa, sha=sha)
             if writer is None:
                 writer = pq.ParquetWriter(tmp, out.schema)
             writer.write_table(out)
             stats = {"doc_id": rb.column(names.index("doc_id"))}
             for c in fn.meta_cols:
                 stats[c] = rb.column(names.index(c))
-            stats["doclen"] = pa.array(doclen.astype(np.int64), pa.int64())
-            stats["sha256"] = sha
+            stats["doclen"] = pa.array(doclen, pa.int64())
+            stats["sha256"] = pa.array(_sha256_hex(content, n), pa.string())
             yield pa.RecordBatch.from_pydict(stats)
         if writer is not None:
             writer.close()
@@ -509,19 +228,11 @@ def write_empty_parquet(out_dir: str, schema) -> None:
     )
 
 
-def ensure_tf_files(out_dir: str, positional: bool = False) -> None:
-    """Zero-doc guard for the kernel-direct tf write: an empty corpus
-    produces no task files, which would make the checkpoint unreadable —
-    land one empty file carrying the schema."""
-    import glob as _glob
-    import os
-
+def tf_schema(positional: bool = False):
+    """The pyarrow schema of the tf files :func:`tf_docstats_direct` writes:
+    ``term, doc_id, doclen, tf[, positions]``."""
     import pyarrow as pa
 
-    # finalized task files only — a crashed attempt's _tmp-* leftover (hidden
-    # from Spark's listing) must not suppress the schema-carrying empty file
-    if _glob.glob(os.path.join(out_dir, "part-*.parquet")):
-        return
     fields = [
         pa.field("term", pa.string()),
         pa.field("doc_id", pa.int64()),
@@ -530,8 +241,20 @@ def ensure_tf_files(out_dir: str, positional: bool = False) -> None:
     ]
     if positional:
         fields.append(pa.field("positions", pa.list_(pa.int32())))
-    fields.append(pa.field("sha256", pa.string()))
-    write_empty_parquet(out_dir, pa.schema(fields))
+    return pa.schema(fields)
+
+
+def ensure_tf_files(out_dir: str, positional: bool = False) -> None:
+    """Zero-doc guard for the kernel-direct tf write: an empty corpus
+    produces no task files, which would make the checkpoint unreadable —
+    land one empty file carrying :func:`tf_schema`."""
+    import glob as _glob
+    import os
+
+    # finalized task files only — a crashed attempt's _tmp-* leftover (hidden
+    # from Spark's listing) must not suppress the schema-carrying empty file
+    if not _glob.glob(os.path.join(out_dir, "part-*.parquet")):
+        write_empty_parquet(out_dir, tf_schema(positional))
 
 
 def ensure_postings_files(out_dir: str, positional: bool = False) -> None:
@@ -548,84 +271,6 @@ def ensure_postings_files(out_dir: str, positional: bool = False) -> None:
     )
 
 
-def docstats_arrow(
-    docs: DataFrame, meta_cols: list[str], content_col: str = "content"
-) -> DataFrame:
-    """docstats kernel v2 (mapInArrow): doclen via the same Arrow tokenize
-    pipeline as :func:`term_frequencies_arrow`, sha256 hashed ZERO-COPY from
-    the Arrow string buffer (hashlib accepts memoryviews — the content is
-    never decoded into a Python str). Python per row: one hashlib call and
-    one 64-char hexdigest, nothing proportional to document size."""
-
-    def fn(batches):
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ..functions.tokenize import CAMEL_BOUNDARY, TOKEN_RUN
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            content = pc.fill_null(rb[content_col], "")
-            spaced = pc.replace_substring_regex(
-                content, pattern=CAMEL_BOUNDARY, replacement=r"\1 \2"
-            )
-            # doclen = number of maximal token runs — identical to counting
-            # non-empty split results, without materializing the token lists
-            doclen = pc.count_substring_regex(
-                pc.utf8_lower(spaced), pattern=TOKEN_RUN
-            ).to_numpy(zero_copy_only=False).astype(np.int64)
-            # zero-copy sha256: hash utf8 bytes straight out of the buffer
-            carr = content.combine_chunks() if isinstance(content, pa.ChunkedArray) else content
-            bufs = carr.buffers()
-            odt = np.int64 if pa.types.is_large_string(carr.type) else np.int32
-            offs = np.frombuffer(bufs[1], dtype=odt, count=carr.offset + n + 1)
-            data = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
-            sha = [
-                hashlib.sha256(data[offs[carr.offset + i] : offs[carr.offset + i + 1]]).hexdigest()
-                for i in range(n)
-            ]
-            cols = {name: rb[name] for name in ("doc_id", *fn.meta_cols)}
-            cols["doclen"] = pa.array(doclen, pa.int64())
-            cols["sha256"] = pa.array(sha, pa.string())
-            yield from pa.table(cols).to_batches()
-
-    fn.meta_cols = list(meta_cols)
-    dtypes = {f.name: f.dataType.simpleString() for f in docs.schema}
-    meta_schema = ", ".join(f"{c} {dtypes[c]}" for c in meta_cols)
-    schema = "doc_id long" + (", " + meta_schema if meta_schema else "") + ", doclen long, sha256 string"
-    return docs.select("doc_id", *meta_cols, content_col).mapInArrow(fn, schema=schema)
-
-
-def docstats_pandas(
-    docs: DataFrame, meta_cols: list[str], content_col: str = "content"
-) -> DataFrame:
-    """Hot-path docstats: doc_id + metadata + doclen + sha256(content), one
-    Arrow pass (tokenize for doclen and hashlib sha256 in the same kernel)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        from ..functions.tokenize import tokenize_py
-
-        for pdf in batches:
-            out = pdf[["doc_id", *meta_cols]].copy()
-            out["doclen"] = [len(tokenize_py(c)) for c in pdf[content_col]]
-            out["sha256"] = [
-                hashlib.sha256(c.encode("utf-8")).hexdigest() for c in pdf[content_col]
-            ]
-            yield out
-
-    dtypes = {f.name: f.dataType.simpleString() for f in docs.schema}
-    meta_schema = ", ".join(f"{c} {dtypes[c]}" for c in meta_cols)
-    schema = "doc_id long" + (", " + meta_schema if meta_schema else "") + ", doclen long, sha256 string"
-    return docs.select("doc_id", *meta_cols, content_col).mapInPandas(fn, schema=schema)
-
-
 def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> DataFrame:
     """Term dictionary: (term, df, cf, term_id).
 
@@ -638,12 +283,13 @@ def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> Data
     (:func:`_rank_partition`) that aggregates, sorts and numbers its range
     partition in a single pass; the per-partition row counts (one collect
     of each partition's last row from the persisted kernel output) give
-    each partition's id offset. With the direct tf kernel's ``_termstats`` partials (per-batch
-    (term, df, cf) rows, a materialized map-side combine; a merge links
-    its segments' dictionaries there) the exchange moves those partial
-    rows; without them (classic tf kernel) a ``groupBy(term)`` over the
-    tf rows makes the source. Values are identical either way: per-term
-    df / cf are the sums of the partial counts / tf sums.
+    each partition's id offset. With the tf kernel's ``_termstats``
+    partials (per-batch (term, df, cf) rows, a materialized map-side
+    combine; a merge links its segments' dictionaries there) the exchange
+    moves those partial rows; without them (an empty corpus: no task wrote
+    a partial file) a ``groupBy(term)`` over the tf rows makes the source.
+    Values are identical either way: per-term df / cf are the sums of the
+    partial counts / tf sums.
 
     The result carries ``_rank_total`` (the dictionary size) and
     ``_stats_cache`` (the persisted kernel output, released by the caller
@@ -654,7 +300,7 @@ def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> Data
     if partials is not None:
         src = partials.select("term", "df", "cf")
     else:
-        # term-NULL rows are fused-docstats sentinels (zero-token docs)
+        # a NULL term is not a term
         src = tf.filter(F.col("term").isNotNull()).groupBy("term").agg(
             F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
         )
@@ -725,13 +371,6 @@ def _rank_partition(batches):
         "_pid": pa.array(np.full(n, TaskContext.get().partitionId(), dtype=np.int32)),
         "_last": pa.array(last),
     }).to_batches()
-
-
-def corpus_stats(tok_docs: DataFrame) -> tuple[int, float]:
-    row = tok_docs.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avgdl")
-    ).collect()[0]
-    return int(row["n"]), float(row["avgdl"] or 0.0)
 
 
 def _run_starts(terms, docs, slice_docs: int):

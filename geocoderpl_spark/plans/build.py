@@ -14,16 +14,15 @@ Reference parity:
 Layout under ``out_dir``::
 
     docstats/   doc_id, repo, path, commit, lang, doclen, sha256
-    tf/         term, doc_id, doclen, tf, sha256  (staging checkpoint; sha256
-                non-NULL on one row per doc, term-NULL sentinel rows carry
-                zero-token docs — docstats derives from here, one tokenize)
+    tf/         term, doc_id, doclen, tf[, positions]  (staging checkpoint;
+                one scan of the tf kernel writes it and docstats)
     terms/      term, term_id, df, cf
     postings/   bucket=*/part-*  (compressed blocks, POSTINGS_SCHEMA; one
                 file per encode task and bucket, written by the kernel)
     meta/       n_docs, avgdl, n_buckets, partitions
     lineage/    bucket, n_blocks, n_postings, n_terms
-    metrics/    stage, rows_out, wall_ms, status  (tf rows_out counts the
-                term-NULL sentinel rows; -1 for a resumed stage)
+    metrics/    stage, rows_out, wall_ms, status  (tf rows_out is the
+                number of (term, doc) rows; -1 for a resumed stage)
 """
 
 from __future__ import annotations
@@ -35,34 +34,17 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import postings as _postings
 from ..operators.docids import assign_doc_ids
 from ..operators.postings import (
     N_BUCKETS,
     build_postings,
     build_terms,
-    docstats_arrow,
-    docstats_pandas,
     ensure_postings_files,
-    term_frequencies_arrow,
-    term_frequencies_pandas,
+    ensure_tf_files,
+    tf_schema,
 )
-from .manifest import footer_rows, load_term_lookup, read_index_dir
-
-
-def _kernels():
-    """Hot-stage kernel selector: 'arrow' (mapInArrow, zero Python string
-    objects — default: measurably faster AND the only variant that scales
-    past 8 threads, see SCALE.md scaling study) or 'pandas' (python-re
-    loop, GRAFT_TF_KERNEL=pandas). Both token-identical (4-way parity test)."""
-    if os.environ.get("GRAFT_TF_KERNEL", "arrow") == "pandas":
-        return term_frequencies_pandas, docstats_pandas
-    return term_frequencies_arrow, docstats_arrow
-
-
-def _tf_kernel_positional():
-    from ..operators.postings import term_positions_arrow
-
-    return term_positions_arrow
+from .manifest import footer_columns, footer_rows, load_term_lookup, read_index_dir
 
 STAGES = ("docstats", "tf", "terms", "postings", "meta")
 
@@ -762,15 +744,27 @@ def build_index(
     import shutil
 
     meta_file = os.path.join(p["meta"], "meta.json")
+    stale = False
     if os.path.exists(meta_file):
         with open(meta_file) as f:
             old_fp = _json.load(f).get("corpus_fp")
         if corpus_fp is None:
             corpus_fp = old_fp  # fp-less resume keeps the stored fingerprint
-        elif old_fp != corpus_fp:
-            for s in (*STAGES, "lineage", "manifest"):
-                shutil.rmtree(os.path.join(out_dir, s) if s == "manifest" else p[s],
-                              ignore_errors=True)
+        else:
+            stale = old_fp != corpus_fp
+    # a tf checkpoint resumes only in the tf kernel's layout and together
+    # with the docstats the same scan wrote; any other tf (an older layout,
+    # or a tf whose docstats is gone) is stale, and so is every stage built
+    # from it
+    if _done(p["tf"]):
+        cols = [name for name, _ in footer_columns(p["tf"]) or []]
+        stale = stale or not (
+            _done(p["docstats"]) and cols == tf_schema(positional).names
+        )
+    if stale:
+        for s in (*STAGES, "lineage", "manifest"):
+            shutil.rmtree(os.path.join(out_dir, s) if s == "manifest" else p[s],
+                          ignore_errors=True)
 
     def timed(stage: str, fn):
         t0 = time.time()
@@ -783,198 +777,90 @@ def build_index(
         if c not in (content_col, "sha256", "doc_id", "tokens", "doclen")
     ]
 
-    # stage 1: fused tf+docstats kernel, ONE tokenize pass (VERDICT r02 #7) --
-    # The tf kernel runs with_sha=True: per-doc stats (doclen, sha256) ride
-    # the tf stream as a sparse column (sha on the first row of each doc;
-    # zero-token docs emit a term-NULL sentinel row), so docstats is later
-    # DERIVED from this checkpoint with a column-pruned filter — the corpus
-    # content is read and tokenized exactly once per build instead of twice.
-    # Tokenization runs inside Arrow kernels (north_star: "tokenize ->
-    # term-docID pairs inside vectorized pandas/Arrow UDFs"): no JVM token
-    # objects, no shuffle (per-doc local counting).
-    # ONE id-ranking per build (r5): the tf and docstats stages both need
-    # (key_cols -> doc_id); computing it per stage paid the range-sampling
-    # pass, the keys exchange, the counts collect, and the key-uniqueness
-    # check TWICE — pure fixed overhead that the 1M-doc exec-pair study
-    # showed capping build scaling. The ranked keys-only table is persisted
-    # once, shared by both stages, and unpersisted at the end of the build.
-    # doc_id values are unchanged (same ranking machinery, same input).
-    _shared_ids: dict = {}
-
-    def _doc_ids() -> DataFrame:
-        if "ids" not in _shared_ids:
-            # key-uniqueness guard (ADVICE r04) is built into the ranking
-            # itself (adjacency flag in the same window pass + the counts
-            # collect — zero extra jobs); a duplicate natural key raises
-            # there before any payload join can fan out
-            _shared_ids["ids"] = assign_doc_ids(
-                corpus.select(*key_cols), list(key_cols), partitions
-            )
-        return _shared_ids["ids"]
-
-    def _docs_with_ids(cols: list[str]):
-        """corpus pruned to ``cols`` + doc_id. The rank table is KEYS-ONLY
-        (r4) — payload columns never ride the range sampler/exchange/
-        persist — and shared across stages (r5); the id join re-reads the
-        corpus scan, and a narrower scan is a narrower parquet read."""
-        pruned = corpus.select(
-            *dict.fromkeys([*((id_col,) if id_col else key_cols), *cols])
-        )
-        if id_col:
-            return pruned.withColumn("doc_id", F.col(id_col).cast("long"))
-        # deterministic: doc_id = global rank of key_cols, independent of
-        # partitioning — every stage sees identical ids from the shared rank
-        return pruned.join(_doc_ids(), list(key_cols))
-
-    # kernel-direct mode (r6, default): the tf kernel streams its tf batches
-    # straight to parquet via pyarrow (C++) and RETURNS the per-doc stats —
-    # one corpus scan and one action materialize BOTH the tf and docstats
-    # checkpoints, skipping the 150-rows-per-doc Python->JVM return, the
-    # UnsafeRow conversion, and the JVM parquet encode (guide §4.2).
-    # GRAFT_TF_DIRECT=0 or the pandas kernel selector restores the classic
-    # JVM-written path (same checkpoint content either way — tested).
-    direct = (
-        os.environ.get("GRAFT_TF_DIRECT", "1") != "0"
-        and os.environ.get("GRAFT_TF_KERNEL", "arrow") != "pandas"
-    )
-    s2_err: list[BaseException] = []
+    # stage 1: the tf kernel (operators.postings.tf_docstats_direct) writes
+    # the tf checkpoint itself and returns the docstats rows: one corpus
+    # scan, one tokenize and one action make both checkpoints. Tokenization
+    # runs inside Arrow kernels (north_star: "tokenize -> term-docID pairs
+    # inside vectorized pandas/Arrow UDFs"): no JVM token objects, no
+    # shuffle (per-doc local counting).
+    errs: list[BaseException] = []
     _stage_out: dict = {}
     if not _done(p["tf"]):
-        if direct:
-            from ..operators.postings import ensure_tf_files, tf_docstats_direct
-
-            def s1():
-                import shutil as _sh
-
-                # wipe any partial task files from an interrupted attempt
-                _sh.rmtree(p["tf"], ignore_errors=True)
-                os.makedirs(p["tf"], exist_ok=True)
-                mcols = [c for c in meta_cols if c != id_col]
-                docs = _docs_with_ids([content_col, *mcols])
-                stats = tf_docstats_direct(
-                    docs, mcols, p["tf"], content_col, positional=positional
+        def s1():
+            # wipe any partial task files from an interrupted attempt
+            shutil.rmtree(p["tf"], ignore_errors=True)
+            os.makedirs(p["tf"], exist_ok=True)
+            mcols = [c for c in meta_cols if c != id_col]
+            # the corpus pruned to what the kernel reads: a narrower scan is
+            # a narrower parquet read
+            docs = corpus.select(*dict.fromkeys(
+                [*((id_col,) if id_col else key_cols), content_col, *mcols]
+            ))
+            if id_col:
+                docs = docs.withColumn("doc_id", F.col(id_col).cast("long"))
+            else:
+                # deterministic: doc_id = global rank of key_cols, independent
+                # of partitioning. The rank table is KEYS-ONLY (r4): payload
+                # columns never ride the range sampler/exchange/persist. The
+                # key-uniqueness guard (ADVICE r04) is built into the ranking
+                # (adjacency flag in the same window pass + the counts
+                # collect — zero extra jobs); a duplicate natural key raises
+                # there before any payload join can fan out
+                _stage_out["ids"] = assign_doc_ids(
+                    corpus.select(*key_cols), list(key_cols), partitions
                 )
-                stats.write.mode("overwrite").parquet(p["docstats"])
-                ensure_tf_files(p["tf"], positional)
-                open(os.path.join(p["tf"], "_SUCCESS"), "w").close()
-                _unpersist(docs)
-                return footer_rows(p["tf"])
+                docs = docs.join(_stage_out["ids"], list(key_cols))
+            # looked up at call time, so a wrapper installed on the module
+            # sees the call
+            stats = _postings.tf_docstats_direct(
+                docs, mcols, p["tf"], content_col, positional=positional
+            )
+            stats.write.mode("overwrite").parquet(p["docstats"])
+            ensure_tf_files(p["tf"], positional)
+            open(os.path.join(p["tf"], "_SUCCESS"), "w").close()
+            return footer_rows(p["tf"])
 
-            timed("tf", s1)
-            metrics.append(("docstats", -1, 0, "fused-direct"))
-            _stage_out["docstats_direct"] = True
-        else:
-            def s1():
-                docs = _docs_with_ids([content_col])
-                tf_kernel = _tf_kernel_positional() if positional else _kernels()[0]
-                tf_kernel(docs, content_col, with_sha=True).write.mode(
-                    "overwrite"
-                ).parquet(p["tf"])
-                _unpersist(docs)
-                return footer_rows(p["tf"])
-
-            timed("tf", s1)
+        timed("tf", s1)
+        metrics.append(("docstats", -1, 0, "fused-direct"))
     else:
         metrics.append(("tf", -1, 0, "resumed"))
+        metrics.append(("docstats", -1, 0, "resumed"))
+    tf = read_index_dir(spark, p["tf"])
 
-    tf_full = read_index_dir(spark, p["tf"])
-    fused = "sha256" in tf_full.columns  # pre-fusion checkpoints lack it
-    # downstream consumers see plain tf rows: sentinels out, sidecar pruned
-    tf = (
-        tf_full.filter(F.col("term").isNotNull()).drop("sha256") if fused else tf_full
-    )
-
-    # stages 2 ∥ 3: docstats and terms both depend ONLY on the tf
-    # checkpoint, so they run as CONCURRENT Spark jobs (one thread each —
-    # Spark schedules jobs from multiple threads of one session). This
-    # hides the shorter stage's wall inside the longer one, shaving the
-    # fixed per-build overhead the Amdahl analysis (BASELINE.md) shows is
-    # what actually caps small-build scaling.
-    if not _done(p["docstats"]):
-        def s2():
-            # content-free id assignment: only keys + metadata get cached
-            docs = _docs_with_ids(
-                [c for c in meta_cols if c != id_col]
-                + ([content_col] if not fused else [])
-            )
-            meta = docs.select("doc_id", *[c for c in meta_cols if c != id_col])
-            if fused:
-                # one row per doc by construction; scan reads 3 columns
-                per_doc = tf_full.filter(F.col("sha256").isNotNull()).select(
-                    "doc_id", "doclen", "sha256"
-                )
-                out = meta.join(per_doc, "doc_id")
-            else:  # resume of a pre-fusion tf checkpoint: old two-pass kernel
-                out = _kernels()[1](
-                    docs, [c for c in meta_cols if c != id_col], content_col
-                )
-            out.write.mode("overwrite").parquet(p["docstats"])
-            _unpersist(docs)
-            return -1
-
-        import threading
-
-        def _s2_thread():
-            try:
-                timed("docstats", s2)
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                s2_err.append(e)
-
-        t2 = threading.Thread(target=_s2_thread, name="build-docstats")
-        t2.start()
-    else:
-        t2 = None
-        if not _stage_out.get("docstats_direct"):
-            metrics.append(("docstats", -1, 0, "resumed"))
-
-    # stage 4's corpus-stats aggregate depends ONLY on the tf checkpoint
-    # (per_doc rows == docstats rows 1:1 — the docstats meta join is keyed
-    # on the same unique doc_id), so on fused checkpoints it runs as a
-    # third CONCURRENT job instead of a sequential one after the threads
-    # join: the per-build fixed overhead the Amdahl analysis (BASELINE.md)
-    # charges to sequential job scheduling shrinks by one full job. The
+    # stage 4's corpus-stats aggregate over docstats runs as a CONCURRENT
+    # job with the terms stage: one sequential job less per build. The
     # doclen sum is an integer far below 2^53, so the double accumulation
-    # is exact and order-independent — bit-identical to the docstats agg.
+    # is exact and order-independent.
     import threading
 
-    tmeta = None
-    if fused:
-        def _meta_thread():
-            try:
-                # freshly (direct-)built docstats is ~1 row/doc — far
-                # cheaper to agg than the tf checkpoint's sparse sidecar
-                src = (
-                    read_index_dir(spark, p["docstats"]).select("doc_id", "doclen")
-                    if _done(p["docstats"])
-                    else tf_full.filter(
-                        F.col("sha256").isNotNull() & F.col("doc_id").isNotNull()
-                    )
+    def _meta_thread():
+        try:
+            _stage_out["meta_row"] = (
+                read_index_dir(spark, p["docstats"])
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.avg("doclen").alias("avgdl"),
+                    F.min("doc_id").alias("dmin"),
+                    F.max("doc_id").alias("dmax"),
                 )
-                _stage_out["meta_row"] = (
-                    src.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.avg("doclen").alias("avgdl"),
-                        F.min("doc_id").alias("dmin"),
-                        F.max("doc_id").alias("dmax"),
-                    )
-                    .collect()[0]
-                )
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                s2_err.append(e)
+                .collect()[0]
+            )
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errs.append(e)
 
-        tmeta = threading.Thread(target=_meta_thread, name="build-meta-agg")
-        tmeta.start()
+    tmeta = threading.Thread(target=_meta_thread, name="build-meta-agg")
+    tmeta.start()
 
-    # stage 3: term dictionary (runs while the docstats thread works).
+    # stage 3: term dictionary (runs while the meta thread works).
     # try/finally: a terms-stage failure must still JOIN the concurrent
-    # docstats thread before propagating — otherwise the build raises with a
+    # meta thread before propagating — otherwise the build raises with a
     # background Spark job still writing its checkpoint (ADVICE r03).
     try:
         if not _done(p["terms"]):
             def s3():
-                # the direct tf kernel's _termstats sidecar (per-batch term
+                # the tf kernel's _termstats sidecar (per-batch term
                 # partials) spares the dictionary a full tf rescan; absent
-                # (classic kernel, resumed pre-r6 checkpoint) -> tf scan
+                # (an empty corpus, or a tf written without it) -> tf scan
                 import glob as _glob
 
                 # match finalized task files only: a speculative/killed
@@ -1003,29 +889,18 @@ def build_index(
         else:
             metrics.append(("terms", -1, 0, "resumed"))
     finally:
-        if t2 is not None:
-            t2.join()
-        if tmeta is not None:
-            tmeta.join()
-    if s2_err:
-        raise s2_err[0]
+        tmeta.join()
+    if errs:
+        raise errs[0]
 
-    docstats = read_index_dir(spark, p["docstats"])
     terms = read_index_dir(spark, p["terms"])
 
     # stage 4: meta (needed by postings for block-max) ----------------------
     # min/max doc_id ride the same agg job: they PROVE (or refute) that the
     # id space fits int32, which lets the postings stage narrow doc_id
     # before its exchange (VERDICT r04 #1a — the build's biggest shuffle).
-    # On fused checkpoints the agg already ran concurrently with stages 2/3
-    # (see the tmeta thread above); the sequential job survives only for
-    # pre-fusion resumes.
-    row = _stage_out.get("meta_row")
-    if row is None:
-        row = docstats.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("doclen").alias("avgdl"),
-            F.min("doc_id").alias("dmin"), F.max("doc_id").alias("dmax"),
-        ).collect()[0]
+    # The agg ran concurrently with the terms stage (the meta thread above).
+    row = _stage_out["meta_row"]
     n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
     # the docstats stage wrote one row per doc; the count fell out of the
     # meta agg (zero extra jobs)
@@ -1119,9 +994,9 @@ def build_index(
             f.write(json.dumps({"stage": stage, "rows_out": rows,
                                 "wall_ms": wall_ms, "status": status}) + "\n")
 
-    # release the shared id-rank persist (both consumers have materialized)
-    if "ids" in _shared_ids:
-        _unpersist(_shared_ids["ids"])
+    # release the id-rank persist (the tf stage has materialized)
+    if "ids" in _stage_out:
+        _unpersist(_stage_out["ids"])
 
     return InvertedIndex(
         root=out_dir, spark=spark, n_docs=n_docs, avgdl=avgdl,

@@ -48,11 +48,21 @@ def _part_files(path: str) -> list[str]:
 
 def footer_rows(path: str) -> int:
     """Rows in an index table dir, summed from its part files' footers with
-    pyarrow: no Spark job, no data read. For ``tf/`` the sum includes the
-    term-NULL sentinel rows that carry zero-token docs."""
+    pyarrow: no Spark job, no data read."""
     import pyarrow.parquet as pq
 
     return sum(pq.read_metadata(f).num_rows for f in _part_files(path))
+
+
+def footer_columns(path: str) -> list[tuple] | None:
+    """``(name, arrow type)`` of a table dir's first part file, footer
+    metadata dropped; None when the dir has no part file."""
+    import pyarrow.parquet as pq
+
+    files = _part_files(path)
+    if not files:
+        return None
+    return [(f.name, f.type) for f in pq.read_schema(files[0]).remove_metadata()]
 
 
 def read_index_dir(spark: SparkSession, path: str) -> DataFrame:

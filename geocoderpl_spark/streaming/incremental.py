@@ -28,8 +28,9 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.postings import tf_schema
 from ..plans.build import STAGES, InvertedIndex, build_index
-from ..plans.manifest import _part_files, read_index_dir
+from ..plans.manifest import _part_files, footer_columns, read_index_dir
 
 
 class SegmentedIndex:
@@ -867,17 +868,6 @@ _COPY_ERRNOS = frozenset(
 )
 
 
-def _columns(table_dir: str) -> list[tuple] | None:
-    """``(name, arrow type)`` of a table dir's first part file, footer
-    metadata dropped; None when the dir has no part file."""
-    import pyarrow.parquet as pq
-
-    files = _part_files(table_dir)
-    if not files:
-        return None
-    return [(f.name, f.type) for f in pq.read_schema(files[0]).remove_metadata()]
-
-
 def _link_parts(src_dirs: list[str], dst: str) -> tuple[int, int]:
     """Hard-link every part file of ``src_dirs`` into the new dir ``dst`` as
     ``part-<n>-graft.snappy.parquet`` (n counts across all sources, so the
@@ -956,10 +946,11 @@ def merge_segments(spark: SparkSession, index_root: str, out_dir: str, n_buckets
     Merges what the segments already wrote instead of rewriting it:
 
     - tf and docstats: when every segment's table has the same columns
-      (first part file's Arrow schema), its part files are hard-linked into
-      ``out_dir`` (copied where the filesystem refuses a link) — O(files),
-      no rows read. Differing columns (a pre-fusion tf) take a Spark
-      ``unionByName`` rewrite of that table.
+      (first part file's Arrow schema), and for tf the tf kernel's columns,
+      its part files are hard-linked into ``out_dir`` (copied where the
+      filesystem refuses a link) — O(files), no rows read. Otherwise the
+      table takes a Spark ``unionByName`` rewrite; a tf rewrite keeps the
+      kernel's columns and rows only, so the build resumes the merged tf.
     - dictionary: every segment's ``terms`` files are linked into
       ``out_dir/tf/_termstats``, the (term, df, cf) partials source of the
       build's terms stage, which sums them per term — no group-by over tf
@@ -1006,21 +997,27 @@ def merge_segments(spark: SparkSession, index_root: str, out_dir: str, n_buckets
     os.makedirs(out_dir, exist_ok=True)
     linked = copied = 0
     rewritten = False
+    tf_cols = tf_schema(positional).names
     for table in ("docstats", "tf"):
         srcs = [os.path.join(s.root, table) for s in segs]
         dst = os.path.join(out_dir, table)
-        cols = [_columns(d) for d in srcs]
-        if cols[0] and all(c == cols[0] for c in cols):
+        cols = [footer_columns(d) for d in srcs]
+        if (
+            cols[0] and all(c == cols[0] for c in cols)
+            and (table == "docstats" or [n for n, _ in cols[0]] == tf_cols)
+        ):
             n_link, n_copy = _link_parts(srcs, dst)
             linked, copied = linked + n_link, copied + n_copy
             open(os.path.join(dst, "_SUCCESS"), "w").close()
         else:
-            # allowMissingColumns: a pre-fusion tf lacks the sha256 sidecar
-            # column the fused kernel adds; the missing side fills NULL,
-            # which the build's term-NOT-NULL filter never reads
+            # a tf of an older layout (a sha256 sidecar column, term-NULL
+            # rows for zero-token docs) is cut to the kernel's columns and
+            # rows, or the build would find a stale tf and wipe the merge
+            dfs = [read_index_dir(spark, d) for d in srcs]
+            if table == "tf":
+                dfs = [df.filter(F.col("term").isNotNull()).select(*tf_cols) for df in dfs]
             reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                [read_index_dir(spark, d) for d in srcs],
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
             ).write.parquet(dst)
             rewritten = True
     n_link, n_copy = _link_parts(

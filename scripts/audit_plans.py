@@ -97,20 +97,24 @@ def main() -> None:
     ))
 
     # 3. tf + postings build plan (logical shape)
-    from geocoderpl_spark.operators.postings import build_terms, postings_input, term_frequencies_arrow
+    from geocoderpl_spark.operators.postings import build_terms, postings_input, tf_docstats_direct
+    from geocoderpl_spark.plans.manifest import read_index_dir
 
     docs = entrymod._docs(spark, SF).withColumnRenamed("text", "content")
-    tf = term_frequencies_arrow(docs)
+    tf_root = tempfile.mkdtemp(prefix="plans_tf_")
+    kernel = tf_docstats_direct(docs, [], tf_root)
+    kernel.write.format("noop").mode("overwrite").save()
+    tf = read_index_dir(spark, tf_root)
     terms = build_terms(tf)
     sections.append((
         "Build stage — tf kernel (mapInArrow, shuffle-free)",
-        "One scan, one ArrowEvalPython/MapInArrow node, zero exchanges: "
-        "tokenize + per-doc tf counting are per-row maps; the kernel is "
-        "pure Arrow C++ (RE2 + hash group-by), no Python string objects "
-        "(SCALE.md kernel study).",
-        plan_of(tf),
+        "One scan, one MapInArrow node, zero exchanges: tokenize + per-doc "
+        "tf counting are per-row maps; the kernel is pure Arrow C++ (RE2 + "
+        "hash group-by), no Python string objects (SCALE.md kernel study). "
+        "It writes the tf rows to parquet itself and returns one docstats "
+        "row per doc.",
+        plan_of(kernel),
     ))
-    from geocoderpl_spark.plans.manifest import read_index_dir
 
     dictionary = build_terms(
         None, partials=read_index_dir(spark, os.path.join(idx.root, "tf", "_termstats"))
@@ -141,6 +145,8 @@ def main() -> None:
         "file per task and bucket itself. No sampled range boundaries.",
         plan_of(postings_input(tf, terms, 16, 8, n_docs=500)[0]),
     ))
+    terms._stats_cache.unpersist()
+    shutil.rmtree(tf_root, ignore_errors=True)
 
     # 3b. doc-id attach: the keyed build's corpus ⋈ rank-table join, planned
     # once the rank table is materialized (as the tf stage sees it)

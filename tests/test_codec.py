@@ -69,17 +69,16 @@ def test_encode_kernels_byte_identical(spark, tmp_path):
         build_postings,
         build_terms,
         postings_input,
-        term_frequencies_arrow,
-        term_positions_arrow,
     )
     from geocoderpl_spark.sources.corpus import synth_corpus
+    from tests.test_tokenize import run_tf_kernel
 
     docs = assign_doc_ids(synth_corpus(spark, 500), ["repo", "path", "commit"], 4)
-    for tf_kernel, schema in ((term_frequencies_arrow, POSTINGS_SCHEMA),
-                              (term_positions_arrow, POSTINGS_POS_SCHEMA)):
-        tf = tf_kernel(docs)
+    for positional, schema in ((False, POSTINGS_SCHEMA), (True, POSTINGS_POS_SCHEMA)):
+        tf, _ = run_tf_kernel(spark, docs, str(tmp_path / f"tf{int(positional)}"),
+                              positional=positional)
         terms = build_terms(tf)
-        out = str(tmp_path / tf_kernel.__name__)
+        out = str(tmp_path / f"postings{int(positional)}")
         files = build_postings(tf, terms, 100.0, out, 4, 4, n_docs=500)
         cols = [c.split()[0] for c in schema.split(", ")]
         written = sorted(map(tuple, spark.read.parquet(out).select(*cols).collect()))

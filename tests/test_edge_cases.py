@@ -131,3 +131,90 @@ def test_grouped_postings_resume_byte_identical(spark, tmp_path):
     assert not os.path.exists(os.path.join(pdir, victims[0], "junk.tmp"))
     for d, files in keep.items():
         assert sorted(os.listdir(os.path.join(pdir, d))) == files
+
+
+def rewrite_tf_r6(root: str) -> None:
+    """Rewrite the plain tf checkpoint under ``root`` in the layout of the
+    older fused kernel: a ``sha256`` column set on each doc's first row (the
+    doc's docstats sha) and NULL elsewhere, plus one term-NULL sentinel row
+    (a zero-token doc: doclen 0, tf 0)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from geocoderpl_spark.plans.manifest import _part_files
+
+    stats = pa.concat_tables(
+        pq.read_table(f, columns=["doc_id", "sha256"])
+        for f in _part_files(os.path.join(root, "docstats"))
+    )
+    sha_of = dict(zip(stats["doc_id"].to_pylist(), stats["sha256"].to_pylist()))
+    for i, f in enumerate(_part_files(os.path.join(root, "tf"))):
+        t = pq.read_table(f)
+        t = t.drop([c for c in t.column_names if c == "sha256"])
+        t = t.filter(t["term"].is_valid())
+        _, first = np.unique(t["doc_id"].to_numpy(), return_index=True)
+        sha = [None] * t.num_rows
+        for r in first:
+            sha[r] = sha_of[t["doc_id"][int(r)].as_py()]
+        t = t.append_column("sha256", pa.array(sha, pa.string()))
+        if i == 0:
+            row = {"term": [None], "doc_id": [max(sha_of) + 1], "doclen": [0],
+                   "tf": [0], "sha256": ["0" * 64]}
+            t = pa.concat_tables([t, pa.table(row, schema=t.schema)])
+        pq.write_table(t, f)
+
+
+def _last_status(root: str, stage: str) -> str:
+    import json
+
+    with open(os.path.join(root, "metrics", "metrics.jsonl")) as f:
+        rows = [json.loads(line) for line in f]
+    return [r for r in rows if r["stage"] == stage][-1]["status"]
+
+
+def test_stale_tf_checkpoint_rebuilds(spark, tmp_path):
+    """A tf checkpoint resumes only in the tf kernel's layout and with its
+    docstats. An older layout (sha256 sidecar + term-NULL sentinel rows), a
+    tf in the kernel's columns whose docstats is gone, or a plain tf under a
+    positional build makes the build wipe every stage and rebuild: tf is
+    ``built``, and the terms, decoded postings and docstats equal the fresh
+    build's."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from geocoderpl_spark.plans.build import build_index
+    from geocoderpl_spark.plans.manifest import _part_files
+    from geocoderpl_spark.sources.corpus import synth_corpus
+    from tests.test_streaming import _index_rows
+
+    root = str(tmp_path / "idx")
+
+    def build(positional=False):
+        return build_index(spark, synth_corpus(spark, 300), root, n_buckets=4,
+                           partitions=4, positional=positional)
+
+    fresh = _index_rows(build())
+
+    def assert_rebuilt(idx):
+        assert _last_status(root, "tf") == "built"
+        for got, want in zip(_index_rows(idx), fresh):
+            assert got.equals(want)
+
+    rewrite_tf_r6(root)
+    assert "sha256" in pq.read_schema(_part_files(os.path.join(root, "tf"))[0]).names
+    assert_rebuilt(build())
+    assert "sha256" not in pq.read_schema(_part_files(os.path.join(root, "tf"))[0]).names
+
+    # a tf without the sidecar, in the kernel's columns, but no docstats
+    for f in _part_files(os.path.join(root, "tf")):
+        t = pq.read_table(f, columns=["term", "doc_id", "doclen", "tf"])
+        pq.write_table(t.filter(t["term"].is_valid()), f)
+    shutil.rmtree(os.path.join(root, "docstats"))
+    assert_rebuilt(build())
+
+    # a positional build over a plain index: the plain tf has no positions
+    idx = build(positional=True)
+    assert_rebuilt(idx)
+    assert idx.positional and "poss" in idx.postings.columns

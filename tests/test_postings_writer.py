@@ -105,8 +105,8 @@ def test_lineage_bucket_without_blocks_raises(spark, built, tmp_path):
 
 def test_metrics_record_terms_and_docs(spark, built):
     """The tf, terms and docstats rows of metrics.jsonl record the rows those
-    stages wrote (tf rows with the zero-token sentinels, the dictionary size
-    and the document count), not -1."""
+    stages wrote (the (term, doc) rows, the dictionary size and the document
+    count), not -1."""
     with open(os.path.join(built.root, "metrics", "metrics.jsonl")) as f:
         rows = {r["stage"]: r for r in map(json.loads, f)}
     tf_rows = spark.read.parquet(os.path.join(built.root, "tf")).count()

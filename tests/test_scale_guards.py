@@ -17,16 +17,13 @@ def test_hot_term_postings_split_across_partitions(spark, tmp_path):
     multiple shuffle partitions, not gather on one reducer — each encode
     task writes its own part file, so the hot term's blocks must sit in
     several distinct part files."""
-    from geocoderpl_spark.operators.postings import (
-        build_postings,
-        build_terms,
-        term_frequencies_pandas,
-    )
     from geocoderpl_spark.operators.docids import assign_doc_ids
+    from geocoderpl_spark.operators.postings import build_postings, build_terms
     from geocoderpl_spark.sources.corpus import HOT_TERM, synth_corpus
+    from tests.test_tokenize import run_tf_kernel
 
     docs = assign_doc_ids(synth_corpus(spark, 2000), ["repo", "path", "commit"], 8)
-    tf = term_frequencies_pandas(docs)
+    tf, _ = run_tf_kernel(spark, docs, str(tmp_path / "tf"))
     terms = build_terms(tf)
     out = str(tmp_path / "postings")
     build_postings(tf, terms, 220.0, out, n_buckets=8, partitions=16, n_docs=2000)
@@ -58,6 +55,35 @@ def test_no_row_at_a_time_python_udfs():
                 line = text[: m.start()].count("\n") + 1
                 offenders.append(f"{py.relative_to(ENGINE_ROOT.parent)}:{line} {pat.pattern}")
     assert not offenders, offenders
+
+
+# every environment variable the engine reads: a new escape hatch or tuning
+# knob must show up here, in a reviewed diff
+ENV_KNOBS = {
+    "GRAFT_MASTER",
+    "GRAFT_EXECUTOR_MEM",
+    "GRAFT_BROADCAST_IDS_ROWS",
+    "GRAFT_HASH_IDS_MIN_ROWS",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_DRIVER_MEM",
+}
+
+
+def test_env_knobs_are_registered():
+    """The set of ``os.environ`` names read under geocoderpl_spark/ is
+    exactly :data:`ENV_KNOBS`, and every read names its variable literally."""
+    read = re.compile(r"os\.environ(?:\.get\(|\[)\s*(['\"])(\w+)\1")
+    any_read = re.compile(r"os\.environ\b|os\.getenv\(")
+    names, unnamed = set(), []
+    for py in ENGINE_ROOT.rglob("*.py"):
+        text = py.read_text()
+        names |= {m.group(2) for m in read.finditer(text)}
+        n_any = len(any_read.findall(text))
+        if n_any != len(read.findall(text)):
+            unnamed.append(str(py.relative_to(ENGINE_ROOT.parent)))
+    assert not unnamed, unnamed
+    assert names == ENV_KNOBS
 
 
 def test_hot_term_query_capped_and_rank_identical(spark, tmp_path):
@@ -161,7 +187,6 @@ def test_terms_broadcast_bounded_by_cap(spark, tmp_path, monkeypatch):
 
     a = build_index(spark, synth_corpus(spark, 300), str(tmp_path / "a"), 4, 4)
     tf = read_index_dir(spark, str(tmp_path / "a" / "tf"))
-    tf = tf.filter(F.col("term").isNotNull()).drop("sha256")
     terms = read_index_dir(spark, str(tmp_path / "a" / "terms"))
     n_terms = terms.count()
 

@@ -753,8 +753,9 @@ def test_read_index_dir_matches_inferred_read_jobless(spark, sidx, tmp_path):
         assert _rows(got) == _rows(want), sub
     assert "bucket" in read_index_dir(spark, os.path.join(idx.root, "postings")).columns
 
-    # a pre-fusion tf checkpoint (no sha256 column) must read as one, so
-    # build_index still takes its fused == False branch
+    # a Spark-written tf (a compaction's rewrite) reads with its own footer
+    # columns, which the build's stale-checkpoint check compares to the
+    # kernel's
     old = str(tmp_path / "oldtf")
     read_index_dir(spark, os.path.join(idx.root, "tf")).filter(
         F.col("term").isNotNull()

@@ -521,17 +521,20 @@ def test_segmented_pruned_hot_term_routes_to_exact(spark, streamed, monkeypatch)
 
 
 def test_merge_segments_mixed_generation(spark, tmp_path):
-    """Compaction must handle an LSM root whose segments span the fusion
-    change: one segment's tf checkpoint in the pre-fusion format (no sha256
-    column, no sentinel rows) unioned with a fused-format segment — and the
-    merged index must still answer identically to the segment union."""
-    import glob
-    import shutil
+    """Compaction must handle an LSM root whose segments span a tf layout
+    change: one segment's tf checkpoint in the older fused layout (sha256
+    sidecar column, term-NULL sentinel row) unioned with a segment in the
+    kernel's layout. The tf takes the rewrite, cut to the kernel's columns
+    and rows, so the merged build resumes it, and the merged index answers
+    identically to the segment union."""
+    import json
 
     from pyspark.sql import functions as F
 
+    from geocoderpl_spark.operators.postings import tf_schema
     from geocoderpl_spark.plans.build import build_index
     from geocoderpl_spark.sources.corpus import synth_corpus
+    from tests.test_edge_cases import rewrite_tf_r6
 
     root = str(tmp_path / "lsm")
     os.makedirs(root)
@@ -544,25 +547,22 @@ def test_merge_segments_mixed_generation(spark, tmp_path):
         build_index(spark, part, os.path.join(root, f"seg_{i:05d}"),
                     n_buckets=4, id_col="doc_id", content_col="content")
 
-    # downgrade seg_00000's tf checkpoint to the pre-fusion schema
-    tfdir = os.path.join(root, "seg_00000", "tf")
-    old = (
-        spark.read.parquet(tfdir)
-        .filter(F.col("term").isNotNull())
-        .select("term", "doc_id", "doclen", "tf")
-    )
-    tmp_out = str(tmp_path / "oldtf")
-    old.write.mode("overwrite").parquet(tmp_out)
-    shutil.rmtree(tfdir)
-    shutil.move(tmp_out, tfdir)
-    assert "sha256" not in spark.read.parquet(tfdir).columns
+    rewrite_tf_r6(os.path.join(root, "seg_00000"))
+    assert "sha256" in spark.read.parquet(os.path.join(root, "seg_00000", "tf")).columns
 
     seg = SegmentedIndex(spark, root)
     q = spark.createDataFrame(
         [(0, "term_0001 term_0002", 10)], "query_id long, query_text string, k int"
     )
     union = sorted(tuple(r) for r in seg.topk(q).collect())
-    merged = merge_segments(spark, root, str(tmp_path / "one"))
+    out = str(tmp_path / "one")
+    merged = merge_segments(spark, root, out)
+    with open(os.path.join(out, "metrics", "metrics.jsonl")) as f:
+        status = {r["stage"]: r["status"] for r in map(json.loads, f)}
+    assert status["merge"] == "rewritten" and status["tf"] == "resumed"
+    tf = spark.read.parquet(os.path.join(out, "tf"))
+    assert tf.columns == tf_schema().names
+    assert tf.filter(F.col("term").isNull()).count() == 0
     one = sorted(tuple(r) for r in merged.topk(q, "exact").collect())
     assert one == union and len(one) == 10
 

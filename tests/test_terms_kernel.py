@@ -69,8 +69,8 @@ def test_many_terms_non_ascii_and_repeated_partials(spark):
 
 
 def test_tf_source_matches_partials_source(spark):
-    """Without partials (the merge path) the source is a groupBy over tf
-    rows; term-NULL sentinel rows are not terms. Same dictionary."""
+    """Without partials (an empty corpus) the source is a groupBy over tf
+    rows; a term-NULL row is not a term. Same dictionary."""
     tf = spark.createDataFrame(
         [("é", 0, 3, 2), ("é", 1, 4, 1), ("中", 1, 4, 3), (None, 2, 0, 0), ("ab", 0, 3, 1)],
         "term string, doc_id long, doclen long, tf long",
