@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from ..functions.bm25 import B as BM25_B
 from ..functions.bm25 import K1 as BM25_K1
 from ..functions.codec import BLOCK_SIZE
-from ..functions.tokenize import tokenize
+from ..functions.tokenize import tokenize, tokenize_arrow
 from . import docids
 
 # doclens are stored inline per posting (varint, like tfs): scoring then
@@ -69,6 +69,18 @@ def term_frequencies(tok_docs: DataFrame) -> DataFrame:
     return pairs.groupBy("term", "doc_id", "doclen").agg(F.count(F.lit(1)).alias("tf"))
 
 
+def _string_offsets(content, np):
+    """The ``len + 1`` value offsets of a pyarrow string array (int32, or
+    int64 for ``large_string``) as a zero-copy numpy view."""
+    import pyarrow as pa
+
+    odt = np.int64 if pa.types.is_large_string(content.type) else np.int32
+    offs = np.frombuffer(
+        content.buffers()[1], dtype=odt, count=content.offset + len(content) + 1
+    )
+    return offs[content.offset :]
+
+
 def _sha256_hex(content, n: int) -> list[str]:
     """Zero-copy sha256 of each string in an Arrow array: hash utf8 bytes
     straight out of the value buffer (hashlib accepts memoryviews — the
@@ -79,14 +91,96 @@ def _sha256_hex(content, n: int) -> list[str]:
     import pyarrow as pa
 
     carr = content.combine_chunks() if isinstance(content, pa.ChunkedArray) else content
-    bufs = carr.buffers()
-    odt = np.int64 if pa.types.is_large_string(carr.type) else np.int32
-    offs = np.frombuffer(bufs[1], dtype=odt, count=carr.offset + n + 1)
-    data = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
-    return [
-        hashlib.sha256(data[offs[carr.offset + i] : offs[carr.offset + i + 1]]).hexdigest()
-        for i in range(n)
-    ]
+    offs = _string_offsets(carr, np)
+    data = carr.buffers()[2]
+    data = memoryview(data) if data is not None else memoryview(b"")
+    return [hashlib.sha256(data[offs[i] : offs[i + 1]]).hexdigest() for i in range(n)]
+
+
+# Content bytes per tokenize-and-count slice of a tf kernel batch: the
+# kernel's transient token arrays scale with the slice, not with the batch
+# (counting a 20k-doc, 48 MB batch at once added ~720 MB to a worker's
+# peak). A doc larger than this is a slice by itself.
+_TF_SLICE_BYTES = 2 << 20
+# tf rows per parquet row group (pyarrow's default row-group size): the
+# kernel buffers its slices' rows up to this, since a row group per slice
+# grows the index (+4.2 % bytes per input byte on bulk_build).
+_TF_ROW_GROUP_ROWS = 1 << 20
+
+
+def _content_slices(content, slice_bytes: int, np) -> list[tuple[int, int]]:
+    """Row bounds ``[a, b)`` of consecutive slices of a string array, each
+    holding at most ``slice_bytes`` content bytes (a longer row is a slice
+    by itself), cut from the string offsets alone."""
+    offs = _string_offsets(content, np)
+    n = len(content)
+    bounds, a = [], 0
+    while a < n:
+        b = int(np.searchsorted(offs, offs[a] + slice_bytes, side="right")) - 1
+        b = max(b, a + 1)
+        bounds.append((a, b))
+        a = b
+    return bounds
+
+
+def _tf_slices(content, doc_ids, positional: bool, slice_bytes: int):
+    """The tf kernel's counting core over one batch: yield ``(tf, partial,
+    doclen)`` per content slice (:func:`_content_slices`).
+
+    Each slice is tokenized (:func:`tokenize_arrow`), its terms
+    dictionary-encoded, and every token keyed by the int64 ``parent << 32 |
+    code``; one sort of the keys counts the (doc, term) pairs, no hash table
+    on strings. ``tf`` holds the slice's :func:`tf_schema` rows (doc order,
+    then term code order), ``partial`` its ``(term, df, cf)`` rows, one per
+    distinct term; both are None for a slice without tokens. In a
+    positional build the sort is stable, so each key's 1-based positions
+    come out ascending. ``doclen`` is the token count per row."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = tf_schema(positional)
+    for a, b in _content_slices(content, slice_bytes, np):
+        terms, parent, doclen = tokenize_arrow(content.slice(a, b - a))
+        if not len(terms):
+            yield None, None, doclen
+            continue
+        enc = pc.dictionary_encode(terms)
+        key = (parent << 32) | enc.indices.to_numpy().astype(np.int64)
+        if positional:
+            order = np.argsort(key, kind="stable")
+            key = key[order]
+        else:
+            key.sort()
+        starts = np.flatnonzero(np.concatenate(([True], key[1:] != key[:-1])))
+        bounds = np.append(starts, key.size)
+        tf = np.diff(bounds)
+        key = key[starts]
+        doc, code = key >> 32, key & 0xFFFFFFFF
+        dictionary = enc.dictionary.cast(pa.string())
+        cols = [
+            dictionary.take(pa.array(code)),
+            pa.array(doc_ids[a:b][doc], pa.int64()),
+            pa.array(doclen[doc], pa.int64()),
+            pa.array(tf, pa.int64()),
+        ]
+        if positional:
+            # 1-based position of each token within its doc
+            first = np.cumsum(doclen) - doclen
+            pos = np.arange(parent.size, dtype=np.int64) - first[parent] + 1
+            cols.append(pa.ListArray.from_arrays(
+                pa.array(bounds.astype(np.int32)),
+                pa.array(pos[order].astype(np.int32)),
+            ))
+        n_terms = len(dictionary)
+        partial = pa.table({
+            "term": dictionary,
+            "df": pa.array(np.bincount(code, minlength=n_terms), pa.int64()),
+            "cf": pa.array(
+                np.bincount(code, weights=tf, minlength=n_terms).astype(np.int64)
+            ),
+        })
+        yield pa.Table.from_arrays(cols, schema=schema), partial, doclen
 
 
 def tf_docstats_direct(
@@ -99,20 +193,24 @@ def tf_docstats_direct(
     """The build's tf kernel: one scan of ``docs`` writes the tf relation
     as parquet and returns the docstats relation.
 
-    Each task tokenizes its batches (:func:`tokenize_arrow`), counts every
-    (term, doc) pair with one Arrow hash ``group_by`` (positional builds add
-    the 1-based token positions to the same aggregate) and streams the rows
-    :func:`tf_schema` names straight into ONE parquet file under
-    ``out_dir`` via pyarrow's C++ writer. Only the per-doc stats row
-    (doc_id, *meta passthrough, doclen, sha256) crosses back to the JVM —
-    ~1/150th of the tf rows, no UnsafeRow conversion, no JVM parquet
-    encode. Zero-token docs get a stats row (doclen 0) and no tf row.
+    Each task cuts its batches into slices of at most ``_TF_SLICE_BYTES``
+    content bytes and counts each slice's (term, doc) pairs by sorting
+    packed int64 ``(doc, term code)`` keys (:func:`_tf_slices`; positional
+    builds take the 1-based token positions from the same stable sort), so
+    a worker's memory follows the slice, not the batch. The rows
+    :func:`tf_schema` names stream into ONE parquet file under ``out_dir``
+    via pyarrow's C++ writer, buffered into row groups of
+    ``_TF_ROW_GROUP_ROWS`` rows. Only the per-doc stats row (doc_id, *meta
+    passthrough, doclen, sha256) crosses back to the JVM — ~1/150th of the
+    tf rows, no UnsafeRow conversion, no JVM parquet encode. Zero-token docs
+    get a stats row (doclen 0) and no tf row.
 
     Per batch, the (term, df, cf) partials of its tf rows go to the
     underscore-hidden ``_termstats`` sidecar: a materialized map-side
     combine, so the terms stage aggregates vocabulary-sized partials instead
-    of rescanning tf. Partial rows may repeat a term (per batch, per task);
-    the terms stage's sum makes them exact.
+    of rescanning tf. The slices' partials are summed per batch; partial
+    rows may still repeat a term (per batch, per task) and the terms stage's
+    sum makes them exact.
 
     Commit protocol: tasks write ``_tmp-<pid>-<attempt>`` then atomically
     rename to ``part-<pid>``; a retried task recomputes the same partition
@@ -123,6 +221,8 @@ def tf_docstats_direct(
     are refused (:func:`refuse_speculation`).
     """
     refuse_speculation(docs.sparkSession)
+    # read here, on the driver, so the task closure carries the value
+    slice_bytes = _TF_SLICE_BYTES
 
     def fn(batches):
         import os as _os2
@@ -132,8 +232,6 @@ def tf_docstats_direct(
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark import TaskContext
-
-        from ..functions.tokenize import tokenize_arrow
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
@@ -145,57 +243,56 @@ def tf_docstats_direct(
         ptmp = _os2.path.join(pdir, f"_tmp-{pid:05d}-{att}.parquet")
         pfinal = _os2.path.join(pdir, f"part-{pid:05d}-graft.snappy.parquet")
         pwriter = None
+        buf, buffered = [], 0
+
+        def write_row_group(k):
+            # the first k buffered tf rows become one row group
+            nonlocal writer, buf, buffered
+            if writer is None:
+                writer = pq.ParquetWriter(tmp, tf_schema(positional))
+            rows = pa.concat_tables(buf)
+            writer.write_table(rows.slice(0, k), row_group_size=k)
+            buf, buffered = [rows.slice(k)], buffered - k
+
         for rb in batches:
             n = rb.num_rows
             if n == 0:
                 continue
             names = rb.schema.names
             content = pc.fill_null(rb.column(names.index(content_col)), "")
-            terms, parent, doclen = tokenize_arrow(content)
             doc_ids = rb.column(names.index("doc_id")).to_numpy()
-            tcols = {
-                "term": terms,
-                "doc_id": pa.array(doc_ids[parent], pa.int64()),
-                "doclen": pa.array(doclen[parent], pa.int64()),
-            }
-            aggs = [([], "count_all")]
-            if positional:
-                # 1-based position within each doc's token stream
-                idx = np.arange(parent.size, dtype=np.int64)
-                pos = idx - np.searchsorted(parent, parent, side="left") + 1
-                tcols["pos"] = pa.array(pos.astype(np.int32), pa.int32())
-                aggs.append(("pos", "list"))
-            agg = pa.table(tcols).group_by(["term", "doc_id", "doclen"]).aggregate(aggs)
-            out = {
-                "term": agg["term"].cast(pa.string()),
-                "doc_id": agg["doc_id"],
-                "doclen": agg["doclen"],
-                "tf": agg["count_all"].cast(pa.int64()),
-            }
-            if positional:
-                out["positions"] = agg["pos_list"]
-            out = pa.table(out)
-            pt = out.group_by("term").aggregate([("tf", "sum"), ([], "count_all")])
-            partial = pa.table(
-                {
-                    "term": pt["term"],
-                    "df": pt["count_all"].cast(pa.int64()),
-                    "cf": pt["tf_sum"].cast(pa.int64()),
-                }
-            )
-            if pwriter is None:
-                _os2.makedirs(pdir, exist_ok=True)
-                pwriter = pq.ParquetWriter(ptmp, partial.schema)
-            pwriter.write_table(partial)
-            if writer is None:
-                writer = pq.ParquetWriter(tmp, out.schema)
-            writer.write_table(out)
+            doclens, partials = [], []
+            for tf, partial, doclen in _tf_slices(content, doc_ids, positional, slice_bytes):
+                doclens.append(doclen)
+                if tf is None:
+                    continue
+                partials.append(partial)
+                buf.append(tf)
+                buffered += tf.num_rows
+                while buffered >= _TF_ROW_GROUP_ROWS:
+                    write_row_group(_TF_ROW_GROUP_ROWS)
+            if partials:
+                partial = partials[0]
+                if len(partials) > 1:
+                    partial = (
+                        pa.concat_tables(partials)
+                        .group_by("term")
+                        .aggregate([("df", "sum"), ("cf", "sum")])
+                        .select(["term", "df_sum", "cf_sum"])
+                        .rename_columns(["term", "df", "cf"])
+                    )
+                if pwriter is None:
+                    _os2.makedirs(pdir, exist_ok=True)
+                    pwriter = pq.ParquetWriter(ptmp, partial.schema)
+                pwriter.write_table(partial)
             stats = {"doc_id": rb.column(names.index("doc_id"))}
             for c in fn.meta_cols:
                 stats[c] = rb.column(names.index(c))
-            stats["doclen"] = pa.array(doclen, pa.int64())
+            stats["doclen"] = pa.array(np.concatenate(doclens), pa.int64())
             stats["sha256"] = pa.array(_sha256_hex(content, n), pa.string())
             yield pa.RecordBatch.from_pydict(stats)
+        if buffered:
+            write_row_group(buffered)
         if writer is not None:
             writer.close()
             _os2.replace(tmp, final)
@@ -840,8 +937,10 @@ def refuse_speculation(spark) -> None:
     """The direct writers (:func:`tf_docstats_direct`,
     :func:`build_postings`) publish their files by rename, outside Spark's
     output committer, so nothing arbitrates between two live attempts of
-    one task. Refuse to run them under ``spark.speculation``."""
-    on = spark.sparkContext.getConf().get("spark.speculation", "false")
+    one task. Refuse to run them under ``spark.speculation``. Reads the one
+    key through the session conf (``sparkContext.getConf()`` would copy the
+    whole SparkConf through py4j)."""
+    on = spark.conf.get("spark.speculation", "false")
     if str(on).strip().lower() == "true":
         raise RuntimeError(
             "spark.speculation=true: the index build writes its tf and "

@@ -44,7 +44,14 @@ from ..operators.postings import (
     ensure_tf_files,
     tf_schema,
 )
-from .manifest import footer_columns, footer_rows, load_term_lookup, read_index_dir
+from .manifest import (
+    _part_files,
+    footer_columns,
+    footer_rows,
+    load_term_lookup,
+    read_index_dir,
+    read_part_files,
+)
 
 STAGES = ("docstats", "tf", "terms", "postings", "meta")
 
@@ -860,17 +867,12 @@ def build_index(
             def s3():
                 # the tf kernel's _termstats sidecar (per-batch term
                 # partials) spares the dictionary a full tf rescan; absent
-                # (an empty corpus, or a tf written without it) -> tf scan
-                import glob as _glob
-
-                # match finalized task files only: a speculative/killed
-                # attempt's _tmp-* leftover must not flip the mode
-                tpart_dir = os.path.join(p["tf"], "_termstats")
-                tpart = (
-                    read_index_dir(spark, tpart_dir)
-                    if _glob.glob(os.path.join(tpart_dir, "part-*.parquet"))
-                    else None
-                )
+                # (an empty corpus, or a tf written without it) -> tf scan.
+                # Finalized task files only (a killed attempt's _tmp-*
+                # leftover must not flip the mode), read by name: a read
+                # of the _-prefixed dir logs "All paths were ignored"
+                tfiles = _part_files(os.path.join(p["tf"], "_termstats"))
+                tpart = read_part_files(spark, tfiles) if tfiles else None
                 t = build_terms(tf, partials=tpart)
                 # term-sorted layout: build_terms' partitions are its range
                 # partitions in term order, each sorted by term, so the

@@ -76,21 +76,33 @@ def read_index_dir(spark: SparkSession, path: str) -> DataFrame:
     Arrow kernels wrote are mapped with ``from_arrow_schema``. Partition
     columns (``bucket=``) are still discovered by Spark. A dir without part
     files takes the plain read, so its errors stay Spark's."""
+    files = _part_files(path)
+    if not files:
+        return spark.read.parquet(path)
+    return spark.read.schema(_footer_schema(files[0])).parquet(path)
+
+
+def read_part_files(spark: SparkSession, files: list[str]) -> DataFrame:
+    """:func:`read_index_dir` over named part files of one flat table: the
+    read for a table under a ``_``-prefixed dir (``tf/_termstats``), whose
+    name Spark's listing filters out (a read of the dir logs ``All paths
+    were ignored``)."""
+    return spark.read.schema(_footer_schema(files[0])).parquet(*files)
+
+
+def _footer_schema(file: str):
+    """The Spark schema of a part file: the exact Spark schema a Spark-
+    written footer carries, else the Arrow schema mapped with
+    ``from_arrow_schema``."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.types import StructType
 
-    files = _part_files(path)
-    if not files:
-        return spark.read.parquet(path)
-    arrow_schema = pq.read_schema(files[0])
+    arrow_schema = pq.read_schema(file)
     spark_json = (arrow_schema.metadata or {}).get(_SPARK_SCHEMA_KEY)
-    schema = (
-        StructType.fromJson(json.loads(spark_json))
-        if spark_json
-        else from_arrow_schema(arrow_schema.remove_metadata())
-    )
-    return spark.read.schema(schema).parquet(path)
+    if spark_json:
+        return StructType.fromJson(json.loads(spark_json))
+    return from_arrow_schema(arrow_schema.remove_metadata())
 
 
 def load_term_lookup(index_root: str, cap: int) -> dict | None:

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.postings import tf_schema
-from ..plans.build import STAGES, InvertedIndex, build_index
+from ..plans.build import STAGES, InvertedIndex, _unpersist, build_index
 from ..plans.manifest import _part_files, footer_columns, read_index_dir
 
 
@@ -747,13 +747,17 @@ def start_incremental_indexer(
             # offset new docs past all existing segments
             from ..operators.docids import assign_doc_ids
 
-            docs = assign_doc_ids(batch, list(key_cols)).withColumn(
-                "doc_id", F.col("doc_id") + F.lit(doc_base)
-            )
-            build_index(
-                spark, docs, seg_dir, n_buckets=n_buckets,
-                id_col="doc_id", content_col=content_col, positional=positional,
-            )
+            ranked = assign_doc_ids(batch, list(key_cols))
+            docs = ranked.withColumn("doc_id", F.col("doc_id") + F.lit(doc_base))
+            try:
+                build_index(
+                    spark, docs, seg_dir, n_buckets=n_buckets,
+                    id_col="doc_id", content_col=content_col, positional=positional,
+                )
+            finally:
+                # withColumn dropped the rank table's cache handle: release
+                # it here, or every micro-batch leaves one persisted RDD
+                _unpersist(ranked)
         else:
             build_index(
                 spark, batch, seg_dir, n_buckets=n_buckets,

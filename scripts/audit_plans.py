@@ -98,7 +98,7 @@ def main() -> None:
 
     # 3. tf + postings build plan (logical shape)
     from geocoderpl_spark.operators.postings import build_terms, postings_input, tf_docstats_direct
-    from geocoderpl_spark.plans.manifest import read_index_dir
+    from geocoderpl_spark.plans.manifest import _part_files, read_index_dir, read_part_files
 
     docs = entrymod._docs(spark, SF).withColumnRenamed("text", "content")
     tf_root = tempfile.mkdtemp(prefix="plans_tf_")
@@ -109,16 +109,17 @@ def main() -> None:
     sections.append((
         "Build stage — tf kernel (mapInArrow, shuffle-free)",
         "One scan, one MapInArrow node, zero exchanges: tokenize + per-doc "
-        "tf counting are per-row maps; the kernel is pure Arrow C++ (RE2 + "
-        "hash group-by), no Python string objects (SCALE.md kernel study). "
+        "tf counting are per-row maps; the kernel is Arrow C++ (RE2) plus a "
+        "numpy sort of int64 (doc, term code) keys, no Python string objects "
+        "(SCALE.md kernel study). "
         "It writes the tf rows to parquet itself and returns one docstats "
         "row per doc.",
         plan_of(kernel),
     ))
 
-    dictionary = build_terms(
-        None, partials=read_index_dir(spark, os.path.join(idx.root, "tf", "_termstats"))
-    )
+    dictionary = build_terms(None, partials=read_part_files(
+        spark, _part_files(os.path.join(idx.root, "tf", "_termstats"))
+    ))
     dict_plan = plan_of(dictionary)
     dictionary._stats_cache.unpersist()
     # the cached plan prints twice (AQE final + initial): one exchange each

@@ -177,7 +177,7 @@ def test_direct_writers_refuse_speculation():
     )
 
     def session(conf: dict):
-        return SimpleNamespace(sparkContext=SimpleNamespace(getConf=lambda: conf))
+        return SimpleNamespace(conf=SimpleNamespace(get=conf.get))
 
     refuse_speculation(session({}))
     refuse_speculation(session({"spark.speculation": "false"}))

@@ -807,3 +807,33 @@ def test_build_ingest_merge_run_no_local_data_job(spark, tmp_path, monkeypatch):
     assert len(SegmentedIndex(spark, root).segments()) == 2
     assert compact_segments(spark, root, max_segments=1, n_buckets=4)
     assert SegmentedIndex(spark, root).global_stats()[0] == 120
+
+
+def test_incremental_indexer_releases_rank_tables(spark, tmp_path):
+    """Each keyed micro-batch persists a doc-id rank table; the indexer
+    releases it once the segment is built, so three micro-batches leave
+    the session's persistent-RDD count where it started."""
+    import glob
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    stream_dir, root = str(tmp_path / "in"), str(tmp_path / "idx")
+    os.makedirs(stream_dir)
+    corpus = synth_corpus(spark, 90)
+    for i in range(3):
+        part = corpus.filter(F.pmod(F.xxhash64("path"), F.lit(3)) == i)
+        part.coalesce(1).write.parquet(f"{stream_dir}/t.tmp")
+        shutil.move(glob.glob(f"{stream_dir}/t.tmp/*.parquet")[0],
+                    f"{stream_dir}/drop_{i}.parquet")
+        shutil.rmtree(f"{stream_dir}/t.tmp")
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    q = start_incremental_indexer(spark, stream_dir, root, SCHEMA,
+                                  n_buckets=4, max_files_per_trigger=1)
+    q.awaitTermination(300)
+    assert len(SegmentedIndex(spark, root).segments()) == 3
+    assert persisted() == before

@@ -98,15 +98,36 @@ def _spec_tf_docstats(pdf):
     )
 
 
+def _spec_partials(want_tf):
+    """The spec's per-term (df, cf), indexed by term."""
+    return want_tf.groupby("term").agg(df=("tf", "size"), cf=("tf", "sum"))
+
+
+def _summed_partials(partials):
+    """Partial (term, df, cf) rows summed per term, like the terms stage."""
+    return partials.groupby("term")[["df", "cf"]].sum()
+
+
 def _assert_kernel_matches_spec(spark, docs, tmp_path, meta):
     """Plain and positional kernel output over ``docs`` == the spec: every
-    tf row, every (1-based) position list, every docstats row; no tf term
-    is NULL."""
+    tf row, every (1-based) position list, every docstats row and the
+    ``_termstats`` partials summed per term; no tf term is NULL."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     pdf = docs.toPandas().sort_values("doc_id").reset_index(drop=True)
     want_tf, want_stats = _spec_tf_docstats(pdf)
+    want_partials = _spec_partials(want_tf)
     for positional in (False, True):
-        tf, stats = run_tf_kernel(
-            spark, docs, str(tmp_path / f"tf{int(positional)}"), meta, positional
+        out_dir = str(tmp_path / f"tf{int(positional)}")
+        tf, stats = run_tf_kernel(spark, docs, out_dir, meta, positional)
+        files = sorted(glob.glob(os.path.join(out_dir, "_termstats", "part-*.parquet")))
+        partials = pa.concat_tables([pq.read_table(f) for f in files]).to_pandas()
+        assert _summed_partials(partials).sort_index().equals(
+            want_partials.sort_index()
         )
         got = tf.toPandas().sort_values(["doc_id", "term"]).reset_index(drop=True)
         assert got["term"].notna().all()
@@ -156,6 +177,121 @@ def test_fused_tf_sha_kernels(spark, tmp_path):
     assert sorted(set(want_tf["doc_id"])) == [0, 3]
     assert want_tf[want_tf["doc_id"] == 3]["tf"].tolist() == [2, 1]
     assert want_tf[want_tf["doc_id"] == 3]["positions"].tolist() == [[1, 3], [2]]
+
+
+def _sliced_docs():
+    """Docs whose slices, at bounds of a few dozen bytes, start and end
+    with NULL and zero-token docs, plus runs of zero-token docs (slices
+    without a token) and a doc longer than any bound used."""
+    import random
+
+    rng = random.Random(7)
+    words = ["fooBar", "x", "the_hot_term", "alpha", "b2", "XmlReader"]
+    docs = [None]
+    for _ in range(300):
+        r = rng.random()
+        if r < 0.15:
+            docs.append(None)
+        elif r < 0.3:
+            docs.append(rng.choice(["", "--- ;;", "-" * rng.randint(1, 90)]))
+        else:
+            docs.append(" ".join(rng.choice(words) for _ in range(rng.randint(1, 12))))
+    docs[150] = " ".join(words * 40)
+    return docs
+
+
+def test_tf_slices_bounded_and_match_spec(monkeypatch):
+    """The tf kernel's counting core (:func:`_tf_slices`) over many small
+    slices: tokenize_arrow never sees more than the slice bound unless it
+    gets a single doc; slices start and end on NULL and zero-token docs;
+    and the tf rows, positions, summed partials and doclens equal the
+    spec's (tokenize_py + Counter), plain and positional, at every bound."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from geocoderpl_spark.operators import postings
+
+    docs = _sliced_docs()
+    content = pc.fill_null(pa.array(docs, pa.string()), "")
+    doc_ids = np.arange(len(docs), dtype=np.int64) * 7 + 3
+    want_tf, want_stats = _spec_tf_docstats(
+        pd.DataFrame({"doc_id": doc_ids, "content": docs})
+    )
+    want_partials = _spec_partials(want_tf)
+    nbytes = [len((d or "").encode()) for d in docs]
+    zero_token = [d is not None and not tokenize_py(d) for d in docs]
+
+    calls = []
+    real = postings.tokenize_arrow
+
+    def recording(arr):
+        # a slice of ``content`` (offset 0): its offset is its first row
+        a, b = arr.offset, arr.offset + len(arr)
+        assert sum(nbytes[a:b]) <= bound or b - a == 1, (a, b)
+        calls.append((a, b))
+        return real(arr)
+
+    monkeypatch.setattr(postings, "tokenize_arrow", recording)
+    seen = set()
+    for bound in (24, 40, 64, 100):
+        for positional in (False, True):
+            calls.clear()
+            out = list(postings._tf_slices(content, doc_ids, positional, bound))
+            # the slices cover the batch in order, each row once
+            assert len(out) == len(calls) > 20
+            assert [r for a, b in calls for r in range(a, b)] == list(range(len(docs)))
+            tf = pa.concat_tables([t for t, _, _ in out if t is not None]).to_pandas()
+            got = tf.sort_values(["doc_id", "term"]).reset_index(drop=True)
+            cols = ["term", "doc_id", "doclen", "tf"]
+            assert got[cols].equals(want_tf[cols])
+            if positional:
+                assert [list(p) for p in got["positions"]] == want_tf["positions"].tolist()
+            partials = pa.concat_tables([p for _, p, _ in out if p is not None])
+            assert _summed_partials(partials.to_pandas()).sort_index().equals(
+                want_partials.sort_index()
+            )
+            doclen = np.concatenate([d for _, _, d in out])
+            assert doclen.tolist() == want_stats["doclen"].tolist()
+            for (a, b), (t, _, _) in zip(calls, out):
+                if all(zero_token[r] or docs[r] is None for r in range(a, b)):
+                    assert t is None
+                    seen.add("slice without tokens")
+                if b - a == 1 and nbytes[a] > bound:
+                    seen.add("doc over the bound")
+                for end, r in (("first", a), ("last", b - 1)):
+                    if docs[r] is None:
+                        seen.add(f"NULL {end}")
+                    if zero_token[r]:
+                        seen.add(f"zero-token {end}")
+    assert seen == {
+        "slice without tokens", "doc over the bound", "NULL first", "NULL last",
+        "zero-token first", "zero-token last",
+    }
+
+
+def test_tf_kernel_sliced_matches_spec(spark, tmp_path, monkeypatch):
+    """The Spark tf kernel with its slice bound cut to 4 KiB, so each
+    task's batch spans many slices: tf rows, positions, summed partials
+    and docstats equal the spec's over synth_corpus(800), the edge docs,
+    NULL docs and a doc larger than the bound."""
+    from geocoderpl_spark.operators import postings
+    from geocoderpl_spark.operators.docids import assign_doc_ids
+    from geocoderpl_spark.sources.corpus import synth_corpus
+
+    monkeypatch.setattr(postings, "_TF_SLICE_BYTES", 4096)
+    big = "bigDoc " * 1200 + "x y x"
+    edge = EXTRA_DOCS + [None, big, None, "--- ;;"]
+    docs = assign_doc_ids(synth_corpus(spark, 800), ["repo", "path", "commit"], 8)
+    extra = spark.createDataFrame(
+        [(10**6 + i, c) for i, c in enumerate(edge)], "doc_id long, content string"
+    )
+    docs = docs.select("doc_id", "content").unionByName(extra)
+    sizes = docs.selectExpr("sum(octet_length(content)) n").collect()[0]["n"]
+    assert sizes > 100 * 4096 and len(big) > 4096
+    want_tf, want_stats = _assert_kernel_matches_spec(spark, docs, tmp_path, [])
+    assert len(want_stats) == 800 + len(edge)
 
 
 def test_tokenize_fuzz_four_way_parity():
