@@ -802,7 +802,7 @@ def q_stream_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids and avgdl-rescaled bounds — rank-identical to a from-scratch single
     index, certified by the same BM25 SQL oracle (VERDICT r02 #3)."""
     seg = _seg_index_for(spark, sf_dir)
-    return seg.topk_pruned(_bm25_queries_df(spark))
+    return seg.topk(_bm25_queries_df(spark), mode="pruned")
 
 
 def q_stream_bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -812,7 +812,7 @@ def q_stream_bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25 oracle as every other top-k path."""
     seg = _seg_index_for(spark, sf_dir)
     seg.serve()
-    return seg.topk_pruned(_bm25_queries_df(spark))
+    return seg.topk(_bm25_queries_df(spark), mode="pruned")
 
 
 def q_stream_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -840,7 +840,7 @@ def q_stream_phrase_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     window — result-identical to the corpus-scan phrase_match oracle."""
     seg = _seg_index_for(spark, sf_dir)
     p = spark.createDataFrame(PHRASE_QUERIES, "query_id long, phrase_text string")
-    return seg.phrase_indexed(p, k=10)
+    return seg.phrase(p, k=10)
 
 
 def q_stream_autocomplete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -863,7 +863,7 @@ def q_stream_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     seg = _seg_index_for(spark, sf_dir)
     q = _bm25_queries_df(spark)
-    return snippets(_docs(spark, sf_dir), q, seg.topk_pruned(q), width=5)
+    return snippets(_docs(spark, sf_dir), q, seg.topk(q, mode="pruned"), width=5)
 
 
 def q_fts_bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:

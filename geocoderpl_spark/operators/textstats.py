@@ -134,6 +134,7 @@ def snippets(
     (array_position / slice / array_join — no UDF, no shuffle beyond the
     fetch)."""
     from ..functions.tokenize import tokenize
+    from ..session import local_frame
 
     qt = queries.select(
         "query_id", F.array_distinct(tokenize("query_text")).alias("qterms")
@@ -150,13 +151,14 @@ def snippets(
         .collect()
     )
     if not hit_rows:
-        return docs.sparkSession.createDataFrame(
-            [], "query_id long, doc_id long, rank int, first_pos long, snippet string"
+        return local_frame(
+            docs.sparkSession, [],
+            "query_id long, doc_id long, rank int, first_pos long, snippet string",
         )
     if len(hit_rows) <= max_collect_hits:
         hit_ids = sorted({r["doc_id"] for r in hit_rows})
-        hits = docs.sparkSession.createDataFrame(
-            [(r["query_id"], r["doc_id"], r["rank"]) for r in hit_rows],
+        hits = local_frame(
+            docs.sparkSession, hit_rows,
             "query_id long, doc_id long, rank int",
         )
         if len(hit_ids) <= 10_000:
@@ -164,9 +166,7 @@ def snippets(
         else:
             # mid-size batches: a literal In() of 10^5+ ids bloats the plan —
             # broadcast-semi-join the id set instead (same rows, no pushdown)
-            ids_df = docs.sparkSession.createDataFrame(
-                [(i,) for i in hit_ids], f"{id_col} long"
-            )
+            ids_df = local_frame(docs.sparkSession, [(i,) for i in hit_ids], f"{id_col} long")
             fetched = docs.join(F.broadcast(ids_df), id_col, "left_semi")
         joined_hits = F.broadcast(
             hits.select("query_id", "doc_id", "rank").join(qt, "query_id")

@@ -311,9 +311,6 @@ def query_topk_autocomplete(
     avgdl: float,
     n_buckets: int | None = None,
     max_expansions: int = 50,
-    sorted_terms: list[str] | None = None,
-    term_lookup: dict | None = None,
-    scan=None,
 ) -> DataFrame:
     """Autocomplete / prefix search — the reference's per-keystroke entry
     point (``geo_gui.py:122`` ``on_text_changed``: every keystroke queries
@@ -333,18 +330,9 @@ def query_topk_autocomplete(
     expansion is a contiguous id range → contiguous posting buckets); the
     expansion cap bounds the scan exactly like the hot-term cap.
 
-    Serve mode (VERDICT r03 #7): with ``sorted_terms`` + ``term_lookup``
-    (pinned by ``InvertedIndex.serve()``), tokenization, the prefix
-    expansion (a bisect over the sorted vocabulary — the driver-side twin of
-    the pushed range predicate) and the dictionary gate all run driver-side:
-    ZERO Spark jobs before the pruned posting scan. Result-identical to the
-    distributed expansion (same impact order, same tie-breaks).
+    Served indexes expand driver-side instead (``QueryEngine.autocomplete``:
+    a bisect over the pinned vocabulary, same impact order and tie-breaks).
     """
-    if sorted_terms is not None and term_lookup is not None:
-        return _autocomplete_local(
-            postings, queries, n_docs, avgdl, n_buckets,
-            max_expansions, sorted_terms, term_lookup, scan,
-        )
     toks = tokenize("query_text")
     q = queries.select(
         "query_id", "k", "query_text",
@@ -419,64 +407,6 @@ def query_topk_autocomplete(
     )
     gated = gate_terms(merged, terms, n_docs)
     return _score_gated(postings, gated, avgdl, n_buckets)
-
-
-def _autocomplete_local(
-    postings: DataFrame,
-    queries: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    n_buckets: int | None,
-    max_expansions: int,
-    sorted_terms: list[str],
-    term_lookup: dict,
-    scan,
-) -> DataFrame:
-    """Serve-mode autocomplete: driver-side tokenize/expand/gate mirroring
-    the distributed plan symbol-for-symbol (prefix detection regex, one-
-    occurrence prefix discount, bisect == pushed range [p, p+'{'),
-    impact order (df desc, term asc), qtf merge, Lucene idf)."""
-    import bisect
-    import math
-    import re
-
-    from ..functions.tokenize import tokenize_py
-
-    spark = queries.sparkSession
-    gated_rows: list[tuple] = []  # (query_id, k, term_id, qtf, idf)
-    for q in queries.collect():
-        text, qid, k = q["query_text"], q["query_id"], int(q["k"])
-        toks = tokenize_py(text)
-        pmode = re.search(r"[a-zA-Z0-9_]$", text) is not None
-        prefix = toks[-1] if (pmode and toks) else None
-        counts: dict[str, int] = {}
-        for t in toks:
-            counts[t] = counts.get(t, 0) + 1
-        if prefix is not None:
-            counts[prefix] -= 1  # the prefix token itself is not an exact term
-            if counts[prefix] == 0:
-                del counts[prefix]
-            lo = bisect.bisect_left(sorted_terms, prefix)
-            hi = bisect.bisect_left(sorted_terms, prefix + "{")
-            cand = sorted_terms[lo:hi]
-            cand.sort(key=lambda t: (-term_lookup[t][1], t))  # df desc, term asc
-            for t in cand[:max_expansions]:
-                counts[t] = counts.get(t, 0) + 1
-        for t, qtf in counts.items():
-            hit = term_lookup.get(t)
-            if hit is None:  # dictionary gate: unknown exact term
-                continue
-            tid, df = hit
-            idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-            gated_rows.append((qid, k, tid, qtf, idf))
-    if not gated_rows:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    gated = spark.createDataFrame(
-        gated_rows, "query_id long, k int, term_id long, qtf long, idf double"
-    )
-    tids = sorted({r[2] for r in gated_rows})
-    cand = (scan(tids) if scan else _pruned_scan(postings, tids, n_buckets)).drop("poss")
-    return _score_rows(decode_postings(cand), gated, avgdl)
 
 
 def _pruned_kernel(avgdl: float):
@@ -644,19 +574,14 @@ def query_topk_pruned(
     queries: DataFrame,
     n_docs: int,
     avgdl: float,
-    term_lookup: dict | None = None,
     n_buckets: int | None = None,
     max_blocks_per_term: int = MAX_BLOCKS_PER_TERM,
     scan=None,
 ) -> DataFrame:
     """Serving path: per-query block-max MaxScore kernel, hot-term-capped.
 
-    With ``term_lookup`` (term -> (term_id, df), collected once at
-    ``InvertedIndex.serve()``), the dictionary gate and query tokenization
-    run driver-side — the reference's design exactly (vocabulary resident in
-    the GUI process, ``geo_gui.py:36-37,172``): a query touches Spark only
-    for the pruned posting scan + one groupBy. Without it, the gate is a
-    distributed broadcast join (batch-friendly).
+    The dictionary gate is a distributed broadcast join (batch-friendly);
+    a served index gates driver-side instead (``plans/engine.py``).
 
     Queries containing a term with df > max_blocks_per_term * BLOCK_SIZE
     (i.e. more candidate blocks than one kernel task should gather) are
@@ -666,51 +591,18 @@ def query_topk_pruned(
     """
     spark = postings.sparkSession
     hot_df = _hot_df_threshold(max_blocks_per_term)
-    hot_qids: set[int] = set()
-    if term_lookup is not None:
-        import math
-
-        from ..functions.tokenize import tokenize_py
-
-        rows = []
-        for q in queries.collect():
-            counts: dict[str, int] = {}
-            for t in tokenize_py(q["query_text"]):
-                counts[t] = counts.get(t, 0) + 1
-            for t, qtf in counts.items():
-                hit = term_lookup.get(t)
-                if hit is None:  # vocabulary gate: unknown term, no scan
-                    continue
-                tid, df = hit
-                if df > hot_df:
-                    hot_qids.add(q["query_id"])
-                idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                rows.append((q["query_id"], int(q["k"]), tid, qtf, float(idf)))
-        rows = [r for r in rows if r[0] not in hot_qids]
-        if rows:
-            gated = spark.createDataFrame(
-                rows, "query_id long, k int, term_id long, qtf long, idf double"
-            )
-            tids = [r[2] for r in rows]
-            cand = (scan(tids) if scan else _pruned_scan(postings, tids, n_buckets)).drop(
-                "poss"
-            ).join(F.broadcast(gated), "term_id")
-        else:
-            cand = None
-    else:
-        gated = gate_terms(tokenize_queries(queries), terms, n_docs)
-        # metadata-sized collect: (query, term) pairs of the live query set
-        meta = gated.select("query_id", "term_id", "df").collect()
-        hot_qids = {r["query_id"] for r in meta if r["df"] > hot_df}
-        tids = [r["term_id"] for r in meta if r["query_id"] not in hot_qids]
-        if tids:
-            cand = (scan(tids) if scan else _pruned_scan(postings, tids, n_buckets)).drop("poss").join(
-                F.broadcast(gated.filter(~F.col("query_id").isin(list(hot_qids)))
-                            if hot_qids else gated),
-                "term_id",
-            )
-        else:
-            cand = None
+    gated = gate_terms(tokenize_queries(queries), terms, n_docs)
+    # metadata-sized collect: (query, term) pairs of the live query set
+    meta = gated.select("query_id", "term_id", "df").collect()
+    hot_qids = {r["query_id"] for r in meta if r["df"] > hot_df}
+    tids = [r["term_id"] for r in meta if r["query_id"] not in hot_qids]
+    cand = None
+    if tids:
+        cand = (scan(tids) if scan else _pruned_scan(postings, tids, n_buckets)).drop("poss").join(
+            F.broadcast(gated.filter(~F.col("query_id").isin(list(hot_qids)))
+                        if hot_qids else gated),
+            "term_id",
+        )
     out = (
         cand.groupBy("query_id").applyInPandas(_pruned_kernel(avgdl), schema=TOPK_SCHEMA)
         if cand is not None

@@ -44,11 +44,11 @@ from ..operators.postings import (
     ensure_tf_files,
     tf_schema,
 )
+from .engine import QueryEngine
 from .manifest import (
     _part_files,
     footer_columns,
     footer_rows,
-    load_term_lookup,
     read_index_dir,
     read_part_files,
 )
@@ -68,8 +68,9 @@ def _unpersist(df: DataFrame) -> None:
 
 
 @dataclass
-class InvertedIndex:
-    """Handle over a built index directory."""
+class InvertedIndex(QueryEngine):
+    """Handle over a built index directory. Every query mode comes from
+    :class:`~.engine.QueryEngine`, over the one-segment list ``[self]``."""
 
     root: str
     spark: SparkSession
@@ -105,107 +106,9 @@ class InvertedIndex:
             positional=bool(meta.get("positional", False)),
         )
 
-    _terms_cached: DataFrame | None = None
-    _postings_cached: DataFrame | None = None
-    _term_lookup: dict | None = None
-    _sorted_terms: list | None = None
-    _local_reader: object | None = None
-    _local_pos_reader: object | None = None
-    _docs_source: str | None = None
-    _docs_id_col: str = "doc_id"
-    _docs_text_col: str = "text"
-
-    # Driver-side vocabulary cutover: above this many terms the dictionary
-    # stays distributed (broadcast-join gate, topk.py) instead of being
-    # collected — at 1e9 terms a driver-resident dict would be ~30 GB.
-    MAX_DRIVER_TERMS = 20_000_000
-    # Query batches beyond this are not serving-shaped: the driver-side
-    # loop would serialize a batch workload — route to the distributed
-    # pruned plan instead (same guard as SegmentedIndex, ADVICE r04).
-    MAX_DRIVER_QUERIES = 10_000
-
-    def serve(
-        self,
-        max_driver_terms: int | None = None,
-        docs_source: str | None = None,
-        docs_id_col: str = "doc_id",
-        docs_text_col: str = "text",
-    ) -> "InvertedIndex":
-        """Pin posting blocks in executor memory and — when the vocabulary is
-        small enough — the term dictionary in the driver for low-latency
-        serving (reference analog: the GUI keeps the vocabulary string and
-        sector index resident, ``geo_gui.py:36-43``). Beyond
-        ``max_driver_terms`` the pin is skipped automatically and queries
-        gate through the distributed broadcast join. Idempotent.
-
-        ``docs_source`` (a parquet path of the corpus) additionally enables
-        the serve-mode snippets path (:meth:`snippets`): hit docs are
-        point-fetched with a direct pyarrow read instead of a Spark job."""
-        if docs_source is not None:
-            self._docs_source = docs_source
-            self._docs_id_col = docs_id_col
-            self._docs_text_col = docs_text_col
-        if max_driver_terms is None:
-            max_driver_terms = self.MAX_DRIVER_TERMS
-        if self._postings_cached is None:
-            self._postings_cached = self.postings.persist()
-            self._postings_cached.count()
-            self._terms_cached = self.terms.persist()
-            self._term_lookup = load_term_lookup(self.root, max_driver_terms)
-            if self._term_lookup is None:
-                # unpinned: every query gates through the distributed join,
-                # so fill the dictionary cache here, not in the first query
-                # (pinned, only the distributed fallbacks read it, and they
-                # fill it as they scan)
-                self._terms_cached.count()
-            else:
-                # sorted vocabulary: serve-mode autocomplete expands prefixes
-                # with a driver-side bisect — zero Spark jobs before the
-                # posting scan (VERDICT r03 #7)
-                self._sorted_terms = sorted(self._term_lookup)
-        if self._term_lookup is not None and self._local_reader is None:
-            # driver-side serving tier (plans/serving.py): manifest + direct
-            # parquet block reads + the same MaxScore kernel — zero Spark
-            # jobs per query (VERDICT r03 #6)
-            from .manifest import load_postings_manifest
-
-            entries = load_postings_manifest(self.root)
-            if entries:
-                from .serving import LocalBlockReader
-
-                self._local_reader = LocalBlockReader(
-                    self.root, self.n_buckets, entries
-                )
-                if self.positional:
-                    # separate reader (own cache) carrying the positions
-                    # stream — the BM25 paths must never fetch it
-                    self._local_pos_reader = LocalBlockReader(
-                        self.root, self.n_buckets, entries,
-                        with_positions=True,
-                    )
-        return self
-
-    def _serving_source(self):
-        """The pinned single-source list for the driver-side tails, or None
-        when not serving (then every mode uses its distributed plan)."""
-        if self._local_reader is None or self._term_lookup is None:
-            return None
-        from .serving import ServingSource
-
-        return [ServingSource(
-            self._local_reader, self._term_lookup,
-            pos_reader=self._local_pos_reader,
-        )]
-
-    def _collect_capped(self, df: DataFrame, cap: int) -> list | None:
-        """Collect up to ``cap`` rows; None when the frame exceeds it (the
-        caller stays distributed)."""
-        rows = df.limit(cap + 1).collect()
-        return None if len(rows) > cap else rows
-
-    # Metadata-filter sets beyond this many doc_ids are not pinned driver-
-    # side; the filtered query falls back to the distributed semi-join plan.
-    MAX_DRIVER_FILTER_DOCS = 2_000_000
+    def segments(self) -> list["InvertedIndex"]:
+        """A built index is the one-segment list the query engine runs over."""
+        return [self]
 
     def fetch(self, topk: DataFrame, cols: list[str] | None = None) -> DataFrame:
         """Row-fetch phase (reference J9/J10: rowid point-lookup after the
@@ -217,66 +120,14 @@ class InvertedIndex:
             "query_id", "rank", "doc_id", "score", *cols
         )
 
-    _query_cache: dict | None = None
-    QUERY_CACHE_SIZE = 1024
-
-    def query(self, text: str, k: int = 10) -> list:
-        """Single-query serving entrypoint with an LRU result cache —
-        the reference keeps a query->result dict in the GUI process
-        (``res_coords``, ``geo_gui.py:71,202,248``); repeated queries never
-        touch Spark. Returns [(rank, doc_id, score), ...]."""
-        if self._query_cache is None:
-            self._query_cache = {}
-        key = (text, int(k))
-        hit = self._query_cache.get(key)
-        if hit is not None:
-            self._query_cache.pop(key)
-            self._query_cache[key] = hit  # LRU refresh
-            return hit
-        rows = None
-        if self._local_reader is not None and self._term_lookup is not None:
-            # full driver-side path (r4): no DataFrame, no Spark roundtrip —
-            # a cold single query answers in single-digit ms (the measured
-            # Spark floor is ~250 ms just to collect a 7-row local relation)
-            from ..operators.topk import MAX_BLOCKS_PER_TERM, _hot_df_threshold
-            from .serving import topk_local
-
-            res, spark_qids = topk_local(
-                self._local_reader,
-                [{"query_id": 0, "query_text": text, "k": int(k)}],
-                self._term_lookup, self.n_docs, self.avgdl,
-                _hot_df_threshold(MAX_BLOCKS_PER_TERM),
-            )
-            if not spark_qids:  # hot queries still go through Spark below
-                res = res.sort_values("rank")
-                rows = [
-                    (int(r), int(d), float(s))
-                    for r, d, s in zip(res["rank"], res["doc_id"], res["score"])
-                ]
-        if rows is None:
-            q = self.spark.createDataFrame(
-                [(0, text, int(k))], "query_id long, query_text string, k int"
-            )
-            rows = [
-                (r["rank"], r["doc_id"], r["score"])
-                for r in self.topk(q, mode="pruned").orderBy("rank").collect()
-            ]
-        self._query_cache[key] = rows
-        while len(self._query_cache) > self.QUERY_CACHE_SIZE:
-            self._query_cache.pop(next(iter(self._query_cache)))
-        return rows
-
     _manifest_entries: list | None = None
     _manifest_sig: tuple | None = None
 
     def _manifest_scan(self):
         """term_ids -> DataFrame via the file-level stats manifest
         (plans/manifest.py): files are enumerated from recorded per-file
-        term_id ranges, not directory listings. None when serving from the
-        pinned in-memory postings (no file scan at all then) or when the
-        index predates the manifest."""
-        if self._postings_cached is not None:
-            return None
+        term_id ranges, not directory listings. None when the index
+        predates the manifest."""
         from .manifest import _manifest_path, load_postings_manifest
 
         # cache keyed on the manifest file's stat signature: a postings
@@ -300,279 +151,6 @@ class InvertedIndex:
         return lambda tids: manifest_scan(
             self.spark, self.root, entries, tids, self.n_buckets
         )
-
-    def topk(self, queries: DataFrame, mode: str = "exact") -> DataFrame:
-        from ..operators.topk import query_topk_exact, query_topk_pruned
-
-        postings = self._postings_cached if self._postings_cached is not None else self.postings
-        terms = self._terms_cached if self._terms_cached is not None else self.terms
-        scan = self._manifest_scan()
-        if mode == "exact":
-            return query_topk_exact(
-                postings, terms, queries, self.n_docs, self.avgdl,
-                n_buckets=self.n_buckets, scan=scan,
-            )
-        if self._local_reader is not None and self._term_lookup is not None:
-            # serving tier: answer the batch driver-side (same kernel, same
-            # results); only hot / over-cap queries touch Spark. Batch-scale
-            # callers (ADVICE r04): past MAX_DRIVER_QUERIES the collect is
-            # abandoned and the WHOLE batch keeps the distributed pruned
-            # plan — a served index must not silently serialize a batch
-            # workload through a single-threaded driver loop.
-            from ..operators.topk import (
-                MAX_BLOCKS_PER_TERM,
-                TOPK_SCHEMA,
-                _hot_df_threshold,
-            )
-            from .serving import topk_local
-
-            qrows = queries.limit(self.MAX_DRIVER_QUERIES + 1).collect()
-            if len(qrows) > self.MAX_DRIVER_QUERIES:
-                return query_topk_pruned(
-                    postings, terms, queries, self.n_docs, self.avgdl,
-                    term_lookup=self._term_lookup, n_buckets=self.n_buckets,
-                    scan=scan,
-                )
-            res, spark_qids = topk_local(
-                self._local_reader, qrows, self._term_lookup,
-                self.n_docs, self.avgdl, _hot_df_threshold(MAX_BLOCKS_PER_TERM),
-            )
-            out = (
-                self.spark.createDataFrame(res, schema=TOPK_SCHEMA)
-                if len(res)
-                else self.spark.createDataFrame([], TOPK_SCHEMA)
-            )
-            if spark_qids:
-                rest = query_topk_pruned(
-                    postings, terms,
-                    queries.filter(F.col("query_id").isin(spark_qids)),
-                    self.n_docs, self.avgdl, term_lookup=self._term_lookup,
-                    n_buckets=self.n_buckets, scan=scan,
-                )
-                out = out.unionByName(rest)
-            return out
-        return query_topk_pruned(
-            postings, terms, queries, self.n_docs, self.avgdl,
-            term_lookup=self._term_lookup, n_buckets=self.n_buckets, scan=scan,
-        )
-
-    def topk_filtered(self, queries: DataFrame, allowed_docs: DataFrame) -> DataFrame:
-        """Faceted search: BM25 top-k restricted to ``allowed_docs`` (doc_id
-        frame, e.g. ``idx.docstats.filter(...)``); global scoring stats.
-
-        Serve mode (VERDICT r04 #5): with a pinned reader and a filter set
-        within ``MAX_DRIVER_FILTER_DOCS``, the whole query answers driver-
-        side (decoded candidate rows ∩ allowed set, exact scoring) — hot /
-        over-cap queries and batch-scale inputs keep the distributed plan."""
-        from ..operators.topk import query_topk_filtered
-
-        postings = self._postings_cached if self._postings_cached is not None else self.postings
-        terms = self._terms_cached if self._terms_cached is not None else self.terms
-        sources = self._serving_source()
-        if sources is not None:
-            qrows = self._collect_capped(queries, self.MAX_DRIVER_QUERIES)
-            arows = (
-                self._collect_capped(
-                    allowed_docs.select("doc_id"), self.MAX_DRIVER_FILTER_DOCS
-                )
-                if qrows is not None
-                else None
-            )
-            if qrows is not None and arows is not None:
-                import numpy as np
-
-                from ..operators.topk import (
-                    MAX_BLOCKS_PER_TERM,
-                    TOPK_SCHEMA,
-                    _hot_df_threshold,
-                )
-                from .serving import filtered_topk_local
-
-                res, spark_qids = filtered_topk_local(
-                    sources, qrows, self.n_docs, self.avgdl,
-                    _hot_df_threshold(MAX_BLOCKS_PER_TERM),
-                    np.array([r["doc_id"] for r in arows], dtype=np.int64),
-                )
-                out = (
-                    self.spark.createDataFrame(res, schema=TOPK_SCHEMA)
-                    if len(res)
-                    else self.spark.createDataFrame([], TOPK_SCHEMA)
-                )
-                if spark_qids:
-                    rest = query_topk_filtered(
-                        postings, terms,
-                        queries.filter(F.col("query_id").isin(spark_qids)),
-                        self.n_docs, self.avgdl, allowed_docs,
-                        n_buckets=self.n_buckets, scan=self._manifest_scan(),
-                    )
-                    out = out.unionByName(rest)
-                return out
-        return query_topk_filtered(
-            postings, terms, queries, self.n_docs, self.avgdl, allowed_docs,
-            n_buckets=self.n_buckets, scan=self._manifest_scan(),
-        )
-
-    def autocomplete(self, queries: DataFrame, max_expansions: int = 50) -> DataFrame:
-        """Prefix (per-keystroke) search. In serve mode the tokenization,
-        prefix expansion (bisect over the pinned sorted vocabulary) and
-        dictionary gate all run driver-side — zero Spark jobs before the
-        pruned posting scan (VERDICT r03 #7); otherwise the distributed
-        pushed-range-predicate plan runs."""
-        from ..operators.topk import query_topk_autocomplete
-
-        postings = self._postings_cached if self._postings_cached is not None else self.postings
-        terms = self._terms_cached if self._terms_cached is not None else self.terms
-        return query_topk_autocomplete(
-            postings, terms, queries, self.n_docs, self.avgdl,
-            n_buckets=self.n_buckets, max_expansions=max_expansions,
-            sorted_terms=self._sorted_terms, term_lookup=self._term_lookup,
-            scan=self._manifest_scan(),
-        )
-
-    def topk_boolean(
-        self, queries: DataFrame, allowed_docs: DataFrame | None = None
-    ) -> DataFrame:
-        """Boolean (must / must_not) search, BM25-ranked — see
-        ``operators.topk.query_topk_boolean``. ``allowed_docs`` composes a
-        metadata facet with the boolean predicate.
-
-        Serve mode (VERDICT r04 #5): the must-count / NOT-veto tail is
-        pandas-sized after the block fetch, so a served index answers
-        boolean queries driver-side (``serving.boolean_local`` — same math,
-        rounding, tie-breaks); hot / over-cap queries keep the distributed
-        single-pass plan."""
-        from ..operators.topk import query_topk_boolean
-
-        postings = self._postings_cached if self._postings_cached is not None else self.postings
-        terms = self._terms_cached if self._terms_cached is not None else self.terms
-        sources = self._serving_source()
-        if sources is not None and allowed_docs is None:
-            qrows = self._collect_capped(queries, self.MAX_DRIVER_QUERIES)
-            if qrows is not None:
-                from ..operators.topk import (
-                    MAX_BLOCKS_PER_TERM,
-                    TOPK_SCHEMA,
-                    _hot_df_threshold,
-                )
-                from .serving import boolean_local
-
-                res, spark_qids = boolean_local(
-                    sources, qrows, self.n_docs, self.avgdl,
-                    _hot_df_threshold(MAX_BLOCKS_PER_TERM),
-                )
-                out = (
-                    self.spark.createDataFrame(res, schema=TOPK_SCHEMA)
-                    if len(res)
-                    else self.spark.createDataFrame([], TOPK_SCHEMA)
-                )
-                if spark_qids:
-                    rest = query_topk_boolean(
-                        postings, terms,
-                        queries.filter(F.col("query_id").isin(spark_qids)),
-                        self.n_docs, self.avgdl, n_buckets=self.n_buckets,
-                        scan=self._manifest_scan(),
-                    )
-                    out = out.unionByName(rest)
-                return out
-        return query_topk_boolean(
-            postings, terms, queries, self.n_docs, self.avgdl,
-            n_buckets=self.n_buckets, scan=self._manifest_scan(),
-            allowed_docs=allowed_docs,
-        )
-
-    def phrase(self, phrases: DataFrame, k: int = 10) -> DataFrame:
-        """Exact phrase search over a POSITIONAL index. Serve mode decodes
-        the phrase terms' position streams driver-side and intersects them
-        in numpy (``serving.phrase_local``) — zero Spark jobs; otherwise
-        (or for hot phrase tokens) the distributed ordinal-shift plan runs
-        (``operators.topk.query_phrase_indexed``)."""
-        from ..operators.topk import query_phrase_indexed
-
-        if not self.positional:
-            raise ValueError(
-                "phrase search needs a positional index "
-                "(build_index(positional=True))"
-            )
-        sources = self._serving_source()
-        if sources is not None and self._local_pos_reader is not None:
-            qrows = self._collect_capped(phrases, self.MAX_DRIVER_QUERIES)
-            if qrows is not None:
-                from ..operators.topk import MAX_BLOCKS_PER_TERM, _hot_df_threshold
-                from .serving import phrase_local
-
-                res, spark_qids = phrase_local(
-                    sources, qrows, k=k,
-                    hot_df=_hot_df_threshold(MAX_BLOCKS_PER_TERM),
-                )
-                schema = "query_id long, rank int, doc_id long, n_matches int"
-                out = (
-                    self.spark.createDataFrame(res, schema=schema)
-                    if len(res)
-                    else self.spark.createDataFrame([], schema)
-                )
-                if spark_qids:
-                    rest = query_phrase_indexed(
-                        self.postings, self.terms,
-                        phrases.filter(F.col("query_id").isin(spark_qids)),
-                        n_buckets=self.n_buckets, k=k,
-                        scan=self._manifest_scan(),
-                    )
-                    out = out.unionByName(rest)
-                return out
-        return query_phrase_indexed(
-            self.postings, self.terms, phrases, n_buckets=self.n_buckets,
-            k=k, scan=self._manifest_scan(),
-        )
-
-    def snippets(
-        self, queries: DataFrame, width: int = 5, docs: DataFrame | None = None
-    ) -> DataFrame:
-        """Hit highlighting for the BM25 top-k of ``queries``. Serve mode
-        (``serve(docs_source=...)``) runs end-to-end driver-side: local
-        top-k -> direct parquet point-fetch of the hit docs -> window
-        extraction (``serving.snippets_local``); any hot/over-cap query
-        falls the whole call back to the distributed pipeline
-        (``operators.textstats.snippets``)."""
-        from ..operators.textstats import snippets as snippets_op
-
-        sources = self._serving_source()
-        if sources is not None and self._docs_source is not None:
-            qrows = self._collect_capped(queries, self.MAX_DRIVER_QUERIES)
-            if qrows is not None:
-                from ..operators.topk import MAX_BLOCKS_PER_TERM, _hot_df_threshold
-                from .serving import snippets_local, topk_local_multi
-
-                hits, spark_qids = topk_local_multi(
-                    sources, qrows, self.n_docs, self.avgdl,
-                    _hot_df_threshold(MAX_BLOCKS_PER_TERM),
-                )
-                if not spark_qids:
-                    res = snippets_local(
-                        self._docs_source, qrows,
-                        hits.to_dict("records"), width=width,
-                        id_col=self._docs_id_col, text_col=self._docs_text_col,
-                    )
-                    schema = (
-                        "query_id long, doc_id long, rank int, "
-                        "first_pos long, snippet string"
-                    )
-                    return (
-                        self.spark.createDataFrame(res, schema=schema)
-                        if len(res)
-                        else self.spark.createDataFrame([], schema)
-                    )
-        if docs is None:
-            if self._docs_source is None:
-                raise ValueError(
-                    "snippets needs the corpus: pass docs= or serve(docs_source=...)"
-                )
-            docs = self.spark.read.parquet(self._docs_source)
-            if self._docs_id_col != "doc_id":
-                docs = docs.withColumnRenamed(self._docs_id_col, "doc_id")
-            if self._docs_text_col != "text":
-                docs = docs.withColumnRenamed(self._docs_text_col, "text")
-        return snippets_op(docs, queries, self.topk(queries, mode="pruned"),
-                           width=width)
 
 
 def _build_postings_stage(

@@ -273,22 +273,6 @@ def topk_local_multi(
     return res, spark_qids
 
 
-def topk_local(
-    reader: LocalBlockReader,
-    qrows: list,
-    term_lookup: dict,
-    n_docs: int,
-    avgdl: float,
-    hot_df: int,
-    max_blocks_per_query: int = MAX_LOCAL_BLOCKS_PER_QUERY,
-) -> tuple[pd.DataFrame, list[int]]:
-    """Single-source serving (the r4 entrypoint) — one pinned index."""
-    return topk_local_multi(
-        [ServingSource(reader, term_lookup)], qrows, n_docs, avgdl,
-        hot_df, max_blocks_per_query,
-    )
-
-
 # ---------------------------------------------------------------------------
 # exact decoded-row helpers (boolean / filtered / phrase tails)
 # ---------------------------------------------------------------------------

@@ -88,6 +88,29 @@ def get_spark(
     return spark
 
 
+def local_frame(spark, data, schema: str) -> "DataFrame":
+    """Driver-side rows (a pandas frame, or tuples in ``schema`` order) as a
+    DataFrame. ``createDataFrame`` of a Python list runs
+    ``SparkContext.parallelize``, whose tasks start a second Python worker
+    pool; an Arrow table goes to the JVM through ``_serialize_to_jvm``, and
+    a small one becomes a local relation, which collects without a job."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    if isinstance(data, pd.DataFrame):
+        table = pa.Table.from_pandas(data[struct.names], schema=arrow, preserve_index=False)
+    else:
+        table = pa.Table.from_arrays(
+            [pa.array([r[i] for r in data], type=f.type) for i, f in enumerate(arrow)],
+            schema=arrow,
+        )
+    return spark.createDataFrame(table, schema=struct)
+
+
 def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:

@@ -41,7 +41,9 @@ def main() -> None:
     q = spark.createDataFrame([(0, "the fast scan", 10)], "query_id long, query_text string, k int")
     sections.append((
         "Query stage — cold pruned posting scan (partition pruning evidence)",
-        "The dictionary gate resolves term_ids driver-side; the file-level "
+        "The query terms are tokenized driver-side and resolved to "
+        "term_ids by one dictionary probe (a global query-term ordinal is "
+        "attached by a broadcast remap join); the file-level "
         "stats manifest (plans/manifest.py) then enumerates exactly the "
         "posting files whose (bucket, term_id-range) can match — no "
         "directory listing — and the scan still carries literal filters: "
@@ -89,10 +91,12 @@ def main() -> None:
     # 2. exact distributed scoring
     sections.append((
         "Query stage — exact distributed BM25 (batch path)",
-        "Pruned scan -> Arrow decode -> broadcast-joined query terms -> "
-        "partial-aggregated score sum -> window top-k. All joins on the "
-        "query side are broadcasts; the only wide exchange is the "
-        "score groupBy, keyed by (query_id, doc_id) — skew-free.",
+        "Pruned scan -> Arrow decode -> term-id remap -> query terms -> "
+        "partial-aggregated score sum -> window top-k. The query terms "
+        "were gated driver-side, so both joined relations are broadcast "
+        "LocalTableScans (no dictionary join at query time); the only "
+        "wide exchange is the score groupBy, keyed by (query_id, doc_id) "
+        "— skew-free.",
         plan_of(idx.topk(q, "exact")),
     ))
 
@@ -284,7 +288,8 @@ def main() -> None:
     ))
     sections.append((
         "Serving tier — driver-side topk (no Spark plan by design)",
-        "`InvertedIndex.serve()` pins the vocabulary + file manifest and "
+        "`serve()` (plans/engine.py, one code path for a built index and a "
+        "segment set) pins the vocabulary + file manifest per segment and "
         "answers pruned top-k with DIRECT parquet block reads feeding the "
         "same MaxScore kernel in-process (plans/serving.py) — zero Spark "
         "jobs per query (job-count test in test_serving.py), results "

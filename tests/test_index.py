@@ -202,15 +202,13 @@ def test_serve_big_vocab_skips_driver_collect(spark, index):
 
     fresh = build_mod.InvertedIndex.load(spark, index.root)
     fresh.serve(max_driver_terms=0)  # force the big-vocab path
-    assert fresh._term_lookup is None, "big-vocab serve collected the dictionary"
+    assert fresh._sources is None, "big-vocab serve collected the dictionary"
     q = spark.createDataFrame(
         [(0, "term_0001 the_hot_term", 10)], "query_id long, query_text string, k int"
     )
     exact = index.topk(q, "exact").toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     served = fresh.topk(q, "pruned").toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     assert served.equals(exact)
-    fresh._postings_cached.unpersist()
-    fresh._terms_cached.unpersist()
 
 
 def test_double_build_byte_identical(spark, tmp_path):

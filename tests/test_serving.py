@@ -154,11 +154,11 @@ def test_ivf_append_and_rebuild_policy(spark, tmp_path):
 
 def test_topk_local_rank_identical_and_jobless(spark, sidx):
     from geocoderpl_spark.operators.topk import MAX_BLOCKS_PER_TERM, _hot_df_threshold
-    from geocoderpl_spark.plans.serving import topk_local
+    from geocoderpl_spark.plans.serving import topk_local_multi
 
     idx, _ = sidx
     idx.serve()
-    assert idx._local_reader is not None, "manifest-backed local reader missing"
+    assert idx._sources and idx._sources[0].reader.entries, "manifest-backed local reader missing"
 
     exact = (
         idx.topk(_qdf(spark), mode="exact")
@@ -174,8 +174,8 @@ def test_topk_local_rank_identical_and_jobless(spark, sidx):
     qrows = _qdf(spark).collect()
     tracker = spark.sparkContext.statusTracker()
     before = tracker.getJobIdsForGroup(None)
-    res, spark_qids = topk_local(
-        idx._local_reader, qrows, idx._term_lookup, idx.n_docs, idx.avgdl,
+    res, spark_qids = topk_local_multi(
+        idx._sources, qrows, idx.n_docs, idx.avgdl,
         _hot_df_threshold(MAX_BLOCKS_PER_TERM),
     )
     after = tracker.getJobIdsForGroup(None)
@@ -190,16 +190,21 @@ def test_topk_local_tiny_cache_degrades_not_crashes(spark, sidx):
     """A block cache smaller than one query's working set must degrade to
     read-through (results unchanged), never evict mid-query and KeyError."""
     from geocoderpl_spark.operators.topk import MAX_BLOCKS_PER_TERM, _hot_df_threshold
-    from geocoderpl_spark.plans.serving import LocalBlockReader, topk_local
+    from geocoderpl_spark.plans.serving import (
+        LocalBlockReader,
+        ServingSource,
+        topk_local_multi,
+    )
 
     idx, _ = sidx
     idx.serve()
+    (src,) = idx._sources
     tiny = LocalBlockReader(
-        idx.root, idx.n_buckets, idx._local_reader.entries, max_cached_blocks=1
+        idx.root, idx.n_buckets, src.reader.entries, max_cached_blocks=1
     )
-    res, spark_qids = topk_local(
-        tiny, _qdf(spark).collect(), idx._term_lookup, idx.n_docs, idx.avgdl,
-        _hot_df_threshold(MAX_BLOCKS_PER_TERM),
+    res, spark_qids = topk_local_multi(
+        [ServingSource(tiny, src.term_lookup)], _qdf(spark).collect(),
+        idx.n_docs, idx.avgdl, _hot_df_threshold(MAX_BLOCKS_PER_TERM),
     )
     assert spark_qids == []
     exact = (
@@ -219,10 +224,10 @@ def test_topk_local_hot_routes_to_spark(spark, sidx):
         idx.topk(_qdf(spark), mode="exact")
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
-    from geocoderpl_spark.plans.serving import topk_local
+    from geocoderpl_spark.plans.serving import topk_local_multi
 
-    res, spark_qids = topk_local(
-        idx._local_reader, _qdf(spark).collect(), idx._term_lookup,
+    res, spark_qids = topk_local_multi(
+        idx._sources, _qdf(spark).collect(),
         idx.n_docs, idx.avgdl, hot_df=10,  # absurdly low cap: everything hot
     )
     assert len(res) == 0
@@ -236,15 +241,18 @@ def test_topk_local_hot_routes_to_spark(spark, sidx):
 
 
 def test_autocomplete_serve_mode_no_dictionary_scan(spark, sidx):
-    """Serve-mode autocomplete must never touch the terms table: passing
-    terms=None proves the expansion+gate are fully driver-side, and results
-    equal the distributed pushed-range expansion."""
+    """Serve-mode autocomplete never touches the terms table: the prefix
+    expansion is a bisect over the pinned vocabulary and the expanded batch
+    answers in-process, so a call over a local query relation runs no Spark
+    job at all, and its results equal the distributed pushed-range
+    expansion."""
     from geocoderpl_spark.operators.topk import query_topk_autocomplete
+    from geocoderpl_spark.session import local_frame
 
     idx, _ = sidx
     idx.serve()
-    assert idx._sorted_terms is not None
-    q = spark.createDataFrame(
+    q = local_frame(
+        spark,
         [(0, "term_00", 10), (1, "term_0001 camelCase", 10),
          (2, "term_0001 ", 10), (3, "zzz_nothing", 5)],
         "query_id long, query_text string, k int",
@@ -253,16 +261,9 @@ def test_autocomplete_serve_mode_no_dictionary_scan(spark, sidx):
         idx.postings, idx.terms, q, idx.n_docs, idx.avgdl,
         n_buckets=idx.n_buckets, max_expansions=5,
     ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    local = query_topk_autocomplete(
-        idx.postings, None, q, idx.n_docs, idx.avgdl,
-        n_buckets=idx.n_buckets, max_expansions=5,
-        sorted_terms=idx._sorted_terms, term_lookup=idx._term_lookup,
-    ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    assert local.equals(dist)
-    # and via the index API
-    api = idx.autocomplete(q, max_expansions=5).toPandas().sort_values(
-        ["query_id", "rank"]).reset_index(drop=True)
-    assert api.equals(dist)
+    api = _no_jobs(spark, lambda: idx.autocomplete(q, max_expansions=5))
+    assert idx._sorted_terms is not None
+    assert _sorted_pdf(api).equals(dist) and len(dist) > 0
 
 
 # ---------------------------------------------------------------------------
@@ -340,7 +341,7 @@ def test_segmented_phrase_matches_single(spark, sidx, segidx):
     single = query_phrase_indexed(
         idx.postings, idx.terms, p, n_buckets=idx.n_buckets, k=10
     ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    seg = segidx.phrase_indexed(p, k=10).toPandas().sort_values(
+    seg = segidx.phrase(p, k=10).toPandas().sort_values(
         ["query_id", "rank"]).reset_index(drop=True)
     assert seg.equals(single)
     assert len(single) > 0
@@ -427,7 +428,7 @@ def test_positional_streaming_segments(spark, tmp_path):
     # corpus-scan oracle needs the SAME doc ids the indexer assigned: join
     # occurrence counts by content instead — simpler: compare n_matches
     # multisets per query (doc ids differ between scan and stream builds)
-    got = seg.phrase_indexed(p, k=10).toPandas()
+    got = seg.phrase(p, k=10).toPandas()
     scan = want.toPandas()
     for qid in (0, 1):
         g = sorted(got[got.query_id == qid].n_matches)
@@ -440,7 +441,7 @@ def test_positional_streaming_segments(spark, tmp_path):
     seg2 = SegmentedIndex(spark, index_root)
     merged = seg2.segments()
     assert len(merged) == 1 and merged[0].positional
-    got2 = seg2.phrase_indexed(p, k=10).toPandas()
+    got2 = seg2.phrase(p, k=10).toPandas()
     assert sorted(map(tuple, got2.values.tolist())) == sorted(
         map(tuple, got.values.tolist())
     )
@@ -486,7 +487,7 @@ def test_boolean_serve_matches_distributed_and_jobless(spark, sidx):
     assert served.equals(dist) and len(dist) > 0
     qrows = q.collect()
     res, spark_qids = _no_jobs(spark, lambda: boolean_local(
-        idx._serving_source(), qrows, idx.n_docs, idx.avgdl,
+        idx._sources, qrows, idx.n_docs, idx.avgdl,
         _hot_df_threshold(MAX_BLOCKS_PER_TERM),
     ))
     assert spark_qids == []
@@ -517,7 +518,7 @@ def test_filtered_serve_matches_distributed_and_jobless(spark, sidx):
     qrows = _qdf(spark).collect()
     aids = np.array([r["doc_id"] for r in allowed.collect()], dtype=np.int64)
     res, spark_qids = _no_jobs(spark, lambda: filtered_topk_local(
-        idx._serving_source(), qrows, idx.n_docs, idx.avgdl,
+        idx._sources, qrows, idx.n_docs, idx.avgdl,
         _hot_df_threshold(MAX_BLOCKS_PER_TERM), aids,
     ))
     assert spark_qids == []
@@ -548,7 +549,7 @@ def test_phrase_serve_matches_distributed_and_jobless(spark, sidx):
     assert served.equals(dist) and len(dist) > 0
     prows = p.collect()
     res, spark_qids = _no_jobs(spark, lambda: phrase_local(
-        idx._serving_source(), prows, k=10
+        idx._sources, prows, k=10
     ))
     assert spark_qids == []
     got = res.sort_values(["query_id", "rank"]).reset_index(drop=True)
@@ -601,7 +602,7 @@ def test_segmented_serve_rank_identical_and_jobless(spark, sidx, segidx):
     exact = _sorted_pdf(idx.topk(_qdf(spark), mode="exact"))
     segidx.serve()
     assert segidx._sources is not None and len(segidx._sources) == 3
-    served = _sorted_pdf(segidx.topk_pruned(_qdf(spark)))
+    served = _sorted_pdf(segidx.topk(_qdf(spark), mode="pruned"))
     assert served.equals(exact) and len(exact) > 0
     qrows = _qdf(spark).collect()
     n_docs, avgdl = segidx._serve_stats
@@ -668,7 +669,7 @@ def test_boolean_serve_must_intersect_must_not(spark, sidx):
     assert set(dist.query_id) == {1}
     qrows = q.collect()
     res, spark_qids = _no_jobs(spark, lambda: boolean_local(
-        idx._serving_source(), qrows, idx.n_docs, idx.avgdl,
+        idx._sources, qrows, idx.n_docs, idx.avgdl,
         _hot_df_threshold(MAX_BLOCKS_PER_TERM),
     ))
     assert spark_qids == []
@@ -692,7 +693,7 @@ def test_filtered_serve_empty_allowed(spark, sidx):
     idx.serve()
     qrows = _qdf(spark).collect()
     res, spark_qids = _no_jobs(spark, lambda: filtered_topk_local(
-        idx._serving_source(), qrows, idx.n_docs, idx.avgdl,
+        idx._sources, qrows, idx.n_docs, idx.avgdl,
         _hot_df_threshold(MAX_BLOCKS_PER_TERM),
         np.empty(0, dtype=np.int64),
     ))
@@ -718,7 +719,7 @@ def test_phrase_serve_nontrivial_repeat(spark, sidx):
     ))
     prows = p.collect()
     res, spark_qids = _no_jobs(spark, lambda: phrase_local(
-        idx._serving_source(), prows, k=10,
+        idx._sources, prows, k=10,
     ))
     assert spark_qids == []
     got = res.sort_values(["query_id", "rank"]).reset_index(drop=True)
@@ -797,3 +798,84 @@ def test_segmented_serve_pins_dictionaries_jobless(spark, segidx, tmp_path):
         s = SegmentedIndex(spark, root)
         _no_jobs(spark, lambda s=s, cap=cap: s.serve(max_driver_terms=cap))
         assert (s._sources is not None) == pinned, cap
+
+
+# ---------------------------------------------------------------------------
+# one query engine: every mode over a segment list
+# ---------------------------------------------------------------------------
+
+
+def test_served_segments_answer_every_mode_jobless(spark, sidx, segidx, tmp_path):
+    """serve() runs no Spark job for one segment or three, and a served
+    SegmentedIndex answers filtered, boolean (with and without a facet),
+    phrase and snippets queries in-process: zero Spark jobs over local
+    query relations, and the single index's distributed results."""
+    from geocoderpl_spark.operators.textstats import snippets as snippets_op
+    from geocoderpl_spark.operators.topk import (
+        query_phrase_indexed,
+        query_topk_boolean,
+        query_topk_filtered,
+    )
+    from geocoderpl_spark.session import local_frame
+    from geocoderpl_spark.streaming.incremental import SegmentedIndex
+
+    idx, docs = sidx
+    docs_path = str(tmp_path / "docs.parquet")
+    docs.write.parquet(docs_path)
+    _no_jobs(spark, idx.serve)  # one segment
+    seg = SegmentedIndex(spark, segidx.root)
+    _no_jobs(spark, lambda: seg.serve(docs_source=docs_path, docs_text_col="content"))
+    assert seg._sources is not None and len(seg._sources) == 3
+    q = local_frame(spark, QUERIES, "query_id long, query_text string, k int")
+    bq = local_frame(spark, BOOL_QUERIES, "query_id long, must string, must_not string, k int")
+    p = local_frame(spark, PHRASES, "query_id long, phrase_text string")
+    odd = sorted(r["doc_id"] for r in docs.select("doc_id").collect() if r["doc_id"] % 2)
+    allowed = local_frame(spark, [(d,) for d in odd], "doc_id long")
+    single = (idx.postings, idx.terms)
+
+    got = _no_jobs(spark, lambda: seg.topk_filtered(q, allowed))
+    want = query_topk_filtered(*single, q, idx.n_docs, idx.avgdl, allowed, n_buckets=idx.n_buckets)
+    assert _sorted_pdf(got).equals(_sorted_pdf(want)) and got.count() > 0
+
+    for facet in (None, allowed):
+        got = _no_jobs(spark, lambda facet=facet: seg.topk_boolean(bq, allowed_docs=facet))
+        want = query_topk_boolean(*single, bq, idx.n_docs, idx.avgdl,
+                                  n_buckets=idx.n_buckets, allowed_docs=facet)
+        assert _sorted_pdf(got).equals(_sorted_pdf(want)) and got.count() > 0
+
+    got = _no_jobs(spark, lambda: seg.phrase(p, k=10))
+    want = query_phrase_indexed(*single, p, n_buckets=idx.n_buckets, k=10)
+    assert _sorted_pdf(got).equals(_sorted_pdf(want)) and got.count() > 0
+
+    cols = ("query_id", "rank", "doc_id")
+    got = _sorted_pdf(_no_jobs(spark, lambda: seg.snippets(q, width=5)), cols=cols)
+    want = _sorted_pdf(snippets_op(docs, q, idx.topk(q, mode="pruned"), width=5,
+                                   text_col="content"), cols=cols)
+    assert list(got.doc_id) == list(want.doc_id) and len(want) > 0
+    assert list(got.first_pos) == list(want.first_pos)
+    assert list(got.snippet) == list(want.snippet)
+
+
+def test_batch_past_cap_stages_nothing_on_driver(spark, sidx, segidx, monkeypatch):
+    """Past MAX_DRIVER_QUERIES every segment count takes the distributed
+    plan: an unserved pruned or boolean batch is not tokenized on the
+    driver, and its results equal the driver-staged plan's."""
+    import geocoderpl_spark.functions.tokenize as tokmod
+    from geocoderpl_spark.plans.build import InvertedIndex
+    from geocoderpl_spark.plans.engine import QueryEngine
+    from geocoderpl_spark.streaming.incremental import SegmentedIndex
+
+    idx, _ = sidx
+    views = [InvertedIndex.load(spark, idx.root), SegmentedIndex(spark, segidx.root)]
+    q = spark.createDataFrame(QUERIES[:3], "query_id long, query_text string, k int")
+    bq = spark.createDataFrame(BOOL_QUERIES, "query_id long, must string, must_not string, k int")
+    want = [(_sorted_pdf(v.topk(q, mode="pruned")), _sorted_pdf(v.topk_boolean(bq)))
+            for v in views]
+    calls = []
+    real = tokmod.tokenize_py
+    monkeypatch.setattr(tokmod, "tokenize_py", lambda text: calls.append(text) or real(text))
+    monkeypatch.setattr(QueryEngine, "MAX_DRIVER_QUERIES", 2)
+    for v, (topk_want, bool_want) in zip(views, want):
+        assert _sorted_pdf(v.topk(q, mode="pruned")).equals(topk_want) and len(topk_want)
+        assert _sorted_pdf(v.topk_boolean(bq)).equals(bool_want) and len(bool_want)
+    assert calls == []

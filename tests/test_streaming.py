@@ -481,7 +481,7 @@ def test_segmented_pruned_topk_rank_identical(spark, streamed, tmp_path):
     seg = SegmentedIndex(spark, index_root)
     assert len(seg.segments()) >= 2  # genuinely multi-segment
     exact = sorted(tuple(r) for r in seg.topk(q).collect())
-    pruned = sorted(tuple(r) for r in seg.topk_pruned(q).collect())
+    pruned = sorted(tuple(r) for r in seg.topk(q, mode="pruned").collect())
     assert pruned == exact
 
     merged_dir = str(tmp_path / "one")
@@ -515,7 +515,7 @@ def test_segmented_pruned_hot_term_routes_to_exact(spark, streamed, monkeypatch)
         for r in s.terms.filter(F.col("term") == HOT_TERM).collect()
     )
     assert hot_df > 50
-    pruned = sorted(tuple(r) for r in seg.topk_pruned(q).collect())
+    pruned = sorted(tuple(r) for r in seg.topk(q, mode="pruned").collect())
     assert pruned == exact
     assert any(r[0] == 0 for r in pruned) and any(r[0] == 1 for r in pruned)
 
@@ -801,12 +801,67 @@ def test_build_ingest_merge_run_no_local_data_job(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(SparkContext, "parallelize", no_parallelize)
     assert build_index(spark, corpus, str(tmp_path / "bulk"), n_buckets=4).n_docs == 120
-    q = start_incremental_indexer(spark, stream_dir, root, SCHEMA,
-                                  n_buckets=4, max_files_per_trigger=1)
+    q = start_incremental_indexer(spark, stream_dir, root, SCHEMA, n_buckets=4,
+                                  max_files_per_trigger=1, positional=True)
     q.awaitTermination(300)  # raises if a batch failed
-    assert len(SegmentedIndex(spark, root).segments()) == 2
+    two = SegmentedIndex(spark, root)
+    assert len(two.segments()) == 2
+    _every_mode_unserved(spark, two)
     assert compact_segments(spark, root, max_segments=1, n_buckets=4)
-    assert SegmentedIndex(spark, root).global_stats()[0] == 120
+    one = SegmentedIndex(spark, root)
+    assert one.global_stats()[0] == 120 and len(one.segments()) == 1
+    _every_mode_unserved(spark, one)
+
+
+def _every_mode_unserved(spark, engine) -> None:
+    """One unserved call of every query mode, each result collected; query
+    inputs come from local_frame (Arrow), not from a Python list."""
+    from geocoderpl_spark.session import local_frame
+
+    q = local_frame(spark, [(0, "term_0001 term_0002", 5), (1, "term_00", 3)],
+                    "query_id long, query_text string, k int")
+    bq = local_frame(spark, [(0, "term_0001", "term_0002", 5)],
+                     "query_id long, must string, must_not string, k int")
+    p = local_frame(spark, [(0, "term_0001 term_0002")], "query_id long, phrase_text string")
+    allowed = local_frame(spark, [(i,) for i in range(0, 120, 2)], "doc_id long")
+    docs = local_frame(spark, [(i, f"term_0001 filler {i}") for i in range(120)],
+                       "doc_id long, text string")
+    assert engine.query("the_hot_term", 5)
+    for mode in (
+        lambda: engine.topk(q, mode="exact"),
+        lambda: engine.topk(q, mode="pruned"),
+        lambda: engine.topk_filtered(q, allowed),
+        lambda: engine.topk_boolean(bq),
+        lambda: engine.autocomplete(q, max_expansions=5),
+        lambda: engine.phrase(p),
+        lambda: engine.snippets(q, docs=docs),
+    ):
+        mode().collect()
+
+
+def test_result_cache_follows_the_segment_list(spark, tmp_path):
+    """Results are cached only while the segment list is fixed: after an
+    append an unserved live SegmentedIndex answers with the new doc, a
+    served one answers a repeat from its pin with no Spark job, and
+    serve() re-pins the new list and clears the cache."""
+    from geocoderpl_spark.session import local_frame
+    from tests.test_serving import _no_jobs
+
+    root, schema = str(tmp_path / "idx"), "doc_id long, content string"
+
+    def segment(name: str, rows: list) -> None:
+        build_index(spark, local_frame(spark, rows, schema), os.path.join(root, name),
+                    n_buckets=4, partitions=2, id_col="doc_id")
+
+    segment("seg_00000", [(i, f"term_{i:04d} common words") for i in range(40)])
+    live, served = SegmentedIndex(spark, root), SegmentedIndex(spark, root).serve()
+    assert live.query("zz_fresh", 5) == [] and served.query("zz_fresh", 5) == []
+    segment("seg_00001", [(100, "zz_fresh common")])
+    assert [d for _, d, _ in live.query("zz_fresh", 5)] == [100]
+    assert _no_jobs(spark, lambda: served.query("zz_fresh", 5)) == []
+    served.serve()
+    assert [d for _, d, _ in served.query("zz_fresh", 5)] == [100]
+    assert _no_jobs(spark, lambda: served.query("zz_fresh", 5))[0][1] == 100
 
 
 def test_incremental_indexer_releases_rank_tables(spark, tmp_path):
