@@ -10,24 +10,23 @@ then point-looks-up full rows (``geo_gui.py:190-202``). Here:
 - pruning   = postings scan filtered to the query's term_ids (parquet
   predicate pushdown + min/max row-group skipping; the analog of the
   reference's 9-of-40,000-sector fetch, J4)
-- two paths:
-  * :func:`query_topk_exact` — fully distributed DataFrame plan (decode ->
-    score -> partial-agg -> window top-k). Scales to any query/corpus size;
-    this is the batch path and the oracle-comparable one.
-  * :func:`query_topk_pruned` — Arrow-batched per-query kernel implementing
+- two scoring tails, over the posting rows a caller scans:
+  * :func:`_score_rows` — exact: decode -> score -> partial-agg -> window
+    top-k, fully distributed. Scales to any query/corpus size; this is the
+    batch path and the oracle-comparable one (:func:`query_topk_exact`).
+  * :func:`_pruned_kernel` — Arrow-batched per-query kernel implementing
     MaxScore/Block-Max pruning (the two-phase cheap-bound-then-exact idea
     the reference uses for its k-NN join, ``geo_utilities.py:589-760``, J5).
     Serving path: low latency for small k; gathers each query's candidate
-    blocks to one task, so it assumes per-query candidate sets fit a task
-    (true for interactive serving; batch scoring uses the exact path).
+    blocks to one task, so queries past :data:`MAX_BLOCKS_PER_TERM` are
+    routed to the exact tail (``plans/engine.py: QueryEngine._topk_spark``).
 
-Both paths round scores to 6 dp *before* ranking and tie-break by doc_id
+Both tails round scores to 6 dp *before* ranking and tie-break by doc_id
 asc, so their results are rank-identical to each other and to the oracle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -566,57 +565,6 @@ def _hot_df_threshold(max_blocks: int) -> int:
     from ..functions.codec import BLOCK_SIZE
 
     return max_blocks * BLOCK_SIZE
-
-
-def query_topk_pruned(
-    postings: DataFrame,
-    terms: DataFrame,
-    queries: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    n_buckets: int | None = None,
-    max_blocks_per_term: int = MAX_BLOCKS_PER_TERM,
-    scan=None,
-) -> DataFrame:
-    """Serving path: per-query block-max MaxScore kernel, hot-term-capped.
-
-    The dictionary gate is a distributed broadcast join (batch-friendly);
-    a served index gates driver-side instead (``plans/engine.py``).
-
-    Queries containing a term with df > max_blocks_per_term * BLOCK_SIZE
-    (i.e. more candidate blocks than one kernel task should gather) are
-    answered by :func:`query_topk_exact` instead — same scores, same ranks,
-    no unbounded single-task gather. df comes from the term dictionary, so
-    the routing decision costs nothing extra.
-    """
-    spark = postings.sparkSession
-    hot_df = _hot_df_threshold(max_blocks_per_term)
-    gated = gate_terms(tokenize_queries(queries), terms, n_docs)
-    # metadata-sized collect: (query, term) pairs of the live query set
-    meta = gated.select("query_id", "term_id", "df").collect()
-    hot_qids = {r["query_id"] for r in meta if r["df"] > hot_df}
-    tids = [r["term_id"] for r in meta if r["query_id"] not in hot_qids]
-    cand = None
-    if tids:
-        cand = (scan(tids) if scan else _pruned_scan(postings, tids, n_buckets)).drop("poss").join(
-            F.broadcast(gated.filter(~F.col("query_id").isin(list(hot_qids)))
-                        if hot_qids else gated),
-            "term_id",
-        )
-    out = (
-        cand.groupBy("query_id").applyInPandas(_pruned_kernel(avgdl), schema=TOPK_SCHEMA)
-        if cand is not None
-        else spark.createDataFrame([], TOPK_SCHEMA)
-    )
-    if hot_qids:  # exact-path fallback for hot-term queries (rank-identical)
-        hot = query_topk_exact(
-            postings, terms,
-            queries.filter(F.col("query_id").isin(list(hot_qids))),
-            n_docs, avgdl, n_buckets=n_buckets, scan=scan,
-        )
-        out = out.unionByName(hot)
-    # queries whose terms are all unknown produce no group -> naturally empty
-    return out
 
 
 def query_phrase_indexed(

@@ -20,8 +20,10 @@ A mode has up to three plans:
   one scoring tail runs over the union of the segments' manifest-pruned
   scans. N, avgdl and df are global, so a segment set ranks exactly like
   one merged index.
-- **distributed** (a batch past ``MAX_DRIVER_QUERIES``): nothing staged on
-  the driver; posting rows are keyed by term string across segments.
+- **distributed** (a batch past ``MAX_DRIVER_QUERIES``): tokenization and
+  the dictionary gate stay in Spark and no query row reaches the driver;
+  only the distinct dictionary hits are collected, so every segment's
+  posting scan keeps its manifest prune.
 
 Driver-side rows become DataFrames through Arrow (``session.local_frame``),
 never through ``SparkContext.parallelize``.
@@ -271,11 +273,16 @@ class QueryEngine:
         )
 
     def _topk_spark(self, segs, qrows: list, pruned: bool, allowed: DataFrame | None) -> DataFrame:
-        """Driver-staged Spark plan for collected query rows. ``pruned``:
-        per-segment block scans feed ONE MaxScore kernel pass per query
-        (the accumulator is the k-way merge: doc spaces are disjoint), and
-        queries with a term past the hot-df cap take the exact tail, which
-        scores decoded rows (``_score_rows``)."""
+        """Driver-staged Spark plan for collected query rows. ``exact``
+        scores every decoded candidate posting (``_score_rows``).
+        ``pruned``: per-segment block scans feed ONE MaxScore kernel pass
+        per query (``_pruned_kernel``; the accumulator is the k-way merge:
+        doc spaces are disjoint). The kernel gathers a query's candidate
+        blocks into one task, so a query holding a term with global df >
+        ``MAX_BLOCKS_PER_TERM * BLOCK_SIZE`` (more blocks than one task
+        should gather) takes the exact tail instead: same scores, same
+        ranks, no unbounded single-task gather. df comes from the
+        dictionary probe, so the routing costs nothing extra."""
         n_docs, avgdl = self.global_stats(segs)
         qterms = [
             (q["query_id"], int(q["k"]), t, c)
@@ -306,22 +313,26 @@ class QueryEngine:
         out = _union(parts)
         return out if out is not None else local_frame(self.spark, [], _topk.TOPK_SCHEMA)
 
-    def _probe_terms(self, segs, terms: set[str]) -> tuple[list[dict], dict[str, int], dict[str, int]]:
+    def _probe_terms(self, segs, terms) -> tuple[list[dict], dict[str, int], dict[str, int]]:
         """Per-segment {term: term_id}, the global df of the known
         ``terms`` (per-segment df sums exactly to corpus df) and their
-        global query-term ordinals (sorted-term rank): from the pinned
-        dictionaries when served, else in ONE Spark job (a union of tiny
-        broadcast joins tagged by segment ordinal)."""
-        hits = []
-        if self._sources is not None:
+        global query-term ordinals (sorted-term rank). ``terms`` is a set
+        of strings, probed in the pinned dictionaries when served, else in
+        ONE Spark job (a union of broadcast joins tagged by segment
+        ordinal); or a one-column (term) frame, probed by that same job."""
+        hits, probe = [], None
+        if isinstance(terms, DataFrame):
+            probe = terms
+        elif self._sources is not None:
             hits = [
                 (i, t, *src.term_lookup[t])
                 for i, src in enumerate(self._sources) for t in terms if t in src.term_lookup
             ]
-        elif terms and segs:
-            probe = F.broadcast(local_frame(self.spark, [(t,) for t in sorted(terms)], "term string"))
+        elif terms:
+            probe = local_frame(self.spark, [(t,) for t in sorted(terms)], "term string")
+        if probe is not None and segs:
             hits = _union([
-                s.terms.join(probe, "term").select(F.lit(i).alias("seg"), "term", "term_id", "df")
+                s.terms.join(F.broadcast(probe), "term").select(F.lit(i).alias("seg"), "term", "term_id", "df")
                 for i, s in enumerate(segs)
             ]).collect()
         seg_tids: list[dict] = [{} for _ in segs]
@@ -362,38 +373,36 @@ class QueryEngine:
             out.append(base.join(remap, "term_id").select(F.col("gid").alias("term_id"), *cols))
         return _union(out)
 
-    def _keyed_terms(self, segs) -> DataFrame:
-        """Global dictionary (term, df) with ``term_id`` = the term string:
-        df summed across segments."""
-        u = _union([s.terms.select("term", "df") for s in segs])
-        if len(segs) > 1:
-            u = u.groupBy("term").agg(F.sum("df").alias("df"))
-        return u.withColumn("term_id", F.col("term"))
-
-    def _keyed_rows(self, segs, gated: DataFrame) -> DataFrame:
-        """Decoded posting rows of the gated terms across segments, keyed by
-        term STRING (``term_id`` = term): each segment resolves its own ids
-        by a join, so nothing is staged on the driver."""
-        wanted = gated.select(F.col("term_id").alias("term")).distinct()
-        rows = []
-        for s in segs:
-            tids = F.broadcast(s.terms.join(wanted, "term").select("term", "term_id"))
-            rows.append(
-                decode_postings(s.postings.join(tids.select("term_id"), "term_id").drop("poss"))
-                .join(tids, "term_id")
-                .select(F.col("term").alias("term_id"), "doc_id", "tf", "doclen")
-            )
-        return _union(rows)
+    def _distributed_gate(self, segs, terms: DataFrame):
+        """For a batch past the cap: the dictionary hits of the distinct
+        query ``terms`` (one Spark job; only the hits, never a query row,
+        reach the driver) as a broadcast (term, term_id, idf) map onto the
+        global ordinals, and the decoded posting rows of those ordinals read
+        through each segment's manifest / literal-pruned scan. None when no
+        term is known."""
+        seg_tids, gdf, gid = self._probe_terms(segs, terms)
+        if not gid:
+            return None
+        n_docs, avgdl = self.global_stats(segs)
+        tmap = local_frame(
+            self.spark, [(t, i, serving._idf(n_docs, gdf[t])) for t, i in gid.items()],
+            "term string, term_id long, idf double",
+        )
+        return F.broadcast(tmap), self._posting_rows(segs, seg_tids, gid, set(gid.values()), avgdl, True)
 
     def _topk_distributed(self, queries: DataFrame, segs, allowed: DataFrame | None) -> DataFrame:
         """Batch-scale BM25 (past ``MAX_DRIVER_QUERIES``): distributed
-        tokenization and dictionary gate, term-keyed posting rows — slower
-        per query, unbounded in batch size."""
-        if not segs:
+        tokenization, the dictionary gate of :meth:`_distributed_gate`, the
+        exact scoring tail — unbounded in batch size."""
+        qterms = _topk.tokenize_queries(queries)
+        gate = self._distributed_gate(segs, qterms.select("term").distinct())
+        if gate is None:
             return local_frame(self.spark, [], _topk.TOPK_SCHEMA)
-        n_docs, avgdl = self.global_stats(segs)
-        gated = _topk.gate_terms(_topk.tokenize_queries(queries), self._keyed_terms(segs), n_docs)
-        return _topk._score_rows(self._keyed_rows(segs, gated), gated, avgdl, allowed_docs=allowed)
+        tmap, rows = gate
+        return _topk._score_rows(
+            rows, qterms.join(tmap, "term").drop("term"), self.global_stats(segs)[1],
+            allowed_docs=allowed,
+        )
 
     # ---- boolean ----------------------------------------------------------
 
@@ -453,31 +462,30 @@ class QueryEngine:
         )
 
     def _boolean_distributed(self, queries: DataFrame, segs, allowed: DataFrame | None) -> DataFrame:
-        """Batch-scale boolean search: the term-keyed plan of
-        ``_topk_distributed`` with the must / must_not roles of
-        ``_boolean_tail`` — no driver collect at any batch size."""
-        if not segs:
+        """Batch-scale boolean search: the gate of :meth:`_distributed_gate`
+        with the must / must_not roles of ``_boolean_tail`` — no query row
+        is collected at any batch size."""
+        def toks(col: str) -> DataFrame:
+            return _topk.tokenize_queries(queries.select("query_id", "k", F.col(col).alias("query_text")))
+
+        must, neg = toks("must"), toks("must_not")
+        gate = self._distributed_gate(segs, must.select("term").union(neg.select("term")).distinct())
+        if gate is None:
             return local_frame(self.spark, [], _topk.TOPK_SCHEMA)
-        n_docs, avgdl = self.global_stats(segs)
-        terms = self._keyed_terms(segs)
-
-        def gated(col: str) -> DataFrame:
-            q = _topk.tokenize_queries(queries.select("query_id", "k", F.col(col).alias("query_text")))
-            return _topk.gate_terms(q, terms, n_docs)
-
-        need = _topk.tokenize_queries(
-            queries.select("query_id", "k", F.col("must").alias("query_text"))
-        ).groupBy("query_id").agg(F.count(F.lit(1)).alias("n_must"))
-        gated_all = gated("must").select(
+        tmap, rows = gate
+        # distinct must-token count BEFORE the dictionary gate, as in
+        # _boolean_spark
+        need = must.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_must"))
+        gated_all = must.join(tmap, "term").select(
             "query_id", "k", "term_id", "qtf", "idf", F.lit(False).alias("is_neg")
-        ).unionByName(gated("must_not").select(
+        ).unionByName(neg.join(tmap, "term").select(
             "query_id", "k", "term_id",
             F.lit(None).cast("long").alias("qtf"),
             F.lit(None).cast("double").alias("idf"),
             F.lit(True).alias("is_neg"),
         ))
         return _topk._boolean_tail(
-            self._keyed_rows(segs, gated_all), gated_all, need, avgdl, allowed_docs=allowed
+            rows, gated_all, need, self.global_stats(segs)[1], allowed_docs=allowed
         )
 
     # ---- autocomplete -----------------------------------------------------
@@ -538,13 +546,17 @@ class QueryEngine:
                 for p in prefixes
                 for t in vocab[bisect.bisect_left(vocab, p):bisect.bisect_left(vocab, p + "{")]
             }
+        u = self._prefix_scan(segs, prefixes)
+        return {} if u is None else {r["term"]: r["df"] for r in u.collect()}
+
+    def _prefix_scan(self, segs, prefixes: set[str]) -> DataFrame | None:
+        """(term, global df) of the dictionary terms under ``prefixes``:
+        one range-filtered scan per segment dictionary, summed by term."""
         rng = reduce(operator.or_, [
             (F.col("term") >= F.lit(p)) & (F.col("term") < F.lit(p + "{")) for p in sorted(prefixes)
         ])
         u = _union([s.terms.filter(rng).select("term", "df") for s in segs])
-        if u is None:
-            return {}
-        return {r["term"]: r["df"] for r in u.groupBy("term").agg(F.sum("df").alias("df")).collect()}
+        return None if u is None else u.groupBy("term").agg(F.sum("df").alias("df"))
 
     # ---- phrase and snippets ----------------------------------------------
 

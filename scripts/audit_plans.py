@@ -193,34 +193,56 @@ def main() -> None:
         plan_of(entrymod.q_rel_broadcast_join(spark, SF)),
     ))
 
-    # 4b. autocomplete: dictionary expansion + shared scoring tail
+    # 4b-4c. the remaining query modes on an UNSERVED load of the positional
+    # index the fts gates use: the gates serve it first, and a served mode's
+    # plan is a LocalTableScan of its already-computed result
+    from geocoderpl_spark.plans.build import InvertedIndex
+
+    uidx = InvertedIndex.load(spark, entrymod._pos_index_for(spark, SF).root)
+    bm25_q = entrymod._bm25_queries_df(spark)
+
+    # 4b. autocomplete: dictionary expansion, then a plain pruned batch
+    prefix_scans = []
+    prefix_scan = uidx._prefix_scan
+    uidx._prefix_scan = lambda segs, p: prefix_scans.append(prefix_scan(segs, p)) or prefix_scans[-1]
+    ac = uidx.autocomplete(
+        spark.createDataFrame(entrymod.AUTOCOMPLETE_QUERIES, "query_id long, query_text string, k int"),
+        max_expansions=entrymod.AUTOCOMPLETE_MAX_EXP,
+    )
     sections.append((
         "Query stage — autocomplete (prefix expansion)",
-        "The prefix expansion is a PUSHED RANGE predicate on the "
-        "term-sorted dictionary (`term >= p AND term < p||'{'` in "
-        "PushedFilters — Parquet row-group min/max skipping, no "
-        "BroadcastNestedLoopJoin, no full-dictionary scan), query ids "
-        "attach via per-prefix-length broadcast equi-joins, and the merged "
-        "term set flows through the same literal-pruned scan + "
-        "broadcast-join scoring tail as exact queries.",
-        plan_of(entrymod.q_fts_autocomplete(spark, SF)),
+        "The prefix expansion (QueryEngine._prefix_scan, first plan) is a "
+        "PUSHED RANGE predicate on the term-sorted dictionary "
+        "(`term >= p AND term < p||'{'` in PushedFilters — Parquet "
+        "row-group min/max skipping, no BroadcastNestedLoopJoin, no "
+        "full-dictionary scan), summed by term across segments. Its "
+        "(term, df) rows are collected, each query keeps its "
+        "max_expansions highest-df matches, and the expanded batch runs as "
+        "an ordinary pruned top-k (second plan): manifest-pruned scan into "
+        "the MaxScore kernel.",
+        plan_of(prefix_scans[0]) + "\n" + plan_of(ac),
     ))
 
     # 4b2. boolean + filtered search
     sections.append((
         "Query stage — boolean search (must / must_not)",
-        "One literal-pruned posting scan over must ∪ must_not ids; the AND "
-        "is a counting HashAggregate keyed (query_id, doc_id) (partial agg "
-        "before the exchange), the NOT a left_anti BroadcastHashJoin / SMJ "
-        "on the same key. No cartesian, no per-term driver loop.",
-        plan_of(entrymod.q_fts_boolean(spark, SF)),
+        "One manifest-pruned posting scan over must ∪ must_not ids; must "
+        "and must_not terms ride one role-tagged broadcast, so the AND "
+        "count, the BM25 sum and the NOT veto are columns of a single "
+        "(query_id, doc_id) HashAggregate (partial agg before the "
+        "exchange). No cartesian, no anti-join, no per-term driver loop.",
+        plan_of(uidx.topk_boolean(spark.createDataFrame(
+            entrymod.BOOL_QUERIES, "query_id long, must string, must_not string, k int"
+        ))),
     ))
     sections.append((
         "Query stage — faceted (metadata-filtered) BM25",
         "The lang predicate becomes a doc_id semi-join applied AFTER the "
         "term prune and BEFORE scoring (AQE sizes it); corpus stats stay "
         "global so scores are comparable across filters.",
-        plan_of(entrymod.q_fts_filtered_topk(spark, SF)),
+        plan_of(uidx.topk_filtered(
+            bm25_q, uidx.docstats.filter(F.col("lang") == entrymod.FILTER_LANG)
+        )),
     ))
     sections.append((
         "Query stage — snippets (hit highlighting)",
@@ -228,17 +250,19 @@ def main() -> None:
         "scan (J9 point-fetch shape — PushedFilters: [In(doc_id, ...)]), "
         "hits+query-terms broadcast onto the fetched docs, and the "
         "position/window math is pure JVM array expressions (no UDF).",
-        plan_of(entrymod.q_fts_snippets(spark, SF)),
+        plan_of(uidx.snippets(bm25_q, width=5, docs=entrymod._docs(spark, SF))),
     ))
 
     # 4c. indexed phrase search over positional postings
     sections.append((
         "Query stage — indexed phrase search (positional postings)",
-        "Literal bucket/term_id pruning on the positional blocks, Arrow "
-        "decode of positions, ordinal-shift explode, and two uniform "
+        "Manifest-pruned scan of the phrase terms' positional blocks, "
+        "Arrow decode of positions, ordinal-shift explode, and two uniform "
         "(doc_id, adj)-keyed aggregations — no cartesian anywhere; the "
         "scan touches only the phrase terms' buckets.",
-        plan_of(entrymod.q_fts_phrase_indexed(spark, SF)),
+        plan_of(uidx.phrase(
+            spark.createDataFrame(entrymod.PHRASE_QUERIES, "query_id long, phrase_text string"), k=10
+        )),
     ))
 
     # 4d. persisted IVF: partition-dir pruned candidate scan

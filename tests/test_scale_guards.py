@@ -86,14 +86,14 @@ def test_env_knobs_are_registered():
     assert names == ENV_KNOBS
 
 
-def test_hot_term_query_capped_and_rank_identical(spark, tmp_path):
+def test_hot_term_query_capped_and_rank_identical(spark, tmp_path, monkeypatch):
     """Serving-path hot-term cap (SCALE.md mitigation): a query containing a
     >30%-df term must (a) be routed off the per-query gather when that term's
     candidate blocks exceed the cap, (b) stay rank-identical to the exact
-    path, and (c) never ship more than max_blocks_per_term blocks per term
-    into the kernel on the cold path."""
+    path, unserved and served, and (c) never ship more than
+    max_blocks_per_term blocks per term into the kernel on the cold path."""
     from geocoderpl_spark.functions.codec import BLOCK_SIZE
-    from geocoderpl_spark.operators.topk import query_topk_pruned
+    from geocoderpl_spark.operators import topk
     from geocoderpl_spark.plans.build import build_index
     from geocoderpl_spark.sources.corpus import HOT_TERM, synth_corpus
 
@@ -102,21 +102,33 @@ def test_hot_term_query_capped_and_rank_identical(spark, tmp_path):
         n_buckets=8, partitions=8,
     )
     q = spark.createDataFrame(
-        [(0, f"{HOT_TERM} term_0001", 10), (1, "term_0002 term_0003", 10)],
+        [(0, f"{HOT_TERM} term_0001", 10), (1, "term_0002 term_0003", 10),
+         (2, "term_0500 term_4999", 10)],
         "query_id long, query_text string, k int",
     )
     exact = [tuple(r) for r in idx.topk(q, "exact").orderBy("query_id", "rank").collect()]
 
-    # hot term df ~35% of 2000 = ~700 docs -> ~6 blocks; cap of 1 block forces
-    # the hot query (0) onto the exact fallback while query 1 stays pruned
+    # hot term df ~35% of 2000 = ~700 docs -> ~6 blocks; a cap of 1 block
+    # (128 postings) forces queries 0 and 1 (term_000N are in nearly every
+    # doc) onto the exact tail, while query 2's rare terms stay pruned
     hot_df = idx.terms.filter(F.col("term") == HOT_TERM).collect()[0]["df"]
     assert hot_df > 0.3 * idx.n_docs  # precondition: genuinely hot
-    capped = query_topk_pruned(
-        idx.postings, idx.terms, q, idx.n_docs, idx.avgdl,
-        n_buckets=idx.n_buckets, max_blocks_per_term=1,
-    )
-    got = [tuple(r) for r in capped.orderBy("query_id", "rank").collect()]
+    monkeypatch.setattr(topk, "MAX_BLOCKS_PER_TERM", 1)
+    exact_qids = []
+    score_rows = topk._score_rows
+
+    def recording(rows, gated, *a, **kw):
+        exact_qids.append(sorted(r["query_id"] for r in gated.select("query_id").distinct().collect()))
+        return score_rows(rows, gated, *a, **kw)
+
+    monkeypatch.setattr(topk, "_score_rows", recording)
+    got = [tuple(r) for r in idx.topk(q, mode="pruned").orderBy("query_id", "rank").collect()]
     assert got == exact, "capped/fallback path lost rank-identity"
+    assert exact_qids == [[0, 1]], exact_qids  # only the hot queries left the kernel
+    idx.serve()
+    served = [tuple(r) for r in idx.topk(q, mode="pruned").orderBy("query_id", "rank").collect()]
+    assert served == exact, "served capped path lost rank-identity"
+    assert exact_qids[1:] == [[0, 1]], exact_qids  # served: hot queries are routed to Spark
 
     # cold path invariant: no (query, term) ships more blocks than the cap
     cap = 4096
@@ -127,17 +139,15 @@ def test_hot_term_query_capped_and_rank_identical(spark, tmp_path):
     assert hot_df // BLOCK_SIZE + 1 <= cap and n_blocks == 0
 
 
-def test_autocomplete_expansion_is_pushed_range_scan(spark, tmp_path):
+def test_autocomplete_expansion_is_pushed_range_scan(spark, tmp_path, monkeypatch):
     """VERDICT r02 #1: the prefix expansion must reach the terms scan as a
     pushed range predicate (term >= p AND term < p||'{') with NO
     BroadcastNestedLoopJoin anywhere in the plan — a full-dictionary scan
-    per keystroke batch does not survive a 1e9-term vocabulary."""
+    per keystroke batch does not survive a 1e9-term vocabulary. Checked on
+    the scan an unserved index's autocomplete runs."""
     from geocoderpl_spark.operators.docids import assign_doc_ids
-    from geocoderpl_spark.operators.topk import (
-        query_topk_autocomplete,
-        query_topk_exact,
-    )
     from geocoderpl_spark.plans.build import build_index
+    from geocoderpl_spark.plans.engine import QueryEngine
     from geocoderpl_spark.sources.corpus import synth_corpus
 
     docs = assign_doc_ids(synth_corpus(spark, 400), ["repo", "path", "commit"], 8)
@@ -146,22 +156,26 @@ def test_autocomplete_expansion_is_pushed_range_scan(spark, tmp_path):
         [(0, "term_00", 5), (1, "term_0001 the_ho", 5), (2, "term_0001 ", 5)],
         "query_id long, query_text string, k int",
     )
-    df = query_topk_autocomplete(
-        idx.postings, idx.terms, q, idx.n_docs, idx.avgdl,
-        n_buckets=idx.n_buckets, max_expansions=10,
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = []
+    prefix_scan = QueryEngine._prefix_scan
+
+    def recording(self, segs, prefixes):
+        scans.append(prefix_scan(self, segs, prefixes))
+        return scans[-1]
+
+    monkeypatch.setattr(QueryEngine, "_prefix_scan", recording)
+    rows = idx.autocomplete(q, max_expansions=10).collect()
+    assert len(scans) == 1
+    plan = scans[0]._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     # Spark truncates the printed PushedFilters list, so assert on the
     # shortest ranges, which survive the truncation
     assert "GreaterThanOrEqual(term,term_00)" in plan  # pushed range lower bound
     assert "LessThan(term,term_00{)" in plan           # pushed range upper bound
     # trailing-separator query (all-exact) must equal the exact path
-    rows = df.collect()
-    exact = query_topk_exact(
-        idx.postings, idx.terms,
+    exact = idx.topk(
         spark.createDataFrame([(2, "term_0001", 5)], "query_id long, query_text string, k int"),
-        idx.n_docs, idx.avgdl, n_buckets=idx.n_buckets,
+        "exact",
     ).collect()
     got2 = sorted([(r.rank, r.doc_id, r.score) for r in rows if r.query_id == 2])
     assert got2 == sorted([(r.rank, r.doc_id, r.score) for r in exact])

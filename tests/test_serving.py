@@ -858,24 +858,35 @@ def test_served_segments_answer_every_mode_jobless(spark, sidx, segidx, tmp_path
 
 def test_batch_past_cap_stages_nothing_on_driver(spark, sidx, segidx, monkeypatch):
     """Past MAX_DRIVER_QUERIES every segment count takes the distributed
-    plan: an unserved pruned or boolean batch is not tokenized on the
-    driver, and its results equal the driver-staged plan's."""
+    plan: an unserved pruned, filtered or boolean batch is not tokenized on
+    the driver, every segment's posting scan still carries the literal
+    term_id prune, and its results equal the driver-staged plan's."""
+    import re
+
     import geocoderpl_spark.functions.tokenize as tokmod
     from geocoderpl_spark.plans.build import InvertedIndex
     from geocoderpl_spark.plans.engine import QueryEngine
     from geocoderpl_spark.streaming.incremental import SegmentedIndex
 
-    idx, _ = sidx
+    idx, docs = sidx
     views = [InvertedIndex.load(spark, idx.root), SegmentedIndex(spark, segidx.root)]
     q = spark.createDataFrame(QUERIES[:3], "query_id long, query_text string, k int")
     bq = spark.createDataFrame(BOOL_QUERIES, "query_id long, must string, must_not string, k int")
-    want = [(_sorted_pdf(v.topk(q, mode="pruned")), _sorted_pdf(v.topk_boolean(bq)))
-            for v in views]
+    allowed = docs.filter(F.pmod("doc_id", F.lit(2)) == 0).select("doc_id")
+
+    def modes(v):
+        return v.topk(q, mode="pruned"), v.topk_filtered(q, allowed), v.topk_boolean(bq)
+
+    want = [[_sorted_pdf(df) for df in modes(v)] for v in views]
     calls = []
     real = tokmod.tokenize_py
     monkeypatch.setattr(tokmod, "tokenize_py", lambda text: calls.append(text) or real(text))
     monkeypatch.setattr(QueryEngine, "MAX_DRIVER_QUERIES", 2)
-    for v, (topk_want, bool_want) in zip(views, want):
-        assert _sorted_pdf(v.topk(q, mode="pruned")).equals(topk_want) and len(topk_want)
-        assert _sorted_pdf(v.topk_boolean(bq)).equals(bool_want) and len(bool_want)
+    for v, v_want in zip(views, want):
+        for df, w in zip(modes(v), v_want):
+            plan = df._jdf.queryExecution().executedPlan().toString()  # before it runs
+            scans = [ln for ln in plan.splitlines() if "FileScan" in ln and "doc_ids" in ln]
+            assert len(scans) == len(v.segments()), plan
+            assert all(re.search(r"term_id#\d+L IN \(", ln) for ln in scans), scans
+            assert _sorted_pdf(df).equals(w) and len(w)
     assert calls == []
