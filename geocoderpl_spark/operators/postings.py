@@ -7,8 +7,9 @@ phrases into a 200x200 in-memory sector-string matrix (``xml_parsers.py:351``,
 (``xml_parsers.py:433-435``) — both are unbounded shared mutable state. Here
 both become pure dataflow outputs:
 
-- ``terms``    = per-term (df, cf) + dense term_id (the vocabulary), from one
-  range exchange and one Arrow rank kernel
+- ``terms``    = per-term (df, cf) + dense term_id (the vocabulary), ranked
+  on the driver when it fits there, else by one range exchange and one
+  Arrow rank kernel
 - ``postings`` = blocked posting lists, delta+varint compressed, with
   per-block max-score metadata (Block-Max WAND, SURVEY.md §4 O5)
 
@@ -369,12 +370,17 @@ def ensure_postings_files(out_dir: str, positional: bool = False) -> None:
 
 
 def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> DataFrame:
-    """Term dictionary: (term, df, cf, term_id).
+    """Term dictionary: (term, df, cf, term_id), ranked by Spark.
 
     Replaces the reference's single-row vocabulary string (K3,
     ``db_classes.py:181-208``) — the #1 anti-pattern SURVEY.md flags.
     term_id is the dense 0-based rank of the term string (deterministic,
     independent of the partition count).
+
+    The build takes this path only when the dictionary is too big for the
+    driver: up to ``docids.BROADCAST_IDS_MAX_ROWS`` partial rows it ranks
+    them on the driver instead (:func:`write_terms_local`), with the same
+    rank helper (:func:`_rank_terms`) and the same output.
 
     One range exchange on ``term`` feeds one Arrow kernel
     (:func:`_rank_partition`) that aggregates, sorts and numbers its range
@@ -383,10 +389,9 @@ def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> Data
     each partition's id offset. With the tf kernel's ``_termstats``
     partials (per-batch (term, df, cf) rows, a materialized map-side
     combine; a merge links its segments' dictionaries there) the exchange
-    moves those partial rows; without them (an empty corpus: no task wrote
-    a partial file) a ``groupBy(term)`` over the tf rows makes the source.
-    Values are identical either way: per-term df / cf are the sums of the
-    partial counts / tf sums.
+    moves those partial rows; without them a ``groupBy(term)`` over the tf
+    rows makes the source. Values are identical either way: per-term df /
+    cf are the sums of the partial counts / tf sums.
 
     The result carries ``_rank_total`` (the dictionary size) and
     ``_stats_cache`` (the persisted kernel output, released by the caller
@@ -420,10 +425,7 @@ def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> Data
     ).collect()
     if any(r["null"] for r in counts):
         ranked.unpersist()
-        raise ValueError(
-            "build_terms: a term partial row has a NULL term; a NULL term "
-            "has no rank in the dictionary"
-        )
+        raise ValueError(_NULL_TERM)
     offsets, total = docids.partition_offsets(
         ((r["_pid"], r["_rank"] + 1) for r in counts), n_parts
     )
@@ -435,12 +437,37 @@ def build_terms(tf: DataFrame | None, partials: DataFrame | None = None) -> Data
     return out
 
 
+_NULL_TERM = (
+    "build_terms: a term partial row has a NULL term; a NULL term has no "
+    "rank in the dictionary"
+)
+
+
+def _rank_terms(partials):
+    """The one ranking step of both dictionary paths: sum df / cf per term
+    of Arrow ``(term, df, cf)`` rows and sort by term (Arrow's byte order,
+    which is Spark's ``UTF8String`` order; a NULL term sorts last). Returns
+    ``term, df, cf, _rank`` with ``_rank = 0..n-1``."""
+    import numpy as np
+    import pyarrow as pa
+
+    agg = (
+        partials.group_by("term")
+        .aggregate([("df", "sum"), ("cf", "sum")])
+        .sort_by("term")
+    )
+    return pa.table({
+        "term": agg["term"],
+        "df": agg["df_sum"],
+        "cf": agg["cf_sum"],
+        "_rank": pa.array(np.arange(agg.num_rows, dtype=np.int64)),
+    })
+
+
 def _rank_partition(batches):
     """Rank kernel of :func:`build_terms` over one range partition of
-    (term, df, cf) rows: sum df / cf per term, sort by term (Arrow's byte
-    order, which is Spark's ``UTF8String`` order, so the range partitions
-    stay globally ordered; a NULL term sorts last) and emit each term once
-    with its local rank ``_rank = 0..n-1``, the partition id ``_pid`` and
+    (term, df, cf) rows: :func:`_rank_terms` of the partition (the range
+    partitions stay globally ordered), plus the partition id ``_pid`` and
     ``_last`` set on the last row. Memory is one range partition's rows."""
     import numpy as np
     import pyarrow as pa
@@ -449,25 +476,83 @@ def _rank_partition(batches):
     batches = list(batches)
     if not batches:
         return
-    agg = (
-        pa.Table.from_batches(batches)
-        .group_by("term")
-        .aggregate([("df", "sum"), ("cf", "sum")])
-        .sort_by("term")
-    )
-    n = agg.num_rows
+    ranked = _rank_terms(pa.Table.from_batches(batches))
+    n = ranked.num_rows
     if n == 0:
         return
     last = np.zeros(n, dtype=bool)
     last[-1] = True
-    yield from pa.table({
-        "term": agg["term"],
-        "df": agg["df_sum"],
-        "cf": agg["cf_sum"],
-        "_rank": pa.array(np.arange(n, dtype=np.int64)),
-        "_pid": pa.array(np.full(n, TaskContext.get().partitionId(), dtype=np.int32)),
-        "_last": pa.array(last),
-    }).to_batches()
+    yield from (
+        ranked.append_column(
+            "_pid", pa.array(np.full(n, TaskContext.get().partitionId(), dtype=np.int32))
+        )
+        .append_column("_last", pa.array(last))
+        .to_batches()
+    )
+
+
+def terms_schema():
+    """The pyarrow schema of the terms files: ``term, df, cf, term_id``."""
+    import pyarrow as pa
+
+    return pa.schema([("term", pa.string()), ("df", pa.int64()),
+                      ("cf", pa.int64()), ("term_id", pa.int64())])
+
+
+def rank_terms_local(partials):
+    """The driver's dictionary: :func:`_rank_terms` of Arrow ``(term, df,
+    cf)`` partial rows, numbered ``term_id = 0..n-1`` in term order, as
+    :func:`terms_schema`. A NULL term raises ``ValueError``, as in
+    :func:`build_terms`."""
+    ranked = _rank_terms(partials.select(["term", "df", "cf"]))
+    if ranked["term"].null_count:
+        raise ValueError(_NULL_TERM)
+    return ranked.rename_columns(terms_schema().names)
+
+
+def write_terms_local(partial_files: list[str], out_dir: str, n_parts: int) -> int:
+    """Rank the dictionary on the driver, with no Spark job, and write it to
+    ``out_dir``; returns the dictionary size. The caller takes this path
+    while the partial rows fit the driver (``docids.BROADCAST_IDS_MAX_ROWS``,
+    the bound under which the postings stage broadcasts the dictionary
+    anyway) and :func:`build_terms` above it.
+
+    The files match what :func:`build_terms` and a Spark write gave:
+    ``n_parts`` contiguous term-sorted ``part-*`` files, each one row group,
+    so every file carries a tight term min/max. Only ``df`` / ``cf`` are
+    dictionary-encoded: terms and term_ids are unique, and pyarrow's
+    defaults make the files a third bigger than Spark's (718 against 543 KB
+    for 50k terms; these settings give 543 KB). ``_SUCCESS`` is the
+    caller's."""
+    import os
+    import shutil
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = ["term", "df", "cf"]
+    src_schema = terms_schema().remove(3)
+    terms = rank_terms_local(pa.concat_tables([
+        src_schema.empty_table(),
+        *(pq.read_table(f, columns=cols).select(cols).cast(src_schema)
+          for f in partial_files),
+    ]))
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir)
+    n = terms.num_rows
+    if n == 0:
+        write_empty_parquet(out_dir, terms_schema())
+        return 0
+    bounds = np.linspace(0, n, min(n_parts, n) + 1).astype(np.int64)
+    for i, (a, b) in enumerate(zip(bounds[:-1], bounds[1:])):
+        pq.write_table(
+            terms.slice(int(a), int(b - a)),
+            os.path.join(out_dir, f"part-{i:05d}-graft.snappy.parquet"),
+            row_group_size=int(b - a), use_dictionary=["df", "cf"],
+            store_schema=False,
+        )
+    return n
 
 
 def _run_starts(terms, docs, slice_docs: int):
@@ -1006,14 +1091,14 @@ def postings_input(
     # The cast to long before hashing keeps the hashed VALUE identical
     # after the int32 narrowing below, so partition assignment — and with
     # it resume byte-identity — is unchanged.
-    def bucket_expr():
-        return F.pmod(
-            F.xxhash64(F.col("term_id").cast("long")), F.lit(n_buckets)
-        ).cast("int")
+    # The expression and the id columns are built once and reused: each
+    # Column costs py4j round trips (~10 ms for the bucket expression).
+    term_id, doc_id = F.col("term_id"), F.col("doc_id")
+    bucket = F.pmod(F.xxhash64(term_id.cast("long")), F.lit(n_buckets)).cast("int")
 
     if bucket_mod is not None:
         g, n_groups = bucket_mod
-        keyed = keyed.filter(F.pmod(bucket_expr(), F.lit(n_groups)) == g)
+        keyed = keyed.filter(F.pmod(bucket, F.lit(n_groups)) == g)
     pos_cols = ["positions"] if "positions" in tf.columns else []
     # int32 tf/doclen BEFORE the exchange, and the slice key as an
     # EXPRESSION rather than a materialized column: the posting shuffle is
@@ -1026,30 +1111,30 @@ def postings_input(
     # JVM->Python Arrow IPC. Safe: doclen < 2^31 tokens by the 2 GB string
     # limit; tf <= doclen; the kernel upcasts to int64 before arithmetic.)
     # r5 (VERDICT r04 #1a): when the caller can PROVE the id spaces fit
-    # int32 — doc_id via the docstats min/max (one extra agg column in a
-    # job that already runs), term_id via the dictionary size (term_id is
+    # int32 — doc_id via the docstats footers' min/max statistics (no
+    # job), term_id via the dictionary size (term_id is
     # the rank of term, so max = n_terms-1) — both ids narrow before the
     # exchange too, cutting another ~8 B/row off the in-memory row and
     # (via the zero-byte-heavy padding) the lz4-compressed shuffle stream.
     # The encoder upcasts to int64, so block BYTES are unchanged, and hash
     # partitioning is over the same VALUES, so partition assignment — and
     # resume byte-identity — is unchanged. None = no proof = stay wide.
-    doc_expr = F.col("doc_id")
+    doc_expr = doc_id
     if doc_id_range is not None and (
         -(1 << 31) <= doc_id_range[0] and doc_id_range[1] < (1 << 31)
     ):
-        doc_expr = F.col("doc_id").cast("int")
-    term_expr = F.col("term_id")
+        doc_expr = doc_id.cast("int")
+    term_expr = term_id
     if n_terms is not None and n_terms <= (1 << 31):
-        term_expr = F.col("term_id").cast("int")
-    slice_col = (F.col("doc_id") / F.lit(slice_docs)).cast("long")
+        term_expr = term_id.cast("int")
+    slice_col = (doc_id / F.lit(slice_docs)).cast("long")
     # bucket-major sort: each task's rows arrive grouped by bucket, so the
     # writer streams one file per (task, bucket), and term_id-sorted within
     # it, so every file's row groups carry tight term_id min/max stats. The
     # slice is NOT a key: a term's non-adjacent slices that hash to the same
     # task interleave in doc order, and the encoder splits runs on a slice
     # change (_run_starts), which keeps blocks within one slice (J7).
-    sort_keys = [bucket_expr(), F.col("term_id"), F.col("doc_id")]
+    sort_keys = [bucket, term_id, doc_id]
     # when the caller PROVES the id spaces are non-negative and narrow
     # (same proofs as the int32 narrowing), the 3-key sort collapses into
     # ONE packed non-negative long key with the same lexicographic order —
@@ -1068,9 +1153,9 @@ def postings_input(
         b_b = max(int(n_buckets - 1).bit_length(), 1)
         if b_b + b_t + b_d <= 62:
             sort_keys = [
-                bucket_expr().cast("long") * F.lit(1 << (b_t + b_d))
-                + F.col("term_id").cast("long") * F.lit(1 << b_d)
-                + F.col("doc_id").cast("long")
+                bucket.cast("long") * F.lit(1 << (b_t + b_d))
+                + term_id.cast("long") * F.lit(1 << b_d)
+                + doc_id.cast("long")
             ]
     rows = (
         keyed.select(
@@ -1080,7 +1165,7 @@ def postings_input(
             F.col("tf").cast("int").alias("tf"),
             *pos_cols,
         )
-        .repartition(partitions, bucket_expr(), slice_col)
+        .repartition(partitions, bucket, slice_col)
         .sortWithinPartitions(*sort_keys)
     )
     return rows, slice_docs

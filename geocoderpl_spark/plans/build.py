@@ -1,5 +1,8 @@
-"""Index-build plan: corpus -> docstats + tf + terms + postings + meta,
+"""Index-build plan: corpus -> docstats + tf + terms + meta + postings,
 with per-stage checkpointing, per-partition lineage, and a metrics table.
+The stages run one after the other, on one thread: the tf kernel's job,
+the driver-side dictionary and meta (no job while the dictionary fits the
+driver), then the postings job.
 
 Reference parity:
 - build-once / resume guard: ``__main__.py:17`` (``has_table`` check) ->
@@ -16,13 +19,17 @@ Layout under ``out_dir``::
     docstats/   doc_id, repo, path, commit, lang, doclen, sha256
     tf/         term, doc_id, doclen, tf[, positions]  (staging checkpoint;
                 one scan of the tf kernel writes it and docstats)
-    terms/      term, term_id, df, cf
+    terms/      term, df, cf, term_id  (P contiguous term-sorted files)
     postings/   bucket=*/part-*  (compressed blocks, POSTINGS_SCHEMA; one
                 file per encode task and bucket, written by the kernel)
-    meta/       n_docs, avgdl, n_buckets, partitions
+    meta/       meta.json: n_docs, avgdl, n_buckets, partitions, corpus_fp,
+                positional (read from the docstats footers and the terms
+                files, no Spark job)
     lineage/    bucket, n_blocks, n_postings, n_terms
-    metrics/    stage, rows_out, wall_ms, status  (tf rows_out is the
-                number of (term, doc) rows; -1 for a resumed stage)
+    metrics/    metrics.jsonl: stage, rows_out, wall_ms, status (tf
+                rows_out is the number of (term, doc) rows; -1 for a
+                resumed stage); the built terms row adds rank (driver or
+                spark)
 """
 
 from __future__ import annotations
@@ -34,6 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import docids
 from ..operators import postings as _postings
 from ..operators.docids import assign_doc_ids
 from ..operators.postings import (
@@ -43,6 +51,7 @@ from ..operators.postings import (
     ensure_postings_files,
     ensure_tf_files,
     tf_schema,
+    write_terms_local,
 )
 from .engine import QueryEngine
 from .manifest import (
@@ -227,24 +236,33 @@ def _check_posting_files(
         )
 
 
-def _bucket_term_counts(terms_dir: str, n_buckets: int) -> dict[int, tuple[int, int]]:
-    """Per term bucket (n_postings, n_terms) of the dictionary, without a
-    Spark job: the term_id/df columns are streamed from the part files one
-    pyarrow record batch at a time (driver memory stays at one batch at any
-    vocabulary size) and bucketed with the vectorized xxhash64 twin of the
-    build's ``pmod(xxhash64(term_id), n_buckets)``."""
+def _metric(stage: str, rows: int, wall_ms: int, status: str) -> dict:
+    """One ``metrics.jsonl`` row; the built terms row adds ``rank``, the
+    path that ranked the dictionary (``driver`` or ``spark``)."""
+    return {"stage": stage, "rows_out": rows, "wall_ms": wall_ms, "status": status}
+
+
+def _bucket_term_counts(
+    terms_dir: str, n_buckets: int
+) -> tuple[dict[int, tuple[int, int]], int]:
+    """Per term bucket (n_postings, n_terms) of the dictionary, and its
+    total cf, without a Spark job: the term_id/df/cf columns are streamed
+    from the part files one pyarrow record batch at a time (driver memory
+    stays at one batch at any vocabulary size) and bucketed with the
+    vectorized xxhash64 twin of the build's ``pmod(xxhash64(term_id),
+    n_buckets)``."""
     import numpy as np
     import pyarrow.parquet as pq
 
     from ..functions.xxhash import xxhash64_long_np
-    from .manifest import _part_files
 
     n_terms = np.zeros(n_buckets, dtype=np.int64)
     n_postings = np.zeros(n_buckets, dtype=np.int64)
+    cf_total = 0
     for f in _part_files(terms_dir):
         with pq.ParquetFile(f) as pf:
-            for batch in pf.iter_batches(columns=["term_id", "df"]):
-                tid, df = (c.to_numpy() for c in batch.columns)
+            for batch in pf.iter_batches(columns=["term_id", "df", "cf"]):
+                tid, df, cf = (c.to_numpy() for c in batch.columns)
                 # numpy %: sign of the divisor, like pmod
                 b = xxhash64_long_np(tid) % n_buckets
                 n_terms += np.bincount(b, minlength=n_buckets)
@@ -252,9 +270,40 @@ def _bucket_term_counts(terms_dir: str, n_buckets: int) -> dict[int, tuple[int, 
                 n_postings += np.bincount(
                     b, weights=df, minlength=n_buckets
                 ).astype(np.int64)
-    return {
+                cf_total += int(cf.sum())
+    per_bucket = {
         int(b): (int(n_postings[b]), int(n_terms[b])) for b in np.flatnonzero(n_terms)
     }
+    return per_bucket, cf_total
+
+
+def _docstats_footer_meta(docstats_dir: str) -> tuple[int, tuple[int, int] | None]:
+    """``(n_docs, (min doc_id, max doc_id))`` of the docstats table from its
+    part files' footers, without a Spark job or a data read: the row counts
+    and the ``doc_id`` column statistics of every row group. The range is
+    None when no row has a doc_id. A row group whose ``doc_id`` has no
+    min/max statistics (and is not all NULL) raises: the range would be a
+    guess, and the postings stage narrows doc ids on it."""
+    import pyarrow.parquet as pq
+
+    n_docs, lo, hi = 0, None, None
+    for f in _part_files(docstats_dir):
+        md = pq.read_metadata(f)
+        n_docs += md.num_rows
+        paths = [md.schema.column(i).path for i in range(md.num_columns)]
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = rg.column(paths.index("doc_id")).statistics if "doc_id" in paths else None
+            if st is not None and st.has_min_max:
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+            elif rg.num_rows and not (st is not None and st.null_count == rg.num_rows):
+                raise RuntimeError(
+                    f"docstats file {f} row group {g} has no doc_id min/max "
+                    "statistics: the index's doc-id range cannot be read "
+                    "from the footers"
+                )
+    return n_docs, (None if lo is None else (int(lo), int(hi)))
 
 
 def _lineage_rows(
@@ -321,7 +370,7 @@ def build_index(
     """
     partitions = partitions or spark.sparkContext.defaultParallelism
     p = {s: os.path.join(out_dir, s) for s in (*STAGES, "lineage", "metrics")}
-    metrics: list[tuple[str, int, int, str]] = []
+    metrics: list[dict] = []
 
     # corpus-fingerprint guard: stale checkpoints from a different corpus are
     # poison — wipe every stage, don't resume
@@ -354,7 +403,7 @@ def build_index(
     def timed(stage: str, fn):
         t0 = time.time()
         rows = fn()
-        metrics.append((stage, int(rows), int((time.time() - t0) * 1000), "built"))
+        metrics.append(_metric(stage, int(rows), int((time.time() - t0) * 1000), "built"))
 
     # metadata columns carried into docstats (everything except payload)
     meta_cols = [
@@ -368,7 +417,6 @@ def build_index(
     # runs inside Arrow kernels (north_star: "tokenize -> term-docID pairs
     # inside vectorized pandas/Arrow UDFs"): no JVM token objects, no
     # shuffle (per-doc local counting).
-    errs: list[BaseException] = []
     _stage_out: dict = {}
     if not _done(p["tf"]):
         def s1():
@@ -406,97 +454,70 @@ def build_index(
             return footer_rows(p["tf"])
 
         timed("tf", s1)
-        metrics.append(("docstats", -1, 0, "fused-direct"))
+        metrics.append(_metric("docstats", -1, 0, "fused-direct"))
     else:
-        metrics.append(("tf", -1, 0, "resumed"))
-        metrics.append(("docstats", -1, 0, "resumed"))
+        metrics.append(_metric("tf", -1, 0, "resumed"))
+        metrics.append(_metric("docstats", -1, 0, "resumed"))
     tf = read_index_dir(spark, p["tf"])
 
-    # stage 4's corpus-stats aggregate over docstats runs as a CONCURRENT
-    # job with the terms stage: one sequential job less per build. The
-    # doclen sum is an integer far below 2^53, so the double accumulation
-    # is exact and order-independent.
-    import threading
+    # stage 3: term dictionary. Up to docids.BROADCAST_IDS_MAX_ROWS partial
+    # rows (the bound under which the postings stage broadcasts the whole
+    # dictionary, so the driver holds it anyway) it is ranked and written
+    # on the driver with no Spark job; above it build_terms ranks it in one
+    # range exchange. The tf kernel's _termstats sidecar (per-batch term
+    # partials) spares either path a tf rescan. Finalized task files only
+    # (a killed attempt's _tmp-* leftover must not count), read by name: a
+    # Spark read of the _-prefixed dir logs "All paths were ignored"
+    if not _done(p["terms"]):
+        pdir = os.path.join(p["tf"], "_termstats")
+        tfiles = _part_files(pdir)
+        # no partials and no tf rows: an empty dictionary. tf rows without
+        # partials (a tf written without them) take Spark's groupBy over tf
+        on_driver = bool(tfiles or footer_rows(p["tf"]) == 0) and (
+            footer_rows(pdir) <= docids.BROADCAST_IDS_MAX_ROWS
+        )
 
-    def _meta_thread():
-        try:
-            _stage_out["meta_row"] = (
-                read_index_dir(spark, p["docstats"])
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.avg("doclen").alias("avgdl"),
-                    F.min("doc_id").alias("dmin"),
-                    F.max("doc_id").alias("dmax"),
+        def s3():
+            if on_driver:
+                n = write_terms_local(
+                    tfiles, p["terms"], spark.sparkContext.defaultParallelism
                 )
-                .collect()[0]
-            )
-        except BaseException as e:  # noqa: BLE001 — re-raised below
-            errs.append(e)
+                open(os.path.join(p["terms"], "_SUCCESS"), "w").close()
+                return n
+            t = build_terms(tf, partials=read_part_files(spark, tfiles) if tfiles else None)
+            # build_terms' partitions are its range partitions in term
+            # order, each sorted by term, so the files are globally sorted
+            # as written — every parquet file gets a tight term min/max,
+            # making prefix-range predicates (autocomplete) row-group-
+            # skippable instead of full-dict scans
+            t.write.mode("overwrite").parquet(p["terms"])
+            _unpersist(t)
+            return t._rank_total
 
-    tmeta = threading.Thread(target=_meta_thread, name="build-meta-agg")
-    tmeta.start()
-
-    # stage 3: term dictionary (runs while the meta thread works).
-    # try/finally: a terms-stage failure must still JOIN the concurrent
-    # meta thread before propagating — otherwise the build raises with a
-    # background Spark job still writing its checkpoint (ADVICE r03).
-    try:
-        if not _done(p["terms"]):
-            def s3():
-                # the tf kernel's _termstats sidecar (per-batch term
-                # partials) spares the dictionary a full tf rescan; absent
-                # (an empty corpus, or a tf written without it) -> tf scan.
-                # Finalized task files only (a killed attempt's _tmp-*
-                # leftover must not flip the mode), read by name: a read
-                # of the _-prefixed dir logs "All paths were ignored"
-                tfiles = _part_files(os.path.join(p["tf"], "_termstats"))
-                tpart = read_part_files(spark, tfiles) if tfiles else None
-                t = build_terms(tf, partials=tpart)
-                # term-sorted layout: build_terms' partitions are its range
-                # partitions in term order, each sorted by term, so the
-                # files are globally sorted as written — every parquet file
-                # gets a tight term min/max, making prefix-range predicates
-                # (autocomplete) row-group-skippable instead of full-dict
-                # scans
-                t.write.mode("overwrite").parquet(p["terms"])
-                # dictionary size fell out of the ranking's counts collect —
-                # no terms.count() job needed afterwards
-                _stage_out["n_terms"] = t._rank_total
-                _unpersist(t)
-                return t._rank_total
-
-            timed("terms", s3)
-        else:
-            metrics.append(("terms", -1, 0, "resumed"))
-    finally:
-        tmeta.join()
-    if errs:
-        raise errs[0]
+        timed("terms", s3)
+        metrics[-1]["rank"] = "driver" if on_driver else "spark"
+    else:
+        metrics.append(_metric("terms", -1, 0, "resumed"))
 
     terms = read_index_dir(spark, p["terms"])
 
-    # stage 4: meta (needed by postings for block-max) ----------------------
-    # min/max doc_id ride the same agg job: they PROVE (or refute) that the
-    # id space fits int32, which lets the postings stage narrow doc_id
-    # before its exchange (VERDICT r04 #1a — the build's biggest shuffle).
-    # The agg ran concurrently with the terms stage (the meta thread above).
-    row = _stage_out["meta_row"]
-    n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 0.0)
-    # the docstats stage wrote one row per doc; the count fell out of the
-    # meta agg (zero extra jobs)
-    metrics[:] = [
-        (st, n_docs if st == "docstats" and status != "resumed" else rows, ms, status)
-        for st, rows, ms, status in metrics
-    ]
-    doc_id_range = (
-        (int(row["dmin"]), int(row["dmax"])) if row["dmin"] is not None else None
-    )
-    # term_id = rank of term, so the dictionary size bounds it exactly; it
-    # fell out of the terms stage's own counts collect (zero extra jobs) —
-    # a resumed terms stage sums its files' footer row counts (no job)
-    n_terms = _stage_out.get("n_terms")
-    if n_terms is None:
-        n_terms = footer_rows(p["terms"])
+    # stage 4: meta (needed by postings for block-max), from files, with no
+    # Spark job: n_docs and the doc-id range from the docstats footers (the
+    # min/max PROVE or refute that the id space fits int32, which lets the
+    # postings stage narrow doc_id before its exchange, VERDICT r04 #1a),
+    # and avgdl = Σcf / n_docs from the lineage's streaming pass over the
+    # terms files: every token is one unit of some term's cf, so Σcf =
+    # Σdoclen. Both sums are integers, so the one division equals Spark's
+    # avg(doclen) bit for bit. The dictionary size falls out of the same pass.
+    t0 = time.time()
+    per_bucket, cf_total = _bucket_term_counts(p["terms"], n_buckets)
+    n_docs, doc_id_range = _docstats_footer_meta(p["docstats"])
+    avgdl = cf_total / n_docs if n_docs else 0.0
+    n_terms = sum(n for _, n in per_bucket.values())
+    metrics.append(_metric("meta", 1, int((time.time() - t0) * 1000), "built"))
+    for m in metrics:  # the docstats stage wrote one row per doc
+        if m["stage"] == "docstats" and m["status"] != "resumed":
+            m["rows_out"] = n_docs
 
     # stage 5: postings ------------------------------------------------------
     if not _done(p["postings"]):
@@ -515,7 +536,7 @@ def build_index(
 
         timed("postings", s5)
     else:
-        metrics.append(("postings", -1, 0, "resumed"))
+        metrics.append(_metric("postings", -1, 0, "resumed"))
 
     # file-level stats manifest (Iceberg-style): per posting file (bucket,
     # term_id min/max) so term-scoped queries enumerate files without
@@ -556,10 +577,7 @@ def build_index(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    lineage = (
-        _lineage_rows(_bucket_term_counts(p["terms"], n_buckets), entries)
-        if n_terms else []
-    )
+    lineage = _lineage_rows(per_bucket, entries) if n_terms else []
     schema = pa.schema([("bucket", pa.int32()), ("n_blocks", pa.int64()),
                         ("n_postings", pa.int64()), ("n_terms", pa.int64())])
     shutil.rmtree(p["lineage"], ignore_errors=True)
@@ -570,9 +588,8 @@ def build_index(
     )
     os.makedirs(p["metrics"], exist_ok=True)
     with open(os.path.join(p["metrics"], "metrics.jsonl"), "a") as f:
-        for stage, rows, wall_ms, status in metrics:
-            f.write(json.dumps({"stage": stage, "rows_out": rows,
-                                "wall_ms": wall_ms, "status": status}) + "\n")
+        for m in metrics:
+            f.write(json.dumps(m) + "\n")
 
     # release the id-rank persist (the tf stage has materialized)
     if "ids" in _stage_out:

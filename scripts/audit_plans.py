@@ -132,6 +132,9 @@ def main() -> None:
         assert absent not in dict_plan, dict_plan
     sections.append((
         "Build stage — term dictionary",
+        "Above docids.BROADCAST_IDS_MAX_ROWS partial rows only: below it "
+        "the build ranks the dictionary on the driver with no Spark job "
+        "(write_terms_local). "
         "The tf kernel's per-batch (term, df, cf) partials go through ONE "
         "range exchange on term (RangePartitioning) into ONE MapInArrow "
         "rank kernel that sums, sorts and numbers each range partition; "

@@ -507,19 +507,21 @@ def test_manifest_prunes_file_set_and_results_identical(spark, tmp_path):
 
 
 def test_lineage_bucket_counts_match_spark_aggregate(spark, index):
-    """The lineage's per-bucket dictionary counts are streamed from the terms
-    files with pyarrow and the numpy xxhash64 twin, without a Spark job, and
-    equal the Spark aggregate over the build's bucket expression."""
+    """The lineage's per-bucket dictionary counts (and the dictionary's
+    total cf) are streamed from the terms files with pyarrow and the numpy
+    xxhash64 twin, without a Spark job, and equal the Spark aggregate over
+    the build's bucket expression."""
     from pyspark.sql import functions as F
 
     from geocoderpl_spark.plans import build as build_mod
 
     tracker = spark.sparkContext.statusTracker()
     before = list(tracker.getJobIdsForGroup(None))
-    driver = build_mod._bucket_term_counts(
+    driver, cf_total = build_mod._bucket_term_counts(
         os.path.join(index.root, "terms"), index.n_buckets
     )
     assert list(tracker.getJobIdsForGroup(None)) == before
+    assert cf_total == index.terms.agg(F.sum("cf")).collect()[0][0] > 0
     expected = {
         int(r["bucket"]): (int(r["n_postings"]), int(r["n_terms"]))
         for r in index.terms.groupBy(
