@@ -113,7 +113,7 @@ WHERE r.rnk <= r.k
 
 
 # faceted search: same corpus stats (idf/avgdl global), candidates filtered
-# by the metadata predicate BEFORE ranking — mirrors query_topk_filtered
+# by the metadata predicate BEFORE ranking — mirrors QueryEngine.topk_filtered
 _BM25_FILTERED_FINAL = """
 , filt AS (
   SELECT s.query_id, s.k, s.doc_id, s.score,
@@ -254,16 +254,17 @@ def q_fts_autocomplete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocomplete / prefix search over the persisted index — the
     reference's per-keystroke entry point (geo_gui.py:122, SURVEY §3.2):
     partial last word expands to the max_expansions highest-df dictionary
-    terms (bounded scan), scored disjunctively with the exact tokens."""
-    from geocoderpl_spark.operators.topk import query_topk_autocomplete
+    terms (bounded scan), scored disjunctively with the exact tokens.
+    Answered by a fresh, unserved handle (other gates serve the cached
+    index), so the expansion runs the pushed-range dictionary scan."""
+    from geocoderpl_spark.plans.build import InvertedIndex
 
     idx = _pos_index_for(spark, sf_dir)
     q = spark.createDataFrame(
         AUTOCOMPLETE_QUERIES, "query_id long, query_text string, k int"
     )
-    return query_topk_autocomplete(
-        idx.postings, idx.terms, q, idx.n_docs, idx.avgdl,
-        n_buckets=idx.n_buckets, max_expansions=AUTOCOMPLETE_MAX_EXP,
+    return InvertedIndex.load(spark, idx.root).autocomplete(
+        q, max_expansions=AUTOCOMPLETE_MAX_EXP
     )
 
 
@@ -879,7 +880,7 @@ def q_fts_bm25_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fts_autocomplete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve-mode autocomplete (VERDICT r03 #7): prefix expansion via a
     driver-side bisect over the pinned sorted vocabulary — no dictionary
-    Spark job; same oracle as the distributed expansion."""
+    Spark job; same oracle as fts_autocomplete."""
     idx = _pos_index_for(spark, sf_dir)
     idx.serve()
     q = spark.createDataFrame(
@@ -1488,7 +1489,8 @@ FROM m
 """,
     }
     # segmented positional phrase search is result-identical to the corpus
-    # scan; serve-mode autocomplete to the distributed expansion
+    # scan; every autocomplete gate runs QueryEngine.autocomplete (unserved,
+    # served, segmented)
     d["stream_phrase_indexed"] = d["fts_phrase_indexed"]
     d["fts_autocomplete_serve"] = d["fts_autocomplete"]
     d["stream_autocomplete"] = d["fts_autocomplete"]
@@ -1500,7 +1502,7 @@ FROM m
 
 
 def _autocomplete_oracle() -> str:
-    """DuckDB twin of topk.query_topk_autocomplete: same prefix rule
+    """DuckDB twin of QueryEngine.autocomplete: same prefix rule
     (text ends in a token char), same bounded impact-ordered expansion
     (starts_with, NOT LIKE — '_' in a prefix must stay literal), same
     disjunctive scoring and qtf merge."""

@@ -9,6 +9,10 @@ lossy only on the float32 block-max metadata (SURVEY.md §4 O5/O7).
 Block layout (one row per block in the postings table):
   - doc_ids: varint(delta-gaps of sorted doc_ids)   BinaryType
   - tfs:     varint(tf values)                      BinaryType
+  - dls:     varint(doclen values)                  BinaryType
+  - poss:    varint(positions), positional indexes  BinaryType
+             only: per posting its tf positions, the head absolute,
+             the rest as gaps to the previous one (:func:`decode_positions`)
   - n:       entries in block                       IntegerType
   - first/last doc_id and block-max tf-norm kept as plain columns for
     min/max pruning + WAND bounds.
@@ -99,3 +103,14 @@ def encode_tfs(tfs: np.ndarray) -> bytes:
 
 def decode_tfs(buf: bytes) -> np.ndarray:
     return varint_decode(buf).astype(np.int64)
+
+
+def decode_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:
+    """One block's ``poss`` stream -> the absolute positions of its
+    postings, concatenated in posting order (posting i holds ``tfs[i]`` of
+    them). One cumsum runs over the whole block; each posting is then
+    rebased to its head, which was stored absolute."""
+    gaps = decode_tfs(buf)
+    vals = np.cumsum(gaps)
+    heads = (np.cumsum(tfs) - tfs).astype(np.int64)
+    return vals - np.repeat(vals[heads] - gaps[heads], tfs)

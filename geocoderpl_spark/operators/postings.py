@@ -1209,7 +1209,7 @@ def decode_postings_positional(blocks: DataFrame) -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from ..functions.codec import decode_doc_gaps, decode_tfs
+        from ..functions.codec import decode_doc_gaps, decode_positions, decode_tfs
 
         for pdf in batches:
             if len(pdf) == 0:
@@ -1219,17 +1219,8 @@ def decode_postings_positional(blocks: DataFrame) -> DataFrame:
             dls = [decode_tfs(b) for b in pdf["dls"]]
             poss = []
             for braw, btf in zip(pdf["poss"], tfs):
-                gaps = decode_tfs(braw)  # raw varints (uint64 stream)
-                pcum = np.concatenate([[0], np.cumsum(btf)])
-                vals = np.cumsum(gaps)
-                # undo the cross-posting cumsum: rebase each posting to its
-                # absolute head (head gap was stored absolute)
-                heads = pcum[:-1].astype(np.int64)
-                base = vals[heads] - gaps[heads]
-                vals = vals - np.repeat(base, btf)
-                poss.extend(
-                    vals[pcum[i]:pcum[i + 1]].astype(np.int32) for i in range(len(btf))
-                )
+                vals = decode_positions(braw, btf).astype(np.int32)
+                poss.extend(vals[e - t:e] for t, e in zip(btf, np.cumsum(btf)))
             reps = np.array([len(x) for x in ids])
             yield pd.DataFrame(
                 {

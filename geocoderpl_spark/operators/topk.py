@@ -4,29 +4,35 @@
 Reference-lifecycle parity (SURVEY.md §3.2): the reference gates each query
 on a vocabulary-membership test (``geo_gui.py:172``), scans posting
 partitions nearest-first with early termination (``geo_gui.py:178-188``),
-then point-looks-up full rows (``geo_gui.py:190-202``). Here:
+then point-looks-up full rows (``geo_gui.py:190-202``). The only query API
+over a built index is ``plans/engine.py: QueryEngine`` (``InvertedIndex``
+and ``SegmentedIndex``); it runs that lifecycle once per mode, with the
+Spark pieces of this module:
 
-- gate      = inner join of query terms with the (broadcast) term dictionary
-- pruning   = postings scan filtered to the query's term_ids (parquet
-  predicate pushdown + min/max row-group skipping; the analog of the
-  reference's 9-of-40,000-sector fetch, J4)
+- pruning   = postings scan filtered to the query's term_ids
+  (:func:`_pruned_scan`: parquet predicate pushdown + min/max row-group
+  skipping; the analog of the reference's 9-of-40,000-sector fetch, J4)
 - two scoring tails, over the posting rows a caller scans:
   * :func:`_score_rows` — exact: decode -> score -> partial-agg -> window
     top-k, fully distributed. Scales to any query/corpus size; this is the
-    batch path and the oracle-comparable one (:func:`query_topk_exact`).
+    batch path (``topk(mode="exact")``, ``topk_filtered``), and
+    :func:`_boolean_tail` is its must / must_not variant.
   * :func:`_pruned_kernel` — Arrow-batched per-query kernel implementing
     MaxScore/Block-Max pruning (the two-phase cheap-bound-then-exact idea
     the reference uses for its k-NN join, ``geo_utilities.py:589-760``, J5).
     Serving path: low latency for small k; gathers each query's candidate
     blocks to one task, so queries past :data:`MAX_BLOCKS_PER_TERM` are
-    routed to the exact tail (``plans/engine.py: QueryEngine._topk_spark``).
+    routed to the exact tail (``QueryEngine._topk_spark``).
+- phrase search = :func:`_phrase_hits` per positional segment, then one
+  :func:`_phrase_window`.
 
-Both tails round scores to 6 dp *before* ranking and tie-break by doc_id
-asc, so their results are rank-identical to each other and to the oracle.
+Both scoring tails round scores to 6 dp *before* ranking and tie-break by
+doc_id asc, so their results are rank-identical to each other and to the
+oracle. :func:`bm25_topk_direct` answers the same BM25 query straight off a
+corpus, with no index.
 """
 
 from __future__ import annotations
-
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -34,7 +40,6 @@ from pyspark.sql import functions as F
 
 from ..functions.bm25 import SCORE_DECIMALS, idf_col
 from ..functions.tokenize import tokenize
-from .postings import decode_postings
 
 TOPK_SCHEMA = "query_id long, doc_id long, score double, rank int"
 
@@ -45,21 +50,6 @@ def tokenize_queries(queries: DataFrame, text_col: str = "query_text") -> DataFr
         queries.select("query_id", "k", F.explode(tokenize(text_col)).alias("term"))
         .groupBy("query_id", "k", "term")
         .agg(F.count(F.lit(1)).alias("qtf"))
-    )
-
-
-def gate_terms(qterms: DataFrame, terms: DataFrame, n_docs: int) -> DataFrame:
-    """Dictionary gate (O14): unknown terms never touch postings.
-
-    Inner join vs broadcast term dictionary; attaches term_id, df, idf.
-    """
-    # broadcast the QUERY side (a handful of terms), never the dictionary —
-    # at 1e9 dictionary terms a dictionary broadcast is a multi-GB ship to
-    # every executor; this way the gate is one shuffle-free pass over terms
-    return (
-        F.broadcast(qterms)
-        .join(terms.select("term", "term_id", "df"), "term")
-        .withColumn("idf", idf_col(F.col("df"), n_docs))
     )
 
 
@@ -93,35 +83,6 @@ def tid_bucket(term_id: int, n_buckets: int) -> int:
     return xxhash64_long(term_id, seed=42) % n_buckets
 
 
-def _score_gated(
-    postings: DataFrame,
-    gated: DataFrame,
-    avgdl: float,
-    n_buckets: int | None,
-    scan=None,
-    allowed_docs: DataFrame | None = None,
-) -> DataFrame:
-    """Shared scoring tail: gated (query_id, k, term_id, qtf, idf) ->
-    pruned posting scan -> decode -> BM25 sum -> top-k window.
-
-    ``scan``: optional term_ids -> DataFrame override (e.g. the file-level
-    manifest scan, plans/manifest.py) replacing the directory-listing scan.
-    ``allowed_docs``: optional (doc_id) DataFrame; candidates outside it are
-    semi-joined away BEFORE scoring (filtered / faceted search).
-    """
-    # the gated term set is tiny (distinct query terms); collecting it turns
-    # the posting prune into literal pushed filters
-    tids = [r["term_id"] for r in gated.select("term_id").distinct().collect()]
-    if not tids:
-        return postings.sparkSession.createDataFrame([], TOPK_SCHEMA)
-    # drop("poss") is a no-op on non-positional indexes; on positional ones
-    # it column-prunes the positions stream out of the Parquet scan — BM25
-    # never pays for the phrase capability
-    cand = (scan(tids) if scan else _pruned_scan(postings, tids, n_buckets)).drop("poss")
-    rows = decode_postings(cand)
-    return _score_rows(rows, gated, avgdl, allowed_docs=allowed_docs)
-
-
 def _score_rows(
     rows: DataFrame,
     gated: DataFrame,
@@ -129,9 +90,11 @@ def _score_rows(
     allowed_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Scoring tail over already-decoded posting rows (term_id, doc_id, tf,
-    doclen): BM25 sum -> top-k window. Shared by the single-index scan path
-    and the segmented union path (whose rows carry term_ids remapped to
-    global query ordinals — the tail is id-space-agnostic)."""
+    doclen): BM25 sum -> top-k window. The engine's rows are the union of
+    its segments' scans, their term_ids remapped to global query ordinals
+    (the tail is id-space-agnostic). ``allowed_docs``: an optional (doc_id)
+    frame; candidates outside it are semi-joined away BEFORE scoring, with
+    N, avgdl and df left global (filtered / faceted search)."""
     from ..functions.bm25 import tfnorm_col
 
     if allowed_docs is not None:
@@ -150,113 +113,6 @@ def _score_rows(
     return _topk_window(scored)
 
 
-def query_topk_exact(
-    postings: DataFrame,
-    terms: DataFrame,
-    queries: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    n_buckets: int | None = None,
-    scan=None,
-) -> DataFrame:
-    """Distributed exact BM25 top-k. queries: (query_id, query_text, k)."""
-    gated = gate_terms(tokenize_queries(queries), terms, n_docs)
-    return _score_gated(postings, gated, avgdl, n_buckets, scan=scan)
-
-
-def query_topk_filtered(
-    postings: DataFrame,
-    terms: DataFrame,
-    queries: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    allowed_docs: DataFrame,
-    n_buckets: int | None = None,
-    scan=None,
-) -> DataFrame:
-    """Metadata-filtered (faceted) BM25 top-k: rank only docs present in
-    ``allowed_docs`` (a (doc_id) frame, e.g. docstats filtered on a metadata
-    predicate). Scoring statistics (idf, avgdl, N) stay GLOBAL — standard
-    filter-query semantics (the filter restricts candidates, not the corpus
-    model), so scores are comparable across filters.
-
-    Reference analog: the GUI's administrative-unit dropdowns scoping the
-    address search (``geo_gui.py:64-87``) — a predicate over document
-    metadata applied to the same index.
-
-    Scale: candidates still come from the term-pruned posting scan; the
-    filter is one doc_id-keyed semi-join before scoring (uniform keys, AQE
-    sizes it), never a scan of the unfiltered corpus."""
-    gated = gate_terms(tokenize_queries(queries), terms, n_docs)
-    return _score_gated(
-        postings, gated, avgdl, n_buckets, scan=scan, allowed_docs=allowed_docs
-    )
-
-
-def query_topk_boolean(
-    postings: DataFrame,
-    terms: DataFrame,
-    queries: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    n_buckets: int | None = None,
-    scan=None,
-    allowed_docs: DataFrame | None = None,
-) -> DataFrame:
-    """Boolean conjunctive search with negation, BM25-ranked.
-
-    ``queries``: (query_id, must string, must_not string, k). A doc
-    qualifies iff it contains EVERY distinct token of ``must`` and NO token
-    of ``must_not``; qualifying docs rank by BM25 over the must terms
-    (duplicate must tokens weight qtf, exactly as in free-text queries).
-    A must token absent from the dictionary makes its query unsatisfiable
-    (0 rows — the conjunction is not silently relaxed); unknown must_not
-    tokens are no-ops. An empty must yields 0 rows.
-
-    Scale shape: one term-pruned posting scan over must ∪ must_not ids; the
-    decoded subtree is consumed EXACTLY ONCE (ADVICE r03: the previous
-    scoring-aggregate + left_anti pair read it twice): must and must_not
-    entries ride one role-tagged broadcast, so the AND count, the BM25 sum,
-    and the NOT veto are all columns of a single (query_id, doc_id)
-    aggregate — uniform key, no cartesian, no per-term driver loop.
-    """
-    spark = queries.sparkSession
-    mq = tokenize_queries(
-        queries.select("query_id", "k", F.col("must").alias("query_text"))
-    )
-    # required distinct-term count BEFORE the dictionary gate: an unknown
-    # must term must kill its query, not relax the conjunction
-    need = mq.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_must"))
-    gated = gate_terms(mq, terms, n_docs)
-    nq = tokenize_queries(
-        queries.select("query_id", "k", F.col("must_not").alias("query_text"))
-    ).select("query_id", "k", "term")
-    ngated = (
-        F.broadcast(nq)
-        .join(terms.select("term", "term_id"), "term")
-        .select("query_id", "k", "term_id")
-        .distinct()
-    )
-    gated_all = gated.select(
-        "query_id", "k", "term_id", "qtf", "idf", F.lit(False).alias("is_neg")
-    ).unionByName(
-        ngated.select(
-            "query_id", "k", "term_id",
-            F.lit(None).cast("long").alias("qtf"),
-            F.lit(None).cast("double").alias("idf"),
-            F.lit(True).alias("is_neg"),
-        )
-    )
-    tids = sorted(
-        {r["term_id"] for r in gated_all.select("term_id").distinct().collect()}
-    )
-    if not tids:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    cand = (scan(tids) if scan else _pruned_scan(postings, tids, n_buckets)).drop("poss")
-    rows = decode_postings(cand)
-    return _boolean_tail(rows, gated_all, need, avgdl, allowed_docs=allowed_docs)
-
-
 def _boolean_tail(
     rows: DataFrame,
     gated_all: DataFrame,
@@ -265,8 +121,11 @@ def _boolean_tail(
     allowed_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Boolean tail over decoded rows: one (query_id, doc_id) aggregate
-    carrying the BM25 sum, the AND count, and the NOT veto. Shared by the
-    single-index and segmented paths (id-space-agnostic, like _score_rows)."""
+    carrying the BM25 sum, the AND count, and the NOT veto, so the decoded
+    scan is consumed exactly once (ADVICE r03). must and must_not entries
+    ride one role-tagged ``gated_all`` (``is_neg``); ``need`` holds each
+    query's distinct must-token count. id-space-agnostic, like
+    :func:`_score_rows`."""
     from ..functions.bm25 import tfnorm_col
 
     if allowed_docs is not None:
@@ -300,112 +159,6 @@ def _boolean_tail(
         .drop("matched", "n_must", "n_neg")
     )
     return _topk_window(ok)
-
-
-def query_topk_autocomplete(
-    postings: DataFrame,
-    terms: DataFrame,
-    queries: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    n_buckets: int | None = None,
-    max_expansions: int = 50,
-) -> DataFrame:
-    """Autocomplete / prefix search — the reference's per-keystroke entry
-    point (``geo_gui.py:122`` ``on_text_changed``: every keystroke queries
-    with a partial last word; SURVEY.md §3.2).
-
-    Semantics (shared with the SQL oracle): if the raw query text ends in a
-    token character, its LAST token is a *prefix*; it is expanded against
-    the term dictionary to the ``max_expansions`` highest-df matches
-    (impact-ordered, term-asc tie-break — the bounded-scan idea of the
-    reference's ``MAX_SEKTS``), scored disjunctively (qtf=1 each) together
-    with the remaining exact tokens. If the text ends in a separator, every
-    token is exact (the user finished the word). A term matched both ways
-    sums its qtf.
-
-    Scale shape: the dictionary range-scan ``term LIKE 'pref%'`` hits a
-    sorted/partitioned terms table (term_id is the rank of term, so the
-    expansion is a contiguous id range → contiguous posting buckets); the
-    expansion cap bounds the scan exactly like the hot-term cap.
-
-    Served indexes expand driver-side instead (``QueryEngine.autocomplete``:
-    a bisect over the pinned vocabulary, same impact order and tie-breaks).
-    """
-    toks = tokenize("query_text")
-    q = queries.select(
-        "query_id", "k", "query_text",
-        toks.alias("toks"),
-        F.regexp_like(F.col("query_text"), F.lit("[a-zA-Z0-9_]$")).alias("pmode"),
-    ).withColumn(
-        "prefix",
-        F.when(F.col("pmode") & (F.size("toks") > 0), F.element_at("toks", -1)),
-    )
-    # exact tokens: all tokens, minus ONE occurrence of the prefix token
-    exact = (
-        q.select("query_id", "k", "prefix", F.explode("toks").alias("term"))
-        .groupBy("query_id", "k", "prefix", "term")
-        .agg(F.count(F.lit(1)).alias("qtf"))
-        .withColumn(
-            "qtf",
-            F.when(F.col("term") == F.col("prefix"), F.col("qtf") - 1).otherwise(F.col("qtf")),
-        )
-        .filter(F.col("qtf") > 0)
-        .select("query_id", "k", "term", "qtf")
-    )
-    # prefix expansions: top-df dictionary terms with that prefix, qtf=1.
-    # The query batch is metadata-sized, so collect the prefixes and push
-    # the expansion into the dictionary scan as a literal RANGE predicate
-    # (term >= p AND term < p || '{'): terms are written term-sorted, so
-    # Parquet row-group min/max stats skip everything outside the prefix
-    # ranges — the dictionary is never fully scanned, and no
-    # BroadcastNestedLoopJoin appears in the plan. '{' = chr(ord('z')+1)
-    # upper-bounds every token char ([a-z0-9_]).
-    spark = queries.sparkSession
-    prows = q.filter(F.col("prefix").isNotNull()).select(
-        "query_id", "k", "prefix"
-    ).collect()
-    if prows:
-        rng = None
-        for p in sorted({r["prefix"] for r in prows}):
-            c = (F.col("term") >= F.lit(p)) & (F.col("term") < F.lit(p + "{"))
-            rng = c if rng is None else rng | c
-        cand = terms.filter(rng).select("term", "df")
-        # attach query ids with per-prefix-length EQUI-joins on
-        # substring(term, 1, len) — BroadcastHashJoin on the tiny query side
-        by_len: dict[int, list[tuple]] = {}
-        for r in prows:
-            by_len.setdefault(len(r["prefix"]), []).append(
-                (r["query_id"], int(r["k"]), r["prefix"])
-            )
-        matched = None
-        for ln, batch in sorted(by_len.items()):
-            pl = spark.createDataFrame(batch, "query_id long, k int, prefix string")
-            m = (
-                cand.withColumn("_p", F.substring("term", 1, ln))
-                .join(F.broadcast(pl), F.col("_p") == F.col("prefix"))
-                .select("query_id", "k", "term", "df")
-            )
-            matched = m if matched is None else matched.unionByName(m)
-        exp = (
-            matched.withColumn(
-                "xrank",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(F.desc("df"), F.asc("term"))
-                ),
-            )
-            .filter(F.col("xrank") <= max_expansions)
-            .select("query_id", "k", "term", F.lit(1).cast("long").alias("qtf"))
-        )
-    else:
-        exp = spark.createDataFrame([], "query_id long, k int, term string, qtf long")
-    merged = (
-        exact.unionByName(exp)
-        .groupBy("query_id", "k", "term")
-        .agg(F.sum("qtf").alias("qtf"))
-    )
-    gated = gate_terms(merged, terms, n_docs)
-    return _score_gated(postings, gated, avgdl, n_buckets)
 
 
 def _pruned_kernel(avgdl: float):
@@ -567,50 +320,24 @@ def _hot_df_threshold(max_blocks: int) -> int:
     return max_blocks * BLOCK_SIZE
 
 
-def query_phrase_indexed(
-    postings: DataFrame,
-    terms: DataFrame,
-    phrases: DataFrame,
-    n_buckets: int | None = None,
-    k: int = 10,
-    scan=None,
-) -> DataFrame:
-    """Exact phrase search over a POSITIONAL index (build_index(positional=
-    True)): the index-backed twin of textstats.phrase_match, result-identical
-    by construction.
+def _phrase_hits(terms: DataFrame, phrases: DataFrame, scan) -> DataFrame | None:
+    """Per-doc phrase occurrence counts (query_id, doc_id, n_matches) from
+    one positional segment (its dictionary ``terms`` and its posting scan
+    ``scan``: term_ids -> blocks, ``InvertedIndex.scan_postings``), no top-k
+    yet — the engine unions these across segments (doc spaces are disjoint,
+    so per-segment counts ARE the global counts) before one global
+    :func:`_phrase_window`. None = nothing can match (empty or fully-gated
+    phrase set).
 
     Plan: phrase tokens with ordinals -> dictionary gate (any unknown token
-    => phrase can't match, query dropped) -> literal-pruned positional
-    posting scan of ONLY the phrase's terms -> decode positions -> for
-    ordinal j shift positions by -j -> a phrase occurrence at position p is
-    a (doc, p) cell hit by ALL ordinals -> count per doc -> top-k. Every
-    join key is (doc_id, adj) — uniform; the scan touches the same few
-    buckets as a BM25 query over the same terms. phrases: (query_id,
-    phrase_text); output (query_id, rank, doc_id, n_matches).
-    """
-    hits = _phrase_hits(postings, terms, phrases, n_buckets, scan=scan)
-    if hits is None:
-        return postings.sparkSession.createDataFrame(
-            [], "query_id long, rank int, doc_id long, n_matches int"
-        )
-    return _phrase_window(hits, k)
-
-
-def _phrase_hits(
-    postings: DataFrame,
-    terms: DataFrame,
-    phrases: DataFrame,
-    n_buckets: int | None = None,
-    scan=None,
-) -> DataFrame | None:
-    """Per-doc phrase occurrence counts (query_id, doc_id, n_matches) from a
-    positional index, no top-k yet — the segmented path unions these across
-    segments (doc spaces are disjoint, so per-segment counts ARE the global
-    counts) before one global window. None = nothing can match (empty or
-    fully-gated phrase set)."""
+    => the phrase can't match, query dropped) -> pruned positional posting
+    scan of ONLY the phrase's terms -> decode positions -> for ordinal j
+    shift positions by -j -> a phrase occurrence at position p is a (doc, p)
+    cell hit by ALL ordinals -> count per doc. Every join key is (doc_id,
+    adj) — uniform; the scan touches the same few buckets as a BM25 query
+    over the same terms."""
     from .postings import decode_postings_positional
 
-    spark = postings.sparkSession
     p = phrases.select(
         "query_id", F.posexplode(tokenize("phrase_text")).alias("j", "term")
     )
@@ -623,10 +350,7 @@ def _phrase_hits(
     meta = pt.collect()  # metadata-sized: (phrase x ordinal) rows
     if not meta:
         return None
-    tids = sorted({r["term_id"] for r in meta})
-    rows = decode_postings_positional(
-        scan(tids) if scan else _pruned_scan(postings, tids, n_buckets)
-    )
+    rows = decode_postings_positional(scan(sorted({r["term_id"] for r in meta})))
     return (
         rows.join(F.broadcast(pt), "term_id")
         .select("query_id", "plen", "j", "doc_id", F.explode("positions").alias("pos"))

@@ -161,6 +161,16 @@ class InvertedIndex(QueryEngine):
             self.spark, self.root, entries, tids, self.n_buckets
         )
 
+    def scan_postings(self, term_ids: list[int]) -> DataFrame:
+        """The posting blocks of ``term_ids``: files picked by the manifest
+        (:meth:`_manifest_scan`), or on an index that predates it the
+        directory scan with literal ``bucket`` / ``term_id`` filters
+        (``operators.topk._pruned_scan``)."""
+        from ..operators.topk import _pruned_scan
+
+        scan = self._manifest_scan()
+        return scan(term_ids) if scan else _pruned_scan(self.postings, term_ids, self.n_buckets)
+
 
 def _build_postings_stage(
     tf: DataFrame,

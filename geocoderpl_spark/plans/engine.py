@@ -358,11 +358,9 @@ class QueryEngine:
             if not pairs:
                 continue
             remap = F.broadcast(local_frame(self.spark, pairs, "term_id long, gid long"))
-            ids = [tid for tid, _ in pairs]
-            scan = s._manifest_scan()
             # drop("poss") column-prunes a positional index's positions
             # stream out of the parquet scan
-            base = (scan(ids) if scan else _topk._pruned_scan(s.postings, ids, s.n_buckets)).drop("poss")
+            base = s.scan_postings([tid for tid, _ in pairs]).drop("poss")
             if decoded:
                 cols = ["doc_id", "tf", "doclen"]
                 base = decode_postings(base)
@@ -498,7 +496,8 @@ class QueryEngine:
         on ties), each with qtf 1, next to the remaining exact tokens (a
         term matched both ways sums its qtf). The expanded batch is a plain
         BM25 batch: it runs through ``topk(mode="pruned")``, in-process when
-        served. Semantics of ``operators.topk.query_topk_autocomplete``."""
+        served. These semantics are pinned by the ``fts_autocomplete``
+        DuckDB gate (``__spark_entry__._autocomplete_oracle``)."""
         import re
 
         from ..functions.tokenize import tokenize_py
@@ -588,9 +587,7 @@ class QueryEngine:
     def _phrase_spark(self, segs, phrases: DataFrame, k: int) -> DataFrame:
         hits = _union([
             h for s in segs
-            if (h := _topk._phrase_hits(
-                s.postings, s.terms, phrases, s.n_buckets, scan=s._manifest_scan()
-            )) is not None
+            if (h := _topk._phrase_hits(s.terms, phrases, s.scan_postings)) is not None
         ])
         return local_frame(self.spark, [], PHRASE_SCHEMA) if hits is None else _topk._phrase_window(hits, k)
 

@@ -20,11 +20,12 @@ Round 5 extends the tier to the full query surface (VERDICT r04 #4/#5):
   disjoint, so the kernel's accumulator IS the k-way merge.
 - **boolean / filtered tails** (:func:`boolean_local`,
   :func:`filtered_topk_local`): both are pandas-sized after the block
-  fetch; the must-count / NOT-veto / allowed-semi-join logic of
-  ``operators.topk._boolean_tail`` and ``query_topk_filtered`` ported to
+  fetch; the must-count / NOT-veto logic of ``operators.topk._boolean_tail``
+  and the allowed-doc semi-join of ``operators.topk._score_rows`` ported to
   numpy over decoded rows (same math, same 6-dp rounding, same tie-breaks).
 - **positional phrase matching** (:func:`phrase_local`): position streams
-  decoded driver-side, ordinal-shift intersection in numpy — the in-process
+  decoded driver-side (``functions.codec.decode_positions``, the decode the
+  Spark plan runs), ordinal-shift intersection in numpy — the in-process
   twin of ``operators.topk._phrase_hits``.
 - **snippets** (:func:`snippets_local`): hit highlighting from a direct
   parquet point-fetch of the hit docs (the J9 point-lookup shape, reference
@@ -353,8 +354,9 @@ def filtered_topk_local(
     max_blocks_per_query: int = MAX_LOCAL_BLOCKS_PER_QUERY,
 ) -> tuple[pd.DataFrame, list[int]]:
     """Faceted BM25 driver-side: candidates outside ``allowed_ids`` are
-    dropped BEFORE ranking while idf/avgdl/N stay global — exactly
-    ``query_topk_filtered``'s filter-query semantics. ``allowed_ids`` is
+    dropped BEFORE ranking while idf/avgdl/N stay global — the
+    filter-query semantics of ``QueryEngine.topk_filtered``'s Spark plan
+    (``operators.topk._score_rows`` with ``allowed_docs``). ``allowed_ids`` is
     the collected doc_id set of the metadata predicate (the caller guards
     its size and falls back to Spark past the cap)."""
     from ..functions.bm25 import tfnorm_np
@@ -485,26 +487,20 @@ def boolean_local(
 
 
 def _decode_positional(frames: list[pd.DataFrame]):
-    """Block frames (with poss) -> (doc_ids, positions-per-posting list).
-    Mirrors ``operators.postings.decode_postings_positional``."""
-    from ..functions.codec import decode_doc_gaps, decode_tfs
+    """Block frames (with poss) -> (doc_id, position) pairs as two flat
+    arrays: one entry per position of every posting."""
+    from ..functions.codec import decode_doc_gaps, decode_positions, decode_tfs
 
     docs_out: list[np.ndarray] = []
     poss_out: list[np.ndarray] = []
     for f in frames:
         for braw, traw, praw in zip(f["doc_ids"], f["tfs"], f["poss"]):
             ids = decode_doc_gaps(braw)
-            btf = decode_tfs(traw)
-            gaps = decode_tfs(praw)
             if ids.size == 0:
                 continue
-            pcum = np.concatenate([[0], np.cumsum(btf)])
-            vals = np.cumsum(gaps)
-            heads = pcum[:-1].astype(np.int64)
-            base = vals[heads] - gaps[heads]
-            vals = vals - np.repeat(base, btf)
+            btf = decode_tfs(traw)
             docs_out.append(np.repeat(ids, btf))
-            poss_out.append(vals.astype(np.int64))
+            poss_out.append(decode_positions(praw, btf))
     if not docs_out:
         z = np.empty(0, dtype=np.int64)
         return z, z.copy()

@@ -56,6 +56,42 @@ def test_tf_roundtrip():
     assert (decode_tfs(encode_tfs(tf)) == tf).all()
 
 
+def test_positions_decode_from_encoder_blocks():
+    """decode_positions inverts the positions stream _encode_np writes:
+    every posting's absolute positions come back, for tf-1 postings and for
+    the posting at the head of each block (stored absolute, not as a gap
+    to the previous posting's last position)."""
+    import pyarrow as pa
+
+    from geocoderpl_spark.functions.codec import BLOCK_SIZE, decode_positions
+    from geocoderpl_spark.operators.postings import _encode_np
+
+    rng = np.random.RandomState(11)
+    n = BLOCK_SIZE + 40  # one term over two blocks
+    tfs = rng.randint(1, 5, n).astype(np.int64)
+    tfs[[0, 1, BLOCK_SIZE, n - 1]] = 1  # tf-1 postings, one at each block head
+    pos = [np.sort(rng.choice(np.arange(1, 600), t, replace=False)) for t in tfs]
+    pos[BLOCK_SIZE] = np.array([599])  # a head far above its predecessor
+    cols = {
+        "term_id": np.full(n, 3, dtype=np.int64),
+        "doc_id": np.arange(10, 10 + 2 * n, 2, dtype=np.int64),
+        "doclen": rng.randint(600, 900, n).astype(np.int64),
+        "tf": tfs,
+        "pos_flat": np.concatenate(pos).astype(np.int64),
+        "pos_len": tfs.copy(),
+    }
+    blocks = pa.Table.from_batches([_encode_np(cols, 700.0, np, pa, 4, 10**6)]).to_pydict()
+    assert blocks["n"] == [BLOCK_SIZE, n - BLOCK_SIZE]
+    got = []
+    for traw, praw in zip(blocks["tfs"], blocks["poss"]):
+        btf = decode_tfs(traw)
+        flat = decode_positions(praw, btf)
+        assert flat.size == btf.sum()
+        got += [flat[e - t:e].tolist() for t, e in zip(btf, np.cumsum(btf))]
+    assert got == [p.tolist() for p in pos]
+    assert decode_positions(b"", np.empty(0, dtype=np.int64)).size == 0
+
+
 def test_encode_kernels_byte_identical(spark, tmp_path):
     """The blocks the direct writer leaves on disk must be BYTE-identical —
     binary payloads included — to the pandas reference encoder run over the

@@ -274,18 +274,19 @@ def test_query_cache_serves_repeats_without_spark(spark, index):
 def test_autocomplete_prefix_semantics(spark, index, corpus_pdf):
     """Prefix search: (a) '_' in a prefix is literal (startswith, never a
     LIKE wildcard), (b) expansion is capped impact-ordered, (c) trailing
-    separator means all-exact, (d) results equal a hand-expanded OR query."""
-    from geocoderpl_spark.operators.topk import query_topk_autocomplete
-
+    separator means all-exact, (d) results equal a hand-expanded OR query.
+    A fresh handle: the fixture may be served by then, and the unserved
+    expansion is the pushed-range dictionary scan."""
+    fresh = InvertedIndex.load(spark, index.root)
     terms_pdf = index.terms.toPandas()
     # (a)+(b): 'term_00' must expand ONLY to terms starting 'term_00'
     q = spark.createDataFrame(
         [(0, "term_00", 10)], "query_id long, query_text string, k int"
     )
-    got = query_topk_autocomplete(
-        index.postings, index.terms, q, index.n_docs, index.avgdl,
-        n_buckets=index.n_buckets, max_expansions=5,
-    ).toPandas().sort_values("rank").reset_index(drop=True)
+    got = (
+        fresh.autocomplete(q, max_expansions=5)
+        .toPandas().sort_values("rank").reset_index(drop=True)
+    )
     exp_terms = (
         terms_pdf[terms_pdf.term.str.startswith("term_00")]
         .sort_values(["df", "term"], ascending=[False, True]).head(5)
@@ -302,10 +303,7 @@ def test_autocomplete_prefix_semantics(spark, index, corpus_pdf):
     q3 = spark.createDataFrame(
         [(0, "term_0001 ", 10)], "query_id long, query_text string, k int"
     )
-    got3 = query_topk_autocomplete(
-        index.postings, index.terms, q3, index.n_docs, index.avgdl,
-        n_buckets=index.n_buckets,
-    ).toPandas().sort_values("rank").reset_index(drop=True)
+    got3 = fresh.autocomplete(q3).toPandas().sort_values("rank").reset_index(drop=True)
     q4 = spark.createDataFrame(
         [(0, "term_0001", 10)], "query_id long, query_text string, k int"
     )
@@ -342,7 +340,6 @@ def test_positional_index_phrase_equals_corpus_scan(spark, tmp_path):
     query (incl. repeated-token and 3-token phrases)."""
     from geocoderpl_spark.operators.postings import decode_postings_positional
     from geocoderpl_spark.operators.textstats import phrase_match
-    from geocoderpl_spark.operators.topk import query_phrase_indexed
     from geocoderpl_spark.functions.tokenize import tokenize_py
 
     corpus = synth_corpus(spark, 300)
@@ -379,9 +376,8 @@ def test_positional_index_phrase_equals_corpus_scan(spark, tmp_path):
         .select("doc_id", F.col("content").alias("text")),
         phrases,
     ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-    indexed = query_phrase_indexed(
-        idx.postings, idx.terms, phrases, n_buckets=idx.n_buckets
-    ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+    indexed = InvertedIndex.load(spark, idx.root).phrase(phrases).toPandas().sort_values(
+        ["query_id", "rank"]).reset_index(drop=True)
     assert indexed.equals(scan), (indexed, scan)
 
 

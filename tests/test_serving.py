@@ -5,7 +5,8 @@
 - driver-side topk serving (manifest + direct parquet + same kernel) is
   rank-identical to the Spark paths and runs zero Spark jobs
 - serve-mode autocomplete expands driver-side (no dictionary scan at all)
-- segmented filtered/boolean/phrase queries equal their single-index twins
+- segmented filtered/boolean/phrase queries equal the single index's
+- every served mode equals the unserved Spark plan of a fresh handle
 - positional streaming segments serve phrase search, through compaction
 """
 
@@ -16,7 +17,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from geocoderpl_spark.plans.build import build_index
+from geocoderpl_spark.plans.build import InvertedIndex, build_index
 from geocoderpl_spark.sources.corpus import synth_corpus
 
 N_DOCS = 500
@@ -244,9 +245,8 @@ def test_autocomplete_serve_mode_no_dictionary_scan(spark, sidx):
     """Serve-mode autocomplete never touches the terms table: the prefix
     expansion is a bisect over the pinned vocabulary and the expanded batch
     answers in-process, so a call over a local query relation runs no Spark
-    job at all, and its results equal the distributed pushed-range
-    expansion."""
-    from geocoderpl_spark.operators.topk import query_topk_autocomplete
+    job at all, and its results equal the pushed-range expansion of an
+    unserved handle."""
     from geocoderpl_spark.session import local_frame
 
     idx, _ = sidx
@@ -257,9 +257,8 @@ def test_autocomplete_serve_mode_no_dictionary_scan(spark, sidx):
          (2, "term_0001 ", 10), (3, "zzz_nothing", 5)],
         "query_id long, query_text string, k int",
     )
-    dist = query_topk_autocomplete(
-        idx.postings, idx.terms, q, idx.n_docs, idx.avgdl,
-        n_buckets=idx.n_buckets, max_expansions=5,
+    dist = InvertedIndex.load(spark, idx.root).autocomplete(
+        q, max_expansions=5,
     ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     api = _no_jobs(spark, lambda: idx.autocomplete(q, max_expansions=5))
     assert idx._sorted_terms is not None
@@ -330,17 +329,14 @@ def test_segmented_boolean_matches_single(spark, sidx, segidx):
 
 
 def test_segmented_phrase_matches_single(spark, sidx, segidx):
-    from geocoderpl_spark.operators.topk import query_phrase_indexed
-
     idx, _ = sidx
     p = spark.createDataFrame(
         [(0, "term_0001 term_0002"), (1, "the_hot_term the_hot_term"),
          (2, "camelCaseFoo"), (3, "term_0001 zz_unknown")],
         "query_id long, phrase_text string",
     )
-    single = query_phrase_indexed(
-        idx.postings, idx.terms, p, n_buckets=idx.n_buckets, k=10
-    ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+    single = InvertedIndex.load(spark, idx.root).phrase(p, k=10).toPandas().sort_values(
+        ["query_id", "rank"]).reset_index(drop=True)
     seg = segidx.phrase(p, k=10).toPandas().sort_values(
         ["query_id", "rank"]).reset_index(drop=True)
     assert seg.equals(single)
@@ -350,17 +346,14 @@ def test_segmented_phrase_matches_single(spark, sidx, segidx):
 def test_segmented_autocomplete_matches_single(spark, sidx, segidx):
     """LSM autocomplete parity: global-df expansion over the segments'
     dictionaries equals the merged single-index expansion exactly."""
-    from geocoderpl_spark.operators.topk import query_topk_autocomplete
-
     idx, _ = sidx
     q = spark.createDataFrame(
         [(0, "term_00", 10), (1, "term_0001 camelCase", 10),
          (2, "term_0001 ", 10), (3, "zzz_nothing", 5)],
         "query_id long, query_text string, k int",
     )
-    single = query_topk_autocomplete(
-        idx.postings, idx.terms, q, idx.n_docs, idx.avgdl,
-        n_buckets=idx.n_buckets, max_expansions=5,
+    single = InvertedIndex.load(spark, idx.root).autocomplete(
+        q, max_expansions=5,
     ).toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     seg = segidx.autocomplete(q, max_expansions=5).toPandas().sort_values(
         ["query_id", "rank"]).reset_index(drop=True)
@@ -470,7 +463,6 @@ def test_boolean_serve_matches_distributed_and_jobless(spark, sidx):
     from geocoderpl_spark.operators.topk import (
         MAX_BLOCKS_PER_TERM,
         _hot_df_threshold,
-        query_topk_boolean,
     )
     from geocoderpl_spark.plans.serving import boolean_local
 
@@ -479,10 +471,7 @@ def test_boolean_serve_matches_distributed_and_jobless(spark, sidx):
     q = spark.createDataFrame(
         BOOL_QUERIES, "query_id long, must string, must_not string, k int"
     )
-    dist = _sorted_pdf(query_topk_boolean(
-        idx.postings, idx.terms, q, idx.n_docs, idx.avgdl,
-        n_buckets=idx.n_buckets,
-    ))
+    dist = _sorted_pdf(InvertedIndex.load(spark, idx.root).topk_boolean(q))
     served = _sorted_pdf(idx.topk_boolean(q))
     assert served.equals(dist) and len(dist) > 0
     qrows = q.collect()
@@ -502,17 +491,15 @@ def test_filtered_serve_matches_distributed_and_jobless(spark, sidx):
     from geocoderpl_spark.operators.topk import (
         MAX_BLOCKS_PER_TERM,
         _hot_df_threshold,
-        query_topk_filtered,
     )
     from geocoderpl_spark.plans.serving import filtered_topk_local
 
     idx, docs = sidx
     idx.serve()
     allowed = docs.select("doc_id").filter(F.pmod("doc_id", F.lit(2)) == 0)
-    dist = _sorted_pdf(query_topk_filtered(
-        idx.postings, idx.terms, _qdf(spark), idx.n_docs, idx.avgdl,
-        allowed, n_buckets=idx.n_buckets,
-    ))
+    dist = _sorted_pdf(
+        InvertedIndex.load(spark, idx.root).topk_filtered(_qdf(spark), allowed)
+    )
     served = _sorted_pdf(idx.topk_filtered(_qdf(spark), allowed))
     assert served.equals(dist) and len(dist) > 0
     qrows = _qdf(spark).collect()
@@ -536,15 +523,12 @@ PHRASES = [
 
 
 def test_phrase_serve_matches_distributed_and_jobless(spark, sidx):
-    from geocoderpl_spark.operators.topk import query_phrase_indexed
     from geocoderpl_spark.plans.serving import phrase_local
 
     idx, _ = sidx
     idx.serve()
     p = spark.createDataFrame(PHRASES, "query_id long, phrase_text string")
-    dist = _sorted_pdf(query_phrase_indexed(
-        idx.postings, idx.terms, p, n_buckets=idx.n_buckets, k=10
-    ))
+    dist = _sorted_pdf(InvertedIndex.load(spark, idx.root).phrase(p, k=10))
     served = _sorted_pdf(idx.phrase(p, k=10))
     assert served.equals(dist) and len(dist) > 0
     prows = p.collect()
@@ -581,8 +565,6 @@ def test_snippets_serve_matches_distributed(spark, sidx, tmp_path_factory):
 def test_served_batch_guard_routes_distributed(spark, sidx, monkeypatch):
     """A served index must route a batch-scale query set to the distributed
     pruned plan, never a driver loop (ADVICE r04)."""
-    from geocoderpl_spark.plans.build import InvertedIndex
-
     idx, _ = sidx
     idx.serve()
     exact = _sorted_pdf(idx.topk(_qdf(spark), mode="exact"))
@@ -651,7 +633,6 @@ def test_boolean_serve_must_intersect_must_not(spark, sidx):
     from geocoderpl_spark.operators.topk import (
         MAX_BLOCKS_PER_TERM,
         _hot_df_threshold,
-        query_topk_boolean,
     )
     from geocoderpl_spark.plans.serving import boolean_local
 
@@ -662,10 +643,7 @@ def test_boolean_serve_must_intersect_must_not(spark, sidx):
          (1, "term_0002", "", 10)],
         "query_id long, must string, must_not string, k int",
     )
-    dist = _sorted_pdf(query_topk_boolean(
-        idx.postings, idx.terms, q, idx.n_docs, idx.avgdl,
-        n_buckets=idx.n_buckets,
-    ))
+    dist = _sorted_pdf(InvertedIndex.load(spark, idx.root).topk_boolean(q))
     assert set(dist.query_id) == {1}
     qrows = q.collect()
     res, spark_qids = _no_jobs(spark, lambda: boolean_local(
@@ -704,7 +682,6 @@ def test_phrase_serve_nontrivial_repeat(spark, sidx):
     """Repeated-token phrases with a gap ('a b a') exercise the ordinal
     multiplicity counting: the same token's positions participate at two
     different shifts. Served must equal the distributed positional plan."""
-    from geocoderpl_spark.operators.topk import query_phrase_indexed
     from geocoderpl_spark.plans.serving import phrase_local
 
     idx, _ = sidx
@@ -714,9 +691,7 @@ def test_phrase_serve_nontrivial_repeat(spark, sidx):
          (1, "term_0002 term_0002")],
         "query_id long, phrase_text string",
     )
-    dist = _sorted_pdf(query_phrase_indexed(
-        idx.postings, idx.terms, p, k=10, n_buckets=idx.n_buckets,
-    ))
+    dist = _sorted_pdf(InvertedIndex.load(spark, idx.root).phrase(p, k=10))
     prows = p.collect()
     res, spark_qids = _no_jobs(spark, lambda: phrase_local(
         idx._sources, prows, k=10,
@@ -809,13 +784,8 @@ def test_served_segments_answer_every_mode_jobless(spark, sidx, segidx, tmp_path
     """serve() runs no Spark job for one segment or three, and a served
     SegmentedIndex answers filtered, boolean (with and without a facet),
     phrase and snippets queries in-process: zero Spark jobs over local
-    query relations, and the single index's distributed results."""
+    query relations, and the single index's unserved Spark results."""
     from geocoderpl_spark.operators.textstats import snippets as snippets_op
-    from geocoderpl_spark.operators.topk import (
-        query_phrase_indexed,
-        query_topk_boolean,
-        query_topk_filtered,
-    )
     from geocoderpl_spark.session import local_frame
     from geocoderpl_spark.streaming.incremental import SegmentedIndex
 
@@ -831,20 +801,19 @@ def test_served_segments_answer_every_mode_jobless(spark, sidx, segidx, tmp_path
     p = local_frame(spark, PHRASES, "query_id long, phrase_text string")
     odd = sorted(r["doc_id"] for r in docs.select("doc_id").collect() if r["doc_id"] % 2)
     allowed = local_frame(spark, [(d,) for d in odd], "doc_id long")
-    single = (idx.postings, idx.terms)
+    single = InvertedIndex.load(spark, idx.root)  # unserved: the Spark plans
 
     got = _no_jobs(spark, lambda: seg.topk_filtered(q, allowed))
-    want = query_topk_filtered(*single, q, idx.n_docs, idx.avgdl, allowed, n_buckets=idx.n_buckets)
+    want = single.topk_filtered(q, allowed)
     assert _sorted_pdf(got).equals(_sorted_pdf(want)) and got.count() > 0
 
     for facet in (None, allowed):
         got = _no_jobs(spark, lambda facet=facet: seg.topk_boolean(bq, allowed_docs=facet))
-        want = query_topk_boolean(*single, bq, idx.n_docs, idx.avgdl,
-                                  n_buckets=idx.n_buckets, allowed_docs=facet)
+        want = single.topk_boolean(bq, allowed_docs=facet)
         assert _sorted_pdf(got).equals(_sorted_pdf(want)) and got.count() > 0
 
     got = _no_jobs(spark, lambda: seg.phrase(p, k=10))
-    want = query_phrase_indexed(*single, p, n_buckets=idx.n_buckets, k=10)
+    want = single.phrase(p, k=10)
     assert _sorted_pdf(got).equals(_sorted_pdf(want)) and got.count() > 0
 
     cols = ("query_id", "rank", "doc_id")
@@ -864,7 +833,6 @@ def test_batch_past_cap_stages_nothing_on_driver(spark, sidx, segidx, monkeypatc
     import re
 
     import geocoderpl_spark.functions.tokenize as tokmod
-    from geocoderpl_spark.plans.build import InvertedIndex
     from geocoderpl_spark.plans.engine import QueryEngine
     from geocoderpl_spark.streaming.incremental import SegmentedIndex
 
